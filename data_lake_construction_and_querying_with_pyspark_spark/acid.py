@@ -43,6 +43,18 @@ from any implementation):
   data files are immutable and never renamed. Time travel =
   replaying a prefix of the log (``read(version=...)``).
 
+* **Data skipping is a table property**, kept in the log like the
+  schema: an entry may carry ``"stats": [cols]`` (per-file min/max off
+  the parquet footer) and ``"blooms": [cols]`` (per-file bloom
+  filters), and the snapshot replays them as ``Snapshot.policy``.
+  Every writer stages its files under the policy of the snapshot it
+  already loaded, so a MERGE, UPDATE, overwrite or compaction keeps
+  the stats later pruned reads and DML need. Columns are declared in
+  two places only — ``append(stats_cols=, bloom_cols=)`` and the
+  ``acid_table`` data source's ``stats_cols``/``bloom_cols`` options
+  — plus ``compact(cluster_by=)``, which adds its clustering columns;
+  a declaration only ever widens the policy.
+
 * **Scale**: the log holds file names, not data — thousands of
   commits are kilobytes. Every N commits :meth:`_maybe_checkpoint`
   writes ``<v>.checkpoint.json`` with the full replayed state so
@@ -260,6 +272,28 @@ def _file_may_match(meta: dict | None, prune: dict | None, prune_eq: dict | None
     return True
 
 
+_NO_POLICY = {"stats": [], "blooms": []}
+
+
+def _widen(policy: dict, stats_cols=(), bloom_cols=()) -> dict:
+    """``policy`` plus a writer's declared columns (an order-preserving
+    union: a declaration never drops a column another writer declared)."""
+    return {
+        "stats": list(dict.fromkeys((*policy["stats"], *stats_cols))),
+        "blooms": list(dict.fromkeys((*policy["blooms"], *bloom_cols))),
+    }
+
+
+def _record_policy(entry: dict, snap: "Snapshot", policy: dict) -> dict:
+    """Record ``policy`` in the log ``entry`` when it differs from the
+    snapshot's (a declaration widened it). ``snapshot()`` replays an
+    entry's columns as a union, so a commit that retries past a racing
+    declaration can never narrow the policy."""
+    if policy != snap.policy:
+        entry.update(policy)
+    return entry
+
+
 @dataclass
 class Snapshot:
     version: int
@@ -272,6 +306,9 @@ class Snapshot:
     # committed table schema (Spark StructType jsonValue); None before
     # the first write
     schema: dict | None = field(default=None, repr=False)
+    # data-skipping policy: {"stats": [cols], "blooms": [cols]} that
+    # every writer records on the files it stages
+    policy: dict = field(default_factory=lambda: dict(_NO_POLICY), repr=False)
 
 
 class TransactionalTable:
@@ -405,6 +442,7 @@ class TransactionalTable:
         meta: dict = {}
         ops: list[dict] = []
         schema: dict | None = None
+        policy = dict(_NO_POLICY)
         start = 0
         if cp:
             start, state = cp
@@ -412,6 +450,7 @@ class TransactionalTable:
             meta = dict(state.get("meta", {}))
             ops = list(state.get("ops", []))
             schema = state.get("schema")
+            policy = _widen(policy, state.get("stats", ()), state.get("blooms", ()))
         for v in versions:
             if v <= start:
                 continue
@@ -425,6 +464,7 @@ class TransactionalTable:
                 meta.pop(r["file"], None)
             if "schema" in entry:
                 schema = entry["schema"]
+            policy = _widen(policy, entry.get("stats", ()), entry.get("blooms", ()))
             ops.append({"version": v, **entry.get("op", {})})
         return Snapshot(
             version=versions[-1] if versions else start,
@@ -432,6 +472,7 @@ class TransactionalTable:
             ops=tuple(ops),
             meta=meta,
             schema=schema,
+            policy=policy,
         )
 
     def _try_create(self, version: int, entry: dict) -> bool:
@@ -468,10 +509,10 @@ class TransactionalTable:
         reads — building from version zero made the every-Nth commit
         latency grow linearly forever (measured: checkpoint-commit p99
         20 ms at 1k commits → 590 ms at 10k). The checkpoint stores the
-        live-file state only, NOT the accumulated ops history — full
-        ops in every checkpoint is O(version) bytes each and quadratic
-        in total (the other half of the measured 266 MB log dir);
-        :meth:`history` replays the log instead."""
+        live files, schema and skipping policy only, NOT the accumulated
+        ops history — full ops in every checkpoint is O(version) bytes
+        each and quadratic in total (the other half of the measured
+        266 MB log dir); :meth:`history` replays the log instead."""
         if version % CHECKPOINT_EVERY:
             return
         snap = self.snapshot(version=version)
@@ -482,6 +523,7 @@ class TransactionalTable:
                     "files": list(snap.files),
                     "meta": snap.meta,
                     "schema": snap.schema,
+                    **snap.policy,
                 },
                 fh,
             )
@@ -496,34 +538,47 @@ class TransactionalTable:
 
     # -- data-file staging ---------------------------------------------
 
-    def _stage_files(
-        self,
-        spark: SparkSession,
-        df: DataFrame,
-        stats_cols: tuple[str, ...] = (),
-        bloom_cols: tuple[str, ...] = (),
-    ) -> list[dict]:
+    def _add_action(self, rel: str, md, policy: dict) -> dict:
+        """The add-action of one landed data file (``rel``: root-relative
+        path; ``md``: its parquet metadata, read here when None). Every
+        writer — :meth:`_stage_files` and the ``acid_table`` data
+        source's commits — builds its add-actions here.
+
+        ``policy["stats"]`` columns get a per-file ``[min, max]`` off
+        the parquet FOOTER's row-group statistics (no data scan): the
+        Delta-paper data-skipping design, where the log alone lets a
+        reader or DML exclude files whose interval cannot match.
+        ``policy["blooms"]`` columns get a per-file BLOOM FILTER
+        (``"nbits:hex"``, ~10 bits/row, k=7 → ~1% FPR) for POINT
+        lookups ranges can't prune (one id from an unsorted key);
+        building it reads that column back, so keep blooms to a few
+        high-value keys."""
+        import pyarrow.parquet as pq
+
+        path = os.path.join(self.root, rel)
+        if md is None:
+            md = pq.ParquetFile(path).metadata
+        add = {"file": rel, "bytes": os.path.getsize(path), "rows": md.num_rows}
+        stats = _footer_min_max(md, policy["stats"])
+        if stats:
+            add["stats"] = stats
+        names = {md.schema.column(i).name for i in range(md.num_columns)}
+        present = [c for c in policy["blooms"] if c in names]
+        if present:
+            n_bits = _bloom_bits_for(md.num_rows)
+            tbl = pq.read_table(path, columns=present)
+            add["blooms"] = {
+                c: _bloom_build(tbl.column(c).to_pylist(), n_bits) for c in present
+            }
+        return add
+
+    def _stage_files(self, spark: SparkSession, df: DataFrame, policy=_NO_POLICY) -> list[dict]:
         """Write df's partitions as immutable uuid-named parquet files
-        under data/ and return their add-actions. The Spark write is
-        fully distributed; the per-file rename is metadata-only and
-        the files stay invisible until a log entry references them.
-
-        ``stats_cols`` additionally records per-file min/max for those
-        columns in the add-action (``"stats": {col: [min, max]}``) —
-        read straight off the parquet FOOTER's row-group statistics
-        (no data scan; the executors already computed them during the
-        write). This is the Delta-paper data-skipping design: the log
-        carries enough metadata that a reader or a DML operation can
-        exclude files whose value interval cannot intersect a
-        predicate, without opening them.
-
-        ``bloom_cols`` additionally records a per-file BLOOM FILTER
-        per column (``"blooms": {col: "nbits:hex"}``, ~10 bits/row,
-        k=7 → ~1% FPR) for POINT-lookup skipping where ranges can't
-        prune — the delete-one-id-from-100TB takedown case on an
-        unsorted key. Building it reads that one column back from the
-        staged file (columnar, cheap relative to having just written
-        it); keep bloom columns to the few high-value keys."""
+        under data/ and return their add-actions, with the skipping
+        metadata ``policy`` asks for (:meth:`_add_action`). The Spark
+        write is fully distributed; the per-file rename is
+        metadata-only and the files stay invisible until a log entry
+        references them."""
         tag = uuid.uuid4().hex
         staging = os.path.join(self.root, f"_staging-{tag}")
         df.write.mode("overwrite").parquet(staging)
@@ -540,29 +595,8 @@ class TransactionalTable:
                 # were 13 of 49 files a pruned DELETE had to rewrite)
                 continue
             name = f"{tag}-part-{i:05d}.parquet"
-            dest = os.path.join(self.data_path, name)
-            os.replace(part, dest)
-            add = {
-                "file": f"{DATA_DIR}/{name}",
-                "bytes": os.path.getsize(dest),
-                "rows": md.num_rows,
-            }
-            if stats_cols:
-                stats = _footer_min_max(md, stats_cols)
-                if stats:
-                    add["stats"] = stats
-            if bloom_cols:
-                present = [c for c in bloom_cols if c in {
-                    md.schema.column(ci).name for ci in range(md.num_columns)
-                }]
-                if present:
-                    n_bits = _bloom_bits_for(md.num_rows)
-                    tbl = pq.read_table(dest, columns=present)
-                    add["blooms"] = {
-                        c: _bloom_build(tbl.column(c).to_pylist(), n_bits)
-                        for c in present
-                    }
-            adds.append(add)
+            os.replace(part, os.path.join(self.data_path, name))
+            adds.append(self._add_action(f"{DATA_DIR}/{name}", md, policy))
         shutil.rmtree(staging, ignore_errors=True)
         return adds
 
@@ -572,6 +606,55 @@ class TransactionalTable:
                 os.unlink(os.path.join(self.root, a["file"]))
             except OSError:
                 pass
+
+    def _commit_append(
+        self, version: int, entry: dict, max_retries: int = 50, replayed=None
+    ) -> int | None:
+        """Commit an add-only ``entry`` at the first free version from
+        ``version``: appends commute, so a lost race retries the next
+        slot with the SAME files and never loses an update. ``replayed``
+        (exactly-once streaming writers) is re-checked after each lost
+        race; True means this batch already committed, so its files are
+        abandoned and None is returned."""
+        for _ in range(max_retries):
+            if self._try_create(version, entry):
+                return version
+            if replayed is not None and replayed():
+                self._abandon(entry["add"])
+                return None
+            version += 1
+        self._abandon(entry["add"])
+        raise CommitConflict(f"append lost {max_retries} consecutive version races")
+
+    def _commit_overwrite(
+        self, snap: Snapshot, adds: list[dict], schema: dict, policy: dict
+    ) -> int:
+        """Commit ``adds`` as the whole table, replacing ``snap``'s
+        files. Concurrent APPENDS are absorbed by retrying with the
+        enlarged remove set (last-overwrite-wins on content, but no
+        committed file is ever left dangling); a concurrent REMOVAL
+        (another rewrite) raises — overwriting a table someone else just
+        rewrote would silently drop their rewrite's intent."""
+        while True:
+            entry = {
+                "add": adds,
+                "remove": [{"file": f} for f in snap.files],
+                "op": {"op": "overwrite", "ts": time.time()},
+                # overwrite REDEFINES the schema (it replaced every row;
+                # this is the sanctioned way to change a column's type)
+                "schema": schema,
+            }
+            if self._try_create(snap.version + 1, _record_policy(entry, snap, policy)):
+                return snap.version + 1
+            newer = self.snapshot()
+            removed_since = set(snap.files) - set(newer.files)
+            if removed_since:
+                self._abandon(adds)
+                raise CommitConflict(
+                    f"concurrent rewrite removed {len(removed_since)} files this "
+                    "overwrite was replacing; recompute from the new snapshot"
+                )
+            snap = newer
 
     # -- write operations ----------------------------------------------
 
@@ -584,11 +667,12 @@ class TransactionalTable:
         bloom_cols: tuple[str, ...] = (),
         merge_schema: bool = False,
     ) -> int:
-        """Blind append: commutes with every other commit, so a version
-        collision just means someone else was faster — retry at the
-        next slot with the SAME staged files. Never loses an update.
-        ``stats_cols`` records per-file min/max in the log for
-        data-skipping reads and DML (see ``_stage_files``).
+        """Blind append: commutes with every other commit and
+        auto-retries through version races (:meth:`_commit_append`).
+        ``stats_cols`` / ``bloom_cols`` DECLARE data-skipping columns:
+        they widen the table's policy (recorded in this commit's log
+        entry), and this and every later writer records per-file
+        min/max / bloom metadata for them (see :meth:`_add_action`).
 
         Schema ENFORCEMENT: the incoming frame must match the table's
         committed schema (names+types, order-insensitive) or the append
@@ -606,46 +690,21 @@ class TransactionalTable:
         schema_change = _evolve_schema(
             snap0.schema, df.schema.jsonValue(), merge_schema
         )
-        adds = self._stage_files(spark, df, stats_cols=stats_cols, bloom_cols=bloom_cols)
+        policy = _widen(snap0.policy, stats_cols, bloom_cols)
+        adds = self._stage_files(spark, df, policy)
         entry = {"add": adds, "op": {"op": "append", "ts": time.time()}}
         if schema_change is not None:
             entry["schema"] = schema_change
-        v = snap0.version + 1
-        for _ in range(max_retries):
-            if self._try_create(v, entry):
-                return v
-            v += 1
-        self._abandon(adds)
-        raise CommitConflict(f"append lost {max_retries} consecutive version races")
+        return self._commit_append(
+            snap0.version + 1, _record_policy(entry, snap0, policy), max_retries
+        )
 
     def overwrite(self, spark: SparkSession, df: DataFrame) -> int:
-        """Replace the whole table. Validates against concurrent
-        REMOVALS (another rewrite): overwriting a table someone else
-        just rewrote would silently drop their rewrite's intent, so
-        that race raises; concurrent APPENDS are absorbed by retrying
-        with the enlarged remove set (last-overwrite-wins on content,
-        but no committed file is ever left dangling)."""
-        adds = self._stage_files(spark, df)
-        while True:
-            snap = self.snapshot()
-            entry = {
-                "add": adds,
-                "remove": [{"file": f} for f in snap.files],
-                "op": {"op": "overwrite", "ts": time.time()},
-                # overwrite REDEFINES the schema (it replaced every row;
-                # this is the sanctioned way to change a column's type)
-                "schema": df.schema.jsonValue(),
-            }
-            if self._try_create(snap.version + 1, entry):
-                return snap.version + 1
-            newer = self.snapshot()
-            removed_since = set(snap.files) - set(newer.files)
-            if removed_since:
-                self._abandon(adds)
-                raise CommitConflict(
-                    f"concurrent rewrite removed {len(removed_since)} files this "
-                    "overwrite was replacing; recompute from the new snapshot"
-                )
+        """Replace the whole table, keeping its skipping policy. Conflict
+        rules: :meth:`_commit_overwrite`."""
+        snap = self.snapshot()
+        adds = self._stage_files(spark, df, snap.policy)
+        return self._commit_overwrite(snap, adds, df.schema.jsonValue(), snap.policy)
 
     def merge_upsert(
         self,
@@ -687,7 +746,7 @@ class TransactionalTable:
                 if existing is not None
                 else surviving
             )
-            adds = self._stage_files(spark, merged)
+            adds = self._stage_files(spark, merged, snap.policy)
             entry = {
                 "add": adds,
                 "remove": [{"file": f} for f in snap.files],
@@ -700,14 +759,41 @@ class TransactionalTable:
             self._abandon(adds)  # stale inputs: recompute from new snapshot
         raise CommitConflict(f"merge lost {max_retries} recompute rounds")
 
+    def _rewrite_matching(
+        self, spark: SparkSession, snap: Snapshot, rewrite, op: dict, prune, prune_eq, max_retries
+    ) -> int | None:
+        """The copy-on-write loop behind DELETE and UPDATE: rewrite
+        (``rewrite(df) -> df``) only the files whose metadata can match
+        ``prune``/``prune_eq``, commit removing exactly those, and
+        record how many files the log let it skip. A lost race makes
+        the read set stale: recompute from the fresh snapshot."""
+        for _ in range(max_retries):
+            touched = [
+                f
+                for f in snap.files
+                if _file_may_match(snap.meta.get(f), prune, prune_eq)
+            ]
+            if not touched:
+                return None
+            out = rewrite(self._read_files(spark, tuple(touched), schema=snap.schema))
+            adds = self._stage_files(spark, out, snap.policy)
+            entry = {
+                "add": adds,
+                "remove": [{"file": f} for f in touched],
+                "op": {**op, "skipped_files": len(snap.files) - len(touched), "ts": time.time()},
+            }
+            if self._try_create(snap.version + 1, entry):
+                return snap.version + 1
+            self._abandon(adds)  # stale read set: recompute from new snapshot
+            snap = self.snapshot()
+        raise CommitConflict(f"{op['op']} lost {max_retries} recompute rounds")
+
     def delete_where(
         self,
         spark: SparkSession,
         condition: str,
         prune: dict | None = None,
         prune_eq: dict | None = None,
-        stats_cols: tuple[str, ...] = (),
-        bloom_cols: tuple[str, ...] = (),
         max_retries: int = 5,
     ) -> int | None:
         """Copy-on-write DELETE with file-level data skipping — the
@@ -726,54 +812,27 @@ class TransactionalTable:
         cost is O(matching files), metadata-decided from the log alone,
         no file opened. Files without stats conservatively rewrite.
 
-        ``stats_cols`` controls the stats recorded on the REWRITTEN
-        files (default: the prune columns, so skipping keeps working
-        after the delete). Returns the committed version, or None if
-        pruning proved no file could match (no commit — deleting
-        nothing is a no-op, not a new version). Conflicts behave like
-        :meth:`merge_upsert`: any intervening commit makes the read
-        set stale, so recompute from the fresh snapshot and retry.
+        The rewritten files carry the table's skipping policy, so
+        skipping keeps working after the delete. Returns the committed
+        version, or None if pruning proved no file could match (no
+        commit — deleting nothing is a no-op, not a new version).
+        Conflicts behave like :meth:`merge_upsert`: any intervening
+        commit makes the read set stale, so recompute from the fresh
+        snapshot and retry.
 
         ``prune_eq`` (column → value) adds POINT-lookup skipping
         against per-file bloom filters + stats — the takedown case:
         deleting one doc_id from an unsorted 100 TB table opens only
         the ~1% of files whose bloom false-positives, instead of every
-        file whose key range happens to straddle the id. ``bloom_cols``
-        re-records blooms on the rewritten files (default: the
-        prune_eq columns)."""
+        file whose key range happens to straddle the id."""
         from pyspark.sql import functions as F
 
-        stats_cols = stats_cols or tuple(prune or ())
-        bloom_cols = bloom_cols or tuple(prune_eq or ())
-        for _ in range(max_retries):
-            snap = self.snapshot()
-            touched = [
-                f
-                for f in snap.files
-                if _file_may_match(snap.meta.get(f), prune, prune_eq)
-            ]
-            if not touched:
-                return None
-            survivors = self._read_files(
-                spark, tuple(touched), schema=snap.schema
-            ).filter(~F.coalesce(F.expr(condition), F.lit(False)))
-            adds = self._stage_files(
-                spark, survivors, stats_cols=stats_cols, bloom_cols=bloom_cols
-            )
-            entry = {
-                "add": adds,
-                "remove": [{"file": f} for f in touched],
-                "op": {
-                    "op": "delete",
-                    "condition": condition,
-                    "skipped_files": len(snap.files) - len(touched),
-                    "ts": time.time(),
-                },
-            }
-            if self._try_create(snap.version + 1, entry):
-                return snap.version + 1
-            self._abandon(adds)  # stale read set: recompute from new snapshot
-        raise CommitConflict(f"delete lost {max_retries} recompute rounds")
+        def survivors(df: DataFrame) -> DataFrame:
+            return df.filter(~F.coalesce(F.expr(condition), F.lit(False)))
+
+        op = {"op": "delete", "condition": condition}
+        snap = self.snapshot()
+        return self._rewrite_matching(spark, snap, survivors, op, prune, prune_eq, max_retries)
 
     def update_where(
         self,
@@ -782,8 +841,6 @@ class TransactionalTable:
         set_exprs: dict[str, str],
         prune: dict | None = None,
         prune_eq: dict | None = None,
-        stats_cols: tuple[str, ...] = (),
-        bloom_cols: tuple[str, ...] = (),
         max_retries: int = 5,
     ) -> int | None:
         """Copy-on-write UPDATE — ``delete_where``'s sibling, completing
@@ -793,28 +850,19 @@ class TransactionalTable:
         standard UPDATE semantics; NULL condition ⇒ untouched); every
         assignment is cast back to the column's committed type, so an
         UPDATE can never fork the table schema. File-level pruning,
-        stats re-recording, conflict-recompute, and the
-        ``skipped_files`` op record all behave exactly as in
+        the skipping policy on rewritten files, conflict-recompute, and
+        the ``skipped_files`` op record all behave exactly as in
         :meth:`delete_where` — cost scales with files that CAN match."""
         from pyspark.sql import functions as F
 
-        unknown = set(set_exprs) - set(_schema_fields(self.snapshot().schema or {"fields": []}))
-        if self.snapshot().schema is not None and unknown:
+        snap = self.snapshot()
+        unknown = set(set_exprs) - set(_schema_fields(snap.schema or {"fields": []}))
+        if snap.schema is not None and unknown:
             raise SchemaMismatch(f"UPDATE sets unknown column(s) {sorted(unknown)}")
-        stats_cols = stats_cols or tuple(prune or ())
-        bloom_cols = bloom_cols or tuple(prune_eq or ())
-        for _ in range(max_retries):
-            snap = self.snapshot()
-            touched = [
-                f
-                for f in snap.files
-                if _file_may_match(snap.meta.get(f), prune, prune_eq)
-            ]
-            if not touched:
-                return None
-            df = self._read_files(spark, tuple(touched), schema=snap.schema)
-            cond = F.coalesce(F.expr(condition), F.lit(False))
-            updated = df.select(
+        cond = F.coalesce(F.expr(condition), F.lit(False))
+
+        def rewrite(df: DataFrame) -> DataFrame:
+            return df.select(
                 *[
                     F.when(cond, F.expr(set_exprs[c]).cast(df.schema[c].dataType))
                     .otherwise(F.col(c))
@@ -824,24 +872,9 @@ class TransactionalTable:
                     for c in df.columns
                 ]
             )
-            adds = self._stage_files(
-                spark, updated, stats_cols=stats_cols, bloom_cols=bloom_cols
-            )
-            entry = {
-                "add": adds,
-                "remove": [{"file": f} for f in touched],
-                "op": {
-                    "op": "update",
-                    "condition": condition,
-                    "set": dict(set_exprs),
-                    "skipped_files": len(snap.files) - len(touched),
-                    "ts": time.time(),
-                },
-            }
-            if self._try_create(snap.version + 1, entry):
-                return snap.version + 1
-            self._abandon(adds)  # stale read set: recompute from new snapshot
-        raise CommitConflict(f"update lost {max_retries} recompute rounds")
+
+        op = {"op": "update", "condition": condition, "set": dict(set_exprs)}
+        return self._rewrite_matching(spark, snap, rewrite, op, prune, prune_eq, max_retries)
 
     def compact(
         self,
@@ -849,24 +882,23 @@ class TransactionalTable:
         target_file_mb: int = 128,
         cluster_by: tuple[str, ...] = (),
         n_files: int | None = None,
-        stats_cols: tuple[str, ...] = (),
     ) -> int | None:
         """Rewrite the current live set into ~target_file_mb files
-        (or exactly ``n_files``). Content is unchanged, so a concurrent
-        commit makes this compaction's output stale garbage — abort
-        (returning None) and let the orphans vacuum; never retry into
-        someone's commit.
+        (or exactly ``n_files``), under the table's skipping policy.
+        Content is unchanged, so a concurrent commit makes this
+        compaction's output stale garbage — abort (returning None) and
+        let the orphans vacuum; never retry into someone's commit.
 
         ``cluster_by`` makes this ``OPTIMIZE ... ZORDER BY``: rows are
         range-partitioned and sorted on the bit-interleaved equi-depth
         Z-value over those columns (``sources.sinks.with_zvalue`` — the
         same layout machinery as ``write_zorder_lake``), and the
-        rewritten add-actions record min/max stats for them (plus any
-        ``stats_cols``), so after compaction a pruned ``read``/
-        ``delete_where`` on ANY prefix-free subset of the clustered
-        dimensions skips ~n^(1-1/k) of the files instead of scanning
-        all of them. Clustering + stats + log-level skipping compose
-        into the full Delta OPTIMIZE story on this JSON log."""
+        clustering columns join the table's stats policy, so after
+        compaction a pruned ``read``/``delete_where`` on ANY
+        prefix-free subset of the clustered dimensions skips
+        ~n^(1-1/k) of the files instead of scanning all of them.
+        Clustering + stats + log-level skipping compose into the full
+        Delta OPTIMIZE story on this JSON log."""
         snap = self.snapshot()
         if not snap.files:
             return None
@@ -888,9 +920,8 @@ class TransactionalTable:
             )
         else:
             df = df.repartition(n)
-        adds = self._stage_files(
-            spark, df, stats_cols=tuple(dict.fromkeys((*cluster_by, *stats_cols)))
-        )
+        policy = _widen(snap.policy, cluster_by)
+        adds = self._stage_files(spark, df, policy)
         entry = {
             "add": adds,
             "remove": [{"file": f} for f in snap.files],
@@ -900,7 +931,7 @@ class TransactionalTable:
                 "ts": time.time(),
             },
         }
-        if self._try_create(snap.version + 1, entry):
+        if self._try_create(snap.version + 1, _record_policy(entry, snap, policy)):
             return snap.version + 1
         self._abandon(adds)
         return None

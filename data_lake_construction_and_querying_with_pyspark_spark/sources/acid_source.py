@@ -58,8 +58,11 @@ API; the streaming writer records the micro-batch id inside the commit
 entry (op ``stream_append``) so checkpoint replays are detected and
 skipped — the same exactly-once contract as
 ``streaming.sinks.streaming_acid_append``, now with no ``foreachBatch``
-wrapper. Options: ``stats_cols`` / ``bloom_cols`` (comma-separated)
-record per-file data-skipping metadata; ``merge_schema`` permits
+wrapper. Every landed file carries the table's data-skipping policy
+(the add-actions come from the same ``TransactionalTable._add_action``
+as the API writers'). Options: ``stats_cols`` / ``bloom_cols``
+(comma-separated) declare columns into that policy, like
+``TransactionalTable.append``'s arguments; ``merge_schema`` permits
 column-addition evolution.
 """
 
@@ -67,6 +70,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
@@ -84,7 +88,11 @@ from data_lake_construction_and_querying_with_pyspark_spark.acid import (
     _PAD,
     DATA_DIR,
     LOG_DIR,
+    SchemaMismatch,
     TransactionalTable,
+    _evolve_schema,
+    _record_policy,
+    _widen,
 )
 
 
@@ -395,7 +403,9 @@ class _AcidStreamReader(DataSourceStreamReader):
 
 @dataclass
 class _AcidWriteMessage(WriterCommitMessage):
-    adds: tuple  # add-action dicts for the files this task staged
+    # {"file": ...} of each data file this task landed; the driver's
+    # commit completes them into full add-actions
+    adds: tuple
 
 
 class _AcidWriterCore:
@@ -412,15 +422,16 @@ class _AcidWriterCore:
     leaves an unreferenced orphan that ``vacuum()`` collects; the
     committed table never sees it.
 
-    ``stats_cols`` / ``bloom_cols`` options (comma-separated column
-    names) record the same per-file min/max and bloom-filter metadata
-    in the add-action as the ``TransactionalTable`` API — computed here
-    from the in-memory Arrow table (footer-equivalent values via the
-    shared ``_json_stat`` normalization), so data skipping works
-    identically on writer-landed files."""
+    The driver's ``commit`` builds the add-actions with the same
+    ``TransactionalTable._add_action`` as every API writer, under the
+    policy of the snapshot it commits against — so data skipping works
+    identically on writer-landed files. The ``stats_cols`` /
+    ``bloom_cols`` options (comma-separated column names) declare
+    columns, widening the table's policy exactly like
+    ``TransactionalTable.append``'s arguments."""
 
     def __init__(self, root: str, schema: StructType, options: dict):
-        self.root = root
+        self.table = TransactionalTable(root)
         self.schema_json = schema.jsonValue()
         split = lambda k: tuple(c for c in str(options.get(k, "")).split(",") if c)  # noqa: E731
         self.stats_cols = split("stats_cols")
@@ -434,109 +445,65 @@ class _AcidWriterCore:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from data_lake_construction_and_querying_with_pyspark_spark.acid import (
-            _bloom_bits_for,
-            _bloom_build,
-            _footer_min_max,
-        )
-
         batches = [b for b in iterator if b.num_rows]
         if not batches:
             # 0-row parts never enter the log (they carry no stats and
             # would conservatively match every prune interval forever)
             return _AcidWriteMessage(adds=())
-        table = pa.Table.from_batches(batches)
-        name = f"{uuid.uuid4().hex}.parquet"
-        dest = os.path.join(self.root, DATA_DIR, name)
-        pq.write_table(table, dest)
-        md = pq.ParquetFile(dest).metadata
-        add = {
-            "file": f"{DATA_DIR}/{name}",
-            "bytes": os.path.getsize(dest),
-            "rows": md.num_rows,
-        }
-        if self.stats_cols:
-            stats = _footer_min_max(md, self.stats_cols)
-            if stats:
-                add["stats"] = stats
-        present = [c for c in self.bloom_cols if c in table.column_names]
-        if present:
-            n_bits = _bloom_bits_for(md.num_rows)
-            add["blooms"] = {
-                c: _bloom_build(table.column(c).to_pylist(), n_bits) for c in present
-            }
-        return _AcidWriteMessage(adds=(add,))
+        rel = f"{DATA_DIR}/{uuid.uuid4().hex}.parquet"
+        pq.write_table(pa.Table.from_batches(batches), os.path.join(self.table.root, rel))
+        return _AcidWriteMessage(adds=({"file": rel},))
 
     # -- driver side ------------------------------------------------------
     def _gather(self, messages) -> list[dict]:
         return [a for m in messages if m is not None for a in m.adds]
 
-    def _abandon(self, adds: list[dict]) -> None:
-        for a in adds:
-            try:
-                os.unlink(os.path.join(self.root, a["file"]))
-            except OSError:
-                pass
+    def _land(self, messages, snap) -> tuple[list[dict], dict]:
+        """Add-actions for the tasks' files under ``snap``'s policy
+        widened by this writer's options, and that policy."""
+        policy = _widen(snap.policy, self.stats_cols, self.bloom_cols)
+        adds = [self.table._add_action(a["file"], None, policy) for a in self._gather(messages)]
+        return adds, policy
+
+    def _append(self, messages, op: dict, replayed=None) -> None:
+        """Commit the tasks' files as one append (``op`` is its op
+        record) with the API's schema enforcement and version-race
+        retry; a rejected schema abandons the files and raises."""
+        snap = self.table.snapshot()
+        try:
+            schema_change = _evolve_schema(snap.schema, self.schema_json, self.merge_schema)
+        except SchemaMismatch:
+            self.abort(messages)
+            raise
+        adds, policy = self._land(messages, snap)
+        entry = {"add": adds, "op": {**op, "ts": time.time()}}
+        if schema_change is not None:
+            entry["schema"] = schema_change
+        self.table._commit_append(
+            snap.version + 1, _record_policy(entry, snap, policy), replayed=replayed
+        )
 
     def abort(self, messages, *_):
-        self._abandon(self._gather(messages))
+        self.table._abandon(self._gather(messages))
 
 
 class _AcidBatchWriter(_AcidWriterCore, DataSourceArrowWriter):
     """``df.write.format("acid_table")`` — append and overwrite modes,
-    committing through the same atomic log primitive as the
+    committing through the same commit loops as the
     ``TransactionalTable`` API (append retries through version races;
-    overwrite raises on a concurrent rewrite, mirroring
-    ``TransactionalTable.overwrite``'s conflict rule)."""
+    overwrite raises on a concurrent rewrite)."""
 
     def __init__(self, root: str, schema: StructType, options: dict, overwrite: bool):
         super().__init__(root, schema, options)
         self.overwrite = overwrite
 
     def commit(self, messages) -> None:
-        import time
-
-        from data_lake_construction_and_querying_with_pyspark_spark.acid import (
-            CommitConflict,
-            _evolve_schema,
-        )
-
-        adds = self._gather(messages)
-        table = TransactionalTable(self.root)
-        if self.overwrite:
-            while True:
-                snap = table.snapshot()
-                entry = {
-                    "add": adds,
-                    "remove": [{"file": f} for f in snap.files],
-                    "op": {"op": "overwrite", "ts": time.time()},
-                    "schema": self.schema_json,
-                }
-                if table._try_create(snap.version + 1, entry):
-                    return
-                newer = table.snapshot()
-                if set(snap.files) - set(newer.files):
-                    self._abandon(adds)
-                    raise CommitConflict(
-                        "concurrent rewrite removed files this overwrite was "
-                        "replacing; recompute from the new snapshot"
-                    )
-        snap0 = table.snapshot()
-        try:
-            schema_change = _evolve_schema(snap0.schema, self.schema_json, self.merge_schema)
-        except Exception:
-            self._abandon(adds)
-            raise
-        entry = {"add": adds, "op": {"op": "append", "ts": time.time()}}
-        if schema_change is not None:
-            entry["schema"] = schema_change
-        v = snap0.version + 1
-        for _ in range(50):
-            if table._try_create(v, entry):
-                return
-            v += 1
-        self._abandon(adds)
-        raise CommitConflict("append lost 50 consecutive version races")
+        if not self.overwrite:
+            self._append(messages, {"op": "append"})
+            return
+        snap = self.table.snapshot()
+        adds, policy = self._land(messages, snap)
+        self.table._commit_overwrite(snap, adds, self.schema_json, policy)
 
 
 class _AcidStreamWriter(_AcidWriterCore, DataSourceStreamArrowWriter):
@@ -553,14 +520,7 @@ class _AcidStreamWriter(_AcidWriterCore, DataSourceStreamArrowWriter):
     dedup namespace)."""
 
     def commit(self, messages, batchId: int) -> None:
-        import time
-
-        from data_lake_construction_and_querying_with_pyspark_spark.acid import (
-            _evolve_schema,
-        )
-
-        adds = self._gather(messages)
-        table = TransactionalTable(self.root)
+        table = self.table
         # Incremental replay check (same move as streaming_acid_append):
         # the writer instance lives for the whole run on the driver, so
         # cache the committed batch-id set and only scan commits newer
@@ -579,30 +539,9 @@ class _AcidStreamWriter(_AcidWriterCore, DataSourceStreamArrowWriter):
             return batchId in self._seen_batch_ids
 
         if committed():
-            self._abandon(adds)
+            self.abort(messages)
             return
-        snap0 = table.snapshot()
-        try:
-            schema_change = _evolve_schema(snap0.schema, self.schema_json, self.merge_schema)
-        except Exception:
-            self._abandon(adds)
-            raise
-        entry = {
-            "add": adds,
-            "op": {"op": "stream_append", "batch_id": batchId, "ts": time.time()},
-        }
-        if schema_change is not None:
-            entry["schema"] = schema_change
-        v = snap0.version + 1
-        for _ in range(50):
-            if table._try_create(v, entry):
-                return
-            if committed():
-                self._abandon(adds)
-                return
-            v += 1
-        self._abandon(adds)
-        raise RuntimeError("streaming append lost 50 consecutive version races")
+        self._append(messages, {"op": "stream_append", "batch_id": batchId}, replayed=committed)
 
 
 class AcidTableDataSource(DataSource):

@@ -193,7 +193,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     The analyzed plan is memoized per (session, sf_dir, table) — see
     ``_TABLE_PLAN_CACHE``; the parquet data is re-scanned by every
-    action as always."""
+    action as always. The memo assumes READ-ONLY inputs: the cached
+    plan keeps the file listing taken at first load, so files added,
+    replaced or removed under ``sf_dir`` later in the same application
+    are not seen (a new application lists afresh). Clear
+    ``_TABLE_PLAN_CACHE`` after rewriting an input in place."""
     key = (spark.sparkContext.applicationId, sf_dir, name)
     df = _TABLE_PLAN_CACHE.get(key)
     if df is None:
@@ -259,8 +263,12 @@ def tag_like(df: DataFrame, src: DataFrame) -> DataFrame:
     onto a frame DERIVED from it — unions with clone rows, projections —
     so :func:`fan_out_small_scan`'s guard stays metadata-based for such
     frames instead of falling back to the physical-plan probe. The
-    derived frame's partition count IS the scan's (narrow lineage), so
-    the decision is unchanged."""
+    guard then decides from the SOURCE scan's files, not from the
+    derived frame's partitions — and those can differ: a
+    ``unionByName`` sums its children's partitions, so a union of a
+    small scan with its clone rows may already fill every core and
+    still get fanned out. That costs one extra repartition, never a
+    different value."""
     paths = getattr(src, "_lake_scan_paths", None)
     if paths is not None:
         df._lake_scan_paths = paths
@@ -303,7 +311,11 @@ def scan_paths_are_small(spark: SparkSession, paths: tuple[str, ...]) -> bool | 
             total += _os.path.getsize(local)
         else:
             return None
-    max_pb = int("".join(ch for ch in spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728") if ch.isdigit()) or "134217728")
+    # Spark's own byte-string parser: "128MB", "1g" and "134217728b"
+    # all read as Spark reads them
+    max_pb = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
+    )
     par = sc.defaultParallelism
     small = n_files < par and total < par * max_pb
     _SMALL_SCAN_CACHE[key] = small

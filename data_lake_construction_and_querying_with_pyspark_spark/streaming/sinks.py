@@ -311,6 +311,8 @@ def streaming_acid_append(
     plus batch maintenance jobs like ``compact()`` — can target one
     table. At scale the per-batch overhead is one small JSON create;
     the data write is the same distributed parquet job as any append.
+    Each batch's files carry the table's data-skipping policy, like
+    every other writer's (acid.py).
     """
     import time as _time
 
@@ -336,27 +338,21 @@ def streaming_acid_append(
         # second write), so dedup-by-id and commit can't be torn apart
         if batch_id in _committed_batches():
             return  # replay of a committed batch: exactly-once skip
-        adds = table._stage_files(batch_df.sparkSession, batch_df)
+        snap0 = table.snapshot()
+        adds = table._stage_files(batch_df.sparkSession, batch_df, snap0.policy)
         entry = {
             "add": adds,
             "op": {"op": "stream_append", "batch_id": batch_id, "ts": _time.time()},
         }
-        snap0 = table.snapshot()
         if snap0.schema is None:
             # first writer stamps the table schema so later batch
             # appends get the same enforcement as the batch API
             entry["schema"] = batch_df.schema.jsonValue()
-        v = snap0.version + 1
-        for _ in range(50):
-            if table._try_create(v, entry):
-                return
-            # another writer landed: re-check replay status, then retry
-            if batch_id in _committed_batches():
-                table._abandon(adds)
-                return
-            v += 1
-        table._abandon(adds)
-        raise RuntimeError("streaming append lost 50 consecutive version races")
+        # another writer landing first only moves the commit to the next
+        # slot, unless it was a replay of this very batch
+        table._commit_append(
+            snap0.version + 1, entry, replayed=lambda: batch_id in _committed_batches()
+        )
 
     return (
         stream_df.writeStream.foreachBatch(write_batch)

@@ -59,9 +59,7 @@ def main() -> None:
     total_files = len(t.snapshot().files)
 
     target = n // 2 + 7
-    t.delete_where(
-        spark, f"doc_id = {target}", prune_eq={"doc_id": target}, stats_cols=("doc_id",)
-    )
+    t.delete_where(spark, f"doc_id = {target}", prune_eq={"doc_id": target})
     entry_ops = t.history()[-1]
     delete_version = entry_ops["version"]
 

@@ -810,3 +810,69 @@ def test_snapshot_without_pointer_falls_back(table):
     os.unlink(ptr)
     snap = table.snapshot()
     assert snap.version == CHECKPOINT_EVERY + 2
+
+
+def _stream_append(spark, table, tmp_path):
+    from data_lake_construction_and_querying_with_pyspark_spark.streaming.sinks import (
+        streaming_acid_append,
+    )
+
+    src = str(tmp_path / "src")
+    _batch(spark, 60, 70, "s").write.parquet(src)
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    streaming_acid_append(stream, table.root, str(tmp_path / "cp")).awaitTermination()
+
+
+def _format_append(spark, table, tmp_path):
+    from data_lake_construction_and_querying_with_pyspark_spark.sources.acid_source import (
+        register_acid_source,
+    )
+
+    register_acid_source(spark)
+    writer = _batch(spark, 60, 70, "w").write.format("acid_table").option("path", table.root)
+    writer.mode("append").save()
+
+
+_POLICY_WRITERS = {
+    "merge_upsert": lambda spark, t, _: t.merge_upsert(spark, _batch(spark, 45, 55, "m"), ["k"]),
+    "overwrite": lambda spark, t, _: t.overwrite(spark, _batch(spark, 0, 50, "o")),
+    "update_where": lambda spark, t, _: t.update_where(spark, "k >= 40", {"flag": "'u'"}),
+    "compact": lambda spark, t, _: t.compact(spark),
+    "streaming_acid_append": _stream_append,
+    "acid_table_format_append": _format_append,
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_POLICY_WRITERS))
+def test_every_writer_applies_the_table_stats_policy(spark, table, tmp_path, writer):
+    """The stats columns are a TABLE property declared once: every
+    writer — none of which is told the columns — leaves ``k`` stats on
+    every live file, so a later pruned DELETE still skips files."""
+    table.append(spark, _batch(spark, 0, 50), stats_cols=("k",))  # declares the policy
+    table.append(spark, _batch(spark, 100, 150, "b"))  # inherits it
+    _POLICY_WRITERS[writer](spark, table, tmp_path)
+    snap = table.snapshot()
+    assert snap.files and all("k" in snap.meta[f].get("stats", {}) for f in snap.files)
+    table.append(spark, _batch(spark, 200, 210, "z"))
+    assert table.delete_where(spark, "k >= 200", prune={"k": (200, None)}) is not None
+    assert table.history()[-1]["skipped_files"] >= 1
+    assert max(r["k"] for r in table.read(spark).collect()) < 200
+
+
+def test_stats_policy_survives_checkpoint(spark, table):
+    """Declared at v1, the policy rides the checkpoint: with v1's log
+    entry unreadable, the head snapshot (``_last_checkpoint`` path)
+    still applies it to the next writer."""
+    table.append(spark, _batch(spark, 0, 10), stats_cols=("k",), bloom_cols=("k",))
+    for v in range(2, CHECKPOINT_EVERY + 2):
+        assert table._try_create(v, {"add": [], "op": {"op": "append"}})
+    assert table._read_last_checkpoint()[0] == CHECKPOINT_EVERY
+    first = os.path.join(table.log_path, f"{1:020d}.json")
+    os.chmod(first, 0o000)
+    try:
+        table.merge_upsert(spark, _batch(spark, 5, 15, "m"), ["k"])
+        snap = table.snapshot()
+    finally:
+        os.chmod(first, 0o644)
+    assert all({"stats", "blooms"} <= snap.meta[f].keys() for f in snap.files)
+    assert snap.policy == {"stats": ["k"], "blooms": ["k"]}

@@ -101,6 +101,16 @@ def test_batch_writer_records_skipping_metadata(spark, root):
     _write(_frame(spark, 1000, 1100, "b").coalesce(1), root, stats_cols="k", bloom_cols="k")
     df = spark.read.format("acid_table").option("path", root).load()
     assert [(r["k"], r["flag"]) for r in df.filter("k = 1050").collect()] == [(1050, "b")]
+    # writer-landed add-actions carry exactly what the API append records
+    # for the same rows: both are built by one helper
+    api = TransactionalTable.create(root + "_api")
+    api.append(spark, _frame(spark, 0, 100).coalesce(1), stats_cols=("k",), bloom_cols=("k",))
+    (api_meta,) = api.snapshot().meta.values()
+    assert (meta["stats"], meta["blooms"]) == (api_meta["stats"], api_meta["blooms"])
+    # a write without options inherits the table's policy
+    _write(_frame(spark, 2000, 2010, "c").coalesce(1), root)
+    (newest,) = [m for m in t.snapshot().meta.values() if m["stats"]["k"] == [2000, 2009]]
+    assert "k" in newest["blooms"]
 
 
 def test_batch_writer_skips_empty_partitions(spark, root):
