@@ -35,7 +35,6 @@ from data_lake_construction_and_querying_with_pyspark_spark.sources.readers impo
     fan_out_small_scan,
     input_bytes,
     load_table,
-    tag_like,
 )
 
 # --- shared shingling expressions --------------------------------------------
@@ -721,6 +720,26 @@ _CLONE_MOD = 50  # every 50th vector gets a planted near-identical clone
 _CLONE_OFF = 1_000_000  # clone vec_id offset (disjoint from the corpus id space)
 
 
+def planted_clone_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The planted-clone corpus the embedding-family queries share: the
+    ``embeddings`` table as double vectors plus, for every
+    ``_CLONE_MOD``-th vector, a clone at ``vec_id + _CLONE_OFF`` nudged
+    +0.01 per coordinate (cosine ≈ 0.9998) — known near-dup ground
+    truth. The DuckDB oracles build the same union as their ``aug`` CTE."""
+    from data_lake_construction_and_querying_with_pyspark_spark.operators.similarity import (
+        as_double_vec,
+    )
+
+    base = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double_vec(F.col("embedding")).alias("embedding")
+    )
+    clones = base.filter(F.col("vec_id") % _CLONE_MOD == 0).select(
+        (F.col("vec_id") + F.lit(_CLONE_OFF)).alias("vec_id"),
+        F.transform("embedding", lambda x: x + F.lit(0.01)).alias("embedding"),
+    )
+    return base.unionByName(clones)
+
+
 def _scaled_pairs_ctes(dim: int = 64) -> str:
     """The scaled-geometry candidate CTE chain (aug corpus with planted
     clones, normalized vectors, seeded-LCG hyperplane bands, distinct
@@ -807,19 +826,9 @@ def dedup_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs — recovered with probability 1−(1−p₁₆)⁸ ≈ 1−8×10⁻⁹ — and the
     DuckDB oracle replays the identical LCG hyperplanes (embedded as
     literals), so candidate sets match bit-for-bit, recall included."""
-    from data_lake_construction_and_querying_with_pyspark_spark.operators.similarity import (
-        as_double_vec,
-    )
-
-    raw = load_table(spark, sf_dir, "embeddings")
-    base = raw.select("vec_id", as_double_vec(F.col("embedding")).alias("embedding"))
-    clones = base.filter(F.col("vec_id") % _CLONE_MOD == 0).select(
-        (F.col("vec_id") + F.lit(_CLONE_OFF)).alias("vec_id"),
-        F.transform("embedding", lambda x: x + F.lit(0.01)).alias("embedding"),
-    )
     return embedding_cosine_pairs_scaled(
         spark,
-        tag_like(base.unionByName(clones), raw),
+        planted_clone_embeddings(spark, sf_dir),
         tau=_SCALED_TAU,
         n_tables=_SCALED_TABLES,
         n_planes=_SCALED_PLANES,
@@ -1087,19 +1096,9 @@ def dedup_canonical_corpus_embeddings(spark: SparkSession, sf_dir: str) -> DataF
     drop = cc.filter(F.col("vertex") != F.col("component")).select(
         F.col("vertex").alias("vec_id")
     )
-    from data_lake_construction_and_querying_with_pyspark_spark.operators.similarity import (
-        as_double_vec,
+    return (
+        planted_clone_embeddings(spark, sf_dir).select("vec_id").join(drop, "vec_id", "left_anti")
     )
-
-    base = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double_vec(F.col("embedding")).alias("embedding")
-    )
-    clones = base.filter(F.col("vec_id") % _CLONE_MOD == 0).select(
-        (F.col("vec_id") + F.lit(_CLONE_OFF)).alias("vec_id"),
-        F.transform("embedding", lambda x: x + F.lit(0.01)).alias("embedding"),
-    )
-    aug = base.unionByName(clones)
-    return aug.select("vec_id").join(drop, "vec_id", "left_anti")
 
 
 @register(

@@ -68,7 +68,6 @@ from data_lake_construction_and_querying_with_pyspark_spark.operators.similarity
     as_double_vec,
 )
 from data_lake_construction_and_querying_with_pyspark_spark.registry import register
-from data_lake_construction_and_querying_with_pyspark_spark.sources.readers import load_table
 
 
 def best_effort_jvm_gc(spark: SparkSession) -> None:
@@ -361,23 +360,15 @@ def dedup_embedding_cosine_pairs_vectorized_query(
     tests/test_dedup_vectorized.py plus the marker-gated 200k rung in
     tests/test_rung_agreement.py."""
     from data_lake_construction_and_querying_with_pyspark_spark.operators.dedup import (
-        _CLONE_MOD,
-        _CLONE_OFF,
         _SCALED_PLANES,
         _SCALED_TABLES,
         _SCALED_TAU,
+        planted_clone_embeddings,
     )
 
-    base = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double_vec(F.col("embedding")).alias("embedding")
-    )
-    clones = base.filter(F.col("vec_id") % _CLONE_MOD == 0).select(
-        (F.col("vec_id") + F.lit(_CLONE_OFF)).alias("vec_id"),
-        F.transform("embedding", lambda x: x + F.lit(0.01)).alias("embedding"),
-    )
     return embedding_cosine_pairs_vectorized(
         spark,
-        base.unionByName(clones),
+        planted_clone_embeddings(spark, sf_dir),
         tau=_SCALED_TAU,
         n_tables=_SCALED_TABLES,
         n_planes=_SCALED_PLANES,

@@ -31,10 +31,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from data_lake_construction_and_querying_with_pyspark_spark.registry import register
-from data_lake_construction_and_querying_with_pyspark_spark.sources.readers import (
-    fan_out_small_scan,
-    load_table,
-)
+from data_lake_construction_and_querying_with_pyspark_spark.sources.readers import load_table
 
 
 def _dec2(c) -> F.Column:
@@ -118,11 +115,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-shaped pricing summary: filtered scan → grouped agg with
     exact-decimal money sums. Partial aggregation runs map-side; the
     shuffle moves ≤ (flags × statuses) rows per partition."""
-    # r11: the decimal money casts are the dominant per-row cost and a
-    # 1-row-group sf file pins them to one task — fan out before the
-    # filter so cast+partial-agg use every core (no-op at lake scale,
-    # where the scan already has ≥ cores splits): fan_out_small_scan.
-    li = fan_out_small_scan(load_table(spark, sf_dir, "lineitem"), "l_orderkey")
+    li = load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
     n = F.count(F.lit(1))

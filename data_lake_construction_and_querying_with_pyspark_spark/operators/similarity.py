@@ -20,7 +20,6 @@ from data_lake_construction_and_querying_with_pyspark_spark.registry import regi
 from data_lake_construction_and_querying_with_pyspark_spark.sources.readers import (
     fan_out_small_scan,
     load_table,
-    tag_like,
 )
 
 _N_QUERIES = 5  # vec_id < 5 are the demo query vectors
@@ -435,25 +434,16 @@ def knn_graph_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k variant (``knn_graph_topk``) is the one that dedups before
     ranking."""
     from data_lake_construction_and_querying_with_pyspark_spark.operators.dedup import (
-        _CLONE_MOD,
-        _CLONE_OFF,
         _SCALED_PLANES,
         _SCALED_TABLES,
+        planted_clone_embeddings,
     )
     from pyspark import StorageLevel
 
-    raw = load_table(spark, sf_dir, "embeddings")
-    base = raw.select("vec_id", as_double_vec(F.col("embedding")).alias("embedding"))
-    clones = base.filter(F.col("vec_id") % _CLONE_MOD == 0).select(
-        (F.col("vec_id") + F.lit(_CLONE_OFF)).alias("vec_id"),
-        F.transform("embedding", lambda x: x + F.lit(0.01)).alias("embedding"),
-    )
     # r11: fan the unioned corpus out before the norm/LSH folds
     # (guarded no-op at lake scale — fan_out_small_scan docstring).
-    # tag_like: the union derives from the embeddings scan, so the
-    # guard decides from its file metadata (r12 — no plan probe).
     e = with_norm(
-        fan_out_small_scan(tag_like(base.unionByName(clones), raw), "vec_id")
+        fan_out_small_scan(planted_clone_embeddings(spark, sf_dir), "vec_id")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     scored = _bucket_scored_candidates(e, _SCALED_TABLES, _SCALED_PLANES)
     best = F.max_by(
@@ -594,21 +584,14 @@ def knn_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiset. Same bounded-shuffle guarantee, windowed instead of
     aggregated — the pattern per-doc TF-IDF term ranking uses."""
     from data_lake_construction_and_querying_with_pyspark_spark.operators.dedup import (
-        _CLONE_MOD,
-        _CLONE_OFF,
         _SCALED_PLANES,
         _SCALED_TABLES,
+        planted_clone_embeddings,
     )
 
-    raw = load_table(spark, sf_dir, "embeddings")
-    base = raw.select("vec_id", as_double_vec(F.col("embedding")).alias("embedding"))
-    clones = base.filter(F.col("vec_id") % _CLONE_MOD == 0).select(
-        (F.col("vec_id") + F.lit(_CLONE_OFF)).alias("vec_id"),
-        F.transform("embedding", lambda x: x + F.lit(0.01)).alias("embedding"),
-    )
     return knn_graph_edges(
         spark,
-        tag_like(base.unionByName(clones), raw),
+        planted_clone_embeddings(spark, sf_dir),
         k=_GRAPH_TOP_K,
         n_tables=_SCALED_TABLES,
         n_planes=_SCALED_PLANES,
@@ -1557,22 +1540,15 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``scripts/aws-hackathon-glue-data-lake-querying-pyspark.py:113``);
     north-star LLM-pipeline operator per the rebuild charter."""
     from data_lake_construction_and_querying_with_pyspark_spark.operators.dedup import (
-        _CLONE_MOD,
-        _CLONE_OFF,
         _SCALED_PLANES,
         _SCALED_TABLES,
         _SCALED_TAU,
+        planted_clone_embeddings,
     )
 
-    raw = load_table(spark, sf_dir, "embeddings")
-    base = raw.select("vec_id", as_double_vec(F.col("embedding")).alias("embedding"))
-    clones = base.filter(F.col("vec_id") % _CLONE_MOD == 0).select(
-        (F.col("vec_id") + F.lit(_CLONE_OFF)).alias("vec_id"),
-        F.transform("embedding", lambda x: x + F.lit(0.01)).alias("embedding"),
-    )
     return hard_negative_triplets(
         spark,
-        tag_like(base.unionByName(clones), raw),
+        planted_clone_embeddings(spark, sf_dir),
         tau=_SCALED_TAU,
         n_tables=_SCALED_TABLES,
         n_planes=_SCALED_PLANES,

@@ -70,7 +70,6 @@ from data_lake_construction_and_querying_with_pyspark_spark.operators.similarity
     as_double_vec,
 )
 from data_lake_construction_and_querying_with_pyspark_spark.registry import register
-from data_lake_construction_and_querying_with_pyspark_spark.sources.readers import load_table
 
 _NEG_BLOCK_ROWS = 1024  # row-block for the per-cell hardest-mate Gram walk
 
@@ -404,27 +403,6 @@ def hard_negative_triplets_ivf_vectorized(
     return pos.join(neg, "anchor_id")
 
 
-def _clone_augmented_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The planted-clone corpus every embedding-family registered entry
-    shares (``dedup.dedup_embedding_cosine_pairs`` builds it inline):
-    every 50th vector gains a +0.01-nudged clone at id + 1e6, so the
-    twins' rows-only runs exercise the same ground truth the
-    hash-oracled fold entries verify exactly."""
-    from data_lake_construction_and_querying_with_pyspark_spark.operators.dedup import (
-        _CLONE_MOD,
-        _CLONE_OFF,
-    )
-
-    base = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double_vec(F.col("embedding")).alias("embedding")
-    )
-    clones = base.filter(F.col("vec_id") % _CLONE_MOD == 0).select(
-        (F.col("vec_id") + F.lit(_CLONE_OFF)).alias("vec_id"),
-        F.transform("embedding", lambda x: x + F.lit(0.01)).alias("embedding"),
-    )
-    return base.unionByName(clones)
-
-
 @register("knn_graph_topk_vectorized", oracle=None)
 def knn_graph_topk_vectorized_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The registered face of the kNN-graph GEMM twin: top-3 edges per
@@ -440,11 +418,12 @@ def knn_graph_topk_vectorized_query(spark: SparkSession, sf_dir: str) -> DataFra
     from data_lake_construction_and_querying_with_pyspark_spark.operators.dedup import (
         _SCALED_PLANES,
         _SCALED_TABLES,
+        planted_clone_embeddings,
     )
 
     return knn_graph_edges_vectorized(
         spark,
-        _clone_augmented_embeddings(spark, sf_dir),
+        planted_clone_embeddings(spark, sf_dir),
         k=_GRAPH_TOP_K,
         n_tables=_SCALED_TABLES,
         n_planes=_SCALED_PLANES,
@@ -468,6 +447,10 @@ def hard_negative_mining_ivf_vectorized_query(
     pinned in recall terms by tests/test_similarity_vectorized.py and
     the marker-gated rung in tests/test_rung_agreement.py, not by
     hash."""
+    from data_lake_construction_and_querying_with_pyspark_spark.operators.dedup import (
+        planted_clone_embeddings,
+    )
+
     return hard_negative_triplets_ivf_vectorized(
-        spark, _clone_augmented_embeddings(spark, sf_dir), tau=0.9
+        spark, planted_clone_embeddings(spark, sf_dir), tau=0.9
     )

@@ -7,13 +7,10 @@ SURVEY.md §2.8.5 flags the double-computation). At 100 TB each action is
 a full table scan, and ``df.count() - df.distinct().count()`` is two
 scans plus an all-columns shuffle.
 
-This module computes the same metrics in ONE aggregation pass:
-
-* total rows, per-column null counts → one global hash-agg (partial
-  aggregation map-side, a single scalar row shuffled).
-* duplicate count → one ``groupBy(all columns)`` instead of
-  ``distinct().count()`` + ``count()``: the same single shuffle that
-  distinct needs, but sharing the scan and producing both counts.
+This module computes the same metrics in ONE job: a
+``groupBy(all columns)`` with a multiplicity count — the single shuffle
+``distinct()`` needs anyway — and a scalar aggregate over the grouped
+rows that yields total rows, distinct rows and per-column null counts.
 """
 
 from __future__ import annotations
@@ -42,48 +39,28 @@ class ValidationReport:
         return len(self.columns)
 
 
-def null_count_exprs(df: DataFrame) -> list:
-    """One ``sum(isnull as int)`` per column — reference A3
-    (``scripts/...pyspark.py:93``), aliased to ``null_<col>``."""
-    # coalesce: SUM over zero rows is NULL, and an empty input must
-    # report 0 nulls, not None (hypothesis-found edge case).
-    return [
-        F.coalesce(F.sum(F.col(c).isNull().cast("int")), F.lit(0)).alias(f"null_{c}")
-        for c in df.columns
-    ]
-
-
-def validation_summary_df(df: DataFrame) -> DataFrame:
-    """The one-row validation summary as a DataFrame (lazy, one pass)."""
-    return df.agg(F.count(F.lit(1)).alias("total_rows"), *null_count_exprs(df))
-
-
-def duplicate_stats_df(df: DataFrame) -> DataFrame:
-    """Row-multiplicity profile: one shuffle over all columns.
-
-    Returns one row: (total_rows, distinct_rows, duplicate_rows).
-    Map-side partial counts make this cheaper than distinct() at scale,
-    and it subsumes both A1 and A2.
-    """
-    per_row = df.groupBy(*df.columns).agg(F.count(F.lit(1)).alias("multiplicity"))
-    return per_row.agg(
-        F.sum("multiplicity").alias("total_rows"),
-        F.count(F.lit(1)).alias("distinct_rows"),
-        (F.sum("multiplicity") - F.count(F.lit(1))).alias("duplicate_rows"),
-    )
-
-
 def validate(df: DataFrame) -> ValidationReport:
-    """Compute the reference's validation metrics in two jobs total
-    (vs the reference's five)."""
-    nulls_row = validation_summary_df(df).collect()[0]
-    dup_row = duplicate_stats_df(df).collect()[0]
-    null_counts = {c: nulls_row[f"null_{c}"] for c in df.columns}
+    """Compute the reference's validation metrics in one job (vs the
+    reference's five).
+
+    One ``groupBy(all columns)`` with a multiplicity count — the shuffle
+    ``distinct()`` needs anyway, with map-side partial counts — then one
+    scalar aggregate over the grouped rows: total rows is the summed
+    multiplicity, distinct rows the group count, and each column's null
+    count the multiplicity summed over its null groups."""
+    cols = df.columns
+    per_row = df.groupBy(*cols).agg(F.count(F.lit(1)).alias("multiplicity"))
+    m = F.col("multiplicity")
+    total, distinct, *nulls = per_row.agg(
+        F.sum(m), F.count(F.lit(1)), *[F.sum(F.when(F.col(c).isNull(), m)) for c in cols]
+    ).first()
+    # SUM over zero rows is NULL, and an empty input must report 0, not
+    # None (hypothesis-found edge case).
     return ValidationReport(
-        total_rows=dup_row["total_rows"] or 0,
-        distinct_rows=dup_row["distinct_rows"] or 0,
-        null_counts=null_counts,
-        columns=list(df.columns),
+        total_rows=total or 0,
+        distinct_rows=distinct,
+        null_counts={c: n or 0 for c, n in zip(cols, nulls)},
+        columns=cols,
     )
 
 
@@ -98,7 +75,7 @@ def attach_observed_metrics(df: DataFrame, name: str = "validation"):
     own aggregation pass (still one scan), this rides the write's scan
     for free. Exact duplicate counting is the one metric that cannot
     ride along (it needs a shuffle of its own); the sketch stands in,
-    and ``duplicate_stats_df`` remains the exact tool.
+    and ``validate()`` remains the exact tool.
     """
     from pyspark.sql import Observation
 

@@ -203,123 +203,48 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if df is None:
         path = f"{sf_dir}/{name}.parquet"
         df = read_events(spark, path) if name == "events" else spark.read.parquet(path)
-        df._lake_scan_paths = (path,)  # consumed by fan_out_small_scan's guard
         _TABLE_PLAN_CACHE[key] = df
     return df
 
 
 def fan_out_small_scan(df: DataFrame, *keys: str) -> DataFrame:
-    """Guarded scan fan-out (r11; optimization guide §2.5 "input skew:
-    one huge unsplittable file → repartition immediately after the
-    read"): when ``df`` carries fewer partitions than the session's
-    core count — a single-row-group parquet file, a tiny table, a
-    narrow union of such scans — hash-repartition it by ``keys`` to
-    ``defaultParallelism`` so the CPU-heavy per-row work that follows
-    (tokenization, fold dot products, decimal casts) runs on every
-    core instead of one task. Parquet row groups are the minimum scan
-    split: a 1-row-group file is unsplittable no matter what
-    ``maxPartitionBytes`` says, so without this the whole pre-shuffle
-    pipeline of such a table is single-threaded.
+    """Hash-repartition a small scan by ``keys`` to ``defaultParallelism``
+    so the CPU-heavy per-row work that follows (tokenization, fold dot
+    products, decimal casts) runs on every core instead of one task.
 
-    Scale behavior: at production scale any real scan already has
-    ≥ cores partitions and this is a NO-OP — zero added exchange, so
-    the 100 TB plan is untouched and scan-side predicate pushdown is
-    unaffected where it matters.
+    The rule reads only the plan's own input files (``df.inputFiles()``,
+    deduplicated across every scan under ``df``):
+
+    * no input files, or at least ``defaultParallelism`` of them →
+      ``df`` unchanged;
+    * otherwise, fan out when their total size is below
+      ``defaultParallelism × spark.sql.files.maxPartitionBytes``.
+
+    Either condition alone guarantees ≥ cores scan splits, so at lake
+    scale this is a no-op. Below it, a parquet file's row groups are its
+    minimum scan split, and a single-row-group file pins the whole
+    pre-shuffle pipeline to one task whatever ``maxPartitionBytes`` says.
 
     Hash (not round-robin) partitioning on a stable key: keyless
-    ``repartition(n)`` pays a local sort of its input
-    (``sortBeforeRepartition``, guide §2.5) and that sort lands in the
-    single scan task this helper exists to relieve; hashing a stable
-    high-cardinality key is deterministic, sort-free, and retry-safe.
-
-    Values are unaffected by construction: every registered operator is
-    partitioning-independent per the registry's determinism contract
-    (exact decimal sums, keyed equi-joins, total-order tie-breaks).
-
-    Guard cost (r12, ADVICE r11 #5): the r11 guard called
-    ``df.rdd.getNumPartitions()``, which forces full physical planning
-    and RDD conversion of the subtree at query-CONSTRUCTION time —
-    ~0.1-0.3 s per call on derived frames, paid inside every bench
-    timing. Frames produced by :func:`load_table` now carry their scan
-    paths, so the guard reads FILE METADATA instead (cached per
-    session+path): a scan whose file count and byte size can both fill
-    every core is left alone. Only path-less frames (mid-pipeline
-    unions and projections) fall back to the physical-plan probe."""
+    ``repartition(n)`` sorts its input first (``sortBeforeRepartition``)
+    inside the single scan task this exists to relieve. Values are
+    unaffected: every registered operator is partitioning-independent
+    per the registry's determinism contract."""
     spark = df.sparkSession
-    parallelism = spark.sparkContext.defaultParallelism
-    paths = getattr(df, "_lake_scan_paths", None)
-    small = scan_paths_are_small(spark, paths) if paths else None
-    if small is None:
-        small = df.rdd.getNumPartitions() < parallelism
-    if not small:
+    par = spark.sparkContext.defaultParallelism
+    files = df.inputFiles()
+    if not files or len(files) >= par:
         return df
-    from pyspark.sql import functions as F
-
-    return df.repartition(parallelism, *[F.col(k) for k in keys])
-
-
-def tag_like(df: DataFrame, src: DataFrame) -> DataFrame:
-    """Propagate ``src``'s scan-path metadata (set by :func:`load_table`)
-    onto a frame DERIVED from it — unions with clone rows, projections —
-    so :func:`fan_out_small_scan`'s guard stays metadata-based for such
-    frames instead of falling back to the physical-plan probe. The
-    guard then decides from the SOURCE scan's files, not from the
-    derived frame's partitions — and those can differ: a
-    ``unionByName`` sums its children's partitions, so a union of a
-    small scan with its clone rows may already fill every core and
-    still get fanned out. That costs one extra repartition, never a
-    different value."""
-    paths = getattr(src, "_lake_scan_paths", None)
-    if paths is not None:
-        df._lake_scan_paths = paths
-    return df
-
-
-# (appId, paths, parallelism) -> bool; file metadata is immutable for
-# the read-only test corpora, and a changed session gets a fresh key.
-_SMALL_SCAN_CACHE: dict[tuple, bool] = {}
-
-
-def scan_paths_are_small(spark: SparkSession, paths: tuple[str, ...]) -> bool | None:
-    """True when a parquet scan over ``paths`` cannot fill every core:
-    fewer files than ``defaultParallelism`` AND fewer total bytes than
-    ``defaultParallelism × maxPartitionBytes`` (each condition alone
-    guarantees ≥ cores scan splits at production scale, so this is a
-    no-op there — same decision the ``df.rdd`` probe made, without the
-    physical planning). Local filesystem only; returns None (unknown)
-    for remote URIs so the caller can fall back."""
-    import os as _os
-
-    sc = spark.sparkContext
-    key = (sc.applicationId, paths, sc.defaultParallelism)
-    if key in _SMALL_SCAN_CACHE:
-        return _SMALL_SCAN_CACHE[key]
-    n_files = 0
-    total = 0
-    for p in paths:
-        if "://" in p and not p.startswith("file://"):
-            return None
-        # file:///abs/path strips to /abs/path; plain paths pass through
-        local = p.split("://", 1)[1] if p.startswith("file://") else p
-        if _os.path.isdir(local):
-            for entry in _os.scandir(local):
-                if entry.is_file() and not entry.name.startswith(("_", ".")):
-                    n_files += 1
-                    total += entry.stat().st_size
-        elif _os.path.isfile(local):
-            n_files += 1
-            total += _os.path.getsize(local)
-        else:
-            return None
     # Spark's own byte-string parser: "128MB", "1g" and "134217728b"
     # all read as Spark reads them
     max_pb = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
     )
-    par = sc.defaultParallelism
-    small = n_files < par and total < par * max_pb
-    _SMALL_SCAN_CACHE[key] = small
-    return small
+    if input_bytes(df) >= par * max_pb:
+        return df
+    from pyspark.sql import functions as F
+
+    return df.repartition(par, *[F.col(k) for k in keys])
 
 
 def load_star_schema(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -83,6 +83,13 @@ def test_aggregates_run_partial(spark, queries):
     assert plan.count("HashAggregate") >= 2
 
 
+def test_pricing_summary_has_no_scan_fan_out(spark, queries):
+    """The grouped aggregate runs partial map-side on the scan's own
+    splits; a fan-out repartition in front of it is an extra exchange."""
+    plan = _plan(queries["pricing_summary"](spark, SF_SMOKE))
+    assert "REPARTITION_BY_NUM" not in plan, plan
+
+
 def test_whole_stage_codegen_covers_scalar_packs(spark, queries):
     plan = _plan(queries["math_functions_pack"](spark, SF_SMOKE))
     # the `*(n)` prefix is the whole-stage-codegen marker in plan dumps
