@@ -12,7 +12,7 @@ def _fanned_out(df) -> bool:
 
 
 @pytest.mark.parametrize("max_pb, small", [("128MB", True), ("1g", True), ("128", False)])
-def test_fan_out_reads_max_partition_bytes_like_spark(spark, tmp_path, max_pb, small):
+def test_scan_guard_reads_max_partition_bytes_like_spark(spark, tmp_path, max_pb, small):
     """``maxPartitionBytes`` is a Spark byte string: "128MB" is 128 MiB
     (one small file cannot fill the cores), not 128 bytes."""
     path = str(tmp_path / "t.parquet")
