@@ -240,7 +240,7 @@ def fan_out_small_scan(df: DataFrame, *keys: str) -> DataFrame:
     max_pb = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
     )
-    if input_bytes(df) >= par * max_pb:
+    if _files_bytes(spark, files) >= par * max_pb:
         return df
     from pyspark.sql import functions as F
 
@@ -269,11 +269,15 @@ def input_bytes(df: DataFrame) -> int:
     pathology. Deriving the reducer count from source bytes up front
     keeps rows-per-reducer bounded at any corpus size with no manual
     knob (see ``dedup.span_shuffle_partitions``)."""
-    spark = df.sparkSession
+    return _files_bytes(df.sparkSession, df.inputFiles())
+
+
+def _files_bytes(spark: SparkSession, files: list[str]) -> int:
+    """Total on-disk bytes of ``files`` (Hadoop paths), from file status."""
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     total = 0
-    for f in df.inputFiles():
+    for f in files:
         p = jvm.org.apache.hadoop.fs.Path(f)
         fs = p.getFileSystem(conf)
         total += fs.getFileStatus(p).getLen()

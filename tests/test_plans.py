@@ -605,3 +605,40 @@ def test_cusum_segmented_scan(spark, queries):
     assert re.search(r"hashpartitioning\(event_type#\d+, _seg#\d+", plan), plan
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
+
+
+# The interactive queries of the benchmark's lake_sql workload
+# (perfbench/workloads.py LAKE_SQL_OPS).
+_LAKE_SQL_QUERIES = (
+    "flagship_between",
+    "pricing_summary",
+    "join_broadcast_chain",
+    "join_fact_fact_revenue",
+    "local_supplier_volume_q5",
+    "market_share_q8",
+    "window_topk_per_customer",
+    "cte_top_revenue_nations",
+    "late_shipper_q21",
+    "forecast_revenue_q6",
+    "large_volume_customers_q18",
+    "events_user_sessions",
+    "funnel_conversion",
+)
+
+
+def test_repeated_queries_compile_no_classes(spark, queries):
+    """A second round of the interactive queries reuses every generated
+    class: the session's codegen cache holds their whole working set, so
+    Janino compiles nothing. Spark's default 100-entry cache is smaller
+    than these queries' ~165 classes, and each query evicted the next
+    one's, recompiling ~156 of them per round at sf0.001."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run_round():
+        for name in _LAKE_SQL_QUERIES:
+            queries[name](spark, SF_SMOKE).write.mode("overwrite").format("noop").save()
+
+    run_round()
+    before = compiles.getCount()
+    run_round()
+    assert compiles.getCount() - before == 0
