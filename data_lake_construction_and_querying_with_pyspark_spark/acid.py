@@ -298,9 +298,6 @@ def _record_policy(entry: dict, snap: "Snapshot", policy: dict) -> dict:
 class Snapshot:
     version: int
     files: tuple[str, ...]  # live data files, table-root-relative
-    # ops since the replay-start checkpoint ONLY (the resume window);
-    # full history is TransactionalTable.history()
-    ops: tuple[dict, ...] = field(default=(), repr=False)
     # per-live-file add metadata (bytes / rows / optional column stats)
     meta: dict = field(default_factory=dict, repr=False)
     # committed table schema (Spark StructType jsonValue); None before
@@ -335,19 +332,32 @@ class TransactionalTable:
         os.makedirs(t.data_path, exist_ok=True)
         return t
 
-    def exists(self) -> bool:
-        return os.path.isdir(self.log_path)
-
     # -- log primitives -------------------------------------------------
 
-    def _versions(self) -> list[int]:
-        if not os.path.isdir(self.log_path):
-            return []
-        return sorted(
-            int(f.split(".")[0])
-            for f in os.listdir(self.log_path)
-            if f.endswith(".json") and not f.endswith(".checkpoint.json")
-        )
+    def _commit_path(self, version: int) -> str:
+        return os.path.join(self.log_path, f"{version:0{_PAD}d}.json")
+
+    def _checkpoint_path(self, version: int) -> str:
+        return os.path.join(self.log_path, f"{version:0{_PAD}d}.checkpoint.json")
+
+    def _commits(self, after: int = 0, upto: int | None = None):
+        """Yield ``(version, entry)`` for every commit in ``(after, upto]``
+        (``upto`` None: through the head), version-ordered — the one
+        reader of commit entries, behind snapshots, history, the
+        streaming replay check, the change feeds and vacuum.
+
+        Forward existence probes, ZERO directory listings: O(commits in
+        range) file touches, and nothing at or below ``after`` is
+        opened or even statted. Sound because versions are DENSE: a
+        writer only creates ``v+1`` after ``v`` exists (``_try_create``
+        races on the hard-link EEXIST), and commit files are never
+        deleted (vacuum touches data files only), so the first missing
+        name is the head."""
+        v = after + 1
+        while (upto is None or v <= upto) and os.path.exists(self._commit_path(v)):
+            with open(self._commit_path(v)) as fh:
+                yield v, json.load(fh)
+            v += 1
 
     def _read_last_checkpoint(self) -> tuple[int, dict] | None:
         """The Delta paper's ``_last_checkpoint`` pointer (§4.2 of
@@ -363,27 +373,10 @@ class TransactionalTable:
         try:
             with open(os.path.join(self.log_path, _LAST_CP)) as fh:
                 v = int(json.load(fh)["version"])
-            with open(
-                os.path.join(self.log_path, f"{v:0{_PAD}d}.checkpoint.json")
-            ) as fh:
+            with open(self._checkpoint_path(v)) as fh:
                 return v, json.load(fh)
         except (OSError, ValueError, KeyError, json.JSONDecodeError):
             return None
-
-    def _probe_versions_after(self, start: int) -> list[int]:
-        """Commit versions strictly after ``start`` by forward
-        existence probes — O(new commits) file touches, ZERO directory
-        listings. Sound because versions are DENSE: a writer only
-        creates ``v+1`` after ``v`` exists (``_try_create`` races on
-        the hard-link EEXIST), and commit files are never deleted
-        (vacuum touches data files only), so the first missing name is
-        the head."""
-        out: list[int] = []
-        v = start + 1
-        while os.path.exists(os.path.join(self.log_path, f"{v:0{_PAD}d}.json")):
-            out.append(v)
-            v += 1
-        return out
 
     def _latest_checkpoint(
         self, max_version: int | None = None
@@ -399,7 +392,7 @@ class TransactionalTable:
         if not cps:
             return None
         v = cps[-1]
-        with open(os.path.join(self.log_path, f"{v:0{_PAD}d}.checkpoint.json")) as fh:
+        with open(self._checkpoint_path(v)) as fh:
             return v, json.load(fh)
 
     def snapshot(self, version: int | None = None) -> Snapshot:
@@ -409,38 +402,23 @@ class TransactionalTable:
         loads and time travel. (Measured at 10k commits,
         ``scripts/measure_acid_log.py``: time travel to v=9999 was
         402 ms replaying from zero; 6 ms from the nearest checkpoint.)
-
-        ``Snapshot.ops`` holds the ops SINCE that checkpoint — the
-        change-feed/audit window a reader resuming from a checkpoint
-        actually needs. Full history is :meth:`history`, which scans
-        the whole log deliberately (checkpoints carrying the complete
-        ops list made every checkpoint O(version) bytes — 266 MB of
-        log dir at 10k tiny commits, quadratic in total).
+        The full op record is :meth:`history`, which scans the whole
+        log deliberately (checkpoints carrying the complete ops list
+        made every checkpoint O(version) bytes — 266 MB of log dir at
+        10k tiny commits, quadratic in total).
 
         Head loads (``version=None``) take the ``_last_checkpoint``
         pointer fast path: one pointer read, one checkpoint read, then
-        forward existence probes — no directory listing at all
-        (``test_head_snapshot_never_lists_the_log``). Time travel
-        falls back to the listing path: it needs the newest checkpoint
+        the commits above it (:meth:`_commits`) — no directory listing
+        at all (``test_head_snapshot_never_lists_the_log``). Time
+        travel lists the checkpoints instead: it needs the newest one
         AT OR BELOW an arbitrary version, which only a listing (or a
         prefix-bounded LIST on a real object store) answers."""
-        cp = None
-        versions: list[int] | None = None
-        if version is None:
-            cp = self._read_last_checkpoint()
-            if cp is not None:
-                versions = self._probe_versions_after(cp[0])
-        if versions is None:
-            all_versions = self._versions()
-            versions = (
-                [v for v in all_versions if v <= version]
-                if version is not None
-                else all_versions
-            )
+        cp = self._read_last_checkpoint() if version is None else None
+        if cp is None:
             cp = self._latest_checkpoint(max_version=version)
         live: set[str] = set()
         meta: dict = {}
-        ops: list[dict] = []
         schema: dict | None = None
         policy = dict(_NO_POLICY)
         start = 0
@@ -448,14 +426,10 @@ class TransactionalTable:
             start, state = cp
             live = set(state["files"])
             meta = dict(state.get("meta", {}))
-            ops = list(state.get("ops", []))
             schema = state.get("schema")
             policy = _widen(policy, state.get("stats", ()), state.get("blooms", ()))
-        for v in versions:
-            if v <= start:
-                continue
-            with open(os.path.join(self.log_path, f"{v:0{_PAD}d}.json")) as fh:
-                entry = json.load(fh)
+        head = start
+        for head, entry in self._commits(start, version):
             for a in entry.get("add", []):
                 live.add(a["file"])
                 meta[a["file"]] = a
@@ -465,11 +439,9 @@ class TransactionalTable:
             if "schema" in entry:
                 schema = entry["schema"]
             policy = _widen(policy, entry.get("stats", ()), entry.get("blooms", ()))
-            ops.append({"version": v, **entry.get("op", {})})
         return Snapshot(
-            version=versions[-1] if versions else start,
+            version=head,
             files=tuple(sorted(live)),
-            ops=tuple(ops),
             meta=meta,
             schema=schema,
             policy=policy,
@@ -488,7 +460,7 @@ class TransactionalTable:
         read-side race: a concurrent snapshot() could open N.json after
         creation but before the JSON body landed — observed once as a
         flaked concurrent-append test.)"""
-        path = os.path.join(self.log_path, f"{version:0{_PAD}d}.json")
+        path = self._commit_path(version)
         tmp = os.path.join(self.log_path, f".commit-{uuid.uuid4().hex}.tmp")
         with open(tmp, "w") as fh:
             json.dump(entry, fh)
@@ -527,7 +499,7 @@ class TransactionalTable:
                 },
                 fh,
             )
-        os.replace(tmp, os.path.join(self.log_path, f"{version:0{_PAD}d}.checkpoint.json"))
+        os.replace(tmp, self._checkpoint_path(version))
         # the Delta-paper _last_checkpoint pointer: readers seek here
         # instead of listing the log dir (atomic replace; a reader that
         # catches the table pre-replace just uses the previous pointer)
@@ -613,7 +585,7 @@ class TransactionalTable:
         """Commit an add-only ``entry`` at the first free version from
         ``version``: appends commute, so a lost race retries the next
         slot with the SAME files and never loses an update. ``replayed``
-        (exactly-once streaming writers) is re-checked after each lost
+        (the exactly-once stream writer) is re-checked after each lost
         race; True means this batch already committed, so its files are
         abandoned and None is returned."""
         for _ in range(max_retries):
@@ -996,22 +968,18 @@ class TransactionalTable:
     def history(self) -> list[dict]:
         """Every commit's op record, version-ordered — a deliberate
         full log scan (O(total commits); ~0.4 s at 10k commits). The
-        audit query is rare and interactive; per-micro-batch callers
-        (the exactly-once streaming sinks) use the incremental
+        audit query is rare and interactive; the per-micro-batch caller
+        (the exactly-once ``acid_table`` stream writer) uses the incremental
         :meth:`stream_batch_ids` instead. Keeping full ops out of
         checkpoints is what keeps the log linear in size (see
         _maybe_checkpoint)."""
-        out: list[dict] = []
-        for v in self._versions():
-            with open(os.path.join(self.log_path, f"{v:0{_PAD}d}.json")) as fh:
-                entry = json.load(fh)
-            out.append({"version": v, **entry.get("op", {})})
-        return out
+        return [{"version": v, **entry.get("op", {})} for v, entry in self._commits()]
 
     def stream_batch_ids(self, after_version: int = 0) -> tuple[set, int]:
         """Batch ids of ``stream_append`` commits STRICTLY NEWER than
         ``after_version``, plus the highest log version scanned — the
-        incremental unit behind the exactly-once sinks' replay check.
+        incremental unit behind the exactly-once stream writer's replay
+        check (``sources/acid_source.py``).
 
         Re-checking via :meth:`history` before every micro-batch costs
         one file open + JSON parse per commit PER BATCH (O(n²)
@@ -1019,26 +987,15 @@ class TransactionalTable:
         unit object stores charge for). Callers cache the returned id
         set, pass the returned high-water mark back in, and each batch
         then reads only the commits that landed since the last check
-        (O(1) amortized). Safe because versions are DENSE below the
-        listing's maximum: a writer only retries ``v+1`` after ``v``
-        exists (``_try_create`` races on O_EXCL), so no commit can
-        later appear at or below a version this scan already saw.
-
-        r7: the scan forward-PROBES from the mark instead of listing
-        the directory (``_probe_versions_after`` — same density
-        argument), so a micro-batch's replay check is O(new commits)
-        file touches with zero LISTs, matching the snapshot() pointer
-        fast path."""
+        (O(1) amortized, zero LISTs — :meth:`_commits`). Safe because
+        versions are dense, so no commit can later appear at or below
+        a version this scan already saw."""
         ids: set = set()
         hi = after_version
-        for v in self._probe_versions_after(after_version):
-            with open(os.path.join(self.log_path, f"{v:0{_PAD}d}.json")) as fh:
-                entry = json.load(fh)
+        for hi, entry in self._commits(after_version):
             op = entry.get("op") or {}
             if op.get("op") == "stream_append":
                 ids.add(op.get("batch_id"))
-            if v > hi:
-                hi = v
         return ids, hi
 
     def changes(
@@ -1079,11 +1036,7 @@ class TransactionalTable:
             )
 
         parts: list[DataFrame] = []
-        for v in self._versions():
-            if not (from_version < v <= to_version):
-                continue
-            with open(os.path.join(self.log_path, f"{v:0{_PAD}d}.json")) as fh:
-                entry = json.load(fh)
+        for v, entry in self._commits(from_version, to_version):
             added = tuple(a["file"] for a in entry.get("add", []) if a.get("rows"))
             removed = tuple(r["file"] for r in entry.get("remove", []))
             add_df = self._read_files(spark, added, schema=snap.schema)
@@ -1112,12 +1065,7 @@ class TransactionalTable:
         staged-but-not-yet-committed files safe. Files a later commit
         REMOVED stay on disk deliberately: some log version still adds
         them, and deleting them would break time travel to it."""
-        referenced: set[str] = set()
-        for v in self._versions():
-            with open(os.path.join(self.log_path, f"{v:0{_PAD}d}.json")) as fh:
-                entry = json.load(fh)
-            for a in entry.get("add", []):
-                referenced.add(a["file"])
+        referenced = {a["file"] for _, entry in self._commits() for a in entry.get("add", [])}
         cutoff = time.time() - retention_seconds
         dropped = 0
         for f in os.listdir(self.data_path):

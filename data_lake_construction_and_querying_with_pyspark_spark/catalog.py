@@ -42,8 +42,3 @@ def register_table(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.saveAsTable(name)
-
-
-def register_view(df: DataFrame, name: str) -> None:
-    """C4 — temp-view registration, the reference's query surface."""
-    df.createOrReplaceTempView(name)

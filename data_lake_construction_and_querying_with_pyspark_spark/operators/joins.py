@@ -40,15 +40,3 @@ def join_salted(
     joined = big_salted.join(small_salted, on=[key, "_salt"], how=how)
     return joined.drop("_salt")
 
-
-def broadcast_threshold_join(
-    left: DataFrame, right: DataFrame, on, how: str = "inner", force_broadcast: bool | None = None
-) -> DataFrame:
-    """Join with an explicit broadcast decision instead of relying on
-    the 10 MB autoBroadcastJoinThreshold guess: pass
-    ``force_broadcast=True`` when the caller *knows* the right side is
-    a dimension (statistics at the API level beat size estimates at the
-    planner level for pre-filtered dims)."""
-    if force_broadcast:
-        right = F.broadcast(right)
-    return left.join(right, on=on, how=how)

@@ -3,9 +3,10 @@
 The reference pins ``spark.sql.shuffle.partitions=200`` and enables Arrow
 (reference ``scripts/aws-hackathon-glue-data-lake-querying-pyspark.py:34-38``).
 We keep the intent (tuned shuffle parallelism + Arrow) but make it adaptive:
-AQE coalesces shuffle partitions at runtime so the static number only sets
-an upper bound, and skew-join handling is on so hot keys re-split at the
-1000-executor scale this engine targets.
+AQE (on by default in Spark 4, with partition coalescing and skew-join
+splitting) coalesces shuffle partitions at runtime so the static number only
+sets an upper bound, and hot keys re-split at the 1000-executor scale this
+engine targets.
 """
 
 from __future__ import annotations
@@ -14,15 +15,15 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults chosen for correctness-at-scale, not just local speed:
-#  - AQE on: runtime partition coalescing + skew-join splitting means the
-#    same plan works at sf0.001 and at 100 TB.
+# Defaults chosen for correctness-at-scale, not just local speed. Only
+# settings that differ from Spark 4.1's own defaults are listed (AQE with
+# partition coalescing and skew-join splitting, snappy parquet and 128 MiB
+# file splits are already Spark's):
 #  - UTC session timezone: deterministic timestamp semantics (and matches
-#    the DuckDB oracle, which is UTC-naive).
+#    the DuckDB oracle, which is UTC-naive); Spark's default is the JVM's
+#    zone.
 #  - Arrow on: every pandas_udf / applyInPandas moves batches, not rows.
 _DEFAULTS = {
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
     # Plan every exchange at 512 reducers and let AQE coalesce DOWN to
     # the advisory size at runtime: AQE can merge small partitions but
     # never split an unskewed oversized one, so the static number must
@@ -50,12 +51,8 @@ _DEFAULTS = {
     # Interleaved A/B on the heaviest bench query (3 paired reps):
     # 64 KB faster every rep (16.8→8.4, 8.1→7.0, 7.1→6.5 s).
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64KB",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.parquet.compression.codec": "snappy",
-    # At 100 TB, file-split sizing is the scan-parallelism knob.
-    "spark.sql.files.maxPartitionBytes": "134217728",  # 128 MiB
     # The driver's events table carries INT64 TIMESTAMP(NANOS) which
     # Spark's parquet reader rejects; read as long and convert in the
     # events reader (ns values are exact multiples of 1000 here).

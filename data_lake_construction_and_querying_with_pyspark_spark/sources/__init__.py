@@ -2,7 +2,6 @@ from data_lake_construction_and_querying_with_pyspark_spark.sources.readers impo
     read_lake,
     read_csv_allstring,
     read_parquet,
-    load_star_schema,
     TABLE_NAMES,
 )
 from data_lake_construction_and_querying_with_pyspark_spark.sources.sinks import write_lake
@@ -11,7 +10,6 @@ __all__ = [
     "read_lake",
     "read_csv_allstring",
     "read_parquet",
-    "load_star_schema",
     "write_lake",
     "TABLE_NAMES",
 ]

@@ -56,19 +56,21 @@ log entry. Batch append/overwrite carry the same schema enforcement,
 version-race retry, and conflict rules as the ``TransactionalTable``
 API; the streaming writer records the micro-batch id inside the commit
 entry (op ``stream_append``) so checkpoint replays are detected and
-skipped — the same exactly-once contract as
-``streaming.sinks.streaming_acid_append``, now with no ``foreachBatch``
-wrapper. Every landed file carries the table's data-skipping policy
-(the add-actions come from the same ``TransactionalTable._add_action``
-as the API writers'). Options: ``stats_cols`` / ``bloom_cols``
-(comma-separated) declare columns into that policy, like
-``TransactionalTable.append``'s arguments; ``merge_schema`` permits
-column-addition evolution.
+skipped. It is the engine's ONE exactly-once streaming append:
+``streaming.sinks.streaming_acid_append`` is a thin wrapper that starts
+it, so that sink enforces the table's committed schema like every
+other writer (a drifted micro-batch raises ``SchemaMismatch`` and its
+files are removed), and, as for every ``acid_table`` read or write,
+this package must be importable by the Python workers. Every landed
+file carries the table's data-skipping policy (the add-actions come
+from the same ``TransactionalTable._add_action`` as the API writers').
+Options: ``stats_cols`` / ``bloom_cols`` (comma-separated) declare
+columns into that policy, like ``TransactionalTable.append``'s
+arguments; ``merge_schema`` permits column-addition evolution.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import time
 from dataclasses import dataclass
@@ -85,9 +87,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from data_lake_construction_and_querying_with_pyspark_spark.acid import (
-    _PAD,
     DATA_DIR,
-    LOG_DIR,
     SchemaMismatch,
     TransactionalTable,
     _evolve_schema,
@@ -100,16 +100,10 @@ from data_lake_construction_and_querying_with_pyspark_spark.acid import (
 class _FilePartition(InputPartition):
     path: str  # absolute parquet path
     columns: tuple  # committed schema field names, in order
-
-
-@dataclass
-class _CdcFilePartition(InputPartition):
-    """One added file of an append commit, emitted as tagged inserts —
-    the metadata-only CDC fast path (no diff runs)."""
-
-    path: str
-    columns: tuple
-    version: int
+    # (change, version) appended as the two CDC metadata columns — an
+    # append commit's file read as tagged inserts, the metadata-only
+    # CDC fast path (no diff runs); None reads the data columns only
+    tag: tuple | None = None
 
 
 @dataclass
@@ -128,36 +122,25 @@ class _CdcDiffPartition(InputPartition):
 
 
 def _read_file(partition: _FilePartition):
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     table = pq.read_table(partition.path)
     names = list(partition.columns)
+    tag = partition.tag or ()
     if set(table.column_names) >= set(names):
-        # fast path: Arrow batches, columns pruned + reordered to schema
-        yield from table.select(names).to_batches()
+        # fast path: Arrow batches, columns pruned + reordered to schema,
+        # the CDC tag appended as constant columns (no per-row Python)
+        t = table.select(names)
+        if tag:
+            change, version = tag
+            t = t.append_column("_change_type", pa.array([change] * t.num_rows, pa.string()))
+            t = t.append_column("_commit_version", pa.array([version] * t.num_rows, pa.int64()))
+        yield from t.to_batches()
         return
     # pre-evolution file: tuple fallback with NULLs for missing columns
     for row in table.to_pylist():
-        yield tuple(row.get(n) for n in names)
-
-
-def _read_file_tagged(path: str, columns: tuple, change: str, version: int):
-    """Arrow-batch a file with the two CDC metadata columns appended as
-    constants (zero per-row Python on the fast path)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    table = pq.read_table(path)
-    names = list(columns)
-    if set(table.column_names) >= set(names):
-        t = table.select(names)
-        n = t.num_rows
-        t = t.append_column("_change_type", pa.array([change] * n, pa.string()))
-        t = t.append_column("_commit_version", pa.array([version] * n, pa.int64()))
-        yield from t.to_batches()
-        return
-    for row in table.to_pylist():
-        yield tuple(row.get(c) for c in names) + (change, version)
+        yield tuple(row.get(n) for n in names) + tag
 
 
 def _row_tuples(path: str, columns: tuple) -> list[tuple]:
@@ -335,26 +318,17 @@ class _AcidStreamReader(DataSourceStreamReader):
         return {"version": TransactionalTable(self.root).snapshot().version}
 
     def partitions(self, start: dict, end: dict):
-        log_path = os.path.join(self.root, LOG_DIR)
         parts = []
-        for v in range(start["version"] + 1, end["version"] + 1):
-            entry_path = os.path.join(log_path, f"{v:0{_PAD}d}.json")
-            if not os.path.exists(entry_path):
-                continue
-            with open(entry_path) as fh:
-                entry = json.load(fh)
+        commits = TransactionalTable(self.root)._commits(start["version"], end["version"])
+        for v, entry in commits:
             added = [
                 os.path.join(self.root, a["file"])
                 for a in entry.get("add", [])
                 if a.get("rows")
             ]
             if not entry.get("remove"):
-                if self.read_changes:
-                    parts.extend(
-                        _CdcFilePartition(p, self.columns, v) for p in added
-                    )
-                else:
-                    parts.extend(_FilePartition(p, self.columns) for p in added)
+                tag = ("insert", v) if self.read_changes else None
+                parts.extend(_FilePartition(p, self.columns, tag) for p in added)
                 continue
             if self.read_changes:
                 # one partition per rewrite commit: the bag diff needs
@@ -389,10 +363,6 @@ class _AcidStreamReader(DataSourceStreamReader):
     def read(self, partition):
         if isinstance(partition, _CdcDiffPartition):
             yield from _read_diff(partition)
-        elif isinstance(partition, _CdcFilePartition):
-            yield from _read_file_tagged(
-                partition.path, partition.columns, "insert", partition.version
-            )
         else:
             yield from _read_file(partition)
 
@@ -508,25 +478,23 @@ class _AcidBatchWriter(_AcidWriterCore, DataSourceArrowWriter):
 
 class _AcidStreamWriter(_AcidWriterCore, DataSourceStreamArrowWriter):
     """``df.writeStream.format("acid_table")`` — EXACTLY-ONCE streaming
-    appends as a first-class sink, no ``foreachBatch`` wrapper needed.
+    appends as a first-class sink, no ``foreachBatch`` wrapper needed
+    (:func:`..streaming.sinks.streaming_acid_append` starts this writer).
 
-    Same design as :func:`..streaming.sinks.streaming_acid_append`: the
-    micro-batch id rides INSIDE the atomic commit entry (op
+    The micro-batch id rides INSIDE the atomic commit entry (op
     ``stream_append``), so a replayed batch — restart from checkpoint,
     or a commit retried after a crash between executor writes and the
     log create — is detected by id and SKIPPED, abandoning its
     duplicate files. Readers see each micro-batch as one atomic commit
-    and the two sink forms interoperate (identical op metadata, one
-    dedup namespace)."""
+    and can time-travel to any batch boundary."""
 
     def commit(self, messages, batchId: int) -> None:
         table = self.table
-        # Incremental replay check (same move as streaming_acid_append):
-        # the writer instance lives for the whole run on the driver, so
-        # cache the committed batch-id set and only scan commits newer
-        # than the high-water mark — not one full history() log scan
-        # per micro-batch. A fresh instance (checkpoint restart) pays
-        # one full scan, then goes incremental.
+        # Incremental replay check: the writer instance lives for the
+        # whole run on the driver, so cache the committed batch-id set
+        # and only scan commits newer than the high-water mark — not one
+        # full history() log scan per micro-batch. A fresh instance
+        # (checkpoint restart) pays one full scan, then goes incremental.
         if not hasattr(self, "_seen_batch_ids"):
             self._seen_batch_ids: set = set()
             self._seen_version = 0

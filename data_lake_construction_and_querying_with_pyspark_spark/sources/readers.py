@@ -9,10 +9,10 @@ path (``:72-77``). We reproduce those exact semantics with native
 and extend the registry with JSON and ORC.
 
 Scale notes: parquet scans get predicate pushdown + column pruning from
-Catalyst for free; ``spark.sql.files.maxPartitionBytes`` (session.py)
-controls scan parallelism at 100 TB. For CSV at scale, pass an explicit
-all-string StructType (never ``inferSchema`` — that is a full extra pass
-over 100 TB of text).
+Catalyst for free; ``spark.sql.files.maxPartitionBytes`` (Spark's
+128 MiB default) controls scan parallelism at 100 TB. For CSV at scale,
+pass an explicit all-string StructType (never ``inferSchema`` — that is
+a full extra pass over 100 TB of text).
 """
 
 from __future__ import annotations
@@ -184,26 +184,28 @@ def read_lake(spark: SparkSession, path: str, fmt: str, **kwargs) -> DataFrame:
 # "planning time itself can become the bottleneck"). Every action on the
 # returned frame still scans parquet; nothing about RESULTS is cached.
 # Keyed on applicationId so a restarted session can't resurrect stale
-# JVM references.
-_TABLE_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# JVM references. Each entry carries the table path's modification time
+# at load: the plan holds the file listing taken then, so a table
+# rewritten in place since (a new mtime) is read afresh and its entry
+# replaced.
+_TABLE_PLAN_CACHE: dict[tuple[str, str, str], tuple[int, DataFrame]] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver test table (events gets its ns-timestamp fix).
 
-    The analyzed plan is memoized per (session, sf_dir, table) — see
+    The analyzed plan is memoized per (session, sf_dir, table) while the
+    table path's modification time is unchanged — see
     ``_TABLE_PLAN_CACHE``; the parquet data is re-scanned by every
-    action as always. The memo assumes READ-ONLY inputs: the cached
-    plan keeps the file listing taken at first load, so files added,
-    replaced or removed under ``sf_dir`` later in the same application
-    are not seen (a new application lists afresh). Clear
-    ``_TABLE_PLAN_CACHE`` after rewriting an input in place."""
+    action as always."""
     key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _TABLE_PLAN_CACHE.get(key)
-    if df is None:
-        path = f"{sf_dir}/{name}.parquet"
-        df = read_events(spark, path) if name == "events" else spark.read.parquet(path)
-        _TABLE_PLAN_CACHE[key] = df
+    path = f"{sf_dir}/{name}.parquet"
+    mtime = _file_status(spark, path).getModificationTime()
+    cached = _TABLE_PLAN_CACHE.get(key)
+    if cached is not None and cached[0] == mtime:
+        return cached[1]
+    df = read_events(spark, path) if name == "events" else spark.read.parquet(path)
+    _TABLE_PLAN_CACHE[key] = (mtime, df)
     return df
 
 
@@ -247,17 +249,6 @@ def fan_out_small_scan(df: DataFrame, *keys: str) -> DataFrame:
     return df.repartition(par, *[F.col(k) for k in keys])
 
 
-def load_star_schema(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every driver test table from ``sf_dir`` as a dict of DataFrames."""
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each test table as a temp view for spark.sql querying."""
-    for name, df in load_star_schema(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def input_bytes(df: DataFrame) -> int:
     """Total on-disk bytes of the files backing a scan — the cheap
     (metadata-only) size signal operators use to derive shuffle
@@ -274,11 +265,11 @@ def input_bytes(df: DataFrame) -> int:
 
 def _files_bytes(spark: SparkSession, files: list[str]) -> int:
     """Total on-disk bytes of ``files`` (Hadoop paths), from file status."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    total = 0
-    for f in files:
-        p = jvm.org.apache.hadoop.fs.Path(f)
-        fs = p.getFileSystem(conf)
-        total += fs.getFileStatus(p).getLen()
-    return total
+    return sum(_file_status(spark, f).getLen() for f in files)
+
+
+def _file_status(spark: SparkSession, path: str):
+    """Hadoop ``FileStatus`` of ``path``, through the FileSystem its URI
+    names (local, HDFS, S3A, ...)."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()).getFileStatus(p)

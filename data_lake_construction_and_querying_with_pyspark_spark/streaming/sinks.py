@@ -297,65 +297,29 @@ def streaming_acid_append(
 
     ``foreach_batch_dedup_append`` above is honest about being
     at-least-once: a crash between the parquet append and the
-    checkpoint commit replays the batch and double-writes it. Landing
-    through the transaction log upgrades this to exactly-once with the
-    standard idempotent-foreachBatch move: every commit records its
-    ``batch_id`` in the log entry's op metadata, and a replayed batch
-    whose id is already committed is SKIPPED before writing anything.
-    Readers see each micro-batch atomically (a batch is one commit —
-    never a torn prefix of its files) and can time-travel to any
-    batch boundary.
+    checkpoint commit replays the batch and double-writes it. This sink
+    is the ``acid_table`` stream writer (``sources/acid_source.py``),
+    which records each ``batch_id`` inside the atomic commit entry and
+    skips a replayed batch whose id is already committed. Readers see
+    each micro-batch atomically (one commit, never a torn prefix of its
+    files) and can time-travel to any batch boundary.
 
-    Concurrent writers compose for free: the append commit auto-retries
-    through version races (acid.py), so several streams — or a stream
-    plus batch maintenance jobs like ``compact()`` — can target one
-    table. At scale the per-batch overhead is one small JSON create;
-    the data write is the same distributed parquet job as any append.
-    Each batch's files carry the table's data-skipping policy, like
-    every other writer's (acid.py).
+    Every batch goes through the table's schema enforcement: a batch
+    that drifts from the committed schema raises ``SchemaMismatch`` and
+    its files are removed, as with every other writer. Like every
+    ``acid_table`` read or write, it needs this package importable by
+    the Python workers. Concurrent writers compose: the append commit
+    auto-retries through version races (acid.py), and each batch's files
+    carry the table's data-skipping policy.
     """
-    import time as _time
+    from data_lake_construction_and_querying_with_pyspark_spark.sources.acid_source import (
+        register_acid_source,
+    )
 
-    from data_lake_construction_and_querying_with_pyspark_spark.acid import TransactionalTable
-
-    table = TransactionalTable.create(table_root)
-
-    # Incremental replay check: cache the committed batch-id set and
-    # only scan log versions newer than the last one seen — a
-    # history() call per micro-batch re-reads EVERY commit file each
-    # time (O(n) GETs per batch, O(n²) over the stream's life on the
-    # object stores docs/SCALING.md costs out); the cache makes the
-    # steady-state cost one directory listing + the new commits only.
-    _seen = {"ids": set(), "hi": 0}
-
-    def _committed_batches() -> set:
-        new_ids, _seen["hi"] = table.stream_batch_ids(after_version=_seen["hi"])
-        _seen["ids"] |= new_ids
-        return _seen["ids"]
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # the batch id rides INSIDE the atomic commit entry (not a
-        # second write), so dedup-by-id and commit can't be torn apart
-        if batch_id in _committed_batches():
-            return  # replay of a committed batch: exactly-once skip
-        snap0 = table.snapshot()
-        adds = table._stage_files(batch_df.sparkSession, batch_df, snap0.policy)
-        entry = {
-            "add": adds,
-            "op": {"op": "stream_append", "batch_id": batch_id, "ts": _time.time()},
-        }
-        if snap0.schema is None:
-            # first writer stamps the table schema so later batch
-            # appends get the same enforcement as the batch API
-            entry["schema"] = batch_df.schema.jsonValue()
-        # another writer landing first only moves the commit to the next
-        # slot, unless it was a replay of this very batch
-        table._commit_append(
-            snap0.version + 1, entry, replayed=lambda: batch_id in _committed_batches()
-        )
-
+    register_acid_source(stream_df.sparkSession)
     return (
-        stream_df.writeStream.foreachBatch(write_batch)
+        stream_df.writeStream.format("acid_table")
+        .option("path", table_root)
         .option("checkpointLocation", checkpoint_path)
         .trigger(availableNow=True)
         .start()

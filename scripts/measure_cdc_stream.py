@@ -65,10 +65,7 @@ def main() -> None:
 
     # files the CDC diff partition will read = the delete commit's
     # touched set, straight off the log
-    with open(
-        os.path.join(t.log_path, f"{delete_version:020d}.json")
-    ) as fh:
-        entry = json.load(fh)
+    (_, entry), = t._commits(delete_version - 1, delete_version)
     touched = len(entry.get("add", [])) + len(entry.get("remove", []))
 
     rows: list = []

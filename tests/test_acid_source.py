@@ -5,6 +5,7 @@ default and are skippable with ignore_changes."""
 
 from __future__ import annotations
 
+import os
 import time
 
 import pytest
@@ -280,6 +281,48 @@ def test_stream_read_changes_matches_batch_change_feed(spark, table, tmp_path):
     assert got == want
     assert sum(1 for r in got if r[2] == "delete") == 2
     assert all(r[3] != 4 for r in got)  # compaction silent
+
+
+def test_stream_partitions_open_no_commit_at_or_below_start(table, monkeypatch):
+    """Planning the stream range ``(start, end]`` reads only the commits
+    inside it: the commit files at or below ``start`` are made
+    unreadable, and every open of a log file is recorded (a root test
+    run reads through mode 000)."""
+    import builtins
+
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from data_lake_construction_and_querying_with_pyspark_spark.sources.acid_source import (
+        _AcidStreamReader,
+    )
+
+    for v in range(1, 8):
+        entry = {"add": [{"file": f"data/f{v}.parquet", "rows": 1}], "op": {"op": "append"}}
+        assert table._try_create(v, entry)
+    reader = _AcidStreamReader(table.root, StructType([StructField("k", LongType())]), {})
+
+    start, end = 4, 6
+    opened = []
+    real_open = builtins.open
+
+    def recording_open(path, *a, **kw):
+        if str(path).startswith(table.log_path):
+            opened.append(os.path.basename(str(path)))
+        return real_open(path, *a, **kw)
+
+    old = [os.path.join(table.log_path, f"{v:020d}.json") for v in range(1, start + 1)]
+    for path in old:
+        os.chmod(path, 0o000)
+    try:
+        with monkeypatch.context() as m:
+            m.setattr(builtins, "open", recording_open)
+            parts = reader.partitions({"version": start}, {"version": end})
+    finally:
+        for path in old:
+            os.chmod(path, 0o644)
+
+    assert [os.path.basename(p.path) for p in parts] == ["f5.parquet", "f6.parquet"]
+    assert opened == [f"{v:020d}.json" for v in range(start + 1, end + 1)]
 
 
 def test_stream_read_changes_update_and_restart(spark, table, tmp_path):

@@ -1,4 +1,5 @@
-"""The scan fan-out rule (sources/readers.py::fan_out_small_scan)."""
+"""The scan fan-out rule (sources/readers.py::fan_out_small_scan) and the
+``load_table`` plan memo."""
 
 from __future__ import annotations
 
@@ -45,3 +46,19 @@ def test_derived_frame_gets_the_scans_decision(spark, tmp_path, one_file):
 def test_frame_without_input_files_is_unchanged(spark):
     df = spark.range(10)
     assert readers.fan_out_small_scan(df, "id") is df
+
+
+def test_load_table_rereads_a_table_rewritten_in_place(spark, tmp_path):
+    """The plan memo keeps the table path's modification time: a table
+    overwritten within the application is read afresh, and its memo
+    entry is replaced rather than added beside the old one."""
+    sf_dir = str(tmp_path)
+    path = f"{sf_dir}/region.parquet"
+    spark.range(3).write.parquet(path)
+    assert {r.id for r in readers.load_table(spark, sf_dir, "region").collect()} == {0, 1, 2}
+
+    spark.range(10, 14).write.mode("overwrite").parquet(path)
+    got = {r.id for r in readers.load_table(spark, sf_dir, "region").collect()}
+    assert got == {10, 11, 12, 13}
+    key = (spark.sparkContext.applicationId, sf_dir, "region")
+    assert [k for k in readers._TABLE_PLAN_CACHE if k[1] == sf_dir] == [key]
