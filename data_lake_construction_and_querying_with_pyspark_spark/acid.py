@@ -29,14 +29,20 @@ from any implementation):
   coordinator, exactly as the Delta paper documents — the protocol
   here is coordinator-agnostic, only ``_try_create`` would change.
 
-* **Optimistic concurrency**: a writer reads snapshot version v,
-  computes, then attempts to commit at v+1, v+2, … Appends add files
-  and remove nothing, so they commute with everything and auto-retry
-  (lost-update-free by construction). Table-rewriting commits
-  (overwrite / merge / compact) validate on retry that no intervening
-  commit removed a file they read; merge/overwrite RECOMPUTE from the
-  new snapshot (the caller's lambda re-runs), compaction aborts
-  cleanly — its orphans vacuum away.
+* **Optimistic concurrency, one commit path per kind of write**: a
+  writer reads snapshot version v, computes, then attempts to commit
+  at v+1, v+2, …
+
+  - Appends (``append`` and both ``acid_table`` writers, through
+    ``_commit_append``) add files and remove nothing, so they commute
+    with everything and auto-retry (lost-update-free by construction).
+  - MERGE, DELETE and UPDATE share one copy-on-write loop
+    (``_rewrite_matching``): rewrite the files the predicate can touch
+    (MERGE: every file, anti-joined on the update keys, plus its
+    surviving updates as inserts), commit removing exactly those, and
+    RECOMPUTE from the fresh snapshot when any commit lands first.
+  - Overwrite absorbs concurrent appends and raises on a concurrent
+    rewrite; compaction aborts cleanly — its orphans vacuum away.
 
 * **Snapshot isolation for readers**: :meth:`read` pins the file list
   of one version; late commits don't tear an in-flight scan because
@@ -143,13 +149,11 @@ def _evolve_schema(current: dict | None, incoming: dict, merge_schema: bool) -> 
 
 
 def _json_stat(v):
-    """Normalize a parquet-footer statistic (or a caller-supplied bound)
-    to a JSON-storable value that still ORDERS correctly against its
-    peers: ints/floats/strs pass through, date/datetime become ISO
-    strings (fixed-width — lexicographic order IS chronological order,
-    the same portability trick splits.py uses for hex), bytes decode
-    best-effort. Mixed-type comparisons never happen because a stat and
-    a bound for the same column normalize through the same function."""
+    """Normalize a value to a JSON-storable form: ints/floats/strs pass
+    through, date/datetime become ISO strings (fixed-width —
+    lexicographic order IS chronological order, the same portability
+    trick splits.py uses for hex), bytes decode best-effort, anything
+    else (Decimal) becomes its string. Bloom filters hash this form."""
     import datetime
 
     if isinstance(v, bool) or v is None:
@@ -163,28 +167,50 @@ def _json_stat(v):
     return str(v)
 
 
+def _order_stat(v):
+    """A parquet-footer min/max (or a caller-supplied bound) in the form
+    the log stores and compares: :func:`_json_stat`, except that a
+    Decimal becomes a float — its string would order lexicographically
+    (``'10.25' < '9.50'``). float() is monotone, so a comparison between
+    floats never excludes a value the decimals would keep."""
+    import decimal
+
+    return float(v) if isinstance(v, decimal.Decimal) else _json_stat(v)
+
+
+def _before(a, b) -> bool:
+    """``a < b`` for two stored stats or bounds. A string against a
+    number (a Decimal stat logged as a string before decimals became
+    floats) is not comparable and reads as "not before": may match."""
+    return isinstance(a, str) == isinstance(b, str) and a < b
+
+
 def _footer_min_max(md, cols: tuple[str, ...]) -> dict:
     """Per-file [min, max] per requested column, aggregated across the
     footer's row-group statistics. A column missing statistics in ANY
-    row group yields no entry — absence of stats must read as 'may
-    contain anything', never as a false exclusion."""
+    row group, or whose statistics pyarrow cannot decode (INT32/INT64-
+    backed decimals, as Spark writes ``decimal(p<=18, s)``), yields no
+    entry — absence of stats must read as 'may contain anything', never
+    as a false exclusion."""
+    import pyarrow as pa
+
     idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
     out: dict = {}
     for col in cols:
         if col not in idx:
             continue
-        lo = hi = None
-        ok = True
+        bounds = []
         for rg in range(md.num_row_groups):
             st = md.row_group(rg).column(idx[col]).statistics
             if st is None or not st.has_min_max:
-                ok = False
                 break
-            mn, mx = _json_stat(st.min), _json_stat(st.max)
-            lo = mn if lo is None or mn < lo else lo
-            hi = mx if hi is None or mx > hi else hi
-        if ok and lo is not None:
-            out[col] = [lo, hi]
+            try:
+                bounds.append((_order_stat(st.min), _order_stat(st.max)))
+            except pa.ArrowNotImplementedError:
+                break
+        else:
+            if bounds:
+                out[col] = [min(lo for lo, _ in bounds), max(hi for _, hi in bounds)]
     return out
 
 
@@ -242,9 +268,9 @@ def _may_match(stats: dict | None, prune: dict) -> bool:
         if col not in stats:
             continue
         mn, mx = stats[col]
-        if lo is not None and mx < _json_stat(lo):
+        if lo is not None and _before(mx, _order_stat(lo)):
             return False
-        if hi is not None and mn > _json_stat(hi):
+        if hi is not None and _before(_order_stat(hi), mn):
             return False
     return True
 
@@ -252,11 +278,11 @@ def _may_match(stats: dict | None, prune: dict) -> bool:
 def _file_may_match(meta: dict | None, prune: dict | None, prune_eq: dict | None) -> bool:
     """Full file-skipping decision for one add-action's metadata:
     range intervals against min/max stats (``prune``) AND point
-    lookups against blooms + stats (``prune_eq``, column → value).
-    A bloom answering "definitely absent" excludes the file even when
-    the value sits inside its min/max range — the high-cardinality
-    case ranges can't prune. Missing metadata is always conservative
-    (may match)."""
+    lookups against blooms + stats (``prune_eq``, column → value, cast
+    to the column's type by :func:`_coerce_eq`). A bloom answering
+    "definitely absent" excludes the file even when the value sits
+    inside its min/max range — the high-cardinality case ranges can't
+    prune. Missing metadata is always conservative (may match)."""
     meta = meta or {}
     if not _may_match(meta.get("stats"), prune or {}):
         return False
@@ -264,12 +290,35 @@ def _file_may_match(meta: dict | None, prune: dict | None, prune_eq: dict | None
         bl = (meta.get("blooms") or {}).get(col)
         if bl is not None and not _bloom_may_contain(bl, val):
             return False
-        st = (meta.get("stats") or {}).get(col)
-        if st is not None:
-            jv = _json_stat(val)
-            if jv < st[0] or jv > st[1]:
-                return False
+        if not _may_match(meta.get("stats"), {col: (val, val)}):
+            return False
     return True
+
+
+def _coerce_eq(prune_eq: dict | None, schema: dict | None) -> dict | None:
+    """``prune_eq`` with each number cast to its column's committed type,
+    so a bloom probe hashes the form the column's values were hashed in:
+    ``10`` probing a ``double`` column must hash as ``10.0``, and a
+    decimal probe carries the column's scale (``Decimal('9.50')`` for
+    ``decimal(9,2)``)."""
+    import decimal
+
+    if not prune_eq or schema is None:
+        return prune_eq
+    types = _schema_fields(schema)
+    out = {}
+    for col, v in prune_eq.items():
+        t = types.get(col)
+        if isinstance(v, (int, float, decimal.Decimal)) and not isinstance(v, bool):
+            if t in ("double", "float"):
+                v = float(v)
+            elif t in ("long", "integer", "short", "byte"):
+                v = int(v)
+            elif isinstance(t, str) and t.startswith("decimal("):
+                scale = int(t[len("decimal(") : -1].split(",")[1])
+                v = decimal.Decimal(v).quantize(decimal.Decimal(1).scaleb(-scale))
+        out[col] = v
+    return out
 
 
 _NO_POLICY = {"stats": [], "blooms": []}
@@ -306,6 +355,15 @@ class Snapshot:
     # data-skipping policy: {"stats": [cols], "blooms": [cols]} that
     # every writer records on the files it stages
     policy: dict = field(default_factory=lambda: dict(_NO_POLICY), repr=False)
+
+    def matching(self, prune: dict | None = None, prune_eq: dict | None = None) -> tuple[str, ...]:
+        """The live files whose log metadata may hold a row inside every
+        ``prune`` interval and equal to every ``prune_eq`` value (cast
+        to the committed column types first, :func:`_coerce_eq`) — the
+        one file-skipping pass behind pruned reads, DML and the
+        ``acid_table`` scan."""
+        eq = _coerce_eq(prune_eq, self.schema)
+        return tuple(f for f in self.files if _file_may_match(self.meta.get(f), prune, eq))
 
 
 class TransactionalTable:
@@ -551,25 +609,30 @@ class TransactionalTable:
         write is fully distributed; the per-file rename is
         metadata-only and the files stay invisible until a log entry
         references them."""
-        tag = uuid.uuid4().hex
-        staging = os.path.join(self.root, f"_staging-{tag}")
-        df.write.mode("overwrite").parquet(staging)
         import pyarrow.parquet as pq
 
+        tag = uuid.uuid4().hex
+        staging = os.path.join(self.root, f"_staging-{tag}")
         adds = []
-        for i, part in enumerate(sorted(Path(staging).glob("*.parquet"))):
-            md = pq.ParquetFile(part).metadata
-            if md.num_rows == 0:
-                # a 0-row part adds nothing and carries no stats — if it
-                # entered the log it would conservatively match EVERY
-                # prune interval forever (measured: a range-filtered
-                # append leaves most partitions empty, and those empties
-                # were 13 of 49 files a pruned DELETE had to rewrite)
-                continue
-            name = f"{tag}-part-{i:05d}.parquet"
-            os.replace(part, os.path.join(self.data_path, name))
-            adds.append(self._add_action(f"{DATA_DIR}/{name}", md, policy))
-        shutil.rmtree(staging, ignore_errors=True)
+        try:
+            df.write.mode("overwrite").parquet(staging)
+            for i, part in enumerate(sorted(Path(staging).glob("*.parquet"))):
+                md = pq.ParquetFile(part).metadata
+                if md.num_rows == 0:
+                    # a 0-row part adds nothing and carries no stats — if
+                    # it entered the log it would conservatively match
+                    # EVERY prune interval forever (measured: a
+                    # range-filtered append leaves most partitions empty,
+                    # and those empties were 13 of 49 files a pruned
+                    # DELETE had to rewrite)
+                    continue
+                name = f"{tag}-part-{i:05d}.parquet"
+                os.replace(part, os.path.join(self.data_path, name))
+                adds.append(self._add_action(f"{DATA_DIR}/{name}", md, policy))
+        finally:
+            # a failed write leaves no staging dir; files already under
+            # data/ are unreferenced orphans that vacuum collects
+            shutil.rmtree(staging, ignore_errors=True)
         return adds
 
     def _abandon(self, adds: list[dict]) -> None:
@@ -580,22 +643,44 @@ class TransactionalTable:
                 pass
 
     def _commit_append(
-        self, version: int, entry: dict, max_retries: int = 50, replayed=None
+        self,
+        schema: dict,
+        op: dict,
+        stage,
+        stats_cols: tuple[str, ...] = (),
+        bloom_cols: tuple[str, ...] = (),
+        merge_schema: bool = False,
+        max_retries: int = 50,
+        replayed=None,
     ) -> int | None:
-        """Commit an add-only ``entry`` at the first free version from
-        ``version``: appends commute, so a lost race retries the next
-        slot with the SAME files and never loses an update. ``replayed``
-        (the exactly-once stream writer) is re-checked after each lost
-        race; True means this batch already committed, so its files are
-        abandoned and None is returned."""
+        """The one append commit, behind :meth:`append` and both
+        ``acid_table`` writers. Checks the incoming ``schema`` against
+        the head snapshot BEFORE anything is staged (``SchemaMismatch``
+        leaves no file behind), widens the table's skipping policy by
+        the declared columns, builds the add-actions with
+        ``stage(policy)``, records the policy and commits at the first
+        free version: appends commute, so a lost race retries the next
+        slot with the SAME files and never loses an update.
+        ``replayed`` (the exactly-once stream writer) is re-checked
+        after each lost race; True means this batch already committed,
+        so its files are abandoned and None is returned."""
+        snap = self.snapshot()
+        schema_change = _evolve_schema(snap.schema, schema, merge_schema)
+        policy = _widen(snap.policy, stats_cols, bloom_cols)
+        adds = stage(policy)
+        entry = {"add": adds, "op": {**op, "ts": time.time()}}
+        if schema_change is not None:
+            entry["schema"] = schema_change
+        _record_policy(entry, snap, policy)
+        version = snap.version + 1
         for _ in range(max_retries):
             if self._try_create(version, entry):
                 return version
             if replayed is not None and replayed():
-                self._abandon(entry["add"])
+                self._abandon(adds)
                 return None
             version += 1
-        self._abandon(entry["add"])
+        self._abandon(adds)
         raise CommitConflict(f"append lost {max_retries} consecutive version races")
 
     def _commit_overwrite(
@@ -658,17 +743,14 @@ class TransactionalTable:
         appends commute on content, and racing a schema CHANGE against
         an append is a coordination error this log surfaces in history
         rather than arbitrates."""
-        snap0 = self.snapshot()
-        schema_change = _evolve_schema(
-            snap0.schema, df.schema.jsonValue(), merge_schema
-        )
-        policy = _widen(snap0.policy, stats_cols, bloom_cols)
-        adds = self._stage_files(spark, df, policy)
-        entry = {"add": adds, "op": {"op": "append", "ts": time.time()}}
-        if schema_change is not None:
-            entry["schema"] = schema_change
         return self._commit_append(
-            snap0.version + 1, _record_policy(entry, snap0, policy), max_retries
+            df.schema.jsonValue(),
+            {"op": "append"},
+            lambda policy: self._stage_files(spark, df, policy),
+            stats_cols,
+            bloom_cols,
+            merge_schema,
+            max_retries,
         )
 
     def overwrite(self, spark: SparkSession, df: DataFrame) -> int:
@@ -687,13 +769,14 @@ class TransactionalTable:
         max_retries: int = 5,
         merge_schema: bool = False,
     ) -> int:
-        """Keyed MERGE with full serializability: reads snapshot v,
-        computes existing ⟕anti updates ∪ surviving-updates, commits at
-        v+1 removing exactly the files it read. If ANY commit lands in
-        between (its inputs may be stale), the merge RECOMPUTES from
-        the fresh snapshot and tries again — the copy-on-write
-        transaction loop. At scale, partition the table and merge only
-        dirty partitions; the loop is identical.
+        """Keyed MERGE with full serializability: rows of ``updates``
+        replace the rows with the same key, new keys append, and rows
+        whose ``delete_col`` is TRUE delete their key instead. One
+        :meth:`_rewrite_matching` commit: every live file is rewritten
+        as existing ⟕anti update-keys, the surviving updates join the
+        commit as its inserts, and a lost race recomputes from the
+        fresh snapshot like DELETE and UPDATE (``skipped_files`` is 0:
+        no key pruning yet).
 
         Updates obey the same schema contract as :meth:`append`:
         drift raises ``SchemaMismatch`` unless ``merge_schema=True``
@@ -701,59 +784,52 @@ class TransactionalTable:
         new columns)."""
         from pyspark.sql import functions as F
 
-        for _ in range(max_retries):
-            snap = self.snapshot()
-            surviving = (
-                updates.filter(~F.coalesce(F.col(delete_col), F.lit(False))).drop(delete_col)
-                if delete_col
-                else updates
-            )
-            schema_change = _evolve_schema(
-                snap.schema, surviving.schema.jsonValue(), merge_schema
-            )
-            existing = self._read_files(spark, snap.files, schema=snap.schema)
-            merged = (
-                existing.join(updates.select(*key_cols).distinct(), key_cols, "left_anti")
-                .unionByName(surviving, allowMissingColumns=merge_schema)
-                if existing is not None
-                else surviving
-            )
-            adds = self._stage_files(spark, merged, snap.policy)
-            entry = {
-                "add": adds,
-                "remove": [{"file": f} for f in snap.files],
-                "op": {"op": "merge", "keys": key_cols, "ts": time.time()},
-            }
-            if schema_change is not None:
-                entry["schema"] = schema_change
-            if self._try_create(snap.version + 1, entry):
-                return snap.version + 1
-            self._abandon(adds)  # stale inputs: recompute from new snapshot
-        raise CommitConflict(f"merge lost {max_retries} recompute rounds")
+        surviving = (
+            updates.filter(~F.coalesce(F.col(delete_col), F.lit(False))).drop(delete_col)
+            if delete_col
+            else updates
+        )
+        keys = updates.select(*key_cols).distinct()
+        untouched = lambda df: df.join(keys, key_cols, "left_anti")  # noqa: E731
+        op = {"op": "merge", "keys": key_cols}
+        snap = self.snapshot()
+        return self._rewrite_matching(
+            spark, snap, untouched, op, None, None, max_retries, surviving, merge_schema
+        )
 
     def _rewrite_matching(
-        self, spark: SparkSession, snap: Snapshot, rewrite, op: dict, prune, prune_eq, max_retries
+        self, spark, snap, rewrite, op, prune, prune_eq, max_retries, inserts=None, merge_schema=False
     ) -> int | None:
-        """The copy-on-write loop behind DELETE and UPDATE: rewrite
-        (``rewrite(df) -> df``) only the files whose metadata can match
-        ``prune``/``prune_eq``, commit removing exactly those, and
+        """The copy-on-write loop behind MERGE, DELETE and UPDATE:
+        rewrite (``rewrite(df) -> df``) only the files whose metadata
+        can match ``prune``/``prune_eq``, add ``inserts`` (MERGE's
+        surviving updates, schema-checked against every snapshot this
+        loop tries), commit removing exactly the rewritten files, and
         record how many files the log let it skip. A lost race makes
-        the read set stale: recompute from the fresh snapshot."""
+        the read set stale: recompute from the fresh snapshot. Returns
+        None, committing nothing, when no file can match and there is
+        nothing to insert."""
         for _ in range(max_retries):
-            touched = [
-                f
-                for f in snap.files
-                if _file_may_match(snap.meta.get(f), prune, prune_eq)
-            ]
-            if not touched:
+            schema_change = (
+                _evolve_schema(snap.schema, inserts.schema.jsonValue(), merge_schema)
+                if inserts is not None
+                else None
+            )
+            touched = snap.matching(prune, prune_eq)
+            if not touched and inserts is None:
                 return None
-            out = rewrite(self._read_files(spark, tuple(touched), schema=snap.schema))
+            kept = self._read_files(spark, touched, schema=snap.schema)
+            out = rewrite(kept) if kept is not None else None
+            if inserts is not None:
+                out = inserts if out is None else out.unionByName(inserts, allowMissingColumns=True)
             adds = self._stage_files(spark, out, snap.policy)
             entry = {
                 "add": adds,
                 "remove": [{"file": f} for f in touched],
                 "op": {**op, "skipped_files": len(snap.files) - len(touched), "ts": time.time()},
             }
+            if schema_change is not None:
+                entry["schema"] = schema_change
             if self._try_create(snap.version + 1, entry):
                 return snap.version + 1
             self._abandon(adds)  # stale read set: recompute from new snapshot
@@ -856,15 +932,17 @@ class TransactionalTable:
         n_files: int | None = None,
     ) -> int | None:
         """Rewrite the current live set into ~target_file_mb files
-        (or exactly ``n_files``), under the table's skipping policy.
+        (sized from the ``bytes`` its add-actions record, no file
+        statted; or exactly ``n_files``), under the table's skipping
+        policy.
         Content is unchanged, so a concurrent commit makes this
         compaction's output stale garbage — abort (returning None) and
         let the orphans vacuum; never retry into someone's commit.
 
         ``cluster_by`` makes this ``OPTIMIZE ... ZORDER BY``: rows are
         range-partitioned and sorted on the bit-interleaved equi-depth
-        Z-value over those columns (``sources.sinks.with_zvalue`` — the
-        same layout machinery as ``write_zorder_lake``), and the
+        Z-value over those columns (``sources.sinks.zorder_layout`` —
+        the same layout ``write_zorder_lake`` writes), and the
         clustering columns join the table's stats policy, so after
         compaction a pruned ``read``/``delete_where`` on ANY
         prefix-free subset of the clustered dimensions skips
@@ -874,22 +952,15 @@ class TransactionalTable:
         snap = self.snapshot()
         if not snap.files:
             return None
-        total = sum(
-            os.path.getsize(os.path.join(self.root, f)) for f in snap.files
-        )
+        total = sum(snap.meta[f]["bytes"] for f in snap.files)
         n = n_files or max(1, round(total / (target_file_mb << 20)))
         df = self._read_files(spark, snap.files, schema=snap.schema)
         if cluster_by:
             from data_lake_construction_and_querying_with_pyspark_spark.sources.sinks import (
-                with_zvalue,
+                zorder_layout,
             )
 
-            df = (
-                with_zvalue(df, list(cluster_by))
-                .repartitionByRange(n, "__z")
-                .sortWithinPartitions("__z")
-                .drop("__z")
-            )
+            df = zorder_layout(df, list(cluster_by), n)
         else:
             df = df.repartition(n)
         policy = _widen(snap.policy, cluster_by)
@@ -951,12 +1022,7 @@ class TransactionalTable:
         surviving files' row groups, so the two layers compose exactly
         like Delta's stats pruning + parquet predicate pushdown."""
         snap = self.snapshot(version=version)
-        files = snap.files
-        if prune or prune_eq:
-            files = tuple(
-                f for f in files if _file_may_match(snap.meta.get(f), prune, prune_eq)
-            )
-        df = self._read_files(spark, files, schema=snap.schema)
+        df = self._read_files(spark, snap.matching(prune, prune_eq), schema=snap.schema)
         if df is not None:
             return df
         if snap.schema is not None:

@@ -8,6 +8,11 @@ explicit utility), and a paginated delete of everything under a staging
 prefix (``lambda_code/lambda_handler.py:6-15``). Locally these are
 filesystem operations; on a cluster the same API routes through the
 Hadoop FileSystem so it works against any supported object store.
+
+Table MERGE and compaction are not here: they are commits of the ACID
+table (``acid.TransactionalTable.merge_upsert`` / ``compact``), atomic
+through its log, so no rewrite ever deletes the live table before the
+new one is in place.
 """
 
 from __future__ import annotations
@@ -53,96 +58,7 @@ def hadoop_delete(spark: SparkSession, path: str) -> bool:
     return bool(fs.delete(hpath, True)) if fs.exists(hpath) else False
 
 
-def compact_lake_path(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    target_file_mb: int = 128,
-    partition_by: list[str] | None = None,
-) -> int:
-    """Small-file compaction — the lake-maintenance op every streaming
-    or incremental writer eventually needs: rewrite a directory into
-    ~``target_file_mb`` files. At 100 TB small files dominate scan
-    planning time and NameNode/object-listing cost; compaction restores
-    ≥128 MiB scan units. Returns the new file count.
-
-    Uses a write-to-staging-then-swap so a failed rewrite never loses
-    the original data.
-    """
-    import shutil
-    import uuid
-    from pathlib import Path
-
-    df = spark.read.format(fmt).load(path)
-    total_bytes = sum(f.stat().st_size for f in Path(path).rglob("*") if f.is_file())
-    n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
-    staging = f"{path.rstrip('/')}._compact_{uuid.uuid4().hex[:8]}"
-    writer = df.repartition(n_files).write.mode("overwrite").format(fmt)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(staging)
-    shutil.rmtree(path)
-    Path(staging).rename(path)
-    return sum(1 for f in Path(path).rglob("*") if f.is_file() and f.suffix == f".{fmt}")
-
-
 def preview(df: DataFrame, n: int = 20) -> str:
     """S9 — the reference's result-preview sink (``df.show()`` grid to
     the log); returned as a string so callers can log it structured."""
     return df._jdf.showString(n, 20, False)
-
-
-def merge_upsert_lake(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key_cols: list[str],
-    fmt: str = "parquet",
-    delete_col: str | None = None,
-) -> dict:
-    """Keyed MERGE (upsert + optional delete) into a parquet lake path
-    — the mutation primitive this lake otherwise lacks without an ACID
-    table format (ROADMAP.md: no Delta/Iceberg in the container; their
-    MERGE INTO subsumes this).
-
-    Semantics: rows in ``updates`` replace existing rows with the same
-    key; new keys append; if ``delete_col`` names a boolean column,
-    update rows with it true delete the key instead of writing it.
-    Implemented as existing LEFT ANTI updates-keys (existing rows not
-    being touched survive verbatim) UNION the surviving update rows —
-    one shuffled anti join keyed on the merge key, then a
-    write-to-staging + atomic-rename swap (same crash-safety pattern
-    as :func:`compact_lake_path`: a failed rewrite never corrupts the
-    target).
-
-    At 100 TB: partition the lake on a key prefix and call this
-    per-partition with partition-pruned ``updates`` so the anti join
-    touches only dirty partitions — the classic copy-on-write merge.
-    With dynamic partition overwrite
-    (``spark.sql.sources.partitionOverwriteMode=dynamic``) the swap
-    narrows to exactly the rewritten partitions.
-
-    Returns counts {"before", "updates", "after"}.
-    """
-    import shutil
-    import uuid
-    from pathlib import Path
-
-    from pyspark.sql import functions as F
-
-    existing = spark.read.format(fmt).load(path)
-    before = existing.count()
-    surviving = (
-        updates.filter(~F.coalesce(F.col(delete_col), F.lit(False))).drop(delete_col)
-        if delete_col
-        else updates
-    )
-    merged = existing.join(
-        updates.select(*key_cols).distinct(), key_cols, "left_anti"
-    ).unionByName(surviving)
-    staging = f"{path.rstrip('/')}._merge_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").format(fmt).save(staging)
-    after = spark.read.format(fmt).load(staging).count()
-    shutil.rmtree(path)
-    Path(staging).rename(path)
-    return {"before": before, "updates": surviving.count(), "after": after}

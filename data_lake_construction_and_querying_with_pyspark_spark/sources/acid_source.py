@@ -52,16 +52,18 @@ Writers are Arrow-batched (``DataSourceArrowWriter`` /
 ``DataSourceStreamArrowWriter`` — no per-row Python): each non-empty
 task lands one immutable parquet file under ``data/``, invisible until
 the driver's ``commit`` references every task's files in ONE atomic
-log entry. Batch append/overwrite carry the same schema enforcement,
-version-race retry, and conflict rules as the ``TransactionalTable``
-API; the streaming writer records the micro-batch id inside the commit
-entry (op ``stream_append``) so checkpoint replays are detected and
-skipped. It is the engine's ONE exactly-once streaming append:
-``streaming.sinks.streaming_acid_append`` is a thin wrapper that starts
-it, so that sink enforces the table's committed schema like every
-other writer (a drifted micro-batch raises ``SchemaMismatch`` and its
-files are removed), and, as for every ``acid_table`` read or write,
-this package must be importable by the Python workers. Every landed
+log entry. Both writers' appends commit through the API's own append
+commit (``TransactionalTable._commit_append``: schema enforcement,
+policy widening, version-race retry), and batch overwrite through its
+``_commit_overwrite`` conflict rules. The streaming writer records the
+micro-batch id inside the commit entry (op ``stream_append``) so
+checkpoint replays are detected and skipped. It is the engine's ONE
+exactly-once streaming append: ``streaming.sinks.streaming_acid_append``
+is a thin wrapper that starts it, so that sink enforces the table's
+committed schema like every other writer (a drifted micro-batch raises
+``SchemaMismatch`` and its files are removed), and, as for every
+``acid_table`` read or write, this package must be importable by the
+Python workers. Every landed
 file carries the table's data-skipping policy (the add-actions come
 from the same ``TransactionalTable._add_action`` as the API writers').
 Options: ``stats_cols`` / ``bloom_cols`` (comma-separated) declare
@@ -72,7 +74,6 @@ arguments; ``merge_schema`` permits column-addition evolution.
 from __future__ import annotations
 
 import os
-import time
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
@@ -90,8 +91,6 @@ from data_lake_construction_and_querying_with_pyspark_spark.acid import (
     DATA_DIR,
     SchemaMismatch,
     TransactionalTable,
-    _evolve_schema,
-    _record_policy,
     _widen,
 )
 
@@ -281,19 +280,17 @@ class _AcidBatchReader(DataSourceReader):
         return iter(filters)  # all residual: row-level truth is Spark's
 
     def partitions(self):
-        from data_lake_construction_and_querying_with_pyspark_spark.acid import (
-            _file_may_match,
-        )
-
         snap = TransactionalTable(self.root).snapshot(version=self.as_of)
         return [
             _FilePartition(os.path.join(self.root, f), self.columns)
-            for f in snap.files
-            if _file_may_match(snap.meta.get(f), self._prune, self._prune_eq)
+            for f in snap.matching(self._prune, self._prune_eq)
         ]
 
     def read(self, partition):
-        yield from _read_file(partition)
+        # a scan whose every file was pruned plans one None partition
+        # (PySpark's planner never runs zero read tasks)
+        if partition is not None:
+            yield from _read_file(partition)
 
 
 class _AcidStreamReader(DataSourceStreamReader):
@@ -428,30 +425,28 @@ class _AcidWriterCore:
     def _gather(self, messages) -> list[dict]:
         return [a for m in messages if m is not None for a in m.adds]
 
-    def _land(self, messages, snap) -> tuple[list[dict], dict]:
-        """Add-actions for the tasks' files under ``snap``'s policy
-        widened by this writer's options, and that policy."""
-        policy = _widen(snap.policy, self.stats_cols, self.bloom_cols)
-        adds = [self.table._add_action(a["file"], None, policy) for a in self._gather(messages)]
-        return adds, policy
+    def _land(self, messages, policy: dict) -> list[dict]:
+        """Add-actions for the tasks' files under ``policy``."""
+        return [self.table._add_action(a["file"], None, policy) for a in self._gather(messages)]
 
     def _append(self, messages, op: dict, replayed=None) -> None:
         """Commit the tasks' files as one append (``op`` is its op
-        record) with the API's schema enforcement and version-race
-        retry; a rejected schema abandons the files and raises."""
-        snap = self.table.snapshot()
+        record) through the API's own append commit
+        (``TransactionalTable._commit_append``); a rejected schema
+        abandons the files and raises."""
         try:
-            schema_change = _evolve_schema(snap.schema, self.schema_json, self.merge_schema)
+            self.table._commit_append(
+                self.schema_json,
+                op,
+                lambda policy: self._land(messages, policy),
+                self.stats_cols,
+                self.bloom_cols,
+                self.merge_schema,
+                replayed=replayed,
+            )
         except SchemaMismatch:
             self.abort(messages)
             raise
-        adds, policy = self._land(messages, snap)
-        entry = {"add": adds, "op": {**op, "ts": time.time()}}
-        if schema_change is not None:
-            entry["schema"] = schema_change
-        self.table._commit_append(
-            snap.version + 1, _record_policy(entry, snap, policy), replayed=replayed
-        )
 
     def abort(self, messages, *_):
         self.table._abandon(self._gather(messages))
@@ -472,8 +467,8 @@ class _AcidBatchWriter(_AcidWriterCore, DataSourceArrowWriter):
             self._append(messages, {"op": "append"})
             return
         snap = self.table.snapshot()
-        adds, policy = self._land(messages, snap)
-        self.table._commit_overwrite(snap, adds, self.schema_json, policy)
+        policy = _widen(snap.policy, self.stats_cols, self.bloom_cols)
+        self.table._commit_overwrite(snap, self._land(messages, policy), self.schema_json, policy)
 
 
 class _AcidStreamWriter(_AcidWriterCore, DataSourceStreamArrowWriter):

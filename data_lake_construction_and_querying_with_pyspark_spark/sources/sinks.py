@@ -83,28 +83,25 @@ def write_zorder_lake(
     Numeric, date and timestamp columns only (strings have no
     order-preserving binning without a full sort).
     """
-    tagged = with_zvalue(df, zorder_cols, bits_per_col=bits_per_col, rel_err=rel_err)
-    out = (
-        tagged.repartitionByRange(n_files, "__z")
-        if n_files
-        else tagged.repartitionByRange("__z")
-    )
-    out.sortWithinPartitions("__z").drop("__z").write.mode("overwrite").format(fmt).save(path)
+    out = zorder_layout(df, zorder_cols, n_files, bits_per_col=bits_per_col, rel_err=rel_err)
+    out.write.mode("overwrite").format(fmt).save(path)
 
 
-def with_zvalue(
+def zorder_layout(
     df: DataFrame,
     zorder_cols: list[str],
+    n_files: int | None = None,
     bits_per_col: int = 8,
     rel_err: float = 0.01,
 ) -> DataFrame:
-    """``df`` plus a ``__z`` bigint column: the bit-interleaved
-    equi-depth-bucket Z-value over ``zorder_cols`` (the clustering key
-    ``write_zorder_lake`` range-partitions on — extracted so the ACID
-    table's clustered compaction can reuse the identical layout
-    machinery). One sampled ``approxQuantile`` driver pass for the
-    bucket bounds; the Z-value itself is a pure JVM expression chain
-    inside whole-stage codegen."""
+    """``df`` laid out in Z-order over ``zorder_cols`` — the one Z-order
+    layout, written by ``write_zorder_lake`` and by the ACID table's
+    ``compact(cluster_by=)``. Each row's ``__z`` key is the
+    bit-interleave of its columns' equi-depth bucket ids (one sampled
+    ``approxQuantile`` driver pass for the bucket bounds; the key itself
+    is a pure JVM expression chain inside whole-stage codegen); rows are
+    range-partitioned on it into ``n_files`` partitions (Spark's default
+    count when None), sorted within each, and the key is dropped."""
     from pyspark.sql import functions as F
 
     n_buckets = 1 << bits_per_col
@@ -140,7 +137,8 @@ def with_zvalue(
                 F.shiftright(bucket, bit).bitwiseAND(F.lit(1)),
                 bit * len(zorder_cols) + ci,
             )
-    return df.withColumn("__z", z)
+    by = (n_files, "__z") if n_files else ("__z",)
+    return df.withColumn("__z", z).repartitionByRange(*by).sortWithinPartitions("__z").drop("__z")
 
 
 def write_bucketed_table(

@@ -38,6 +38,24 @@ def _rows(df):
     return {(r["k"], r["flag"]) for r in df.collect()}
 
 
+def _forbid_commit_reads(monkeypatch, table, versions):
+    """Make ``acid``'s ``open`` raise on the commit files of ``versions``
+    (a chmod 000 proves nothing: a root test run reads through it)."""
+    import builtins
+
+    import data_lake_construction_and_querying_with_pyspark_spark.acid as acid_mod
+
+    forbidden = {table._commit_path(v) for v in versions}
+    real_open = getattr(acid_mod, "open", builtins.open)
+
+    def guarded_open(path, *a, **kw):
+        if str(path) in forbidden:
+            raise AssertionError(f"read old commit {os.path.basename(str(path))}")
+        return real_open(path, *a, **kw)
+
+    monkeypatch.setattr(acid_mod, "open", guarded_open, raising=False)
+
+
 def test_append_read_history(spark, table):
     v1 = table.append(spark, _batch(spark, 0, 5))
     v2 = table.append(spark, _batch(spark, 5, 8, "b"))
@@ -86,6 +104,20 @@ def test_merge_into_empty_table(spark, table):
     updates = spark.range(3).select(F.col("id").alias("k"), F.lit("x").alias("flag"))
     table.merge_upsert(spark, updates, ["k"])
     assert table.read(spark).count() == 3
+
+
+def test_merge_upsert_failed_write_leaves_table_unchanged(spark, table):
+    """A MERGE whose updates fail mid-write commits nothing: the same
+    version, the same rows, and no ``_staging-*`` directory left in the
+    table root (``vacuum`` only collects data files)."""
+    table.append(spark, _batch(spark, 0, 3))
+    version, rows = table.snapshot().version, _rows(table.read(spark))
+    bad = spark.range(2, 3).selectExpr("id AS k", "CAST(assert_true(false) AS STRING) AS flag")
+    with pytest.raises(Exception):
+        table.merge_upsert(spark, bad, ["k"])
+    assert table.snapshot().version == version
+    assert _rows(table.read(spark)) == rows
+    assert not [e for e in os.listdir(table.root) if e.startswith("_staging-")]
 
 
 def test_version_race_has_exactly_one_winner(table):
@@ -673,6 +705,61 @@ def test_bloom_point_delete_skips_unprunable_files(spark, table):
     assert target not in got and len(got) == 1599
 
 
+def test_int_backed_decimal_stats_columns_are_left_without_stats(spark, table):
+    """Spark writes ``decimal(p<=18, s)`` as INT32/INT64 parquet, whose
+    footer statistics pyarrow cannot decode: declaring such a column
+    gives it no stats entry (may match anything) instead of failing the
+    write, and a pruned DELETE on it still deletes exactly."""
+    from decimal import Decimal
+
+    df = spark.createDataFrame(
+        [(1, Decimal("9.50"), Decimal("9.50")), (2, Decimal("10.25"), Decimal("10.25"))],
+        "k bigint, d9 decimal(9,2), d18 decimal(18,2)",
+    ).coalesce(1)
+    table.append(spark, df, stats_cols=("k", "d9", "d18"))
+    snap = table.snapshot()
+    assert all(snap.meta[f]["stats"].keys() == {"k"} for f in snap.files)
+    assert table.delete_where(spark, "d18 > 10", prune={"d18": (Decimal("10"), None)}) == 2
+    assert [r["k"] for r in table.read(spark).collect()] == [1]
+
+
+def test_decimal_stats_order_as_numbers(spark, table):
+    """``decimal(38,10)`` min/max are logged as numbers, so a range
+    inside a file's span keeps the file (as strings, '10.25' < '9.7'
+    skipped it) and an int bound compares without a TypeError. A string
+    stat from an older log against a number reads as may-match."""
+    from decimal import Decimal
+
+    from data_lake_construction_and_querying_with_pyspark_spark.acid import _may_match
+
+    df = spark.createDataFrame(
+        [(1, Decimal("9.5")), (2, Decimal("10.25"))], "k bigint, d decimal(38,10)"
+    ).coalesce(1)
+    table.append(spark, df, stats_cols=("d",))
+    for bound in [(Decimal("9.7"), Decimal("9.9")), (10, 11), (None, 9.5)]:
+        assert table.read(spark, prune={"d": bound}).count() == 2, bound
+    assert table.read(spark, prune={"d": (11, None)}).count() == 0
+    old_log = {"d": ["9.5000000000", "10.2500000000"]}
+    assert _may_match(old_log, {"d": (Decimal("9.7"), Decimal("9.9"))})
+    assert _may_match(old_log, {"d": (11, None)})
+
+
+def test_bloom_probe_takes_the_column_type(spark, table):
+    """A point probe is cast to its column's committed type before the
+    bloom check: ``10`` finds the ``double`` 10.0 and ``Decimal('9.5')``
+    finds the ``decimal(9,2)`` 9.50, where hashing the probe as given
+    skipped the only file holding them."""
+    from decimal import Decimal
+
+    df = spark.range(20).selectExpr(
+        "id AS k", "CAST(id AS DOUBLE) AS x", "CAST(id + 0.5 AS DECIMAL(9,2)) AS d"
+    ).coalesce(1)
+    table.append(spark, df, bloom_cols=("x", "d"))
+    assert table.read(spark, prune_eq={"d": Decimal("9.5")}).count() == 20
+    assert table.delete_where(spark, "x = 10", prune_eq={"x": 10}) == 2
+    assert 10 not in {r["k"] for r in table.read(spark).collect()}
+
+
 def test_bloom_read_prune_eq(spark, table):
     from pyspark.sql import functions as F
 
@@ -734,7 +821,7 @@ def test_checkpoints_build_incrementally_without_ops(table):
     assert all(h["operation"] in ("append",) for h in hist)
 
 
-def test_stream_batch_ids_incremental(table):
+def test_stream_batch_ids_incremental(table, monkeypatch):
     """The exactly-once sinks' replay check is INCREMENTAL: a scan from
     the cached high-water mark opens only the commits that landed since
     (the ADVICE r5 O(n²)-per-stream fix), returns exactly the new
@@ -760,16 +847,12 @@ def test_stream_batch_ids_incremental(table):
     ids3, hi3 = table.stream_batch_ids(after_version=hi)
     assert ids3 == {60} and hi3 == 7
 
-    # the incremental scan must not OPEN old commit files: make them
-    # unreadable and re-scan from the mark
-    for v in range(1, 8):
-        os.chmod(os.path.join(table.log_path, f"{v:020d}.json"), 0o000)
-    try:
+    # the incremental scan must not OPEN old commit files: make reading
+    # them fail and re-scan from the mark
+    with monkeypatch.context() as m:
+        _forbid_commit_reads(m, table, range(1, 8))
         ids4, hi4 = table.stream_batch_ids(after_version=7)
-        assert ids4 == set() and hi4 == 7
-    finally:
-        for v in range(1, 8):
-            os.chmod(os.path.join(table.log_path, f"{v:020d}.json"), 0o644)
+    assert ids4 == set() and hi4 == 7
 
 
 def test_head_snapshot_never_lists_the_log(table, monkeypatch):
@@ -808,17 +891,13 @@ def test_head_snapshot_never_lists_the_log(table, monkeypatch):
     # pointer + checkpoint + 3 new commits = 5 opens
     assert counts["opens"] == 5, counts
 
-    # old commit files are not even STATted below the checkpoint: make
-    # them unreadable and re-load the head (mirrors the
+    # old commit files below the checkpoint are never opened: make
+    # reading them fail and re-load the head (mirrors the
     # stream_batch_ids contract test)
-    for v in range(1, CHECKPOINT_EVERY * 12 + 1):
-        os.chmod(os.path.join(table.log_path, f"{v:020d}.json"), 0o000)
-    try:
+    with monkeypatch.context() as m:
+        _forbid_commit_reads(m, table, range(1, CHECKPOINT_EVERY * 12 + 1))
         snap2 = table.snapshot()
-        assert snap2.version == n and set(snap2.files) == set(snap.files)
-    finally:
-        for v in range(1, CHECKPOINT_EVERY * 12 + 1):
-            os.chmod(os.path.join(table.log_path, f"{v:020d}.json"), 0o644)
+    assert snap2.version == n and set(snap2.files) == set(snap.files)
 
     # time travel takes the listing path by design
     counts["listdir"] = 0
@@ -886,7 +965,7 @@ def test_every_writer_applies_the_table_stats_policy(spark, table, tmp_path, wri
     assert max(r["k"] for r in table.read(spark).collect()) < 200
 
 
-def test_stats_policy_survives_checkpoint(spark, table):
+def test_stats_policy_survives_checkpoint(spark, table, monkeypatch):
     """Declared at v1, the policy rides the checkpoint: with v1's log
     entry unreadable, the head snapshot (``_last_checkpoint`` path)
     still applies it to the next writer."""
@@ -894,12 +973,9 @@ def test_stats_policy_survives_checkpoint(spark, table):
     for v in range(2, CHECKPOINT_EVERY + 2):
         assert table._try_create(v, {"add": [], "op": {"op": "append"}})
     assert table._read_last_checkpoint()[0] == CHECKPOINT_EVERY
-    first = os.path.join(table.log_path, f"{1:020d}.json")
-    os.chmod(first, 0o000)
-    try:
+    with monkeypatch.context() as m:
+        _forbid_commit_reads(m, table, [1])
         table.merge_upsert(spark, _batch(spark, 5, 15, "m"), ["k"])
         snap = table.snapshot()
-    finally:
-        os.chmod(first, 0o644)
     assert all({"stats", "blooms"} <= snap.meta[f].keys() for f in snap.files)
     assert snap.policy == {"stats": ["k"], "blooms": ["k"]}

@@ -180,6 +180,15 @@ def test_batch_pushdown_prunes_files(spark, table):
     assert len(r.partitions()) == 4
 
 
+def test_batch_scan_pruning_every_file_returns_no_rows(spark, table):
+    """A pushed filter that prunes every file leaves no partition, and
+    PySpark then reads one ``None`` partition: the scan yields zero
+    rows instead of failing on it."""
+    table.append(spark, _batch(spark, 1, 3), stats_cols=("k",))
+    df = spark.read.format("acid_table").option("path", table.root).load()
+    assert df.filter(F.col("k") > 5).count() == 0
+
+
 def test_batch_time_travel_version_and_timestamp(spark, table):
     table.append(spark, _batch(spark, 0, 3))  # v1
     table.append(spark, _batch(spark, 3, 6, "b"))  # v2

@@ -42,76 +42,11 @@ def test_hadoop_delete(spark, tmp_path):
     assert hadoop_delete(spark, out) is False
 
 
-def test_compaction_reduces_file_count(spark, tmp_path):
-    from data_lake_construction_and_querying_with_pyspark_spark.maintenance import (
-        compact_lake_path,
-    )
-
-    out = str(tmp_path / "many_files")
-    # 64 tiny files
-    spark.range(100000).repartition(64).write.parquet(out)
-    before = len([f for f in Path(out).rglob("*.parquet")])
-    assert before == 64
-    after = compact_lake_path(spark, out, target_file_mb=128)
-    assert after < before
-    back = spark.read.parquet(out)
-    assert back.count() == 100000
-    assert back.agg({"id": "sum"}).first()[0] == 100000 * 99999 // 2
-
-
 def test_preview_renders_grid(spark):
     from data_lake_construction_and_querying_with_pyspark_spark.maintenance import preview
 
     s = preview(spark.range(3).toDF("n"), n=2)
     assert "n" in s and "only showing top 2 rows" in s
-
-
-def test_merge_upsert_updates_inserts_and_deletes(spark, tmp_path):
-    """MERGE semantics: same-key rows replaced, new keys appended,
-    delete-flagged keys removed, untouched rows byte-identical."""
-    from pyspark.sql import functions as F
-
-    from data_lake_construction_and_querying_with_pyspark_spark.maintenance import (
-        merge_upsert_lake,
-    )
-
-    path = str(tmp_path / "lake")
-    base = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0), (4, "d", 40.0)],
-        "id bigint, name string, score double",
-    )
-    base.write.parquet(path)
-    updates = spark.createDataFrame(
-        [(2, "B2", 21.0, False), (5, "e", 50.0, False), (3, None, 0.0, True)],
-        "id bigint, name string, score double, is_delete boolean",
-    )
-    stats = merge_upsert_lake(spark, path, updates, ["id"], delete_col="is_delete")
-    assert stats == {"before": 4, "updates": 2, "after": 4}
-    got = {
-        r.id: (r.name, r.score)
-        for r in spark.read.parquet(path).collect()
-    }
-    assert got == {1: ("a", 10.0), 2: ("B2", 21.0), 4: ("d", 40.0), 5: ("e", 50.0)}
-
-
-def test_merge_upsert_staging_never_corrupts_target(spark, tmp_path):
-    """A merge whose write fails (unwritable schema conflict) must
-    leave the original lake intact — the staging swap is the crash
-    contract."""
-    import pytest as _pytest
-
-    from data_lake_construction_and_querying_with_pyspark_spark.maintenance import (
-        merge_upsert_lake,
-    )
-
-    path = str(tmp_path / "lake")
-    spark.createDataFrame([(1, "a")], "id bigint, name string").write.parquet(path)
-    bad = spark.createDataFrame([(2,)], "id bigint").selectExpr(
-        "id", "assert_true(false) as name"
-    )
-    with _pytest.raises(Exception):
-        merge_upsert_lake(spark, path, bad, ["id"])
-    assert spark.read.parquet(path).count() == 1
 
 
 def test_snapshot_diff_core_classifies_changes(spark):
