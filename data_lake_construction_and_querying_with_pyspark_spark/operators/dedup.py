@@ -835,13 +835,6 @@ def dedup_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Pre-r4 import-compat alias: the scaled construction was introduced as
-# dedup_embedding_cosine_pairs_scaled (driver-green r3) before directive
-# r3#3 promoted it to the primary name. Alias only — NOT registered, so
-# it burns no driver window slot.
-dedup_embedding_cosine_pairs_scaled = dedup_embedding_cosine_pairs
-
-
 # --- near-dup cluster assignment (connected components) ------------------------
 
 
@@ -1429,9 +1422,8 @@ def span_scrub_documents(
     (doc_id, q) pairs (overlapping spans from different waves) need
     no re-distinct. The hash is engine-internal (wave membership
     never reaches the output), so the DuckDB oracle is untouched.
-    ``scratch_dir`` must be cluster-visible off local-mode and
-    outlive actions on the returned lazy frame (the
-    `canonical_corpus_embeddings_vectorized` caveats)."""
+    Waves stage through ``dedup_vectorized.stage_waves`` (its
+    ``scratch_dir`` caveats apply)."""
     toked = docs.select("doc_id", _toks().alias("toks"))
     n = F.size("toks")
     starts = F.when(n >= _SPAN_K, F.sequence(F.lit(1), n - (_SPAN_K - 1))).otherwise(
@@ -1475,27 +1467,18 @@ def span_scrub_documents(
     if span_batches <= 1:
         drops = drops_frame(pos_frame().repartition(reducers, "s"))
     else:
-        import tempfile
-
         from data_lake_construction_and_querying_with_pyspark_spark.operators.dedup_vectorized import (
-            best_effort_jvm_gc,
+            stage_waves,
         )
 
-        scratch = scratch_dir or tempfile.mkdtemp(prefix="spanscrub_waves_")
         par = spark.sparkContext.defaultParallelism
         wave_red = max(par, reducers // span_batches)
-        wave_paths = []
-        for wi in range(span_batches):
-            pos_w = pos_frame().filter(
-                F.pmod(F.xxhash64("s"), F.lit(span_batches)) == wi
-            )
-            path = f"{scratch}/drops_wave_{wi}"
-            drops_frame(pos_w.repartition(wave_red, "s")).write.mode(
-                "overwrite"
-            ).parquet(path)
-            wave_paths.append(path)
-            best_effort_jvm_gc(spark)
-        drops = spark.read.parquet(*wave_paths)
+        wave = F.pmod(F.xxhash64("s"), F.lit(span_batches))
+        waves = (
+            drops_frame(pos_frame().filter(wave == wi).repartition(wave_red, "s"))
+            for wi in range(span_batches)
+        )
+        drops = stage_waves(spark, waves, scratch_dir, "spanscrub")
     tok_pos = toked.select("doc_id", F.posexplode("toks").alias("i0", "w")).select(
         "doc_id", (F.col("i0") + 1).cast("int").alias("q"), "w"
     )

@@ -49,7 +49,7 @@ extension); geometry and thresholds follow the registered operator.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -86,6 +86,53 @@ def best_effort_jvm_gc(spark: SparkSession) -> None:
             jvm.System.gc()
     except Exception:
         pass
+
+
+def stage_waves(
+    spark: SparkSession,
+    waves: Iterator[DataFrame],
+    scratch_dir: str | None,
+    prefix: str,
+) -> DataFrame:
+    """The scratch-bounding wave loop shared by every ``table_batches``
+    / ``index_shards`` / ``span_batches`` knob: write each frame the
+    generator ``waves`` yields to its own parquet directory under
+    ``scratch_dir`` (default: a fresh ``mkdtemp`` named after
+    ``prefix``), nudge the JVM GC after each write so the finished
+    wave's shuffle files are released before the next wave plans, and
+    return the union of the staged waves read back.
+
+    Waves run eagerly, one at a time: the generator's code after a
+    ``yield`` (destroying the wave's broadcast, logging its wall time)
+    runs once that wave is staged. Peak shuffle scratch is one wave's,
+    not the whole pass's. The returned frame lazily READS the staged
+    parquet, so off local-mode ``scratch_dir`` must be a shared,
+    cluster-visible path (HDFS/S3/NFS) and it must outlive every action
+    on the returned frame; the default ``mkdtemp`` directory is
+    deliberately not auto-deleted for that reason (callers own cleanup
+    after their last action)."""
+    import tempfile
+
+    scratch = scratch_dir or tempfile.mkdtemp(prefix=f"{prefix}_waves_")
+    paths = []
+    for i, frame in enumerate(waves):
+        path = f"{scratch}/wave_{i}"
+        frame.write.mode("overwrite").parquet(path)
+        paths.append(path)
+        # The ContextCleaner frees a wave's shuffle files only when the
+        # dependency is GC'd driver-side; dead scratch next to the next
+        # wave's live files is the disk overrun the waves exist to avoid.
+        best_effort_jvm_gc(spark)
+    return spark.read.parquet(*paths)
+
+
+def table_waves(tables: Iterable[int], n: int) -> list[list[int]]:
+    """Round-robin split of the absolute LSH table indices into at most
+    ``n`` non-empty waves. Plane seeds are keyed by the absolute index,
+    so any split unions to the single-pass band rows."""
+    tables = list(tables)
+    return [tables[i::n] for i in range(min(n, len(tables)))]
+
 
 _PAIR_BLOCK_ROWS = 1024  # row-block for the per-bucket Gram walk (memory ∝ block·|bucket|)
 
@@ -286,55 +333,31 @@ def canonical_corpus_embeddings_vectorized(
     single-pass 8-table exchange at ~85 GB, past this box's ~77 GB
     scratch ceiling ("No space left on device" with 30 of 64 map
     tasks still queued; docs/SCALING.md). With ``table_batches=k``
-    the table set is processed in k waves — each wave's surviving
-    pairs (tiny: near-dup edges, not candidates) are staged to
-    ``scratch_dir`` parquet and the wave's shuffle files are released
-    before the next wave plans, so peak scratch divides by k while
+    the table set is split by :func:`table_waves` and each wave's
+    surviving pairs (tiny: near-dup edges, not candidates) are staged
+    under ``scratch_dir`` by :func:`stage_waves` (which holds the
+    ``scratch_dir`` caveats), so peak scratch divides by k while
     every bucket/cosine value stays BIT-IDENTICAL (plane seeds are
     keyed by absolute table index). The union may hold duplicate
     edges (a pair surviving in two waves' tables); components consume
     edge existence, so no re-max is needed. On a real cluster the
     same knob trades wall-clock for bounded per-node scratch — the
-    standard move when disk, not CPU, is the binding constraint.
-
-    ``scratch_dir`` caveats (the returned DataFrame lazily READS the
-    staged wave parquet): off local-mode it must be a shared,
-    cluster-visible path (HDFS/S3/NFS) — the local-``/tmp`` default
-    only works when driver and executors share a filesystem — and it
-    must outlive every action on the returned frame; the default
-    ``mkdtemp`` directory is deliberately not auto-deleted for that
-    reason (callers own cleanup after their last action)."""
+    standard move when disk, not CPU, is the binding constraint."""
     from data_lake_construction_and_querying_with_pyspark_spark.operators.dedup import (
         connected_components,
     )
 
-    if table_batches <= 1:
-        pairs = embedding_cosine_pairs_vectorized(
-            spark, emb, tau=tau, n_tables=n_tables, n_planes=n_planes, seed=seed
+    def pairs_for(tables):
+        return embedding_cosine_pairs_vectorized(
+            spark, emb, tau=tau, n_tables=n_tables, n_planes=n_planes,
+            seed=seed, tables=tables,
         ).select("vec_a", "vec_b")
-    else:
-        import tempfile
 
-        scratch = scratch_dir or tempfile.mkdtemp(prefix="canonvec_waves_")
-        all_tables = list(range(n_tables))
-        wave_paths = []
-        for ci in range(table_batches):
-            chunk = all_tables[ci::table_batches]
-            if not chunk:
-                continue
-            path = f"{scratch}/pairs_wave_{ci}"
-            embedding_cosine_pairs_vectorized(
-                spark, emb, tau=tau, n_tables=n_tables, n_planes=n_planes,
-                seed=seed, tables=chunk,
-            ).select("vec_a", "vec_b").write.mode("overwrite").parquet(path)
-            wave_paths.append(path)
-            # Release the finished wave's shuffle files NOW: the
-            # ContextCleaner frees them only when the dependency is
-            # GC'd driver-side, and 85 GB of dead scratch next to the
-            # next wave's live 43 GB is exactly the OOD this knob
-            # exists to avoid.
-            best_effort_jvm_gc(spark)
-        pairs = spark.read.parquet(*wave_paths)
+    if table_batches <= 1:
+        pairs = pairs_for(None)
+    else:
+        waves = (pairs_for(c) for c in table_waves(range(n_tables), table_batches))
+        pairs = stage_waves(spark, waves, scratch_dir, "canonvec")
     cc = connected_components(pairs, "vec_a", "vec_b")
     drop = cc.filter(F.col("vertex") != F.col("component")).select(
         F.col("vertex").alias("vec_id")

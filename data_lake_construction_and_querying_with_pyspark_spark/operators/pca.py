@@ -178,31 +178,6 @@ def gram_matrix_fast(emb: DataFrame) -> "list[list[float]]":
     return total.tolist()
 
 
-def pca_power_iteration(
-    spark: SparkSession, emb: DataFrame, iters: int = _PCA_ITERS, dim: int | None = None
-) -> DataFrame:
-    """Dominant principal direction of the embedding column by
-    ``iters`` fixed power-iteration steps over the exact-decimal Gram
-    matrix. Returns 64 rows ``(dim_idx, loading, eigenvalue_maxabs)``
-    — the max-|u|-normalized component and the final max|u| (the
-    eigenvalue estimate under that normalization).
-
-    Every matvec sum runs on the fixed-point grid (module docstring);
-    the 64-value vector materializes
-    to the driver between steps and re-enters as double literals;
-    normalization is one IEEE division per coordinate in Python (==
-    DuckDB's double division) — the full chain replays bit-for-bit in
-    the oracle."""
-    dim = dim if dim is not None else _infer_dim(emb)
-    g = gram_matrix_exact(emb).persist()
-    v, lam = _power_steps(g, dim, iters)
-    g.unpersist()
-    return spark.createDataFrame(
-        [(i + 1, v[i], lam) for i in range(dim)],
-        "dim_idx int, loading double, eigenvalue_maxabs double",
-    )
-
-
 def _power_steps(g: DataFrame, dim: int, iters: int) -> "tuple[list[float], float]":
     """``iters`` fixed-point power steps over Gram frame ``g`` from the
     all-ones start; returns (max-abs-normalized v, final max|u|)."""

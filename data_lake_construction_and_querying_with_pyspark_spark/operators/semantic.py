@@ -59,15 +59,16 @@ IVF_MIN_CELLS = 16  # floor of the derived IVF cell count
 IVF_ITERS = 2  # Lloyd's iterations for the coarse quantizer
 
 
-def derive_k(n: int) -> int:
-    """k ∝ n with a floor: ``max(K_CELLS, n // TARGET_CELL)``. Keeping
+def derive_k(n: int, k_floor: int = K_CELLS) -> int:
+    """k ∝ n with a floor: ``max(k_floor, n // TARGET_CELL)`` (the IVF
+    quantizers pass ``IVF_MIN_CELLS``). Keeping
     cell size bounded at ~TARGET_CELL is what holds the within-cluster
     pair stage at Σ|cell|² ≈ n·TARGET_CELL — linear in n — instead of
     the n²/k degradation a fixed k suffers at 100× data. The oracle
     computes the identical expression in SQL (``GREATEST``/``//`` are
     floor semantics in both engines for positive operands), so the
     registered query and its oracle always agree on k at any SF."""
-    return max(K_CELLS, n // TARGET_CELL)
+    return max(k_floor, n // TARGET_CELL)
 
 
 def coarse_m(k: int) -> int:
@@ -311,20 +312,13 @@ def kmeans_assign(base: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def _d2_col(v, cent) -> F.Column:
-    """The assignment d2 as a Column: same left-associative
-    ``(⟨v,v⟩ − 2⟨v,c⟩) + ⟨c,c⟩`` with sequential-fold dots that
-    ``_d2_sql`` replays — bit-identical cross-engine."""
-    return dot(v, v) - F.lit(2) * dot(v, cent) + dot(cent, cent)
-
-
 def _d2_pre(vsq, v, cent, csq) -> F.Column:
-    """``_d2_col`` with both squared norms precomputed: the identical
-    left-associative ``(vsq − 2⟨v,c⟩) + csq`` where ``vsq``/``csq`` are
-    columns holding exactly the values the inline folds would produce —
-    one fold per evaluation instead of three, same bits (a reused
-    column value is the fold's value; IEEE ops on identical operands in
-    the identical order round identically)."""
+    """``similarity.sq_dist`` with both squared norms precomputed: the
+    identical left-associative ``(vsq − 2⟨v,c⟩) + csq`` where
+    ``vsq``/``csq`` are columns holding exactly the values the inline
+    folds would produce — one fold per evaluation instead of three,
+    same bits (a reused column value is the fold's value; IEEE ops on
+    identical operands in the identical order round identically)."""
     return vsq - F.lit(2) * dot(v, cent) + csq
 
 
@@ -667,19 +661,12 @@ def semantic_dedup(
     base = _with_vsq(
         emb.select("vec_id", as_double_vec(F.col("embedding")).alias("v"))
     ).persist()
-    centroids = _seed_centroids(spark, base, k)
-    m = coarse_m(k)
-    assigned = None
-    for t in range(1, iters + 1):
-        assigned = (
-            kmeans_assign(base, centroids)
-            if flat_assign
-            else shortlist_assign(base, centroids, m, nprobe)
-        )
-        if t < iters:
-            centroids = _materialize_centroids(
-                spark, kmeans_update(assigned, dim=_centroid_dim(centroids))
-            )
+    assign = (
+        (lambda frame, centroids, m, step: kmeans_assign(frame, centroids))
+        if flat_assign
+        else shortlist_scorer(nprobe)
+    )
+    _, assigned = lloyds(spark, base, k, iters, assign)
     return mark_within_cell_dups(assigned, tau)
 
 
@@ -770,6 +757,50 @@ def _seed_centroids(spark: SparkSession, base: DataFrame, k: int) -> DataFrame:
     return _materialize_centroids(spark, centroids)
 
 
+def lloyds(
+    spark: SparkSession,
+    base: DataFrame,
+    k: int,
+    iters: int,
+    assign,
+    train: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The one deterministic Lloyd's trainer behind every k-means in
+    the embedding operators: seed with :func:`_seed_centroids` (the k
+    lowest vec_ids of ``base``), run ``iters − 1`` rounds of assign
+    ``train`` (default ``base``) → decimal-exact :func:`kmeans_update`
+    → :func:`_materialize_centroids`, then assign ``base`` once with the
+    trained table. Returns ``(centroids, assigned)``, where
+    ``centroids`` is the table that produced the final assignment
+    (IVF probes must score against the cells the corpus was put in).
+
+    ``assign(frame, centroids, m, step)`` is the scorer — the fold
+    shortlist (:func:`shortlist_scorer`), flat :func:`kmeans_assign`,
+    or a vectorized twin; ``m = coarse_m(k)`` and ``step`` counts
+    0 … iters − 1 (the final full assignment is ``iters − 1``). With
+    ``train`` = ``base`` this is exactly "assign, and update while
+    t < iters" — the sequence the DuckDB replays
+    (``_shortlist_lloyds_ctes``) step through."""
+    train = base if train is None else train
+    centroids = _seed_centroids(spark, base, k)
+    m = coarse_m(k)
+    for step in range(iters - 1):
+        assigned = assign(train, centroids, m, step)
+        centroids = _materialize_centroids(
+            spark, kmeans_update(assigned, dim=_centroid_dim(centroids))
+        )
+    return centroids, assign(base, centroids, m, iters - 1)
+
+
+def shortlist_scorer(nprobe: int = SEM_NPROBE, broadcast_buckets: bool = True):
+    """:func:`shortlist_assign` as a :func:`lloyds` scorer."""
+
+    def assign(frame, centroids, m, step):
+        return shortlist_assign(frame, centroids, m, nprobe, broadcast_buckets)
+
+    return assign
+
+
 def training_sample(
     base: DataFrame, n: int, k: int, sample_per_cell: int = SAMPLE_PER_CELL
 ) -> DataFrame:
@@ -855,17 +886,8 @@ def semantic_dedup_sampled(
     sample = training_sample(base, n, k, sample_per_cell)
     if sample is not base:
         sample = sample.persist()
-    centroids = _seed_centroids(spark, base, k)
-    m = coarse_m(k)
-    for _ in range(iters - 1):
-        assigned_s = shortlist_assign(
-            sample, centroids, m, nprobe, broadcast_buckets=broadcast_buckets
-        )
-        centroids = _materialize_centroids(
-            spark, kmeans_update(assigned_s, dim=_centroid_dim(centroids))
-        )
-    final = shortlist_assign(
-        base, centroids, m, nprobe, broadcast_buckets=broadcast_buckets
+    _, final = lloyds(
+        spark, base, k, iters, shortlist_scorer(nprobe, broadcast_buckets), train=sample
     )
     return mark_within_cell_dups(final, tau)
 
@@ -934,26 +956,15 @@ def knn_ivf_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe partitions (partition pruning does the cell restriction for
     free)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    k = max(IVF_MIN_CELLS, emb.count() // TARGET_CELL)
+    k = derive_k(emb.count(), IVF_MIN_CELLS)
     base = _with_vsq(
         emb.select("vec_id", as_double_vec(F.col("embedding")).alias("v"))
     ).persist()
-    # Quantizer build uses the SAME coarse-anchor shortlist as
-    # semantic_dedup (r4: the build was the last flat O(n·k·d) Lloyd's
-    # in the repo); seed centroids via the shared _seed_centroids. The
-    # QUERY path below stays flat — 5 queries × k centroids is trivial
-    # at any k.
-    centroids = _seed_centroids(spark, base, k)
-    m = coarse_m(k)
-    assigned = None
-    for t in range(1, IVF_ITERS + 1):
-        assigned = shortlist_assign(base, centroids, m, SEM_NPROBE)
-        if t < IVF_ITERS:
-            centroids = _materialize_centroids(
-                spark, kmeans_update(assigned, dim=_centroid_dim(centroids))
-            )
-    # `centroids` is now the table that produced the final assignment
-    # (c_{iters-1}) — probing must use the same one the cells came from.
+    # Quantizer build uses the SAME coarse-anchor shortlist Lloyd's as
+    # semantic_dedup. The QUERY path below stays flat — 5 queries × k
+    # centroids is trivial at any k — and probes the centroid table
+    # that produced the final assignment.
+    centroids, assigned = lloyds(spark, base, k, IVF_ITERS, shortlist_scorer())
     # norm = sqrt(vsq): the assignment carried the squared norm through,
     # so no per-vector re-fold here (bit-identical — see _with_vsq).
     nm = assigned.withColumn("norm", F.sqrt(F.col("vsq"))).persist()

@@ -74,12 +74,8 @@ from data_lake_construction_and_querying_with_pyspark_spark.operators.semantic i
     SAMPLE_PER_CELL,
     SEM_NPROBE,
     TAU,
-    _centroid_dim,
-    _materialize_centroids,
-    _seed_centroids,
-    coarse_m,
     derive_k,
-    kmeans_update,
+    lloyds,
     training_sample,
 )
 from data_lake_construction_and_querying_with_pyspark_spark.operators.similarity import as_double_vec
@@ -187,12 +183,13 @@ def shortlist_assign_vectorized(
     at 100M's k=1.56M, ~5 GB at a 1B rung — and every Python worker
     deserializes its own copy of ``bc.value``, so the per-node cost is
     copies × index size. With ``index_shards=s`` the ANCHOR range is
-    split into s contiguous slices and processed in s waves: each wave
-    broadcasts only its slice's centroid blocks (~size/s) plus the
-    always-tiny anchor matrix (m×d, m = isqrt(k)), scores only the
-    probed anchors that fall in the slice, stages the skinny partial
-    (vec_id, d2, cell) to ``scratch_dir`` parquet, and destroys the
-    broadcast before the next wave plans. The cross-wave reduce is
+    split into s contiguous slices and processed in s waves
+    (``dedup_vectorized.stage_waves``): each wave broadcasts only its
+    slice's centroid blocks (~size/s) plus the always-tiny anchor
+    matrix (m×d, m = isqrt(k)), scores only the probed anchors that
+    fall in the slice, stages the skinny partial (vec_id, d2, cell)
+    under ``scratch_dir``, and destroys the broadcast before the next
+    wave plans. The cross-wave reduce is
     ``min(struct(d2, cell))`` — the kernel's exact (d2, cell)
     lexicographic tie-break, associative, so the winner is identical
     to the one-piece scan — and winners rejoin ``base`` on vec_id (one
@@ -201,9 +198,7 @@ def shortlist_assign_vectorized(
     per-(batch, anchor) GEMM has the same row set and the same
     contiguous block either way (probes depend only on the full anchor
     matrix, which every wave carries), and tests pin sharded == whole
-    exactly. ``scratch_dir`` must be cluster-visible off local-mode
-    and outlive actions on the returned lazy frame (wave-knob caveats,
-    ``dedup_vectorized.canonical_corpus_embeddings_vectorized``).
+    exactly. ``scratch_dir`` caveats: ``stage_waves``.
 
     Sizing rule (measured, 40M same-session A/B in docs/SCALING.md):
     every wave is a full corpus pass through the Arrow decode — the
@@ -374,15 +369,12 @@ def _shortlist_assign_sharded(
     memory divides by the shard count while the cross-wave
     ``min(struct(d2, cell))`` reduce reproduces the kernel's exact
     tie-break."""
-    import tempfile
-
     from data_lake_construction_and_querying_with_pyspark_spark.operators.dedup_vectorized import (
-        best_effort_jvm_gc,
+        stage_waves,
     )
 
     idx = _centroid_index(centroids, m)
     nprobe_eff = min(nprobe, len(idx["a2"]))
-    scratch = scratch_dir or tempfile.mkdtemp(prefix="semshard_waves_")
     offs = idx["offs"]
     partial_schema = StructType(
         [
@@ -391,50 +383,49 @@ def _shortlist_assign_sharded(
             StructField("cell", IntegerType(), True),
         ]
     )
-    wave_paths = []
-    for si, (alo, ahi) in enumerate(anchor_shard_bounds(offs, index_shards)):
-        blo, bhi = int(offs[alo]), int(offs[ahi])
-        sub = {
-            "A": idx["A"],
-            "a2": idx["a2"],
-            "alo": alo,
-            "ahi": ahi,
-            "Cb": np.ascontiguousarray(idx["Cb"][blo:bhi]),
-            "cellsb": idx["cellsb"][blo:bhi],
-            "c2b": idx["c2b"][blo:bhi],
-            "offs": offs[alo : ahi + 1] - blo,
-        }
-        bc = spark.sparkContext.broadcast(sub)
 
-        def partial(batches, _bc=bc):
-            st = _bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                V = np.array(pdf["v"].tolist(), dtype=np.float64)
-                hit, d2, cell = shortlist_assign_partial_kernel(V, st, nprobe_eff)
-                if not hit.any():
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"].values[hit],
-                        "d2": d2[hit],
-                        "cell": cell[hit].astype(np.int32),
-                    }
-                )
+    def waves():
+        for alo, ahi in anchor_shard_bounds(offs, index_shards):
+            blo, bhi = int(offs[alo]), int(offs[ahi])
+            sub = {
+                "A": idx["A"],
+                "a2": idx["a2"],
+                "alo": alo,
+                "ahi": ahi,
+                "Cb": np.ascontiguousarray(idx["Cb"][blo:bhi]),
+                "cellsb": idx["cellsb"][blo:bhi],
+                "c2b": idx["c2b"][blo:bhi],
+                "offs": offs[alo : ahi + 1] - blo,
+            }
+            bc = spark.sparkContext.broadcast(sub)
 
-        path = f"{scratch}/assign_wave_{si}"
-        base.mapInPandas(partial, partial_schema).write.mode("overwrite").parquet(path)
-        wave_paths.append(path)
-        # The staged parquet is the wave's only output: drop the
-        # broadcast NOW so the next wave's slice is the only live copy.
-        try:
-            bc.destroy()
-        except Exception:
-            bc.unpersist()
-        best_effort_jvm_gc(spark)
+            def partial(batches, _bc=bc):
+                st = _bc.value
+                for pdf in batches:
+                    if pdf.empty:
+                        continue
+                    V = np.array(pdf["v"].tolist(), dtype=np.float64)
+                    hit, d2, cell = shortlist_assign_partial_kernel(V, st, nprobe_eff)
+                    if not hit.any():
+                        continue
+                    yield pd.DataFrame(
+                        {
+                            "vec_id": pdf["vec_id"].values[hit],
+                            "d2": d2[hit],
+                            "cell": cell[hit].astype(np.int32),
+                        }
+                    )
+
+            yield base.mapInPandas(partial, partial_schema)
+            # The staged parquet is the wave's only output: drop the
+            # broadcast NOW so the next wave's slice is the only live copy.
+            try:
+                bc.destroy()
+            except Exception:
+                bc.unpersist()
+
     best = (
-        spark.read.parquet(*wave_paths)
+        stage_waves(spark, waves(), scratch_dir, "semshard")
         .groupBy("vec_id")
         .agg(F.min(F.struct("d2", "cell")).alias("b"))
         .select("vec_id", F.col("b.cell").alias("cell"))
@@ -524,29 +515,24 @@ def semantic_dedup_sampled_vectorized(
     centroid index (``shortlist_assign_vectorized`` docstring) —
     value-identical, bounds per-worker index memory by 1/s for the
     40M→1B trajectory where the one-piece broadcast (~800 MB at 100M,
-    ~5 GB at 1B) is the last single-structure ceiling. Waves stage
-    under ``scratch_dir`` (cluster-visible off local-mode)."""
+    ~5 GB at 1B) is the last single-structure ceiling. Each Lloyd's
+    step stages its waves under ``scratch_dir/iter_<step>``
+    (cluster-visible off local-mode); the trainer is
+    ``semantic.lloyds``."""
     base = emb.select("vec_id", as_double_vec(F.col("embedding")).alias("v"))
     n = base.count()
     sample = training_sample(base, n, k, sample_per_cell)
     if sample is not base:
         sample = sample.persist()
-    centroids = _seed_centroids(spark, base, k)
-    m = coarse_m(k)
-    for it in range(iters - 1):
-        assigned_s = shortlist_assign_vectorized(
-            spark, sample, centroids, m, nprobe,
+
+    def assign(frame, centroids, m, step):
+        return shortlist_assign_vectorized(
+            spark, frame, centroids, m, nprobe,
             index_shards=index_shards,
-            scratch_dir=None if scratch_dir is None else f"{scratch_dir}/iter_{it}",
+            scratch_dir=None if scratch_dir is None else f"{scratch_dir}/iter_{step}",
         )
-        centroids = _materialize_centroids(
-            spark, kmeans_update(assigned_s, dim=_centroid_dim(centroids))
-        )
-    final = shortlist_assign_vectorized(
-        spark, base, centroids, m, nprobe,
-        index_shards=index_shards,
-        scratch_dir=None if scratch_dir is None else f"{scratch_dir}/final",
-    )
+
+    _, final = lloyds(spark, base, k, iters, assign, train=sample)
     return mark_within_cell_dups_vectorized(final, tau)
 
 

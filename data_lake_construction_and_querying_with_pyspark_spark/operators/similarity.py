@@ -35,6 +35,13 @@ def dot(a, b) -> F.Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
+def sq_dist(a, b) -> F.Column:
+    """Squared euclidean distance as three sequential-fold dots, the
+    left-associative ``(⟨a,a⟩ − 2⟨a,b⟩) + ⟨b,b⟩`` that the DuckDB
+    replays (``semantic._d2_sql``, ``_pq_d2``) evaluate bit-identically."""
+    return dot(a, a) - F.lit(2) * dot(a, b) + dot(b, b)
+
+
 def with_norm(embeddings: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Project (vec_id, v: double[], norm) — norms computed once, not
     per candidate pair."""
@@ -302,7 +309,7 @@ def knn_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     by it; each query reads 2 partitions. Rows-only check (k-means is
     engine-specific); tests assert recall vs brute force."""
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from pyspark.ml.functions import array_to_vector
 
     k = 16
     e = with_norm(load_table(spark, sf_dir, "embeddings")).withColumn(
@@ -607,14 +614,18 @@ PQ_ITERS = 2  # Lloyd's iterations per codebook
 PQ_SAMPLE_PER_CENTROID = 16  # codebooks train on ~PQ_KSTAR·this vectors
 
 
-def _pq_subvectors(base: DataFrame) -> DataFrame:
-    """Long form (vec_id, j, sub): the m disjoint 8-dim slices of each
-    vector — one posexplode over a literal-array of slices, pure
-    projection."""
-    slices = F.array(
-        *[F.slice("v", j * PQ_SUBDIM + 1, PQ_SUBDIM) for j in range(PQ_M)]
+def _pq_slices(col: str) -> F.Column:
+    """(j, slice) rows: the m disjoint 8-dim subspace slices of the
+    vector column ``col`` — one posexplode over a literal array of
+    slices, pure projection. Alias the pair at the call site."""
+    return F.posexplode(
+        F.array(*[F.slice(col, j * PQ_SUBDIM + 1, PQ_SUBDIM) for j in range(PQ_M)])
     )
-    return base.select("vec_id", F.posexplode(slices).alias("j", "sub"))
+
+
+def _pq_subvectors(base: DataFrame) -> DataFrame:
+    """Long form (vec_id, j, sub) of every vector's subspace slices."""
+    return base.select("vec_id", _pq_slices("v").alias("j", "sub"))
 
 
 def _pq_literal_codebooks(spark: SparkSession, rows) -> DataFrame:
@@ -628,9 +639,7 @@ def _pq_assign(subs: DataFrame, codebooks: DataFrame) -> DataFrame:
     """Nearest codebook centroid per (vec_id, subspace): broadcast the
     m·k* codebook table, fold d2 over 8 dims, map-side min_by collapse
     — only n·m skinny rows reach the exchange."""
-    d2 = (
-        dot("sub", "sub") - F.lit(2) * dot("sub", "cent") + dot("cent", "cent")
-    ).alias("d2")
+    d2 = sq_dist("sub", "cent").alias("d2")
     best = F.min_by(F.col("cell"), F.struct("d2", "cell")).alias("code")
     return (
         subs.join(F.broadcast(codebooks), "j")
@@ -734,15 +743,8 @@ def pq_topk(
     queries = base.filter(F.col("vec_id").isin(list(query_ids))).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    qsubs = queries.select(
-        "query_id",
-        F.posexplode(
-            F.array(*[F.slice("qv", j * PQ_SUBDIM + 1, PQ_SUBDIM) for j in range(PQ_M)])
-        ).alias("j", "qsub"),
-    )
-    qd2 = (
-        dot("qsub", "qsub") - F.lit(2) * dot("qsub", "cent") + dot("cent", "cent")
-    ).alias("pd2")
+    qsubs = queries.select("query_id", _pq_slices("qv").alias("j", "qsub"))
+    qd2 = sq_dist("qsub", "cent").alias("pd2")
     qdist = qsubs.join(F.broadcast(codebooks), "j").select("query_id", "j", "cell", qd2)
 
     adc = (
@@ -758,13 +760,23 @@ def pq_topk(
         .agg(F.sum(F.col("pd2").cast("decimal(38,12)")).cast("double").alias("adc_d2"))
         .filter(F.col("query_id") != F.col("vec_id"))
     )
+    return _adc_top_k(adc, base, top_k)
+
+
+def _adc_top_k(adc: DataFrame, base: DataFrame, top_k: int) -> DataFrame:
+    """The tail every PQ scorer ends in: rank each query's
+    ``(query_id, vec_id, adc_d2)`` rows by (adc_d2, vec_id), keep
+    ``top_k``, and attach the EXACT cosine from ``base``'s raw vectors
+    (top_k·|queries| rows — trivial), so emitted cosines are true
+    values ranked by the approximate distance. Output (query_id,
+    neighbor_id, cosine, adc_d2, rn); ``_PQ_RERANK`` is its SQL
+    replay."""
     w = Window.partitionBy("query_id").orderBy(F.asc("adc_d2"), F.asc("vec_id"))
     top = (
         adc.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= top_k)
         .select("query_id", F.col("vec_id").alias("neighbor_id"), "adc_d2", "rn")
     )
-    # exact rerank values on the tiny top-k set
     nm = base.select("vec_id", "v", F.sqrt(dot("v", "v")).alias("norm"))
     qn = nm.select(
         F.col("vec_id").alias("query_id"),
@@ -941,32 +953,16 @@ def ivf_pq_topk(
     ``pq_train_codebooks``'s md5-threshold-sampled per-subspace
     k-means."""
     from data_lake_construction_and_querying_with_pyspark_spark.operators.semantic import (
-        TARGET_CELL,
-        _centroid_dim,
-        _materialize_centroids,
-        _seed_centroids,
-        coarse_m,
-        kmeans_update,
-        shortlist_assign,
-    )
-    from data_lake_construction_and_querying_with_pyspark_spark.operators.semantic import (
         IVF_ITERS,
         IVF_MIN_CELLS,
-        SEM_NPROBE,
+        derive_k,
+        lloyds,
+        shortlist_scorer,
     )
 
     base = emb.select("vec_id", as_double_vec(F.col("embedding")).alias("v")).persist()
-    n = base.count()
-    k_cells = max(IVF_MIN_CELLS, n // TARGET_CELL)
-    centroids = _seed_centroids(spark, base, k_cells)
-    m = coarse_m(k_cells)
-    assigned = None
-    for t in range(1, IVF_ITERS + 1):
-        assigned = shortlist_assign(base, centroids, m, SEM_NPROBE)
-        if t < IVF_ITERS:
-            centroids = _materialize_centroids(
-                spark, kmeans_update(assigned, dim=_centroid_dim(centroids))
-            )
+    k_cells = derive_k(base.count(), IVF_MIN_CELLS)
+    centroids, assigned = lloyds(spark, base, k_cells, IVF_ITERS, shortlist_scorer())
     cells = assigned.select("vec_id", "cell")
 
     codebooks = pq_train_codebooks(spark, base)
@@ -975,9 +971,7 @@ def ivf_pq_topk(
     queries = base.filter(F.col("vec_id").isin(list(query_ids))).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    cd2 = (
-        dot("qv", "qv") - F.lit(2) * dot("qv", "cent") + dot("cent", "cent")
-    ).alias("cd2")
+    cd2 = sq_dist("qv", "cent").alias("cd2")
     wq = Window.partitionBy("query_id").orderBy(F.asc("cd2"), F.asc("cell"))
     probes = (
         queries.crossJoin(F.broadcast(centroids))
@@ -986,15 +980,8 @@ def ivf_pq_topk(
         .filter(F.col("crn") <= nprobe)
         .select("query_id", "cell")
     )
-    qsubs = queries.select(
-        "query_id",
-        F.posexplode(
-            F.array(*[F.slice("qv", j * PQ_SUBDIM + 1, PQ_SUBDIM) for j in range(PQ_M)])
-        ).alias("j", "qsub"),
-    )
-    pd2 = (
-        dot("qsub", "qsub") - F.lit(2) * dot("qsub", "cent") + dot("cent", "cent")
-    ).alias("pd2")
+    qsubs = queries.select("query_id", _pq_slices("qv").alias("j", "qsub"))
+    pd2 = sq_dist("qsub", "cent").alias("pd2")
     qdist = qsubs.join(F.broadcast(codebooks), "j").select("query_id", "j", "cell", pd2)
 
     # restrict to probed inverted lists, THEN ADC-score the survivors
@@ -1012,25 +999,7 @@ def ivf_pq_topk(
         .agg(F.sum(F.col("pd2").cast("decimal(38,12)")).cast("double").alias("adc_d2"))
         .filter(F.col("query_id") != F.col("vec_id"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_d2"), F.asc("vec_id"))
-    top = (
-        adc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "adc_d2", "rn")
-    )
-    nm = base.select("vec_id", "v", F.sqrt(dot("v", "v")).alias("norm"))
-    qn = nm.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-    )
-    cosine = dot("qv", "v") / (F.col("qnorm") * F.col("norm"))
-    return (
-        F.broadcast(top)
-        .join(nm, top["neighbor_id"] == nm["vec_id"])
-        .join(F.broadcast(qn), "query_id")
-        .select("query_id", "neighbor_id", cosine.alias("cosine"), "adc_d2", "rn")
-    )
+    return _adc_top_k(adc, base, top_k)
 
 
 def ivf_pq_residual_topk(
@@ -1061,28 +1030,14 @@ def ivf_pq_residual_topk(
     from data_lake_construction_and_querying_with_pyspark_spark.operators.semantic import (
         IVF_ITERS,
         IVF_MIN_CELLS,
-        SEM_NPROBE,
-        TARGET_CELL,
-        _centroid_dim,
-        _materialize_centroids,
-        _seed_centroids,
-        coarse_m,
-        kmeans_update,
-        shortlist_assign,
+        derive_k,
+        lloyds,
+        shortlist_scorer,
     )
 
     base = emb.select("vec_id", as_double_vec(F.col("embedding")).alias("v")).persist()
-    n = base.count()
-    k_cells = max(IVF_MIN_CELLS, n // TARGET_CELL)
-    centroids = _seed_centroids(spark, base, k_cells)
-    m = coarse_m(k_cells)
-    assigned = None
-    for t in range(1, IVF_ITERS + 1):
-        assigned = shortlist_assign(base, centroids, m, SEM_NPROBE)
-        if t < IVF_ITERS:
-            centroids = _materialize_centroids(
-                spark, kmeans_update(assigned, dim=_centroid_dim(centroids))
-            )
+    k_cells = derive_k(base.count(), IVF_MIN_CELLS)
+    centroids, assigned = lloyds(spark, base, k_cells, IVF_ITERS, shortlist_scorer())
     cells = assigned.select("vec_id", "cell")
 
     # residuals: one broadcast join + zip_with projection on the scan
@@ -1101,9 +1056,7 @@ def ivf_pq_residual_topk(
     queries = base.filter(F.col("vec_id").isin(list(query_ids))).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    cd2 = (
-        dot("qv", "qv") - F.lit(2) * dot("qv", "cent") + dot("cent", "cent")
-    ).alias("cd2")
+    cd2 = sq_dist("qv", "cent").alias("cd2")
     wq = Window.partitionBy("query_id").orderBy(F.asc("cd2"), F.asc("cell"))
     probes = (
         queries.crossJoin(F.broadcast(centroids))
@@ -1120,16 +1073,8 @@ def ivf_pq_residual_topk(
         "cell",
         F.zip_with("qv", "cent", lambda x, c: x - c).alias("qr"),
     )
-    qsubs = qres.select(
-        "query_id",
-        "cell",
-        F.posexplode(
-            F.array(*[F.slice("qr", j * PQ_SUBDIM + 1, PQ_SUBDIM) for j in range(PQ_M)])
-        ).alias("j", "qsub"),
-    )
-    pd2 = (
-        dot("qsub", "qsub") - F.lit(2) * dot("qsub", "cent") + dot("cent", "cent")
-    ).alias("pd2")
+    qsubs = qres.select("query_id", "cell", _pq_slices("qr").alias("j", "qsub"))
+    pd2 = sq_dist("qsub", "cent").alias("pd2")
     qdist = (
         qsubs.join(F.broadcast(codebooks.withColumnRenamed("cell", "code")), "j")
         .select("query_id", F.col("cell").alias("pcell"), "j", "code", pd2)
@@ -1147,25 +1092,7 @@ def ivf_pq_residual_topk(
         .agg(F.sum(F.col("pd2").cast("decimal(38,12)")).cast("double").alias("adc_d2"))
         .filter(F.col("query_id") != F.col("vec_id"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_d2"), F.asc("vec_id"))
-    top = (
-        adc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "adc_d2", "rn")
-    )
-    nm = base.select("vec_id", "v", F.sqrt(dot("v", "v")).alias("norm"))
-    qn = nm.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-    )
-    cosine = dot("qv", "v") / (F.col("qnorm") * F.col("norm"))
-    return (
-        F.broadcast(top)
-        .join(nm, top["neighbor_id"] == nm["vec_id"])
-        .join(F.broadcast(qn), "query_id")
-        .select("query_id", "neighbor_id", cosine.alias("cosine"), "adc_d2", "rn")
-    )
+    return _adc_top_k(adc, base, top_k)
 
 
 def _oracle_ivf_pq() -> str:
@@ -1402,14 +1329,9 @@ def hard_negative_triplets_ivf(
     from data_lake_construction_and_querying_with_pyspark_spark.operators.semantic import (
         IVF_ITERS,
         IVF_MIN_CELLS,
-        SEM_NPROBE,
-        TARGET_CELL,
-        _centroid_dim,
-        _materialize_centroids,
-        _seed_centroids,
-        coarse_m,
-        kmeans_update,
-        shortlist_assign,
+        derive_k,
+        lloyds,
+        shortlist_scorer,
         training_sample,
     )
 
@@ -1418,23 +1340,19 @@ def hard_negative_triplets_ivf(
 
     base = e.select("vec_id", "v")
     n = base.count()
-    k_cells = max(IVF_MIN_CELLS, n // TARGET_CELL)
+    k_cells = derive_k(n, IVF_MIN_CELLS)
     if train_on_sample is None:
         train_on_sample = n >= _IVF_SAMPLE_TRAIN_MIN
     train = training_sample(base, n, k_cells) if train_on_sample else base
     if train is not base:
         train = train.persist(StorageLevel.MEMORY_AND_DISK)
-    centroids = _seed_centroids(spark, base, k_cells)
-    m = coarse_m(k_cells)
-    for _ in range(IVF_ITERS - 1):
-        assigned_t = shortlist_assign(
-            train, centroids, m, SEM_NPROBE, broadcast_buckets=broadcast_buckets
-        )
-        centroids = _materialize_centroids(
-            spark, kmeans_update(assigned_t, dim=_centroid_dim(centroids))
-        )
-    assigned = shortlist_assign(
-        base, centroids, m, SEM_NPROBE, broadcast_buckets=broadcast_buckets
+    _, assigned = lloyds(
+        spark,
+        base,
+        k_cells,
+        IVF_ITERS,
+        shortlist_scorer(broadcast_buckets=broadcast_buckets),
+        train=train,
     )
     cells = assigned.select("vec_id", "cell")
 

@@ -19,7 +19,7 @@ replaces every fold scorer:
 * positives: the per-bucket GEMM pair scan
   (``dedup_vectorized.embedding_cosine_pairs_vectorized`` — identical
   pair semantics to ``similarity._positive_pairs``);
-* quantizer training + full assignment:
+* quantizer training + full assignment: ``semantic.lloyds`` scored by
   ``semantic_vectorized.shortlist_assign_vectorized`` (broadcast
   centroid index, in-place assignment, zero shuffle — the salted-join
   skew surface is gone, not salted);
@@ -38,6 +38,8 @@ the fold miner keep their oracles.
 
 from __future__ import annotations
 
+import time
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -45,20 +47,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from data_lake_construction_and_querying_with_pyspark_spark.operators.dedup_vectorized import (
-    best_effort_jvm_gc,
     embedding_cosine_pairs_vectorized,
     lsh_buckets_vectorized,
+    stage_waves,
+    table_waves,
 )
 from data_lake_construction_and_querying_with_pyspark_spark.operators.semantic import (
     IVF_ITERS,
     IVF_MIN_CELLS,
     SEM_NPROBE,
-    TARGET_CELL,
-    _centroid_dim,
-    _materialize_centroids,
-    _seed_centroids,
-    coarse_m,
-    kmeans_update,
+    derive_k,
+    lloyds,
     training_sample,
 )
 from data_lake_construction_and_querying_with_pyspark_spark.operators.semantic_vectorized import (
@@ -205,9 +204,8 @@ def knn_graph_edges_vectorized(
     ≤ n·tables_in_wave·k), and the union of per-bucket locals over a
     partition of the table set IS the single-pass local set, so the
     downstream max-dedup + window produce identical edges.
-    ``scratch_dir`` must be cluster-visible off local-mode and must
-    outlive every action on the returned (lazy) frame — full caveats
-    on ``canonical_corpus_embeddings_vectorized``.
+    Waves stage through ``dedup_vectorized.stage_waves`` (its
+    ``scratch_dir`` caveats apply).
 
     ``tables`` restricts the pass to an explicit subset of absolute
     table indices (plane seeds stay keyed by the absolute index, same
@@ -215,8 +213,8 @@ def knn_graph_edges_vectorized(
     80M geometry A/B's paired-wave probe uses; partial-table output is
     a partial graph, so production callers leave it None.
     ``log_wave_wall`` (callable, dict -> None) receives one breadcrumb
-    per staged wave — {"wave", "tables", "seconds", "path"} — measured
-    around the wave's eager parquet write; rung scripts stream these to
+    per staged wave — {"wave", "tables", "seconds"} — measured around
+    the wave's eager parquet write and GC nudge; rung scripts stream these to
     the results file so a wall-clock overrun preserves every finished
     wave (the waves run at call time; only the merge is lazy).
 
@@ -244,41 +242,25 @@ def knn_graph_edges_vectorized(
         s, d, c = local_topk_kernel(ids, N, k)
         return pd.DataFrame({"vec_id": s, "nbr_id": d, "cosine": c})
 
-    if table_batches <= 1:
-        flat = lsh_buckets_vectorized(
+    def local_for(tables):
+        return lsh_buckets_vectorized(
             spark, base, n_tables, n_planes, seed, tables=tables
-        )
-        local = flat.groupBy("tbl", "bucket").applyInPandas(per_bucket, out_schema)
-    else:
-        import tempfile
-        import time
+        ).groupBy("tbl", "bucket").applyInPandas(per_bucket, out_schema)
 
-        scratch = scratch_dir or tempfile.mkdtemp(prefix="knngraphvec_waves_")
-        all_tables = list(tables) if tables is not None else list(range(n_tables))
-        wave_paths = []
-        for ci in range(table_batches):
-            chunk = all_tables[ci::table_batches]
-            if not chunk:
-                continue
-            path = f"{scratch}/local_wave_{ci}"
+    def waves():
+        all_tables = tables if tables is not None else range(n_tables)
+        for wi, chunk in enumerate(table_waves(all_tables, table_batches)):
             t0 = time.time()
-            lsh_buckets_vectorized(
-                spark, base, n_tables, n_planes, seed, tables=chunk
-            ).groupBy("tbl", "bucket").applyInPandas(
-                per_bucket, out_schema
-            ).write.mode("overwrite").parquet(path)
-            wave_paths.append(path)
+            yield local_for(chunk)
             if log_wave_wall is not None:
                 log_wave_wall(
-                    {
-                        "wave": ci,
-                        "tables": chunk,
-                        "seconds": round(time.time() - t0, 2),
-                        "path": path,
-                    }
+                    {"wave": wi, "tables": chunk, "seconds": round(time.time() - t0, 2)}
                 )
-            best_effort_jvm_gc(spark)  # release the wave's shuffle files
-        local = spark.read.parquet(*wave_paths)
+
+    if table_batches <= 1:
+        local = local_for(tables)
+    else:
+        local = stage_waves(spark, waves(), scratch_dir, "knngraphvec")
     merged = local.groupBy("vec_id", "nbr_id").agg(F.max("cosine").alias("cosine"))
     w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("nbr_id"))
     return merged.withColumn("edge_rank", F.row_number().over(w).cast("int")).filter(
@@ -347,32 +329,21 @@ def hard_negative_triplets_ivf_vectorized(
     re-aggregated with max(cosine) per pair — per-wave maxes are
     bit-identical per (pair, table), and max over waves of per-wave
     maxes is the single-pass max, so the output is value-identical.
-    ``scratch_dir`` must be cluster-visible off local-mode and must
-    outlive every action on the returned (lazy) frame — full caveats
-    on ``canonical_corpus_embeddings_vectorized``."""
-    if table_batches <= 1:
-        pos = embedding_cosine_pairs_vectorized(
-            spark, emb, tau=tau, n_tables=n_tables, n_planes=n_planes
-        )
-    else:
-        import tempfile
+    Waves stage through ``dedup_vectorized.stage_waves`` (its
+    ``scratch_dir`` caveats apply); the quantizer is
+    ``semantic.lloyds`` with the vectorized shortlist as its scorer."""
 
-        scratch = scratch_dir or tempfile.mkdtemp(prefix="ivfnegvec_waves_")
-        all_tables = list(range(n_tables))
-        wave_paths = []
-        for ci in range(table_batches):
-            chunk = all_tables[ci::table_batches]
-            if not chunk:
-                continue
-            path = f"{scratch}/pairs_wave_{ci}"
-            embedding_cosine_pairs_vectorized(
-                spark, emb, tau=tau, n_tables=n_tables, n_planes=n_planes,
-                tables=chunk,
-            ).write.mode("overwrite").parquet(path)
-            wave_paths.append(path)
-            best_effort_jvm_gc(spark)  # release the wave's shuffle files
+    def pairs_for(tables):
+        return embedding_cosine_pairs_vectorized(
+            spark, emb, tau=tau, n_tables=n_tables, n_planes=n_planes, tables=tables
+        )
+
+    if table_batches <= 1:
+        pos = pairs_for(None)
+    else:
+        waves = (pairs_for(c) for c in table_waves(range(n_tables), table_batches))
         pos = (
-            spark.read.parquet(*wave_paths)
+            stage_waves(spark, waves, scratch_dir, "ivfnegvec")
             .groupBy("vec_a", "vec_b")
             .agg(F.max("cosine").alias("cosine"))
         )
@@ -384,20 +355,17 @@ def hard_negative_triplets_ivf_vectorized(
 
     base = emb.select("vec_id", as_double_vec(F.col("embedding")).alias("v")).persist()
     n = base.count()
-    k_cells = max(IVF_MIN_CELLS, n // TARGET_CELL)
+    k_cells = derive_k(n, IVF_MIN_CELLS)
     if train_on_sample is None:
         train_on_sample = n >= _IVF_SAMPLE_TRAIN_MIN
     train = training_sample(base, n, k_cells) if train_on_sample else base
     if train is not base:
         train = train.persist()
-    centroids = _seed_centroids(spark, base, k_cells)
-    m = coarse_m(k_cells)
-    for _ in range(IVF_ITERS - 1):
-        assigned_t = shortlist_assign_vectorized(spark, train, centroids, m, SEM_NPROBE)
-        centroids = _materialize_centroids(
-            spark, kmeans_update(assigned_t, dim=_centroid_dim(centroids))
-        )
-    assigned = shortlist_assign_vectorized(spark, base, centroids, m, SEM_NPROBE)
+
+    def assign(frame, centroids, m, step):
+        return shortlist_assign_vectorized(spark, frame, centroids, m, SEM_NPROBE)
+
+    _, assigned = lloyds(spark, base, k_cells, IVF_ITERS, assign, train=train)
 
     neg = hardest_negatives_per_cell(assigned, tau)
     return pos.join(neg, "anchor_id")

@@ -22,6 +22,40 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
+def _start_foreach_batch(stream_df: DataFrame, write_batch, checkpoint_path: str) -> StreamingQuery:
+    """Start ``write_batch`` over every micro-batch available now,
+    checkpointed at ``checkpoint_path`` — the launcher of every
+    ``foreachBatch`` sink here."""
+    return (
+        stream_df.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _batch_pairs_sink(pairs_path: str, batch_id: int):
+    """The ``pairs_sink`` hook of the near-dup index sinks: land a
+    batch's pairs as its ``_ingest_batch_id`` PARTITION with dynamic
+    overwrite. foreachBatch is at-least-once, so the pairs land through
+    the pre-index-mutation hook (see ``neardup_incremental``'s
+    durability-ordering note): a replayed batch rewrites its own
+    partition with identical recomputed rows (idempotent), and a batch
+    already in the index recomputes an empty frame, which dynamic
+    overwrite leaves existing partitions untouched by."""
+
+    def land_pairs(pairs: DataFrame) -> None:
+        (
+            pairs.withColumn("_ingest_batch_id", F.lit(batch_id))
+            .write.partitionBy("_ingest_batch_id")
+            .mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(pairs_path)
+        )
+
+    return land_pairs
+
+
 def foreach_batch_dedup_append(
     stream_df: DataFrame,
     lake_path: str,
@@ -47,12 +81,7 @@ def foreach_batch_dedup_append(
             spark = batch_df.sparkSession
             spark.read.parquet(lake_path).createOrReplaceGlobalTempView(register_as)
 
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_foreach_batch(stream_df, write_batch, checkpoint_path)
 
 
 def _require_partitioned_pairs_layout(spark, pairs_path: str) -> None:
@@ -123,32 +152,14 @@ def streaming_neardup_index(
     _require_partitioned_pairs_layout(stream_df.sparkSession, pairs_path)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch is at-least-once, so the pairs land through the
-        # pre-index-mutation sink hook (see neardup_incremental's
-        # durability-ordering note) as a batch-id PARTITION with dynamic
-        # overwrite: a replayed batch rewrites its own partition with
-        # identical recomputed rows (idempotent), and a batch already in
-        # the index recomputes an empty frame, which dynamic overwrite
-        # leaves existing partitions untouched by.
-        def land_pairs(pairs: DataFrame) -> None:
-            (
-                pairs.withColumn("_ingest_batch_id", F.lit(batch_id))
-                .write.partitionBy("_ingest_batch_id")
-                .mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(pairs_path)
-            )
-
         neardup_incremental(
-            batch_df.sparkSession, batch_df, index_dir, pairs_sink=land_pairs
+            batch_df.sparkSession,
+            batch_df,
+            index_dir,
+            pairs_sink=_batch_pairs_sink(pairs_path, batch_id),
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_foreach_batch(stream_df, write_batch, checkpoint_path)
 
 
 _STATE_SCHEMA = T.StructType([T.StructField("total", T.LongType())])
@@ -225,25 +236,15 @@ def streaming_embedding_index(
     _require_partitioned_pairs_layout(stream_df.sparkSession, pairs_path)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        def land_pairs(pairs: DataFrame) -> None:
-            (
-                pairs.withColumn("_ingest_batch_id", F.lit(batch_id))
-                .write.partitionBy("_ingest_batch_id")
-                .mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(pairs_path)
-            )
-
         embedding_neardup_incremental(
-            batch_df.sparkSession, batch_df, index_dir, tau=tau_eff, pairs_sink=land_pairs
+            batch_df.sparkSession,
+            batch_df,
+            index_dir,
+            tau=tau_eff,
+            pairs_sink=_batch_pairs_sink(pairs_path, batch_id),
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_foreach_batch(stream_df, write_batch, checkpoint_path)
 
 
 def streaming_knn_graph_index(
@@ -280,12 +281,7 @@ def streaming_knn_graph_index(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         knn_graph_incremental(batch_df.sparkSession, batch_df, index_dir, k=k_eff)
 
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_foreach_batch(stream_df, write_batch, checkpoint_path)
 
 
 def streaming_acid_append(
