@@ -492,130 +492,6 @@ def dedup_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return votes.select("doc_id", simhash.cast("bigint").alias("simhash"))
 
 
-# Sign-band LSH over embedding coordinates: band t's key packs the sign
-# bits of dims [t*BITS, (t+1)*BITS). Signs are pure comparisons (v[k] >
-# 0) — no float arithmetic — so DuckDB replays the identical candidate
-# set and the oracle comparison stays bit-exact, same trick as the
-# MinHash oracle. Each of the 64 dims is used exactly once: 8 bands ×
-# 8 bits — the production near-dup geometry. Per-dim sign collision for
-# cosine s is 1 − arccos(s)/π, so pair recall is 1 − (1 − p^8)^8:
-# ≈ 0.99 at s = 0.95, ≈ 0.93 at s = 0.90 (real near-dup thresholds),
-# while a random pair collides in a band with probability 2⁻⁸ — only
-# ~3% of all pairs ever become candidates. Fewer bits per band would
-# buy recall at this corpus's artificial 0.4 demo threshold, but at
-# 4 bits/band 64% of ALL pairs collide — a cross join in disguise.
-_COS_BAND_BITS = 8
-_COS_N_BANDS = 8
-
-
-def _cosine_sign_bands(vec_col: str = "v") -> F.Column:
-    structs = []
-    for t in range(_COS_N_BANDS):
-        key = F.lit(0)
-        for j in range(_COS_BAND_BITS):
-            d = t * _COS_BAND_BITS + j + 1  # element_at is 1-based
-            key = key + F.when(
-                F.element_at(F.col(vec_col), d) > 0, F.lit(1 << j)
-            ).otherwise(F.lit(0))
-        structs.append(F.struct(F.lit(t).alias("band"), key.cast("int").alias("key")))
-    return F.array(*structs)
-
-
-def _oracle_cosine_pairs() -> str:
-    key_terms = " + ".join(
-        f"(CASE WHEN v[band * {_COS_BAND_BITS} + {j + 1}] > 0 THEN {1 << j} ELSE 0 END)"
-        for j in range(_COS_BAND_BITS)
-    )
-    return f"""
-    WITH e AS (
-        SELECT vec_id, embedding::DOUBLE[] AS v,
-               sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-        FROM embeddings
-    ),
-    bands AS (
-        SELECT vec_id, band, {key_terms} AS key
-        FROM e, (SELECT unnest(range({_COS_N_BANDS})) AS band)
-    ),
-    cand AS (
-        SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-        FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
-        WHERE a.vec_id < b.vec_id
-    )
-    SELECT vec_a, vec_b,
-           list_dot_product(ea.v, eb.v) / (ea.nrm * eb.nrm) AS cosine
-    FROM cand
-    JOIN e ea ON ea.vec_id = cand.vec_a
-    JOIN e eb ON eb.vec_id = cand.vec_b
-    WHERE list_dot_product(ea.v, eb.v) / (ea.nrm * eb.nrm) > 0.4
-    """
-
-
-def dedup_embedding_cosine_pairs_demo_fixed_geometry(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """FIXED-GEOMETRY DEMO of sign-band embedding LSH — DEREGISTERED
-    from the query surface in r5 (VERDICT r4 directive #4): its 256-key
-    bands saturate superlinearly as the corpus grows (measured 23 s →
-    412 s for 2×at 100k — the worked geometry-contrast example in
-    docs/SCALING.md). It stays as a library function with a dedicated
-    oracle pytest (tests/test_queries_oracle.py::test_fixed_geometry_demo
-    _matches_oracle) because the contrast against the n-scaled
-    construction is instructive; the registered name users reach,
-    ``dedup_embedding_cosine_pairs``, runs the scaled geometry
-    docs/SCALING.md measured sublinear.
-
-    Embedding near-dup pairs with cosine > 0.4 over sign-band LSH
-    candidates (this synthetic corpus has no >0.52 pairs; real dedup
-    uses ~0.95+).
-
-    Candidates come from an 8-band × 8-bit sign-of-coordinate code: two
-    vectors are candidates iff some band's 8 sign bits agree — an
-    equi-join on (band, key), NOT an n² cross join, so candidate volume
-    scales with Σ bucket² per band (~3% of pairs here) instead of n².
-    Coordinate signs are an axis-aligned instance of hyperplane LSH
-    (collision probability per dim = 1 − θ/π), and being pure
-    comparisons they are replayed bit-identically by the DuckDB oracle,
-    which verifies the same exact cosine over the same candidate set.
-    The geometry is tuned for production near-dup thresholds (recall
-    ≈ 0.99 at cosine 0.95, ≈ 0.93 at 0.90); at this demo's artificial
-    0.4 threshold recall is ~0.27 — by design, since chasing recall at
-    0.4 degenerates LSH into a disguised cross join (see the band
-    constants' comment). Exact baselines: knn_brute_force (oracle-
-    checked) and the n-gram/MinHash ladder. Sequential-fold double dot
-    products are bit-identical to the oracle's list_dot_product."""
-    from pyspark import StorageLevel
-
-    from data_lake_construction_and_querying_with_pyspark_spark.operators.similarity import (
-        with_norm,
-    )
-
-    # Persisted: feeds the band explode AND both sides of the verify
-    # join — unpersisted, the norm fold would recompute three times.
-    e = with_norm(load_table(spark, sf_dir, "embeddings")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    bands = e.select("vec_id", F.explode(_cosine_sign_bands()).alias("bk")).select(
-        "vec_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-    cand = (
-        bands.alias("a")
-        .join(bands.alias("b"), ["band", "key"])
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
-    )
-    ea = e.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("norm").alias("na"))
-    eb = e.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
-    dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-    cosine = dot / (F.col("na") * F.col("nb"))
-    return (
-        cand.join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .select("vec_a", "vec_b", cosine.alias("cosine"))
-        .filter(F.col("cosine") > 0.4)
-    )
-
-
 def embedding_cosine_pairs_scaled(
     spark: SparkSession,
     emb: DataFrame,
@@ -627,68 +503,38 @@ def embedding_cosine_pairs_scaled(
     production configuration of the embedding dedup ladder, registered
     (with planted ground truth) as ``dedup_embedding_cosine_pairs``.
 
-    The fixed-geometry demo keeps an 8-band × 8-sign-bit code so its
-    oracle stays compact; but 256 keys per band saturate as the corpus
-    grows, and candidates ∝ Σ bucket² go superlinear (measured
-    23 s → 412 s for a 2× corpus, docs/SCALING.md). This variant
-    generates candidates from seeded random-hyperplane tables, where
-    bits-per-table grows with log n (16 bits ⇒ 65 536 keys) — measured
-    SUBLINEAR on the same corpus (16.6 s → 23.9 s for 2×) with perfect
-    planted-pair recovery at the production threshold. Same exact-
-    cosine arithmetic. The deterministic LCG hyperplanes replay in the
-    registered entry's DuckDB oracle as double literals, so even the
-    probabilistic recall is cross-engine identical.
+    Candidates come from seeded random-hyperplane tables
+    (``similarity.lsh_multi_buckets_flat``) where bits-per-table grows
+    with log n (16 bits ⇒ 65 536 keys): measured SUBLINEAR (16.6 s →
+    23.9 s for a 2× corpus, docs/SCALING.md) with perfect planted-pair
+    recovery at the production threshold, where a fixed 256-key
+    geometry saturated (23 s → 412 s). The deterministic LCG hyperplanes
+    replay in the registered entry's DuckDB oracle as double literals,
+    so even the probabilistic recall is cross-engine identical.
 
-    r5 plan change (the kNN-graph 1M lesson, docs/SCALING.md round 5):
-    cosine is scored INSIDE the (tbl, bucket) self-join and the tau
-    filter runs BEFORE the multi-table distinct. The old
-    candidates-first shape (distinct pairs → verify_cosine_pairs
-    re-attaching vectors) re-shuffled ~50M candidate rows WITH 64-dim
-    vectors (~66 GB of exchange at the 1M rung — it exhausted local
-    disk in r4, both AQE and pinned configs). Here vectors ride the
-    n·n_tables bucket rows (~4 GB at 1M), the join projection computes
-    cosine and drops the vectors, the strict > tau filter kills ~all
-    non-duplicate candidates in the same stage (filter-then-distinct ≡
-    distinct-then-filter for a deterministic cosine), and the distinct
-    dedups only the surviving near-dup pairs — a few-thousand-row
-    exchange at any rung. Values are unchanged: same candidate set,
-    same sequential-fold cosine, so the DuckDB oracle replay is
-    untouched. The incremental/streaming index keeps the
-    candidates-then-verify shape (``verify_cosine_pairs``) because its
-    per-batch candidate sets are small by construction.
+    The pairs are ``similarity._positive_pairs``: the (a < b,
+    cosine > tau) rows of the bucket self-join that scores cosine in
+    place (``similarity._bucket_scored_candidates``, which records the
+    r5 plan change and why vectors must never ride the candidate
+    exchange), then the multi-table distinct. The incremental/streaming
+    index keeps the candidates-then-verify shape
+    (``verify_cosine_pairs``) because its per-batch candidate sets are
+    small by construction.
     """
     from pyspark import StorageLevel
 
     from data_lake_construction_and_querying_with_pyspark_spark.operators.similarity import (
-        dot,
-        lsh_multi_buckets_flat,
+        _positive_pairs,
         with_norm,
     )
 
     # r11: fan the corpus out before the norm/LSH folds (guarded
     # no-op at lake scale — fan_out_small_scan docstring).
     e = with_norm(fan_out_small_scan(emb, "vec_id")).persist(StorageLevel.MEMORY_AND_DISK)
-    # Flat (vec_id, tbl, bucket) rows from the data-driven plane table
-    # (bit-identical buckets to the expression form — see
-    # lsh_multi_buckets_flat), with (v, norm) attached so the self-join
-    # scores in place. Persisted: both sides of the self-join read it.
-    heavy = (
-        lsh_multi_buckets_flat(e, n_tables=n_tables, n_planes=n_planes)
-        .join(e, "vec_id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    cosine = dot("a.v", "b.v") / (F.col("a.norm") * F.col("b.norm"))
-    return (
-        heavy.alias("a")
-        .join(heavy.alias("b"), ["tbl", "bucket"])
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            cosine.alias("cosine"),
-        )
-        .filter(F.col("cosine") > tau)
-        .distinct()
+    return _positive_pairs(e, n_tables, n_planes, tau).select(
+        F.col("anchor_id").alias("vec_a"),
+        F.col("pos_id").alias("vec_b"),
+        F.col("pos_cosine").alias("cosine"),
     )
 
 
@@ -747,19 +593,9 @@ def _scaled_pairs_ctes(dim: int = 64) -> str:
     canonical-corpus oracle. MATERIALIZED where multiply referenced
     (DuckDB inlines plain CTEs per reference)."""
     from data_lake_construction_and_querying_with_pyspark_spark.operators.similarity import (
-        _hyperplanes,
+        _lsh_bands_sql,
     )
 
-    branches = []
-    for t in range(_SCALED_TABLES):
-        planes = _hyperplanes(dim, _SCALED_PLANES, seed=7 + 1000 * t)
-        key = " + ".join(
-            f"(CASE WHEN list_dot_product(v, [{', '.join(repr(x) for x in p)}]) > 0"
-            f" THEN {1 << i} ELSE 0 END)"
-            for i, p in enumerate(planes)
-        )
-        branches.append(f"SELECT vec_id, {t} AS tbl, {key} AS key FROM e")
-    bands = " UNION ALL ".join(branches)
     return f"""base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     aug AS MATERIALIZED (
         SELECT vec_id, v FROM base
@@ -768,7 +604,7 @@ def _scaled_pairs_ctes(dim: int = 64) -> str:
         FROM base WHERE vec_id % {_CLONE_MOD} = 0
     ),
     e AS MATERIALIZED (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM aug),
-    bands AS MATERIALIZED ({bands}),
+    bands AS MATERIALIZED ({_lsh_bands_sql(dim, _SCALED_TABLES, _SCALED_PLANES, 7)}),
     cand AS (
         SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
         FROM bands a JOIN bands b ON a.tbl = b.tbl AND a.key = b.key
@@ -778,14 +614,11 @@ def _scaled_pairs_ctes(dim: int = 64) -> str:
 
 def _oracle_cosine_pairs_scaled(dim: int = 64) -> str:
     """DuckDB replay of the scaled-geometry ``dedup_embedding_cosine_pairs``:
-    the seeded-LCG hyperplanes are deterministic Python lists, so they embed
-    into the SQL as double literals (repr() is shortest-round-trip — the
-    parsed double is bit-identical to the one Spark broadcasts via
-    ``F.lit``). Sign of a sequential-fold dot product is then replayed
-    exactly by ``list_dot_product``, so both engines derive the same
-    candidate set, and the exact-cosine verify is the already-proven
-    bit-identical fold. Candidate CTEs shared with the canonical-corpus
-    oracle via ``_scaled_pairs_ctes``."""
+    the candidate CTEs (``_scaled_pairs_ctes``, bands from
+    ``similarity._lsh_bands_sql``) replay Spark's candidate set exactly,
+    and the exact-cosine verify is the already-proven bit-identical
+    fold. Candidate CTEs shared with the canonical-corpus, kNN-graph and
+    hard-negative oracles."""
     return f"""
     WITH {_scaled_pairs_ctes(dim)}
     SELECT vec_a, vec_b,
@@ -803,20 +636,12 @@ def dedup_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     geometry docs/SCALING.md measured sublinear: 8 random-hyperplane
     tables × 16 sign bits (65 536 keys per band, the knob that grows
     with log n), exact-cosine verify at τ=0.9. This is the PRIMARY
-    name of the embedding-dedup ladder (VERDICT r3 directive #3:
-    re-pointed from the fixed-geometry demo, which now lives at
-    ``dedup_embedding_cosine_pairs_demo_fixed_geometry``; this entry
-    was driver-green in r3 under the name
-    ``dedup_embedding_cosine_pairs_scaled`` — same builder, same
-    oracle, renamed only).
-
-    The fixed-geometry demo (8×8 axis-aligned bands at τ=0.4)
-    saturates its 256-key bands as the corpus grows — candidates
-    ∝ Σ bucket² go superlinear (measured 23 s → 412 s for a 2×
-    corpus at 100k docs). This entry runs
+    name of the embedding-dedup ladder (driver-green in r3 as
+    ``dedup_embedding_cosine_pairs_scaled``, renamed in r4). It runs
     ``embedding_cosine_pairs_scaled`` — the exact code path the scale
-    probe measured 16.6 s → 23.9 s for the same 2× step, with full
-    planted-pair recovery — as the registered, oracle-checked query.
+    probe measured 16.6 s → 23.9 s for a 2× step at 100k docs, with
+    full planted-pair recovery, where a fixed 256-key geometry went
+    superlinear (the worked contrast in docs/SCALING.md).
 
     Because this synthetic corpus has no natural pairs above cosine
     0.52, the query plants its own ground truth the way

@@ -229,6 +229,65 @@ def _index_geometry(index_dir: str) -> tuple[int, int]:
         return EMB_INDEX_TABLES, EMB_INDEX_PLANES
 
 
+def _probe_embedding_index(
+    spark: SparkSession, batch: DataFrame, index_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The probe half of an embedding-index ingest, shared by
+    ``embedding_neardup_incremental`` and ``knn_graph_incremental``.
+    Returns ``(vecs_new, buckets_new, vecs_all, hits)``: the batch's
+    normalized vectors NEW to the index and their
+    ``lsh_multi_buckets_flat`` buckets at the index's geometry (both
+    local-checkpointed, so the later appends write exactly what was
+    probed), the vector inventory including the batch, and ``hits`` —
+    one (new_id, vec_id) row per (tbl, bucket) collision of a new
+    vector with any other indexed or new vector.
+
+    Replay-safe: vec_ids already in the bucket index anti-join out
+    (re-ingesting a batch is a no-op), and the inventory is read
+    through ``distinct()`` so a crash between the two appends cannot
+    double-count a vector on retry. First-writer-wins WITHIN a batch
+    too (ADVICE r4): a batch carrying the same vec_id twice — possibly
+    with different embeddings — would append conflicting inventory and
+    bucket rows that ``distinct()`` cannot collapse (it only merges
+    bit-identical rows), fanning out the verify join. Exactly one row
+    per vec_id survives (which one is partition-order-dependent —
+    callers that care about WHICH duplicate wins must resolve upstream;
+    the index only guarantees one embedding per vec_id)."""
+    from data_lake_construction_and_querying_with_pyspark_spark.operators.similarity import (
+        lsh_multi_buckets_flat,
+        with_norm,
+    )
+
+    buckets_old = spark.read.parquet(f"{index_dir}/buckets.parquet")
+    vecs_old = spark.read.parquet(f"{index_dir}/vectors.parquet")
+    known = buckets_old.select("vec_id").distinct()
+
+    batch = batch.dropDuplicates(["vec_id"])
+    vecs_new = with_norm(batch.join(known, "vec_id", "left_anti")).localCheckpoint()
+    n_tables, n_planes = _index_geometry(index_dir)
+    buckets_new = lsh_multi_buckets_flat(
+        vecs_new, n_tables=n_tables, n_planes=n_planes
+    ).localCheckpoint()
+
+    buckets_all = buckets_old.unionByName(buckets_new)
+    vecs_all = vecs_old.unionByName(vecs_new).distinct()
+    hits = (
+        buckets_new.select("tbl", "bucket", F.col("vec_id").alias("new_id"))
+        .join(buckets_all, ["tbl", "bucket"])
+        .filter(F.col("new_id") != F.col("vec_id"))
+        .select("new_id", "vec_id")
+    )
+    return vecs_new, buckets_new, vecs_all, hits
+
+
+def _append_embedding_index(index_dir: str, vecs_new: DataFrame, buckets_new: DataFrame) -> None:
+    """The append half of an embedding-index ingest: vectors first, then
+    buckets. Buckets go last because they are what the replay guard
+    reads — until they land, a retried batch re-probes in full."""
+    vecs_new.write.mode("append").parquet(f"{index_dir}/vectors.parquet")
+    buckets_new.write.mode("append").parquet(f"{index_dir}/buckets.parquet")
+
+
 def embedding_neardup_incremental(
     spark: SparkSession,
     batch: DataFrame,
@@ -256,14 +315,12 @@ def embedding_neardup_incremental(
     their join keys ((tbl, bucket) and vec_id) so probe and verify are
     shuffle-free; semantics are unchanged.
 
-    Replay-safe: vec_ids already present in the bucket index are
-    anti-joined out first (re-ingesting a batch is a no-op), and the
-    verify reads the inventory through ``distinct()`` so a crash
-    between the two appends cannot double-count a vector on retry.
-    The durability ordering mirrors ``neardup_incremental``: pairs
-    land through ``pairs_sink`` BEFORE the index mutation, because once
-    the batch's buckets are appended a replayed batch anti-joins to
-    nothing and could never re-discover them.
+    Replay-safe through ``_probe_embedding_index`` (re-ingesting a
+    batch is a no-op). The durability ordering mirrors
+    ``neardup_incremental``: pairs land through ``pairs_sink`` BEFORE
+    the index mutation, because once the batch's buckets are appended a
+    replayed batch anti-joins to nothing and could never re-discover
+    them.
 
     Candidate generation, plane geometry, and the exact-cosine verify
     are shared with the batch operator (``similarity.
@@ -273,53 +330,16 @@ def embedding_neardup_incremental(
     from data_lake_construction_and_querying_with_pyspark_spark.operators.dedup import (
         verify_cosine_pairs,
     )
-    from data_lake_construction_and_querying_with_pyspark_spark.operators.similarity import (
-        lsh_multi_buckets_flat,
-        with_norm,
-    )
 
-    buckets_old = spark.read.parquet(f"{index_dir}/buckets.parquet")
-    vecs_old = spark.read.parquet(f"{index_dir}/vectors.parquet")
-    known = buckets_old.select("vec_id").distinct()
-
-    # First-writer-wins WITHIN a batch too (ADVICE r4): a batch carrying
-    # the same vec_id twice — possibly with different embeddings — would
-    # append conflicting inventory/bucket rows that vecs_all.distinct()
-    # cannot collapse (it only merges bit-identical rows), fanning out
-    # the verify join. Exactly one row per vec_id survives (which one
-    # is partition-order-dependent — callers that care about WHICH
-    # duplicate wins must resolve upstream; the index only guarantees
-    # one embedding per vec_id).
-    batch = batch.dropDuplicates(["vec_id"])
-    vecs_new = (
-        with_norm(batch.join(known, "vec_id", "left_anti"))
-        .localCheckpoint()
-    )
-    n_tables, n_planes = _index_geometry(index_dir)
-    buckets_new = lsh_multi_buckets_flat(
-        vecs_new, n_tables=n_tables, n_planes=n_planes
-    ).localCheckpoint()
-
-    buckets_all = buckets_old.unionByName(buckets_new.select("vec_id", "tbl", "bucket"))
-    vecs_all = vecs_old.unionByName(vecs_new).distinct()
-
-    cand = (
-        buckets_new.select("tbl", "bucket", F.col("vec_id").alias("new_id"))
-        .join(buckets_all, ["tbl", "bucket"])
-        .filter(F.col("new_id") != F.col("vec_id"))
-        .select(
-            F.least("new_id", "vec_id").alias("vec_a"),
-            F.greatest("new_id", "vec_id").alias("vec_b"),
-        )
-        .distinct()
-    )
+    vecs_new, buckets_new, vecs_all, hits = _probe_embedding_index(spark, batch, index_dir)
+    cand = hits.select(
+        F.least("new_id", "vec_id").alias("vec_a"),
+        F.greatest("new_id", "vec_id").alias("vec_b"),
+    ).distinct()
     pairs = verify_cosine_pairs(cand, vecs_all, tau).localCheckpoint()
     if pairs_sink is not None:
         pairs_sink(pairs)
-    vecs_new.write.mode("append").parquet(f"{index_dir}/vectors.parquet")
-    buckets_new.select("vec_id", "tbl", "bucket").write.mode("append").parquet(
-        f"{index_dir}/buckets.parquet"
-    )
+    _append_embedding_index(index_dir, vecs_new, buckets_new)
     return pairs
 
 
@@ -385,33 +405,10 @@ def knn_graph_incremental(
     small-batch regime, so candidates-then-attach joins are fine here —
     the BATCH operator is the one that must score in-join
     (``similarity._bucket_scored_candidates``, docs/SCALING.md r5)."""
-    from data_lake_construction_and_querying_with_pyspark_spark.operators.similarity import (
-        dot,
-        lsh_multi_buckets_flat,
-        with_norm,
-    )
+    from data_lake_construction_and_querying_with_pyspark_spark.operators.similarity import dot
 
-    buckets_old = spark.read.parquet(f"{index_dir}/buckets.parquet")
-    vecs_old = spark.read.parquet(f"{index_dir}/vectors.parquet")
-    known = buckets_old.select("vec_id").distinct()
-
-    batch = batch.dropDuplicates(["vec_id"])
-    vecs_new = with_norm(batch.join(known, "vec_id", "left_anti")).localCheckpoint()
-    n_tables, n_planes = _index_geometry(index_dir)
-    buckets_new = lsh_multi_buckets_flat(
-        vecs_new, n_tables=n_tables, n_planes=n_planes
-    ).localCheckpoint()
-
-    buckets_all = buckets_old.unionByName(buckets_new.select("vec_id", "tbl", "bucket"))
-    vecs_all = vecs_old.unionByName(vecs_new).distinct()
-
-    probe = (
-        buckets_new.select("tbl", "bucket", F.col("vec_id").alias("new_id"))
-        .join(buckets_all, ["tbl", "bucket"])
-        .filter(F.col("new_id") != F.col("vec_id"))
-        .select("new_id", F.col("vec_id").alias("other_id"))
-        .distinct()
-    )
+    vecs_new, buckets_new, vecs_all, hits = _probe_embedding_index(spark, batch, index_dir)
+    probe = hits.select("new_id", F.col("vec_id").alias("other_id")).distinct()
     # directional: the new vector's edge AND the colliding vector's
     # (old or new) edge back — new-new pairs produce both orderings
     # twice, which the distinct collapses
@@ -445,8 +442,5 @@ def knn_graph_incremental(
     topk.select("vec_id", "nbr_id", "cosine").write.mode("overwrite").parquet(
         f"{index_dir}/edges.parquet"
     )
-    vecs_new.write.mode("append").parquet(f"{index_dir}/vectors.parquet")
-    buckets_new.select("vec_id", "tbl", "bucket").write.mode("append").parquet(
-        f"{index_dir}/buckets.parquet"
-    )
+    _append_embedding_index(index_dir, vecs_new, buckets_new)
     return topk

@@ -51,6 +51,40 @@ def with_norm(embeddings: DataFrame, vec_col: str = "embedding") -> DataFrame:
     )
 
 
+def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
+    """Deterministic pseudo-random hyperplanes (pure-python LCG so the
+    plan is reproducible without numpy state)."""
+    state = seed
+    planes = []
+    for _ in range(n_planes):
+        row = []
+        for _ in range(dim):
+            state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
+            row.append((state >> 11) / float(1 << 53) - 0.5)
+        planes.append(row)
+    return planes
+
+
+def _lsh_bands_sql(dim: int, n_tables: int, n_planes: int, seed: int) -> str:
+    """DuckDB replay of ``lsh_multi_buckets_flat``: one ``SELECT vec_id,
+    tbl, key FROM e`` branch per table, UNION ALL'd. Each key sums the
+    sign bits of ``list_dot_product`` against the same seeded-LCG
+    hyperplanes, embedded as shortest-round-trip double literals
+    (``repr``), so the parsed doubles are bit-identical to the ones Spark
+    broadcasts and every bucket, hence every candidate, replays exactly.
+    Reads a CTE ``e`` with (vec_id, v). Defined above every
+    ``@register``: the oracle strings are built at module import."""
+    branches = []
+    for t in range(n_tables):
+        key = " + ".join(
+            f"(CASE WHEN list_dot_product(v, [{', '.join(repr(x) for x in p)}]) > 0"
+            f" THEN {1 << i} ELSE 0 END)"
+            for i, p in enumerate(_hyperplanes(dim, n_planes, seed + 1000 * t))
+        )
+        branches.append(f"SELECT vec_id, {t} AS tbl, {key} AS key FROM e")
+    return " UNION ALL ".join(branches)
+
+
 @register(
     "knn_brute_force",
     oracle=f"""
@@ -95,61 +129,6 @@ def knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes (pure-python LCG so the
-    plan is reproducible without numpy state)."""
-    state = seed
-    planes = []
-    for _ in range(n_planes):
-        row = []
-        for _ in range(dim):
-            state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
-            row.append((state >> 11) / float(1 << 53) - 0.5)
-        planes.append(row)
-    return planes
-
-
-def lsh_bucket(df: DataFrame, vec_col: str = "v", n_planes: int = 8, seed: int = 7) -> DataFrame:
-    """Sign-random-projection bucket id per vector: bit i = sign of
-    ⟨v, plane_i⟩. 2^n_planes buckets; cosine-similar vectors collide
-    with probability (1 - θ/π)^n_planes."""
-    first = df.select(F.size(vec_col).alias("d")).first()
-    dim = first["d"] if first else 0
-    planes = _hyperplanes(dim, n_planes, seed)
-    bucket = F.lit(0)
-    for i, plane in enumerate(planes):
-        proj = dot(F.col(vec_col), F.array(*[F.lit(x) for x in plane]))
-        bucket = bucket + F.when(proj > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return df.withColumn("bucket", bucket.cast("int"))
-
-
-def lsh_multi_buckets(
-    df: DataFrame,
-    vec_col: str = "v",
-    n_tables: int = 8,
-    n_planes: int = 4,
-    seed: int = 7,
-) -> DataFrame:
-    """Multi-table LSH: ``n_tables`` independent sign-projection codes
-    of ``n_planes`` bits each, as an array of (table, bucket) structs.
-    Candidate recall for neighbors at angle θ is
-    1 − (1 − (1−θ/π)^n_planes)^n_tables — tables buy recall, planes buy
-    selectivity. Explode + equi-join on (table, bucket) is the
-    candidate join; each table's bucket space is disjoint via the
-    table id in the key."""
-    first = df.select(F.size(vec_col).alias("d")).first()
-    dim = first["d"] if first else 0
-    structs = []
-    for t in range(n_tables):
-        planes = _hyperplanes(dim, n_planes, seed + 1000 * t)
-        bucket = F.lit(0)
-        for i, plane in enumerate(planes):
-            proj = dot(F.col(vec_col), F.array(*[F.lit(x) for x in plane]))
-            bucket = bucket + F.when(proj > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        structs.append(F.struct(F.lit(t).alias("table"), bucket.cast("int").alias("bucket")))
-    return df.withColumn("buckets", F.array(*structs))
-
-
 def lsh_multi_buckets_flat(
     df: DataFrame,
     vec_col: str = "v",
@@ -157,22 +136,25 @@ def lsh_multi_buckets_flat(
     n_planes: int = 4,
     seed: int = 7,
 ) -> DataFrame:
-    """Data-driven twin of ``lsh_multi_buckets``: same hyperplanes, same
-    sign bits, same bucket integers — but the planes live in a broadcast
-    (table, plane_idx, plane) DataFrame instead of inline literal
-    expressions, and buckets assemble via corpus × broadcast(planes) →
-    per-(vec, table) bit sum. Returns flat (vec_id, tbl, bucket) rows
-    (the shape the candidate self-join consumes directly).
+    """Multi-table sign-projection LSH (Charikar's random hyperplanes):
+    ``n_tables`` independent codes of ``n_planes`` sign bits each,
+    returned as flat (vec_id, tbl, bucket) rows — the shape every
+    candidate equi-join on (tbl, bucket) consumes directly. Table ``t``
+    draws its ``n_planes`` seeded-LCG planes (``_hyperplanes``) from
+    seed + 1000·t; ``_lsh_bands_sql`` replays them in DuckDB and
+    ``dedup_vectorized.lsh_buckets_vectorized`` in pandas. Candidate
+    recall for neighbors at angle θ is 1 − (1 − (1−θ/π)^n_planes)^n_tables
+    — tables buy recall, planes buy selectivity.
 
-    Why it exists: at 8 tables × 16 planes × 64 dims the expression
-    form is 8 192 literals — measured 9-14 s of py4j + Catalyst plan
-    construction per invocation against ~3.5 s of actual execution at
-    sf0.1. Moving the constants into data collapses plan build to
-    milliseconds and leaves the arithmetic bit-identical: the dot
-    product is the same sequential ``zip_with``/``aggregate`` fold, so
-    every sign — and therefore every bucket and every candidate —
-    matches the expression form and the DuckDB oracle exactly. The
-    map-side partial ``sum`` means the bit aggregation shuffles only
+    The planes live in a broadcast (tbl, pidx, plane) DataFrame, not
+    inline literals: buckets assemble via corpus × broadcast(planes) →
+    per-(vec, table) bit sum. At 8 tables × 16 planes × 64 dims an
+    expression form is 8 192 literals — measured 9-14 s of py4j +
+    Catalyst plan construction per invocation against ~3.5 s of actual
+    execution at sf0.1; as data the plan builds in milliseconds. The
+    dot product is the sequential ``zip_with``/``aggregate`` fold, so
+    every sign, bucket and candidate matches the DuckDB oracle exactly.
+    The map-side partial ``sum`` means the bit aggregation shuffles only
     n·n_tables skinny rows."""
     spark = df.sparkSession
     first = df.select(F.size(vec_col).alias("d")).first()
@@ -197,27 +179,30 @@ def lsh_multi_buckets_flat(
 @register("knn_lsh_bucketed", oracle=None)
 def knn_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-10 via multi-table sign-projection LSH (8 tables × 4
-    planes): candidates share any table's bucket with the query, then
+    planes, ``lsh_multi_buckets_flat``): candidates share any table's
+    bucket with the query — the broadcast query rows equi-join the
+    corpus's flat (vec_id, tbl, bucket) rows on (tbl, bucket) — then
     exact cosine rerank of the deduped candidate set. Probabilistic
     recall → no SQL oracle; tests/test_similarity.py asserts recall vs
     brute force (near-orthogonal random vectors are sign-LSH's worst
     case; real near-dup embeddings collide with prob ≈ 1).
 
-    Scale path: (table, bucket) is a plain int pair → write the corpus
+    Scale path: (tbl, bucket) is a plain int pair → write the corpus
     bucketed by it and each query probes n_tables buckets as partition-
     pruned scans instead of a full pass."""
-    e = lsh_multi_buckets(with_norm(load_table(spark, sf_dir, "embeddings"))).cache()
-    flat = e.select("vec_id", "v", "norm", F.explode("buckets").alias("tb"))
+    e = with_norm(load_table(spark, sf_dir, "embeddings")).cache()
+    flat = lsh_multi_buckets_flat(e).join(e, "vec_id")
     q = F.broadcast(
         flat.filter(F.col("vec_id") < _N_QUERIES).select(
             F.col("vec_id").alias("query_id"),
             F.col("v").alias("qv"),
             F.col("norm").alias("qnorm"),
-            F.col("tb").alias("qtb"),
+            "tbl",
+            "bucket",
         )
     )
     cand = (
-        q.join(flat, F.col("qtb") == F.col("tb"))
+        q.join(flat, ["tbl", "bucket"])
         .filter(F.col("query_id") != F.col("vec_id"))
         .select("query_id", "qv", "qnorm", F.col("vec_id").alias("neighbor_id"), "v", "norm")
         .dropDuplicates(["query_id", "neighbor_id"])
@@ -356,54 +341,40 @@ def knn_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- approximate kNN GRAPH (top-1 neighbor per vector via LSH buckets) ---------
 
 
-def _oracle_knn_graph(dim: int = 64) -> str:
-    """DuckDB replay of ``knn_graph_top1``: the same seeded-LCG
-    hyperplane tables as the scaled cosine-pairs oracle (embedded as
-    shortest-round-trip double literals — the parsed double is
-    bit-identical to the one Spark broadcasts), DIRECTIONAL candidates
-    (a vector can be its neighbor's top-1 without the converse), and a
-    per-vector argmax replayed as ROW_NUMBER ORDER BY cosine DESC,
-    nbr_id — exactly the lexicographic ``max_by`` struct ordering the
-    Spark builder aggregates with."""
+def _graph_scored_ctes(dim: int = 64) -> str:
+    """The kNN-graph oracles' CTE chain: the scaled-geometry candidate
+    CTEs (``dedup._scaled_pairs_ctes`` — planted-clone corpus, seeded-LCG
+    bands, UNDIRECTED distinct ``vec_a < vec_b`` pairs), emitted in both
+    directions as ``dcand`` (a vector can be its neighbor's top-k
+    without the converse; both directions of the distinct ``<`` pairs
+    are exactly the distinct ``<>`` pairs), and ``scored`` with the
+    exact cosine of each directional edge."""
     from data_lake_construction_and_querying_with_pyspark_spark.operators.dedup import (
-        _CLONE_MOD,
-        _CLONE_OFF,
-        _SCALED_PLANES,
-        _SCALED_TABLES,
+        _scaled_pairs_ctes,
     )
 
-    branches = []
-    for t in range(_SCALED_TABLES):
-        planes = _hyperplanes(dim, _SCALED_PLANES, seed=7 + 1000 * t)
-        key = " + ".join(
-            f"(CASE WHEN list_dot_product(v, [{', '.join(repr(x) for x in p)}]) > 0"
-            f" THEN {1 << i} ELSE 0 END)"
-            for i, p in enumerate(planes)
-        )
-        branches.append(f"SELECT vec_id, {t} AS tbl, {key} AS key FROM e")
-    bands = " UNION ALL ".join(branches)
-    return f"""
-    WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    aug AS (
-        SELECT vec_id, v FROM base
+    return f"""{_scaled_pairs_ctes(dim)},
+    dcand AS (
+        SELECT vec_a AS vec_id, vec_b AS nbr_id FROM cand
         UNION ALL
-        SELECT vec_id + {_CLONE_OFF}, list_transform(v, x -> x + 0.01)
-        FROM base WHERE vec_id % {_CLONE_MOD} = 0
-    ),
-    e AS MATERIALIZED (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM aug),
-    bands AS MATERIALIZED ({bands}),
-    cand AS (
-        SELECT DISTINCT a.vec_id AS vec_id, b.vec_id AS nbr_id
-        FROM bands a JOIN bands b ON a.tbl = b.tbl AND a.key = b.key
-        WHERE a.vec_id <> b.vec_id
+        SELECT vec_b AS vec_id, vec_a AS nbr_id FROM cand
     ),
     scored AS (
-        SELECT cand.vec_id, cand.nbr_id,
+        SELECT dcand.vec_id, dcand.nbr_id,
                list_dot_product(ea.v, eb.v) / (ea.nrm * eb.nrm) AS cosine
-        FROM cand
-        JOIN e ea ON ea.vec_id = cand.vec_id
-        JOIN e eb ON eb.vec_id = cand.nbr_id
-    )
+        FROM dcand
+        JOIN e ea ON ea.vec_id = dcand.vec_id
+        JOIN e eb ON eb.vec_id = dcand.nbr_id
+    )"""
+
+
+def _oracle_knn_graph(dim: int = 64) -> str:
+    """DuckDB replay of ``knn_graph_top1``: the per-vector argmax over
+    ``_graph_scored_ctes`` replayed as ROW_NUMBER ORDER BY cosine DESC,
+    nbr_id — exactly the lexicographic ``max_by`` struct ordering the
+    Spark builder aggregates with."""
+    return f"""
+    WITH {_graph_scored_ctes(dim)}
     SELECT vec_id, nbr_id, cosine FROM (
         SELECT vec_id, nbr_id, cosine,
                ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -544,30 +515,12 @@ def knn_graph_edges(
 
 
 def _oracle_knn_graph_topk(dim: int = 64) -> str:
-    """Top-k variant of the kNN-graph oracle: identical bands and
-    directional candidates, ROW_NUMBER rank ≤ k emitted as the edge
-    rank (the Spark builder's window tie-break is the same
-    (cosine DESC, nbr_id) ordering)."""
-    from data_lake_construction_and_querying_with_pyspark_spark.operators.dedup import (
-        _scaled_pairs_ctes,
-    )
-
-    # _scaled_pairs_ctes ends with the UNDIRECTED cand (vec_a < vec_b);
-    # the graph needs directional candidates, so emit both directions.
+    """Top-k variant of the kNN-graph oracle: ROW_NUMBER rank ≤ k over
+    ``_graph_scored_ctes``, emitted as the edge rank (the Spark
+    builder's window tie-break is the same (cosine DESC, nbr_id)
+    ordering)."""
     return f"""
-    WITH {_scaled_pairs_ctes(dim)},
-    dcand AS (
-        SELECT vec_a AS vec_id, vec_b AS nbr_id FROM cand
-        UNION ALL
-        SELECT vec_b AS vec_id, vec_a AS nbr_id FROM cand
-    ),
-    scored AS (
-        SELECT dcand.vec_id, dcand.nbr_id,
-               list_dot_product(ea.v, eb.v) / (ea.nrm * eb.nrm) AS cosine
-        FROM dcand
-        JOIN e ea ON ea.vec_id = dcand.vec_id
-        JOIN e eb ON eb.vec_id = dcand.nbr_id
-    )
+    WITH {_graph_scored_ctes(dim)}
     SELECT vec_id, nbr_id, cosine, edge_rank FROM (
         SELECT vec_id, nbr_id, cosine,
                CAST(ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -1394,17 +1347,6 @@ def _oracle_hard_negatives(dim: int = 64) -> str:
         _scaled_pairs_ctes,
     )
 
-    branches = []
-    for t in range(_NEG_TABLES):
-        planes = _hyperplanes(dim, _NEG_PLANES, seed=_NEG_SEED + 1000 * t)
-        key = " + ".join(
-            f"(CASE WHEN list_dot_product(v, [{', '.join(repr(x) for x in p)}]) > 0"
-            f" THEN {1 << i} ELSE 0 END)"
-            for i, p in enumerate(planes)
-        )
-        branches.append(f"SELECT vec_id, {t} AS tbl, {key} AS key FROM e")
-    neg_bands = " UNION ALL ".join(branches)
-
     return f"""
     WITH {_scaled_pairs_ctes(dim)},
     pos AS (
@@ -1415,7 +1357,7 @@ def _oracle_hard_negatives(dim: int = 64) -> str:
         JOIN e eb ON eb.vec_id = cand.vec_b
         WHERE list_dot_product(ea.v, eb.v) / (ea.nrm * eb.nrm) > {_SCALED_TAU}
     ),
-    negbands AS MATERIALIZED ({neg_bands}),
+    negbands AS MATERIALIZED ({_lsh_bands_sql(dim, _NEG_TABLES, _NEG_PLANES, _NEG_SEED)}),
     negcand AS (
         SELECT DISTINCT a.vec_id AS vec_id, b.vec_id AS nbr_id
         FROM negbands a JOIN negbands b ON a.tbl = b.tbl AND a.key = b.key

@@ -114,9 +114,9 @@ _PROBE_OPS = [
     "dedup_ngram_jaccard_pairs",
     "dedup_minhash_near_dup",
     "dedup_simhash_hamming_pairs",
-    # dedup_embedding_cosine_pairs_demo_fixed_geometry was deregistered
-    # in r5 (VERDICT r4 directive #4) — its saturation numbers are the
-    # worked geometry-contrast example in docs/SCALING.md.
+    # The fixed-geometry 8×8 sign-band demo was deregistered in r5
+    # (VERDICT r4 directive #4) and later deleted — its saturation
+    # numbers are the worked geometry-contrast example in docs/SCALING.md.
     "dedup_cluster_assignment",
     "text_quality_scores",
     "text_language_id",
@@ -207,11 +207,11 @@ def main() -> None:
         return out_df.filter(F.col("is_semantic_dup"))
 
     # Embedding near-dup with n-SCALED band selectivity at the
-    # production threshold (0.9): the registered query's fixed 8×8
-    # sign-band geometry saturates its 256-key buckets as n grows
-    # (candidates ∝ Σ bucket² → superlinear); production grows bits
-    # per band with n, which the random-hyperplane lsh_multi_buckets
-    # supports directly (8 tables × 16 planes here).
+    # production threshold (0.9): a fixed 8×8 sign-band geometry
+    # saturates its 256-key buckets as n grows (candidates ∝ Σ bucket²
+    # → superlinear); production grows bits per band with n, which the
+    # random-hyperplane lsh_multi_buckets_flat supports directly
+    # (8 tables × 16 planes here).
     def cosine_scaled(spark, sf_dir):
         from data_lake_construction_and_querying_with_pyspark_spark.operators.dedup import (
             embedding_cosine_pairs_scaled,

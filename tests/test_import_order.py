@@ -4,7 +4,10 @@ module of a fresh interpreter, and the registry still ends up complete.
 ``semantic`` and ``similarity`` import each other: semantic pulls
 ``as_double_vec``/``dot`` only after its quantizer constants are bound,
 and similarity registers ``knn_ivf_pq`` with an oracle built from
-semantic's CTE generator. Moving a helper across that cycle can break
+semantic's CTE generator. ``dedup`` and ``similarity`` do the same:
+dedup's candidate CTEs take their band SQL from ``similarity._lsh_bands_sql``
+while similarity's kNN-graph and hard-negative oracles are built from
+dedup's candidate CTEs. Moving a helper across either cycle can break
 one entry order while the other still works, and the suite — which
 imports everything through ``all_queries()`` — would see it only as a
 Python-worker ``NameError`` inside one vectorized test. No JVM needed:
@@ -32,6 +35,8 @@ N_REGISTERED = 151
         "similarity_vectorized",
         "dedup_vectorized",
         "pca",
+        "dedup",
+        "incremental",
     ],
 )
 def test_operator_module_imports_first(module):

@@ -164,7 +164,7 @@ def test_runtime_bloom_filter_prunes_fact_fact_join(spark):
 # Queries that intentionally cross-join (tiny broadcast side × corpus).
 _NESTED_LOOP_OK = {
     "knn_brute_force",
-    "knn_lsh_bucketed",  # broadcast query side
+    "knn_lsh_bucketed",  # corpus × broadcast 32-row plane table (8×4 geometry)
     "knn_ivf_probe",  # query × 16-centroid broadcast distance table
     "knn_ivf_deterministic",  # Lloyd's assign + query × broadcast centroid probes
     "knn_ivf_pq",  # query × broadcast centroid probes (coarse stage; the

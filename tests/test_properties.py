@@ -102,30 +102,32 @@ def test_connected_components_driver_and_distributed_paths_agree(spark):
     assert via_cluster == expected
 
 
-def test_sign_band_cosine_pairs_no_false_positives(spark):
-    """Every pair the fixed-geometry sign-band demo reports must genuinely
-    exceed the cosine threshold (LSH may MISS pairs — documented
+def test_scaled_cosine_pairs_no_false_positives(spark):
+    """Every pair the scaled sign-LSH near-dup operator reports must
+    genuinely exceed the cosine threshold (LSH may MISS pairs — documented
     recall — but the exact-cosine verify means it can never invent
     one), and the reported cosine must equal the brute-force value."""
     from data_lake_construction_and_querying_with_pyspark_spark.operators.dedup import (
-        dedup_embedding_cosine_pairs_demo_fixed_geometry,
+        _SCALED_TAU,
+        embedding_cosine_pairs_scaled,
+        planted_clone_embeddings,
     )
     from data_lake_construction_and_querying_with_pyspark_spark.operators.similarity import (
         dot,
         with_norm,
     )
-    from data_lake_construction_and_querying_with_pyspark_spark.sources.readers import load_table
 
     from pyspark.sql import functions as F
 
     from tests.conftest import SF_SMOKE
 
+    planted = planted_clone_embeddings(spark, SF_SMOKE)
     reported = {
         (r.vec_a, r.vec_b): r.cosine
-        for r in dedup_embedding_cosine_pairs_demo_fixed_geometry(spark, SF_SMOKE).collect()
+        for r in embedding_cosine_pairs_scaled(spark, planted, tau=_SCALED_TAU).collect()
     }
     assert reported, "fixture should produce at least one near-dup pair"
-    e = with_norm(load_table(spark, SF_SMOKE, "embeddings"))
+    e = with_norm(planted)
     a = e.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("norm").alias("na"))
     b = e.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
     cosine = dot("va", "vb") / (F.col("na") * F.col("nb"))
@@ -134,7 +136,7 @@ def test_sign_band_cosine_pairs_no_false_positives(spark):
         for r in a.crossJoin(b)
         .filter(F.col("vec_a") < F.col("vec_b"))
         .select("vec_a", "vec_b", cosine.alias("cosine"))
-        .filter(F.col("cosine") > 0.4)
+        .filter(F.col("cosine") > _SCALED_TAU)
         .collect()
     }
     assert set(reported) <= set(brute)  # subset: no invented pairs

@@ -40,18 +40,3 @@ def test_query_matches_oracle(spark, duck, name):
     problems = compare(name, sdf, odf)
     assert not problems, problems
 
-
-def test_fixed_geometry_demo_matches_oracle(spark, duck):
-    """The deregistered geometry-contrast demo (r5, VERDICT r4
-    directive #4) keeps its exact-oracle pin here even though it no
-    longer occupies a registry slot — see docs/SCALING.md's worked
-    example for why its 256-key bands were demoted."""
-    from data_lake_construction_and_querying_with_pyspark_spark.operators.dedup import (
-        _oracle_cosine_pairs,
-        dedup_embedding_cosine_pairs_demo_fixed_geometry,
-    )
-
-    sdf = dedup_embedding_cosine_pairs_demo_fixed_geometry(spark, SF_SMOKE).toPandas()
-    odf = duck.execute(_oracle_cosine_pairs()).fetchdf()
-    problems = compare("dedup_embedding_cosine_pairs_demo_fixed_geometry", sdf, odf)
-    assert not problems, problems

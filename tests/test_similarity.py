@@ -32,12 +32,14 @@ def test_lsh_buckets_partition_corpus(spark):
     from pyspark.sql import functions as F
 
     from data_lake_construction_and_querying_with_pyspark_spark.operators.similarity import (
-        lsh_bucket,
+        lsh_multi_buckets_flat,
         with_norm,
     )
     from data_lake_construction_and_querying_with_pyspark_spark.sources.readers import load_table
 
-    e = lsh_bucket(with_norm(load_table(spark, SF_SMOKE, "embeddings")))
+    e = lsh_multi_buckets_flat(
+        with_norm(load_table(spark, SF_SMOKE, "embeddings")), n_tables=1, n_planes=8
+    )
     stats = e.agg(
         F.countDistinct("bucket").alias("n_buckets"),
         F.count(F.lit(1)).alias("n"),
@@ -47,7 +49,9 @@ def test_lsh_buckets_partition_corpus(spark):
     assert stats.n_buckets > 16  # 8 planes → up to 256 buckets
     assert 0 <= stats.min_b and stats.max_b < 256
     # determinism: same seed → same buckets
-    e2 = lsh_bucket(with_norm(load_table(spark, SF_SMOKE, "embeddings")))
+    e2 = lsh_multi_buckets_flat(
+        with_norm(load_table(spark, SF_SMOKE, "embeddings")), n_tables=1, n_planes=8
+    )
     assert e.select("vec_id", "bucket").exceptAll(e2.select("vec_id", "bucket")).count() == 0
 
 
