@@ -57,6 +57,12 @@ TAU = 0.4  # within-cluster cosine threshold (fixture has no natural 0.9+ pairs)
 SEM_NPROBE = 3  # coarse anchors probed per vector (docs/SCALING.md: best planted-pair recovery per cost at the 100k rung)
 IVF_MIN_CELLS = 16  # floor of the derived IVF cell count
 IVF_ITERS = 2  # Lloyd's iterations for the coarse quantizer
+IVF_NPROBE = 2  # cells probed per query
+# Above this, ivf_quantizer(train_on_sample=None) trains on the
+# md5-threshold sample instead of the full corpus (the
+# semantic_dedup_sampled move): the 1M rung is measured full-trained,
+# everything larger pays one corpus assignment instead of IVF_ITERS.
+_IVF_SAMPLE_TRAIN_MIN = 2_000_000
 
 
 def derive_k(n: int, k_floor: int = K_CELLS) -> int:
@@ -209,18 +215,34 @@ def _shortlist_lloyds_ctes(
     return ctes
 
 
+def _ivf_probes_sql(q: str) -> str:
+    """SQL replay of :func:`probe_cells`: the ``iprobes`` CTE of
+    (query_id, cell), each (query_id, qv) row of CTE ``q`` with its
+    ``IVF_NPROBE`` nearest cells of the final IVF centroid table
+    ``c{IVF_ITERS - 1}``, ordered by (d2, cell)."""
+    return f"""iprobes AS MATERIALIZED (
+        SELECT query_id, cell FROM (
+            SELECT q.query_id, c.cell,
+                   ROW_NUMBER() OVER (PARTITION BY q.query_id
+                       ORDER BY {_d2_sql('q.qv', 'c.cent')}, c.cell) AS crn
+            FROM {q} q, c{IVF_ITERS - 1} c) WHERE crn <= {IVF_NPROBE})"""
+
+
 # Imported HERE, not at the top of the file: similarity.py's module
-# body registers knn_ivf_pq with an oracle built from THIS module's
-# quantizer contract (IVF_ITERS / IVF_MIN_CELLS / SEM_NPROBE /
-# _shortlist_lloyds_ctes). Placing the similarity import after those
-# definitions makes the circular import safe in EITHER entry order —
-# importing semantic first used to die at similarity.py's registration
-# line because this module had only executed its header (the r7
-# test_semantic*-standalone failure; the full suite passed by
-# import-order luck via all_queries()).
+# body registers knn_pq_adc and knn_ivf_pq with oracles built from THIS
+# module's quantizer contract (_d2_sql / IVF_ITERS / IVF_MIN_CELLS /
+# SEM_NPROBE / _shortlist_lloyds_ctes / _ivf_probes_sql). Placing the
+# similarity import after those definitions makes the circular import
+# safe in EITHER entry order — importing semantic first used to die at
+# similarity.py's registration line because this module had only
+# executed its header (the r7 test_semantic*-standalone failure; the
+# full suite passed by import-order luck via all_queries()).
 from data_lake_construction_and_querying_with_pyspark_spark.operators.similarity import (  # noqa: E402
+    _N_QUERIES,
+    _TOP_K,
     as_double_vec,
     dot,
+    sq_dist,
 )
 
 
@@ -802,12 +824,17 @@ def shortlist_scorer(nprobe: int = SEM_NPROBE, broadcast_buckets: bool = True):
 
 
 def training_sample(
-    base: DataFrame, n: int, k: int, sample_per_cell: int = SAMPLE_PER_CELL
+    base: DataFrame,
+    n: int,
+    k: int,
+    sample_per_cell: int = SAMPLE_PER_CELL,
+    salt: str = "semsample:",
 ) -> DataFrame:
     """The deterministic ~``sample_per_cell·k``-vector training draw
-    shared by :func:`semantic_dedup_sampled` and the sampled IVF
-    quantizer trainers (``similarity.hard_negative_triplets_ivf``):
-    keep vec_id iff ``substr(md5('semsample:' || vec_id), 1, 4) <
+    shared by :func:`semantic_dedup_sampled`, the sampled IVF
+    quantizer (:func:`ivf_quantizer`) and the PQ codebooks
+    (``similarity.pq_train``, ``salt="pqsample:"``):
+    keep vec_id iff ``substr(md5(salt || vec_id), 1, 4) <
     thr_hex`` with ``thr = min(65536, target·65536 // n)`` — RNG-free,
     partitioning-independent, cross-engine replayable (fixed-width
     lowercase hex compares as its numeric value in both engines; the
@@ -821,7 +848,7 @@ def training_sample(
         return base
     return base.filter(
         F.substring(
-            F.md5(F.concat(F.lit("semsample:"), F.col("vec_id").cast("string"))),
+            F.md5(F.concat(F.lit(salt), F.col("vec_id").cast("string"))),
             1,
             4,
         )
@@ -892,43 +919,80 @@ def semantic_dedup_sampled(
     return mark_within_cell_dups(final, tau)
 
 
-IVF_NPROBE = 2  # cells probed per query
-IVF_N_QUERIES = 5  # vec_id < 5 are the demo query vectors (as knn_brute_force)
-IVF_TOP_K = 10
+def ivf_quantizer(
+    spark: SparkSession,
+    base: DataFrame,
+    n: int,
+    assign,
+    train_on_sample: bool | None,
+) -> tuple[DataFrame, DataFrame]:
+    """The one IVF coarse-quantizer build behind every IVF operator:
+    :func:`lloyds` with ``k = derive_k(n, IVF_MIN_CELLS)`` cells and
+    ``IVF_ITERS`` iterations over the ``(vec_id, v)`` frame ``base`` of
+    ``n`` vectors, scored by ``assign`` (a lloyds scorer). Returns
+    lloyds' ``(centroids, assigned)``.
+
+    ``train_on_sample`` moves the training passes onto
+    :func:`training_sample`'s md5-threshold draw, so the corpus pays
+    one assignment instead of ``IVF_ITERS``; ``None`` turns it on at
+    ≥ ``_IVF_SAMPLE_TRAIN_MIN`` vectors (the triplet miners' policy).
+    Below the saturation threshold the sample IS the corpus, so the two
+    paths are bit-identical by construction. ``False`` is the
+    full-corpus build the ``_shortlist_lloyds_ctes`` replays step
+    through."""
+    k = derive_k(n, IVF_MIN_CELLS)
+    if train_on_sample is None:
+        train_on_sample = n >= _IVF_SAMPLE_TRAIN_MIN
+    train = training_sample(base, n, k) if train_on_sample else base
+    if train is not base:
+        train = train.persist()
+    return lloyds(spark, base, k, IVF_ITERS, assign, train=train)
+
+
+def probe_cells(queries: DataFrame, centroids: DataFrame) -> DataFrame:
+    """The one IVF query probe: every ``(query_id, qv, …)`` row crossed
+    with the broadcast ``(cell, cent)`` table, keeping its
+    ``IVF_NPROBE`` nearest cells by (d2, cell) — the same d2 fold and
+    tie-break both engines evaluate (``_ivf_probes_sql`` is the SQL
+    replay). Queries are few, so flat scoring of all k centroids per
+    query is the right shape at any k. Returns the query columns plus
+    ``cell`` and ``cent``."""
+    w = Window.partitionBy("query_id").orderBy(F.asc("cd2"), F.asc("cell"))
+    return (
+        queries.crossJoin(F.broadcast(centroids))
+        .withColumn("cd2", sq_dist("qv", "cent"))
+        .withColumn("crn", F.row_number().over(w))
+        .filter(F.col("crn") <= IVF_NPROBE)
+        .drop("cd2", "crn")
+    )
 
 
 def _oracle_ivf() -> str:
     """Chained-CTE DuckDB replay of the deterministic IVF: the SAME
     shortlist-Lloyd's CTE chain as the SemDeDup oracle
     (``_shortlist_lloyds_ctes`` — quantizer build single-sourced, r4),
-    then per-query nprobe nearest cells by the identical d2 expression
-    over the FULL centroid table (queries are few — flat scoring of k
-    centroids per query is the right shape there), and exact-cosine
-    top-k inside the probed cells only."""
+    then the probe CTE shared with ``knn_ivf_pq``'s oracle
+    (``_ivf_probes_sql``), and exact-cosine top-k inside the probed
+    cells only."""
     ctes = _shortlist_lloyds_ctes(IVF_MIN_CELLS, None, IVF_ITERS, SEM_NPROBE)
     return f"""
     WITH {','.join(ctes)},
     nm AS (SELECT vec_id, v, cell,
                   sqrt(list_dot_product(v, v)) AS norm FROM a{IVF_ITERS}),
     q AS (SELECT vec_id AS query_id, v AS qv, norm AS qnorm
-          FROM nm WHERE vec_id < {IVF_N_QUERIES}),
-    probes AS (
-        SELECT query_id, cell FROM (
-            SELECT q.query_id, c.cell,
-                   ROW_NUMBER() OVER (PARTITION BY q.query_id
-                       ORDER BY {_d2_sql('q.qv', 'c.cent')}, c.cell) AS crn
-            FROM q, c{IVF_ITERS - 1} c) WHERE crn <= {IVF_NPROBE}),
+          FROM nm WHERE vec_id < {_N_QUERIES}),
+    {_ivf_probes_sql('q')},
     scored AS (
         SELECT q.query_id, n.vec_id AS neighbor_id,
                list_dot_product(q.qv, n.v) / (q.qnorm * n.norm) AS cosine,
                ROW_NUMBER() OVER (PARTITION BY q.query_id
                    ORDER BY list_dot_product(q.qv, n.v) / (q.qnorm * n.norm) DESC,
                             n.vec_id) AS rn
-        FROM probes p
+        FROM iprobes p
         JOIN nm n ON n.cell = p.cell
         JOIN q ON q.query_id = p.query_id
         WHERE n.vec_id <> q.query_id)
-    SELECT query_id, neighbor_id, cosine, rn FROM scored WHERE rn <= {IVF_TOP_K}
+    SELECT query_id, neighbor_id, cosine, rn FROM scored WHERE rn <= {_TOP_K}
     """
 
 
@@ -941,12 +1005,12 @@ def knn_ivf_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     as SemDeDup, so both engines derive identical cells, identical
     probes, and identical top-k).
 
-    Index build: k = max(16, n // 64) cells, 2 Lloyd's iterations,
-    assignment via the same coarse-anchor shortlist as semantic_dedup
-    (m = isqrt(k), nprobe = 3 — r4; the oracle replays it).
-    Query: each of the 5 demo vectors probes its IVF_NPROBE=2 nearest
-    centroids (same d2 expression + cell tie-break both engines) and
-    exact-cosine-reranks only those cells — ~nprobe/k of the corpus
+    Index build: :func:`ivf_quantizer` — k = max(16, n // 64) cells,
+    2 Lloyd's iterations, assignment via the same coarse-anchor
+    shortlist as semantic_dedup (m = isqrt(k), nprobe = 3 — r4; the
+    oracle replays it). Query: :func:`probe_cells` — each of the 5 demo
+    vectors probes its IVF_NPROBE=2 nearest centroids — then an
+    exact-cosine rerank of only those cells, ~nprobe/k of the corpus
     scanned per query instead of a full pass.
 
     Scale shape: assignment is corpus × broadcast(k centroids) with a
@@ -956,33 +1020,19 @@ def knn_ivf_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe partitions (partition pruning does the cell restriction for
     free)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    k = derive_k(emb.count(), IVF_MIN_CELLS)
     base = _with_vsq(
         emb.select("vec_id", as_double_vec(F.col("embedding")).alias("v"))
     ).persist()
-    # Quantizer build uses the SAME coarse-anchor shortlist Lloyd's as
-    # semantic_dedup. The QUERY path below stays flat — 5 queries × k
-    # centroids is trivial at any k — and probes the centroid table
-    # that produced the final assignment.
-    centroids, assigned = lloyds(spark, base, k, IVF_ITERS, shortlist_scorer())
+    centroids, assigned = ivf_quantizer(spark, base, emb.count(), shortlist_scorer(), False)
     # norm = sqrt(vsq): the assignment carried the squared norm through,
     # so no per-vector re-fold here (bit-identical — see _with_vsq).
     nm = assigned.withColumn("norm", F.sqrt(F.col("vsq"))).persist()
-    q = nm.filter(F.col("vec_id") < IVF_N_QUERIES).select(
+    q = nm.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
         F.col("norm").alias("qnorm"),
-        F.col("vsq").alias("qsq"),
     )
-    d2 = _d2_pre(F.col("qsq"), F.col("qv"), F.col("cent"), F.col("csq"))
-    wq = Window.partitionBy("query_id").orderBy(F.asc("cd2"), F.asc("cell"))
-    probes = (
-        q.crossJoin(F.broadcast(centroids.withColumn("csq", dot("cent", "cent"))))
-        .select("query_id", "qv", "qnorm", "cell", d2.alias("cd2"))
-        .withColumn("crn", F.row_number().over(wq))
-        .filter(F.col("crn") <= IVF_NPROBE)
-        .select("query_id", "qv", "qnorm", "cell")
-    )
+    probes = probe_cells(q, centroids).select("query_id", "qv", "qnorm", "cell")
     cosine = dot("qv", "v") / (F.col("qnorm") * F.col("norm"))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -991,7 +1041,7 @@ def knn_ivf_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("query_id") != F.col("vec_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"), cosine.alias("cosine"))
         .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= IVF_TOP_K)
+        .filter(F.col("rn") <= _TOP_K)
     )
 
 

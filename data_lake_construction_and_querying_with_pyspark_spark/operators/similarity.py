@@ -38,7 +38,7 @@ def dot(a, b) -> F.Column:
 def sq_dist(a, b) -> F.Column:
     """Squared euclidean distance as three sequential-fold dots, the
     left-associative ``(⟨a,a⟩ − 2⟨a,b⟩) + ⟨b,b⟩`` that the DuckDB
-    replays (``semantic._d2_sql``, ``_pq_d2``) evaluate bit-identically."""
+    replays (``semantic._d2_sql``) evaluate bit-identically."""
     return dot(a, a) - F.lit(2) * dot(a, b) + dot(b, b)
 
 
@@ -576,158 +576,110 @@ def _pq_slices(col: str) -> F.Column:
     )
 
 
-def _pq_subvectors(base: DataFrame) -> DataFrame:
-    """Long form (vec_id, j, sub) of every vector's subspace slices."""
-    return base.select("vec_id", _pq_slices("v").alias("j", "sub"))
-
-
-def _pq_literal_codebooks(spark: SparkSession, rows) -> DataFrame:
-    return spark.createDataFrame(
-        [(int(r["j"]), int(r["cell"]), [float(x) for x in r["cent"]]) for r in rows],
-        "j int, cell int, cent array<double>",
+def _pq_long(base: DataFrame) -> DataFrame:
+    """The PQ trainer's points: one ``(vec_id = src·PQ_M + j, j, v)``
+    row per (vector ``src``, subspace ``j``), ``v`` the j-th slice.
+    Ordering by this key is ordering by (src, j), so the
+    ``PQ_M·PQ_KSTAR`` lowest ids are the ``PQ_KSTAR`` lowest vectors'
+    slices and ``semantic._seed_centroids`` numbers codeword i of
+    subspace j as cell ``i·PQ_M + j``."""
+    return base.select(F.col("vec_id").alias("src"), _pq_slices("v").alias("j", "v")).select(
+        (F.col("src") * PQ_M + F.col("j")).alias("vec_id"), "j", "v"
     )
 
 
-def _pq_assign(subs: DataFrame, codebooks: DataFrame) -> DataFrame:
-    """Nearest codebook centroid per (vec_id, subspace): broadcast the
-    m·k* codebook table, fold d2 over 8 dims, map-side min_by collapse
-    — only n·m skinny rows reach the exchange."""
-    d2 = sq_dist("sub", "cent").alias("d2")
-    best = F.min_by(F.col("cell"), F.struct("d2", "cell")).alias("code")
+def _pq_assign(frame: DataFrame, centroids: DataFrame, m: int, step: int) -> DataFrame:
+    """The PQ codebook scorer for ``semantic.lloyds``: every
+    :func:`_pq_long` row against the ``PQ_KSTAR`` cells of its own
+    subspace (``j = cell % PQ_M``, broadcast equi-join), nearest by the
+    fold d2 with a map-side ``min_by`` over (d2, cell) — only one row
+    per point reaches the exchange. For a fixed j the composite cell
+    grows with the codeword, so the tie-break is the codeword's, as in
+    the ``_pq_ctes`` replay. ``m`` and ``step`` are unused."""
+    cents = centroids.withColumn("j", (F.col("cell") % PQ_M).cast("int"))
+    best = F.min_by(F.struct("cell", "v"), F.struct("d2", "cell")).alias("b")
     return (
-        subs.join(F.broadcast(codebooks), "j")
-        .select("vec_id", "j", "cell", d2)
-        .groupBy("vec_id", "j")
+        frame.join(F.broadcast(cents), "j")
+        .select("vec_id", "v", "cell", sq_dist("v", "cent").alias("d2"))
+        .groupBy("vec_id")
         .agg(best)
+        .select("vec_id", F.col("b.cell").alias("cell"), F.col("b.v").alias("v"))
     )
 
 
-def pq_train_codebooks(
-    spark: SparkSession,
-    base: DataFrame,
-    iters: int = PQ_ITERS,
-    sample_per_centroid: int = PQ_SAMPLE_PER_CENTROID,
-) -> DataFrame:
-    """Deterministic per-subspace codebooks: seeds are the PQ_KSTAR
-    lowest-vec_id subvectors (no RNG), updates are decimal-exact means
-    (the SemDeDup machinery's contract), training runs on an
-    md5-threshold sample (~sample_per_centroid·k* vectors) so codebook
-    cost is corpus-size-independent. All m subspaces train
-    SIMULTANEOUSLY in one keyed pipeline — the codebook table is
-    (j, cell, cent), m·k* = 128 rows, driver-materialized between
-    iterations like any distributed k-means."""
-    n = base.count()
-    target = min(n, PQ_KSTAR * sample_per_centroid)
-    thr = min(65536, (target * 65536) // max(1, n))
-    sample = (
-        base
-        if thr >= 65536
-        else base.filter(
-            F.substring(
-                F.md5(F.concat(F.lit("pqsample:"), F.col("vec_id").cast("string"))),
-                1,
-                4,
-            )
-            < format(thr, "04x")
-        )
+def pq_train(spark: SparkSession, base: DataFrame, n: int) -> tuple[DataFrame, DataFrame]:
+    """Deterministic per-subspace codebooks and the full-corpus codes
+    of the ``(vec_id, v)`` frame ``base`` of ``n`` vectors:
+    ``semantic.lloyds`` over the :func:`_pq_long` points with
+    ``k = PQ_M·PQ_KSTAR`` composite cells and :func:`_pq_assign` as
+    the scorer, so all m subspaces train
+    SIMULTANEOUSLY in one keyed pipeline. Seeds are the PQ_KSTAR
+    lowest-vec_id vectors' slices (no RNG), updates are lloyds'
+    decimal-exact means per composite cell, i.e. per (j, codeword), and
+    the ``PQ_ITERS`` training rounds run on ``semantic.training_sample``'s
+    md5-threshold draw (~PQ_SAMPLE_PER_CENTROID·PQ_KSTAR vectors, salt
+    ``pqsample:``), so codebook cost is corpus-size-independent. lloyds'
+    final assignment is the encode. Returns ``codebooks`` (j, code,
+    cent), m·k* = 128 rows, and ``codes`` (vec_id, j, code); ``_pq_ctes``
+    replays both."""
+    from data_lake_construction_and_querying_with_pyspark_spark.operators.semantic import (
+        lloyds,
+        training_sample,
     )
-    seeds = _pq_subvectors(base.orderBy("vec_id").limit(PQ_KSTAR)).select(
-        "j",
-        F.col("sub").alias("cent"),
-        (
-            F.row_number().over(
-                Window.partitionBy("j").orderBy("vec_id")
-            )
-            - 1
-        ).alias("cell"),
+
+    sample = training_sample(base, n, PQ_KSTAR, PQ_SAMPLE_PER_CENTROID, salt="pqsample:")
+    train = None if sample is base else _pq_long(sample).persist()
+    centroids, assigned = lloyds(
+        spark, _pq_long(base), PQ_M * PQ_KSTAR, PQ_ITERS + 1, _pq_assign, train=train
     )
-    codebooks = _pq_literal_codebooks(spark, seeds.collect())
-    subs_s = _pq_subvectors(sample).persist()
-    for _ in range(iters):
-        assigned = _pq_assign(subs_s, codebooks).join(
-            subs_s, ["vec_id", "j"]
-        )
-        means = (
-            assigned.select("j", F.col("code").alias("cell"), F.posexplode("sub").alias("pos", "val"))
-            .groupBy("j", "cell", "pos")
-            .agg(
-                (
-                    F.sum(F.col("val").cast("decimal(28,18)")).cast("double")
-                    / F.count(F.lit(1))
-                ).alias("m")
-            )
-            .groupBy("j", "cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
-                ).alias("cent")
-            )
-        )
-        codebooks = _pq_literal_codebooks(spark, means.collect())
-    return codebooks
+    j = (F.col("cell") % PQ_M).cast("int").alias("j")
+    code = F.expr(f"cell div {PQ_M}").cast("int")
+    codebooks = centroids.select(j, code.alias("code"), "cent")
+    codes = assigned.select(F.expr(f"vec_id div {PQ_M}").alias("vec_id"), j, code.alias("code"))
+    return codebooks, codes
 
 
-def pq_topk(
-    spark: SparkSession,
-    emb: DataFrame,
-    query_ids,
-    top_k: int = _TOP_K,
-) -> DataFrame:
-    """ANN top-k via PRODUCT QUANTIZATION with asymmetric distance
-    computation (Jégou et al. 2011, "Product Quantization for Nearest
-    Neighbor Search"): each vector is stored as m=8 4-bit codes (8
-    BYTES instead of 512 — the RAM-compression scale path; a 100 TB
-    embedding corpus's codes fit a few hundred GB and stay in memory),
-    and a query scores the whole corpus by summing m table lookups per
-    vector instead of a 64-dim dot product.
-
-    Plan: codebooks broadcast (m·k* = 128 rows); encoding is the same
-    map-side min_by assignment as training; the query-side distance
-    table (query × codebook → per-(j, cell) partial d2) is ~128 rows
-    per query, broadcast into an equi-join with the code table on
-    (j, cell); the per-(query, vec) sum is one partial-aggregated
-    exchange of n rows per query. The ADC top-k then gets an EXACT
-    cosine rerank (top_k·|queries| vectors — trivial), so emitted
-    cosines are true values, ranked by the approximate distance."""
-    base = emb.select("vec_id", as_double_vec(F.col("embedding")).alias("v")).persist()
-    codebooks = pq_train_codebooks(spark, base)
-    codes = _pq_assign(_pq_subvectors(base), codebooks)
-
-    queries = base.filter(F.col("vec_id").isin(list(query_ids))).select(
+def _query_rows(base: DataFrame, query_ids) -> DataFrame:
+    """(query_id, qv): the rows of ``base`` whose vec_id is a query."""
+    return base.filter(F.col("vec_id").isin(list(query_ids))).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    qsubs = queries.select("query_id", _pq_slices("qv").alias("j", "qsub"))
-    qd2 = sq_dist("qsub", "cent").alias("pd2")
-    qdist = qsubs.join(F.broadcast(codebooks), "j").select("query_id", "j", "cell", qd2)
 
+
+def _pq_distances(queries: DataFrame, codebooks: DataFrame, *keys: str) -> DataFrame:
+    """The per-query ADC lookup table: every ``(query_id, *keys, qv)``
+    row's PQ_M slices against its subspace's codewords, as
+    ``(query_id, *keys, j, code, pd2)`` — m·k* = 128 rows per query
+    row, small enough to broadcast into the join with the codes."""
+    return (
+        queries.select("query_id", *keys, _pq_slices("qv").alias("j", "qsub"))
+        .join(F.broadcast(codebooks), "j")
+        .select("query_id", *keys, "j", "code", sq_dist("qsub", "cent").alias("pd2"))
+    )
+
+
+def _adc_top_k(pd2: DataFrame, base: DataFrame) -> DataFrame:
+    """The tail every PQ scorer ends in. ``pd2`` holds one
+    ``(query_id, vec_id, pd2)`` row per (query, candidate, subspace);
+    the ADC distance is their decimal-exact sum (registry determinism
+    contract: the m=8 partial distances combine in partition order in
+    Spark and morsel order in DuckDB — decimal addition is associative,
+    so the oracle's SUM is bit-identical; one cast back to double).
+    A query is never its own candidate. Rank each query's candidates by
+    (adc_d2, vec_id), keep ``_TOP_K``, and attach the EXACT cosine from
+    ``base``'s raw vectors (top_k·|queries| rows — trivial), so emitted
+    cosines are true values ranked by the approximate distance. Output
+    (query_id, neighbor_id, cosine, adc_d2, rn); ``_PQ_ADC_RERANK`` is
+    its SQL replay."""
     adc = (
-        codes.join(
-            F.broadcast(qdist),
-            (codes["j"] == qdist["j"]) & (codes["code"] == qdist["cell"]),
-        )
-        .groupBy("query_id", "vec_id")
-        # Decimal-exact ADC sum (registry determinism contract): the m=8
-        # partial distances combine in partition order in Spark and
-        # morsel order in DuckDB — decimal addition is associative, so
-        # the oracle's SUM is bit-identical; one cast back to double.
+        pd2.groupBy("query_id", "vec_id")
         .agg(F.sum(F.col("pd2").cast("decimal(38,12)")).cast("double").alias("adc_d2"))
         .filter(F.col("query_id") != F.col("vec_id"))
     )
-    return _adc_top_k(adc, base, top_k)
-
-
-def _adc_top_k(adc: DataFrame, base: DataFrame, top_k: int) -> DataFrame:
-    """The tail every PQ scorer ends in: rank each query's
-    ``(query_id, vec_id, adc_d2)`` rows by (adc_d2, vec_id), keep
-    ``top_k``, and attach the EXACT cosine from ``base``'s raw vectors
-    (top_k·|queries| rows — trivial), so emitted cosines are true
-    values ranked by the approximate distance. Output (query_id,
-    neighbor_id, cosine, adc_d2, rn); ``_PQ_RERANK`` is its SQL
-    replay."""
     w = Window.partitionBy("query_id").orderBy(F.asc("adc_d2"), F.asc("vec_id"))
     top = (
         adc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_k)
+        .filter(F.col("rn") <= _TOP_K)
         .select("query_id", F.col("vec_id").alias("neighbor_id"), "adc_d2", "rn")
     )
     nm = base.select("vec_id", "v", F.sqrt(dot("v", "v")).alias("norm"))
@@ -745,31 +697,50 @@ def _adc_top_k(adc: DataFrame, base: DataFrame, top_k: int) -> DataFrame:
     )
 
 
-def _pq_d2(v: str, c: str) -> str:
-    """Same three-dot-product d2 shape as semantic._d2_sql (duplicated
-    two lines rather than imported — semantic.py imports this module at
-    top level, so the string helper can't come back the other way
-    without a cycle)."""
-    return (
-        f"list_dot_product({v},{v}) - 2*list_dot_product({v},{c})"
-        f" + list_dot_product({c},{c})"
-    )
+def pq_topk(spark: SparkSession, emb: DataFrame, query_ids) -> DataFrame:
+    """ANN top-10 via PRODUCT QUANTIZATION with asymmetric distance
+    computation (Jégou et al. 2011, "Product Quantization for Nearest
+    Neighbor Search"): each vector is stored as m=8 4-bit codes (8
+    BYTES instead of 512 — the RAM-compression scale path; a 100 TB
+    embedding corpus's codes fit a few hundred GB and stay in memory),
+    and a query scores the whole corpus by summing m table lookups per
+    vector instead of a 64-dim dot product.
+
+    Plan: :func:`pq_train` trains the codebooks (broadcast, m·k* = 128
+    rows) and encodes the corpus in the same ``semantic.lloyds`` run;
+    the query-side distance table (:func:`_pq_distances`, ~128 rows per
+    query) is broadcast into an equi-join with the code table on
+    (j, code); :func:`_adc_top_k` sums per (query, vec) in one
+    partial-aggregated exchange of n rows per query, ranks, and
+    reranks the top_k by EXACT cosine, so emitted cosines are true
+    values, ranked by the approximate distance."""
+    base = emb.select("vec_id", as_double_vec(F.col("embedding")).alias("v")).persist()
+    codebooks, codes = pq_train(spark, base, base.count())
+    qdist = _pq_distances(_query_rows(base, query_ids), codebooks)
+    return _adc_top_k(codes.join(F.broadcast(qdist), ["j", "code"]), base)
 
 
 def _pq_ctes(include_v: bool = True) -> list[str]:
-    """DuckDB CTE replay of the deterministic PQ pipeline — the
-    8-subspace twin of semantic's ``_shortlist_lloyds_ctes`` (ROADMAP
-    r6 #3): md5-threshold training sample, lowest-vec_id seeds split
-    into subvectors, ``PQ_ITERS`` decimal-exact per-subspace Lloyd's
-    updates, then full-corpus encoding and the per-query distance
-    table. Emits ``pcodes`` (vec_id, j, code) and ``pqdist``
-    (query_id, j, cell, pd2) for the caller's ADC stage. All
-    MATERIALIZED for the same reason as the semantic chain: plain CTEs
-    re-inline the whole Lloyd's prefix at every reference.
+    """DuckDB CTE replay of :func:`pq_train` and the query distance
+    table — the 8-subspace twin of semantic's ``_shortlist_lloyds_ctes``
+    (ROADMAP r6 #3): md5-threshold training sample, lowest-vec_id seeds
+    split into subvectors, ``PQ_ITERS`` decimal-exact per-(j, codeword)
+    Lloyd's updates, then full-corpus encoding and the per-query
+    distance table. It keeps (j, codeword) as two columns where the
+    Spark trainer packs them into one lloyds cell ``codeword·PQ_M + j``;
+    seeds, means and (d2, codeword) tie-breaks are the same. Emits
+    ``pcodes`` (vec_id, j, code) and ``pqdist`` (query_id, j, cell, pd2)
+    for the caller's ADC stage. All MATERIALIZED for the same reason as
+    the semantic chain: plain CTEs re-inline the whole Lloyd's prefix
+    at every reference.
 
     ``include_v=False`` composes with ``_shortlist_lloyds_ctes``,
     which already emits the shared ``v`` base CTE; every other name is
     ``p``-prefixed to stay collision-free."""
+    from data_lake_construction_and_querying_with_pyspark_spark.operators.semantic import (
+        _d2_sql,
+    )
+
     sd, m, ks = PQ_SUBDIM, PQ_M, PQ_KSTAR
     target_cap = PQ_KSTAR * PQ_SAMPLE_PER_CENTROID
 
@@ -784,7 +755,7 @@ def _pq_ctes(include_v: bool = True) -> list[str]:
         return f"""SELECT vec_id, j, cell AS code FROM (
             SELECT s.vec_id, s.j, c.cell,
                    ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.j
-                       ORDER BY {_pq_d2('s.sub', 'c.cent')}, c.cell) AS rn
+                       ORDER BY {_d2_sql('s.sub', 'c.cent')}, c.cell) AS rn
             FROM {sub_src} s JOIN {cb} c ON c.j = s.j) WHERE rn = 1"""
 
     ctes = (
@@ -828,13 +799,21 @@ def _pq_ctes(include_v: bool = True) -> list[str]:
         f"pq AS (SELECT vec_id AS query_id, v AS qv FROM v WHERE vec_id < {_N_QUERIES})",
         f"pqsub AS ({subs('pq', 'query_id', 'qv', 'sub')})",
         f"""pqdist AS MATERIALIZED (
-        SELECT s.query_id, c.j, c.cell, {_pq_d2('s.sub', 'c.cent')} AS pd2
+        SELECT s.query_id, c.j, c.cell, {_d2_sql('s.sub', 'c.cent')} AS pd2
         FROM pqsub s JOIN {final_cb} c ON c.j = s.j)""",
     ]
     return ctes
 
 
-_PQ_RERANK = f"""
+# SQL replay of _adc_top_k over the caller's ``ppd2`` CTE (query_id,
+# vec_id, pd2): decimal-exact ADC sum without self-matches, rank, and
+# exact cosine rerank on the top-k ids.
+_PQ_ADC_RERANK = f"""
+    padc AS MATERIALIZED (
+        SELECT query_id, vec_id,
+               CAST(SUM(CAST(pd2 AS DECIMAL(38,12))) AS DOUBLE) AS adc_d2
+        FROM ppd2 WHERE query_id <> vec_id
+        GROUP BY query_id, vec_id),
     ptop AS (SELECT query_id, vec_id AS neighbor_id, adc_d2, rn FROM (
         SELECT query_id, vec_id, adc_d2,
                ROW_NUMBER() OVER (PARTITION BY query_id
@@ -850,19 +829,15 @@ _PQ_RERANK = f"""
 
 def _oracle_pq() -> str:
     """Full PQ-ADC replay: codebook chain, full-corpus codes, per-query
-    distance tables, decimal-exact ADC sums (the same DECIMAL(38,12)
-    partial-sum contract the Spark builder applies), rank, and exact
-    cosine rerank on the top-k ids."""
+    distance tables, every code's lookup as a ``ppd2`` row, then the
+    shared ADC sum, rank and exact cosine rerank."""
     ctes = _pq_ctes(include_v=True)
     return f"""
     WITH {','.join(ctes)},
-    padc AS MATERIALIZED (
-        SELECT d.query_id, k.vec_id,
-               CAST(SUM(CAST(d.pd2 AS DECIMAL(38,12))) AS DOUBLE) AS adc_d2
-        FROM pcodes k JOIN pqdist d ON d.j = k.j AND d.cell = k.code
-        WHERE d.query_id <> k.vec_id
-        GROUP BY d.query_id, k.vec_id),
-    {_PQ_RERANK}
+    ppd2 AS (
+        SELECT d.query_id, k.vec_id, d.pd2
+        FROM pcodes k JOIN pqdist d ON d.j = k.j AND d.cell = k.code),
+    {_PQ_ADC_RERANK}
     """
 
 
@@ -880,88 +855,68 @@ def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_topk(spark, emb, query_ids=range(_N_QUERIES))
 
 
-IVFPQ_NPROBE = 2  # coarse cells probed per query (as knn_ivf_deterministic)
-
-
-def ivf_pq_topk(
-    spark: SparkSession,
-    emb: DataFrame,
-    query_ids,
-    nprobe: int = IVFPQ_NPROBE,
-    top_k: int = _TOP_K,
-) -> DataFrame:
-    """IVF-PQ — the full billion-scale ANN architecture (Jégou et al.
-    2011 §IV): a coarse quantizer restricts each query to ``nprobe``
-    inverted lists (~nprobe/k of the corpus), and PRODUCT-QUANTIZED
-    codes score those candidates by m table lookups apiece. The two
-    compressions compose: at 100 TB the inverted lists are partition
-    pruning (write the corpus partitioned by cell_id) and the codes
-    are the in-memory scan — 8 bytes/vector of the probed lists, no
-    raw-vector I/O until the final exact rerank of top_k ids.
-
-    Both trainings reuse the engine's deterministic machinery: the
-    coarse quantizer is the SemDeDup shortlist-Lloyd's build
-    (seed-by-lowest-id, decimal-exact means — the same construction
-    ``knn_ivf_deterministic`` oracle-replays), the codebooks are
-    ``pq_train_codebooks``'s md5-threshold-sampled per-subspace
-    k-means."""
+def _ivf_pq_topk(spark: SparkSession, emb: DataFrame, query_ids, residual: bool) -> DataFrame:
+    """The shared body of :func:`ivf_pq_topk` and
+    :func:`ivf_pq_residual_topk`: ``semantic.ivf_quantizer`` builds the
+    inverted lists, ``semantic.probe_cells`` picks each query's
+    ``IVF_NPROBE`` lists, :func:`pq_train` encodes the raw vectors or,
+    with ``residual``, their offsets ``v − q1(v)`` from their cell's
+    centroid (the query side then uses ``qv − centroid`` per probed
+    cell), and the ADC sum runs over the probed lists' codes only: the
+    per-(query, probed cell) distance tables join the codes on
+    (cell, j, code)."""
     from data_lake_construction_and_querying_with_pyspark_spark.operators.semantic import (
-        IVF_ITERS,
-        IVF_MIN_CELLS,
-        derive_k,
-        lloyds,
+        ivf_quantizer,
+        probe_cells,
         shortlist_scorer,
     )
 
     base = emb.select("vec_id", as_double_vec(F.col("embedding")).alias("v")).persist()
-    k_cells = derive_k(base.count(), IVF_MIN_CELLS)
-    centroids, assigned = lloyds(spark, base, k_cells, IVF_ITERS, shortlist_scorer())
+    n = base.count()
+    centroids, assigned = ivf_quantizer(spark, base, n, shortlist_scorer(), False)
     cells = assigned.select("vec_id", "cell")
+    probes = probe_cells(_query_rows(base, query_ids), centroids)
+    if residual:
 
-    codebooks = pq_train_codebooks(spark, base)
-    codes = _pq_assign(_pq_subvectors(base), codebooks).join(cells, "vec_id")
+        def offset(v: str) -> F.Column:
+            return F.zip_with(v, "cent", lambda x, c: x - c)
 
-    queries = base.filter(F.col("vec_id").isin(list(query_ids))).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    cd2 = sq_dist("qv", "cent").alias("cd2")
-    wq = Window.partitionBy("query_id").orderBy(F.asc("cd2"), F.asc("cell"))
-    probes = (
-        queries.crossJoin(F.broadcast(centroids))
-        .select("query_id", "qv", "cell", cd2)
-        .withColumn("crn", F.row_number().over(wq))
-        .filter(F.col("crn") <= nprobe)
-        .select("query_id", "cell")
-    )
-    qsubs = queries.select("query_id", _pq_slices("qv").alias("j", "qsub"))
-    pd2 = sq_dist("qsub", "cent").alias("pd2")
-    qdist = qsubs.join(F.broadcast(codebooks), "j").select("query_id", "j", "cell", pd2)
-
-    # restrict to probed inverted lists, THEN ADC-score the survivors
-    adc = (
-        codes.alias("c")
-        .join(F.broadcast(probes).alias("p"), F.col("c.cell") == F.col("p.cell"))
-        .join(
-            F.broadcast(qdist).alias("q"),
-            (F.col("c.j") == F.col("q.j"))
-            & (F.col("c.code") == F.col("q.cell"))
-            & (F.col("p.query_id") == F.col("q.query_id")),
+        encoded = (
+            base.join(cells, "vec_id")
+            .join(F.broadcast(centroids), "cell")
+            .select("vec_id", offset("v").alias("v"))
+            .persist()
         )
-        .groupBy(F.col("p.query_id").alias("query_id"), F.col("c.vec_id").alias("vec_id"))
-        # Decimal-exact ADC sum — same cross-engine contract as pq_topk.
-        .agg(F.sum(F.col("pd2").cast("decimal(38,12)")).cast("double").alias("adc_d2"))
-        .filter(F.col("query_id") != F.col("vec_id"))
+        probes = probes.select("query_id", "cell", offset("qv").alias("qv"))
+    else:
+        encoded = base
+    codebooks, codes = pq_train(spark, encoded, n)
+    qdist = _pq_distances(probes, codebooks, "cell")
+    return _adc_top_k(
+        codes.join(cells, "vec_id").join(F.broadcast(qdist), ["cell", "j", "code"]), base
     )
-    return _adc_top_k(adc, base, top_k)
 
 
-def ivf_pq_residual_topk(
-    spark: SparkSession,
-    emb: DataFrame,
-    query_ids,
-    nprobe: int = IVFPQ_NPROBE,
-    top_k: int = _TOP_K,
-) -> DataFrame:
+def ivf_pq_topk(spark: SparkSession, emb: DataFrame, query_ids) -> DataFrame:
+    """IVF-PQ — the full billion-scale ANN architecture (Jégou et al.
+    2011 §IV): a coarse quantizer restricts each query to
+    ``semantic.IVF_NPROBE`` inverted lists (~nprobe/k of the corpus),
+    and PRODUCT-QUANTIZED codes score those candidates by m table
+    lookups apiece. The two compressions compose: at 100 TB the
+    inverted lists are partition pruning (write the corpus partitioned
+    by cell_id) and the codes are the in-memory scan — 8 bytes/vector
+    of the probed lists, no raw-vector I/O until the final exact rerank
+    of top_k ids.
+
+    Both trainings are ``semantic.lloyds`` runs: the coarse quantizer
+    is ``semantic.ivf_quantizer`` (the SemDeDup shortlist-Lloyd's
+    build that ``knn_ivf_deterministic`` oracle-replays), the codebooks
+    are :func:`pq_train`'s md5-threshold-sampled per-subspace k-means.
+    Body: :func:`_ivf_pq_topk`."""
+    return _ivf_pq_topk(spark, emb, query_ids, residual=False)
+
+
+def ivf_pq_residual_topk(spark: SparkSession, emb: DataFrame, query_ids) -> DataFrame:
     """IVFADC proper (Jégou et al. 2011 §IV.A): product-quantize the
     RESIDUAL ``r = v − q1(v)`` instead of the raw vector. The coarse
     centroid already explains the vector's position in space, so the
@@ -974,94 +929,31 @@ def ivf_pq_residual_topk(
     that contract.
 
     Cost shape vs ``ivf_pq_topk``: identical corpus passes (coarse
-    build, one residual projection riding the encode scan) with ONE
-    extra small table — the per-(query, probed-cell) distance tables
-    are nprobe× the flat version's, still
+    build, one residual projection riding the encode scan) and the
+    same per-(query, probed-cell) distance tables,
     queries·nprobe·m·k* ≈ tiny, broadcast. At 100 TB: inverted lists
     as partition pruning, 8-byte codes as the scan, residual
-    geometry for free."""
-    from data_lake_construction_and_querying_with_pyspark_spark.operators.semantic import (
-        IVF_ITERS,
-        IVF_MIN_CELLS,
-        derive_k,
-        lloyds,
-        shortlist_scorer,
-    )
-
-    base = emb.select("vec_id", as_double_vec(F.col("embedding")).alias("v")).persist()
-    k_cells = derive_k(base.count(), IVF_MIN_CELLS)
-    centroids, assigned = lloyds(spark, base, k_cells, IVF_ITERS, shortlist_scorer())
-    cells = assigned.select("vec_id", "cell")
-
-    # residuals: one broadcast join + zip_with projection on the scan
-    residual = F.zip_with("v", "cent", lambda x, c: x - c).alias("v")
-    rbase = (
-        base.join(cells, "vec_id")
-        .join(F.broadcast(centroids), "cell")
-        .select("vec_id", "cell", residual)
-        .persist()
-    )
-    codebooks = pq_train_codebooks(spark, rbase.select("vec_id", "v"))
-    codes = _pq_assign(_pq_subvectors(rbase.select("vec_id", "v")), codebooks).join(
-        cells, "vec_id"
-    )
-
-    queries = base.filter(F.col("vec_id").isin(list(query_ids))).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    cd2 = sq_dist("qv", "cent").alias("cd2")
-    wq = Window.partitionBy("query_id").orderBy(F.asc("cd2"), F.asc("cell"))
-    probes = (
-        queries.crossJoin(F.broadcast(centroids))
-        .select("query_id", "qv", "cell", "cent", cd2)
-        .withColumn("crn", F.row_number().over(wq))
-        .filter(F.col("crn") <= nprobe)
-        .select("query_id", "qv", "cell", "cent")
-    )
-    # per-(query, probed cell) RESIDUAL distance tables: the query's
-    # residual differs per probed cell, so the table carries the cell
-    # key — still queries·nprobe·m·k* rows, broadcast
-    qres = probes.select(
-        "query_id",
-        "cell",
-        F.zip_with("qv", "cent", lambda x, c: x - c).alias("qr"),
-    )
-    qsubs = qres.select("query_id", "cell", _pq_slices("qr").alias("j", "qsub"))
-    pd2 = sq_dist("qsub", "cent").alias("pd2")
-    qdist = (
-        qsubs.join(F.broadcast(codebooks.withColumnRenamed("cell", "code")), "j")
-        .select("query_id", F.col("cell").alias("pcell"), "j", "code", pd2)
-    )
-
-    adc = (
-        codes.alias("c")
-        .join(
-            F.broadcast(qdist).alias("q"),
-            (F.col("c.cell") == F.col("q.pcell"))
-            & (F.col("c.j") == F.col("q.j"))
-            & (F.col("c.code") == F.col("q.code")),
-        )
-        .groupBy(F.col("q.query_id").alias("query_id"), F.col("c.vec_id").alias("vec_id"))
-        .agg(F.sum(F.col("pd2").cast("decimal(38,12)")).cast("double").alias("adc_d2"))
-        .filter(F.col("query_id") != F.col("vec_id"))
-    )
-    return _adc_top_k(adc, base, top_k)
+    geometry for free. Body: :func:`_ivf_pq_topk`."""
+    return _ivf_pq_topk(spark, emb, query_ids, residual=True)
 
 
 def _oracle_ivf_pq() -> str:
     """Composed replay: the shared shortlist-Lloyd's chain builds the
     coarse quantizer (identical to the knn_ivf_deterministic oracle —
     one generator, ``semantic._shortlist_lloyds_ctes``), the PQ chain
-    builds codes and query distance tables over the same ``v``, then
-    the ADC sum runs only inside each query's ``IVFPQ_NPROBE`` probed
-    cells. Imported lazily: semantic.py imports this module at top
-    level, and by the time this registration line executes the names
-    semantic needs (``as_double_vec``/``dot``) are already bound, so
-    the one-way late import is cycle-safe in either import order."""
+    builds codes and query distance tables over the same ``v``, the
+    shared ``semantic._ivf_probes_sql`` picks each query's probed
+    cells, and the ADC rows come only from codes inside them.
+    Imported lazily: semantic.py imports this module at top level, and
+    by the time this registration line executes the names semantic
+    needs (``as_double_vec``/``dot``/``sq_dist``/``_N_QUERIES``/
+    ``_TOP_K``) are already bound, so the one-way late import is
+    cycle-safe in either import order."""
     from data_lake_construction_and_querying_with_pyspark_spark.operators.semantic import (
         IVF_ITERS,
         IVF_MIN_CELLS,
         SEM_NPROBE,
+        _ivf_probes_sql,
         _shortlist_lloyds_ctes,
     )
 
@@ -1069,23 +961,15 @@ def _oracle_ivf_pq() -> str:
     ctes += _pq_ctes(include_v=False)
     return f"""
     WITH {','.join(ctes)},
-    iprobes AS MATERIALIZED (
-        SELECT query_id, cell FROM (
-            SELECT q.query_id, c.cell,
-                   ROW_NUMBER() OVER (PARTITION BY q.query_id
-                       ORDER BY {_pq_d2('q.qv', 'c.cent')}, c.cell) AS crn
-            FROM pq q, c{IVF_ITERS - 1} c) WHERE crn <= {IVFPQ_NPROBE}),
-    padc AS MATERIALIZED (
-        SELECT p.query_id, k.vec_id,
-               CAST(SUM(CAST(d.pd2 AS DECIMAL(38,12))) AS DOUBLE) AS adc_d2
+    {_ivf_probes_sql('pq')},
+    ppd2 AS (
+        SELECT p.query_id, k.vec_id, d.pd2
         FROM pcodes k
         JOIN a{IVF_ITERS} cells ON cells.vec_id = k.vec_id
         JOIN iprobes p ON p.cell = cells.cell
         JOIN pqdist d ON d.j = k.j AND d.cell = k.code
-                     AND d.query_id = p.query_id
-        WHERE p.query_id <> k.vec_id
-        GROUP BY p.query_id, k.vec_id),
-    {_PQ_RERANK}
+                     AND d.query_id = p.query_id),
+    {_PQ_ADC_RERANK}
     """
 
 
@@ -1127,11 +1011,6 @@ _NEG_SEED = 424_243
 # candidate join the dedup ladder runs — measured 396.6 s @1M with
 # 50 000/50 000 anchor coverage, vs ~10 500 s extrapolated coarse).
 _NEG_POOL_SWITCH = 500_000
-# Above this, hard_negative_triplets_ivf trains its coarse quantizer
-# on the md5-threshold sample instead of the full corpus (the
-# semantic_dedup_sampled move): the 1M rung is measured full-trained,
-# everything larger pays one corpus assignment instead of IVF_ITERS.
-_IVF_SAMPLE_TRAIN_MIN = 2_000_000
 
 
 def neg_pool_geometry(n_docs: int) -> "tuple[int, int]":
@@ -1267,45 +1146,33 @@ def hard_negative_triplets_ivf(
     ``broadcast_buckets=False`` selects the shuffled shortlist
     assignment (the measured 10M broadcast-ceiling escape, semantic.py).
     ``train_on_sample`` moves the Lloyd's TRAINING passes onto the
-    deterministic md5-threshold draw (``semantic.training_sample`` —
-    the same corpus-size-independent trick as
-    ``semantic_dedup_sampled``), so the corpus pays ONE shortlist
-    assignment instead of ``IVF_ITERS``; ``None`` auto-enables it at
-    ≥ ``_IVF_SAMPLE_TRAIN_MIN`` docs (above the measured full-train 1M
-    rung), and below the saturation threshold the sample IS the corpus
-    so the two paths are bit-identical by construction.
+    deterministic md5-threshold draw (``semantic.ivf_quantizer`` — the
+    same corpus-size-independent trick as ``semantic_dedup_sampled``),
+    so the corpus pays ONE shortlist assignment instead of
+    ``IVF_ITERS``; ``None`` auto-enables it at
+    ≥ ``semantic._IVF_SAMPLE_TRAIN_MIN`` docs (above the measured
+    full-train 1M rung), and below the saturation threshold the sample
+    IS the corpus so the two paths are bit-identical by construction.
     Coverage note: an anchor alone in its cell emits no triplet — the
     same honest approximate semantics as the band pools; at ≥1M docs
     cell population makes that vanishingly rare."""
     from pyspark import StorageLevel
 
     from data_lake_construction_and_querying_with_pyspark_spark.operators.semantic import (
-        IVF_ITERS,
-        IVF_MIN_CELLS,
-        derive_k,
-        lloyds,
+        ivf_quantizer,
         shortlist_scorer,
-        training_sample,
     )
 
     e = with_norm(fan_out_small_scan(emb, "vec_id")).persist(StorageLevel.MEMORY_AND_DISK)
     pos = _positive_pairs(e, n_tables, n_planes, tau)
 
     base = e.select("vec_id", "v")
-    n = base.count()
-    k_cells = derive_k(n, IVF_MIN_CELLS)
-    if train_on_sample is None:
-        train_on_sample = n >= _IVF_SAMPLE_TRAIN_MIN
-    train = training_sample(base, n, k_cells) if train_on_sample else base
-    if train is not base:
-        train = train.persist(StorageLevel.MEMORY_AND_DISK)
-    _, assigned = lloyds(
+    _, assigned = ivf_quantizer(
         spark,
         base,
-        k_cells,
-        IVF_ITERS,
+        base.count(),
         shortlist_scorer(broadcast_buckets=broadcast_buckets),
-        train=train,
+        train_on_sample,
     )
     cells = assigned.select("vec_id", "cell")
 

@@ -19,7 +19,7 @@ replaces every fold scorer:
 * positives: the per-bucket GEMM pair scan
   (``dedup_vectorized.embedding_cosine_pairs_vectorized`` — identical
   pair semantics to ``similarity._positive_pairs``);
-* quantizer training + full assignment: ``semantic.lloyds`` scored by
+* quantizer training + full assignment: ``semantic.ivf_quantizer`` scored by
   ``semantic_vectorized.shortlist_assign_vectorized`` (broadcast
   centroid index, in-place assignment, zero shuffle — the salted-join
   skew surface is gone, not salted);
@@ -53,19 +53,14 @@ from data_lake_construction_and_querying_with_pyspark_spark.operators.dedup_vect
     table_waves,
 )
 from data_lake_construction_and_querying_with_pyspark_spark.operators.semantic import (
-    IVF_ITERS,
-    IVF_MIN_CELLS,
     SEM_NPROBE,
-    derive_k,
-    lloyds,
-    training_sample,
+    ivf_quantizer,
 )
 from data_lake_construction_and_querying_with_pyspark_spark.operators.semantic_vectorized import (
     shortlist_assign_vectorized,
 )
 from data_lake_construction_and_querying_with_pyspark_spark.operators.similarity import (
     _GRAPH_TOP_K,
-    _IVF_SAMPLE_TRAIN_MIN,
     as_double_vec,
 )
 from data_lake_construction_and_querying_with_pyspark_spark.registry import register
@@ -331,7 +326,8 @@ def hard_negative_triplets_ivf_vectorized(
     maxes is the single-pass max, so the output is value-identical.
     Waves stage through ``dedup_vectorized.stage_waves`` (its
     ``scratch_dir`` caveats apply); the quantizer is
-    ``semantic.lloyds`` with the vectorized shortlist as its scorer."""
+    ``semantic.ivf_quantizer`` with the vectorized shortlist as its
+    scorer."""
 
     def pairs_for(tables):
         return embedding_cosine_pairs_vectorized(
@@ -354,18 +350,11 @@ def hard_negative_triplets_ivf_vectorized(
     )
 
     base = emb.select("vec_id", as_double_vec(F.col("embedding")).alias("v")).persist()
-    n = base.count()
-    k_cells = derive_k(n, IVF_MIN_CELLS)
-    if train_on_sample is None:
-        train_on_sample = n >= _IVF_SAMPLE_TRAIN_MIN
-    train = training_sample(base, n, k_cells) if train_on_sample else base
-    if train is not base:
-        train = train.persist()
 
     def assign(frame, centroids, m, step):
         return shortlist_assign_vectorized(spark, frame, centroids, m, SEM_NPROBE)
 
-    _, assigned = lloyds(spark, base, k_cells, IVF_ITERS, assign, train=train)
+    _, assigned = ivf_quantizer(spark, base, base.count(), assign, train_on_sample)
 
     neg = hardest_negatives_per_cell(assigned, tau)
     return pos.join(neg, "anchor_id")

@@ -53,10 +53,6 @@ _DEFAULTS = {
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64KB",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # The driver's events table carries INT64 TIMESTAMP(NANOS) which
-    # Spark's parquet reader rejects; read as long and convert in the
-    # events reader (ns values are exact multiples of 1000 here).
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Python Data Source filter pushdown (off by default in Spark 4.1):
     # lets the acid_table format's pushFilters() turn df.filter(...)
     # into log-level file skipping (sources/acid_source.py).

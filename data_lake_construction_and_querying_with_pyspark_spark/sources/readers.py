@@ -115,8 +115,8 @@ def read_events(spark: SparkSession, path: str) -> DataFrame:
     Spark's parquet reader rejects nanosecond timestamps outright
     (PARQUET_TYPE_ILLEGAL); with ``spark.sql.legacy.parquet.nanosAsLong``
     the column lands as epoch-nanos long, which we convert to a proper
-    timestamp. The conf is runtime-settable, so we set it here rather
-    than relying on a session-builder default — the reader must be
+    timestamp. The conf is runtime-settable, so this reader is the one
+    place the engine sets it, not a session-builder default — the reader must be
     self-sufficient under ANY caller-provided SparkSession, not just
     ones built by :func:`..session.get_spark`. The driver's generator
     emits exact microsecond multiples, so the ns→µs division is
@@ -124,10 +124,7 @@ def read_events(spark: SparkSession, path: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass  # unknown conf on some future Spark: fall through to plain read
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)
     if dict(df.dtypes).get("ts") == "bigint":
         # Integer division: `/` on longs goes through double, and epoch

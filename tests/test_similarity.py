@@ -150,22 +150,19 @@ def test_pq_codes_are_compact_and_complete(spark):
     from data_lake_construction_and_querying_with_pyspark_spark.operators.similarity import (
         PQ_KSTAR,
         PQ_M,
-        _pq_assign,
-        _pq_subvectors,
         as_double_vec,
-        pq_train_codebooks,
+        pq_train,
     )
     from pyspark.sql import functions as F
 
     emb = build_embeddings(spark, 500)
     base = emb.select("vec_id", as_double_vec(F.col("embedding")).alias("v"))
-    cb = pq_train_codebooks(spark, base)
+    cb, codes = pq_train(spark, base, base.count())
     # dead centroids may drop during training (no sample member
     # assigned — standard Lloyd's); every subspace keeps ≥2 live cells
     per_j = {r["j"]: r["c"] for r in cb.groupBy("j").agg(F.count(F.lit(1)).alias("c")).collect()}
     assert set(per_j) == set(range(PQ_M))
     assert all(2 <= c <= PQ_KSTAR for c in per_j.values())
-    codes = _pq_assign(_pq_subvectors(base), cb)
     stats = codes.groupBy("vec_id").agg(
         F.count(F.lit(1)).alias("m"),
         F.min("code").alias("lo"),
@@ -176,6 +173,37 @@ def test_pq_codes_are_compact_and_complete(spark):
     ).count()
     spark.catalog.clearCache()
     assert bad == 0
+
+
+def test_pq_seed_cells_decode_to_lowest_vectors_slices(spark):
+    """The PQ trainer's key encoding: on the long form (vec_id =
+    src·PQ_M + j), lloyds' seed table is the PQ_KSTAR lowest vectors'
+    slices with codeword i of subspace j at cell i·PQ_M + j — the
+    seeds the DuckDB replay (``_pq_ctes``' pcb0) numbers per subspace."""
+    from scripts.scale_probe import build_embeddings
+    from data_lake_construction_and_querying_with_pyspark_spark.operators.semantic import lloyds
+    from data_lake_construction_and_querying_with_pyspark_spark.operators.similarity import (
+        PQ_KSTAR,
+        PQ_M,
+        PQ_SUBDIM,
+        _pq_assign,
+        _pq_long,
+        as_double_vec,
+    )
+    from pyspark.sql import functions as F
+
+    emb = build_embeddings(spark, 100).filter(F.col("vec_id") % 3 != 0)
+    base = emb.select("vec_id", as_double_vec(F.col("embedding")).alias("v"))
+    cents, _ = lloyds(spark, _pq_long(base), PQ_M * PQ_KSTAR, 1, _pq_assign)
+    lowest = base.orderBy("vec_id").limit(PQ_KSTAR).collect()
+    assert len(lowest) == PQ_KSTAR
+    want = {
+        i * PQ_M + j: [float(x) for x in r["v"][j * PQ_SUBDIM : (j + 1) * PQ_SUBDIM]]
+        for i, r in enumerate(lowest)
+        for j in range(PQ_M)
+    }
+    got = {r["cell"]: [float(x) for x in r["cent"]] for r in cents.collect()}
+    assert got == want
 
 
 def test_ivf_pq_recovers_planted_clones(spark):
@@ -355,8 +383,10 @@ def test_ivf_miner_sample_training(spark):
         _SCALED_TAU,
         _SCALED_TABLES,
     )
-    from data_lake_construction_and_querying_with_pyspark_spark.operators.similarity import (
+    from data_lake_construction_and_querying_with_pyspark_spark.operators.semantic import (
         _IVF_SAMPLE_TRAIN_MIN,
+    )
+    from data_lake_construction_and_querying_with_pyspark_spark.operators.similarity import (
         as_double_vec,
         hard_negative_triplets_ivf,
     )
