@@ -8,13 +8,11 @@ reference capability: arbitrary SQL pass-through, reference
 ``scripts/aws-hackathon-glue-data-lake-querying-pyspark.py:113``).
 That split is the 100 TB shape: the expensive part (fact scan + joins
 + edge aggregation) is one distributed pass whose output is
-vocabulary-sized (≤ |nations|² rows), and the iterative part runs on
-the tiny aggregated graph — iteration cost is INDEPENDENT of corpus
-size. For billion-vertex graphs the same loop runs unchanged with the
-rank table staying distributed; each iteration is one equi-join +
-keyed aggregate (the standard Pregel-as-dataframes shape), with
-``localCheckpoint`` truncating lineage exactly as
-``dedup_cluster_assignment`` does.
+vocabulary-sized (≤ |nations|² = 625 rows on ANY input, because edges
+are grouped by nation pair), and the iterative part runs on the
+driver over that collected edge list — iteration cost is INDEPENDENT
+of corpus size, and no input makes the graph large enough to need a
+distributed rank loop.
 
 Determinism contract (how an ITERATIVE float algorithm stays
 cross-engine hash-identical):
@@ -29,9 +27,9 @@ cross-engine hash-identical):
   order-independent so partition count can't move the result).
 * Dangling mass, the teleport term, and the damping combine in a
   fixed chain of individually-rounded double ops written identically
-  in the Spark builder and the SQL oracle.
-* Three fixed iterations, unrolled in both engines (the oracle is a
-  chained-CTE replay, like the SemDeDup k-means oracle).
+  in the driver loop and the SQL oracle.
+* Three fixed iterations: a driver loop here, unrolled in the oracle
+  (a chained-CTE replay, like the SemDeDup k-means oracle).
 """
 
 from __future__ import annotations
@@ -107,23 +105,16 @@ def _oracle_iteration(k: int) -> str:
     """
     ),
 )
-def pagerank_trade_network(
-    spark: SparkSession, sf_dir: str, driver_gate: int = 1_000_000
-) -> DataFrame:
+def pagerank_trade_network(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank (d=0.85, 3 unrolled iterations, dangling-mass
     redistribution) over the nation trade graph aggregated from the
     fact tables. See module docstring for the scale split and the
     cross-engine determinism contract.
 
-    r11 optimization (guide §1.2 "the distributed algorithm" / §5 "the
-    driver should do almost no data work — but vocabulary-sized state
-    is not data work"): the expensive distributed pass (fact scan +
-    joins + edge aggregation) is unchanged, but when the aggregated
-    graph is at or under ``driver_gate`` edges the three iterations run
-    on the DRIVER over the collected (src, dst, wn) list instead of as
-    3 localCheckpoint-materialized Spark jobs plus per-iteration
-    broadcast/aggregate jobs — measured 51 Spark jobs → 6 for a
-    25-node graph, with iteration arithmetic replicated bit-for-bit:
+    The distributed pass (fact scan + joins + edge aggregation) ends in
+    ONE collect of the ≤|nations|² normalized edges (src, dst, wn); the
+    three iterations then run on the driver with the oracle's
+    arithmetic replicated bit-for-bit:
 
     * ``rank·wn`` / the teleport-damping chain are plain IEEE-double
       ops — Python floats ARE doubles, same ops, same order.
@@ -132,21 +123,14 @@ def pagerank_trade_network(
       ``Decimal(repr(x)).quantize(1e-12, HALF_UP)`` is the same
       construction (repr is the same shortest round-trip string) —
       verified exhaustively on 2M random doubles (zero mismatches,
-      both cast directions; OPTIMIZATION_r11.md). JDK sensitivity
-      (r12, ADVICE r11 #4): the repr↔Double.toString agreement was
-      sampled on JDK17, and Double.toString switched algorithms (Ryū)
-      in JDK19 — both still emit the shortest round-trip decimal, but
-      the equality is additionally PINNED on the fixture by
-      tests/test_retrieval_graph.py's gated-vs-distributed bitwise
-      test, which fails loudly on any runtime whose formatting
-      diverges near a HALF_UP boundary.
+      both cast directions; OPTIMIZATION_r11.md). The equality is
+      pinned on the fixture by the hash-exact DuckDB oracle test
+      (tests/test_queries_oracle.py), which fails loudly on any
+      runtime whose formatting diverges near a HALF_UP boundary.
     * Decimal sums are exact in both engines (context precision 60
-      here, far above the 38-digit type).
+      here, far above the 38-digit type)."""
+    from decimal import ROUND_HALF_UP, Decimal, localcontext
 
-    This is the ``connected_components`` driver-gate precedent applied
-    to the rank loop: the graph is ≤ |nations|² rows by construction,
-    so even at 100 TB the collected state is KBs. Graphs above the
-    gate keep the distributed loop (``driver_gate=0`` forces it)."""
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
@@ -168,103 +152,40 @@ def pagerank_trade_network(
         .join(n2, F.col("c_nationkey") == F.col("c_nkey"))
         .groupBy("src", "dst")
         .agg(F.sum(volume).alias("w"))
-        .persist()
     )
     outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
-    enorm = (
+    erows = (
         edges.join(outw, "src")
         .select("src", "dst", (F.col("w").cast("double") / F.col("ow").cast("double")).alias("wn"))
-        .persist()
+        .collect()
     )
-    # Gate via limit(gate+1): when the graph fits, this IS the full edge
-    # list (limit of a ≤gate-row relation returns every row), so the
-    # gate check and the collect are ONE action instead of count+collect.
-    erows = enorm.limit(driver_gate + 1).collect()
-    if len(erows) <= driver_gate:
-        # Driver replay of the 3 iterations (see docstring): one collect
-        # of the ≤|nations|² normalized edge list replaces ~45 tiny
-        # Spark jobs. Arithmetic is the distributed loop's, op for op.
-        from decimal import ROUND_HALF_UP, Decimal, localcontext
-        nodes_l = sorted({r["src"] for r in erows} | {r["dst"] for r in erows})
-        srcs = {r["src"] for r in erows}
-        n = len(nodes_l)
-        q12 = Decimal("1e-12")
-        with localcontext() as ctx:
-            ctx.prec = 60
 
-            def dec12(x: float) -> Decimal:
-                # Spark Cast(double → DECIMAL(38,12)): shortest decimal
-                # repr, then HALF_UP at 12 fractional digits.
-                return Decimal(repr(x)).quantize(q12, rounding=ROUND_HALF_UP)
+    nodes_l = sorted({r["src"] for r in erows} | {r["dst"] for r in erows})
+    srcs = {r["src"] for r in erows}
+    n = len(nodes_l)
+    q12 = Decimal("1e-12")
+    with localcontext() as ctx:
+        ctx.prec = 60
 
-            rank = {nd: 1.0 / n for nd in nodes_l}
-            for _ in range(_N_ITER):
-                inflow_sum: dict = {}
-                for r in erows:
-                    term = dec12(rank[r["src"]] * r["wn"])
-                    inflow_sum[r["dst"]] = inflow_sum.get(r["dst"], Decimal(0)) + term
-                dang_terms = [dec12(rank[nd]) for nd in nodes_l if nd not in srcs]
-                dm = float(sum(dang_terms, Decimal(0))) if dang_terms else 0.0
-                inflow = {d: float(s) for d, s in inflow_sum.items()}
-                rank = {
-                    nd: _TELEPORT / n
-                    + _DAMP * (inflow.get(nd, 0.0) + dm / n)
-                    for nd in nodes_l
-                }
-        edges.unpersist()
-        enorm.unpersist()
-        return spark.createDataFrame(
-            [(nd, rank[nd]) for nd in nodes_l], "nation string, pagerank double"
-        )
+        def dec12(x: float) -> Decimal:
+            # Spark Cast(double → DECIMAL(38,12)): shortest decimal
+            # repr, then HALF_UP at 12 fractional digits.
+            return Decimal(repr(x)).quantize(q12, rounding=ROUND_HALF_UP)
 
-    nodes = (
-        edges.select(F.col("src").alias("nation"))
-        .union(edges.select(F.col("dst").alias("nation")))
-        .distinct()
-        .persist()
+        rank = {nd: 1.0 / n for nd in nodes_l}
+        for _ in range(_N_ITER):
+            inflow_sum: dict = {}
+            for r in erows:
+                term = dec12(rank[r["src"]] * r["wn"])
+                inflow_sum[r["dst"]] = inflow_sum.get(r["dst"], Decimal(0)) + term
+            dang_terms = [dec12(rank[nd]) for nd in nodes_l if nd not in srcs]
+            dm = float(sum(dang_terms, Decimal(0))) if dang_terms else 0.0
+            inflow = {d: float(s) for d, s in inflow_sum.items()}
+            rank = {
+                nd: _TELEPORT / n
+                + _DAMP * (inflow.get(nd, 0.0) + dm / n)
+                for nd in nodes_l
+            }
+    return spark.createDataFrame(
+        [(nd, rank[nd]) for nd in nodes_l], "nation string, pagerank double"
     )
-    nn = nodes.agg(F.count(F.lit(1)).alias("n"))
-    out_srcs = outw.select("src")
-
-    ranks = nodes.crossJoin(F.broadcast(nn)).select(
-        "nation", (F.lit(1.0) / F.col("n")).alias("rank")
-    )
-    for _ in range(_N_ITER):
-        inflow = (
-            ranks.join(enorm, ranks["nation"] == enorm["src"])
-            .groupBy("dst")
-            .agg(
-                F.sum((F.col("rank") * F.col("wn")).cast("decimal(38,12)"))
-                .cast("double")
-                .alias("inflow")
-            )
-            .withColumnRenamed("dst", "in_nation")
-        )
-        dang = (
-            ranks.join(out_srcs, ranks["nation"] == out_srcs["src"], "left_anti")
-            .agg(F.sum(F.col("rank").cast("decimal(38,12)")).cast("double").alias("dm"))
-        )
-        ranks = (
-            nodes.join(inflow, nodes["nation"] == inflow["in_nation"], "left")
-            .crossJoin(F.broadcast(nn))
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "nation",
-                (
-                    F.lit(_TELEPORT) / F.col("n")
-                    + F.lit(_DAMP)
-                    * (
-                        F.coalesce(F.col("inflow"), F.lit(0.0))
-                        + F.coalesce(F.col("dm"), F.lit(0.0)) / F.col("n")
-                    )
-                ).alias("rank"),
-            )
-            # Truncate lineage every iteration: ranks feeds BOTH the inflow
-            # join and the dangling anti-join, so without a checkpoint
-            # the previous iteration's subtree is embedded twice and the
-            # plan (and recomputation) doubles per iteration — the same
-            # localCheckpoint contract as dedup_cluster_assignment's
-            # min-label loop. Eager + tiny (|nations| rows).
-            .localCheckpoint()
-        )
-    return ranks.select("nation", F.col("rank").alias("pagerank"))

@@ -1,4 +1,4 @@
-"""Distributed PCA by power iteration over the embedding Gram matrix —
+"""PCA by power iteration over the distributed embedding Gram matrix —
 the embedding-analysis stage (whitening / dominant-direction removal /
 anisotropy diagnosis) that SemDeDup-style pipelines run before
 clustering, and the classic way to sanity-check an embedding column
@@ -33,22 +33,24 @@ Two computations, one contract:
   ``mapInPandas`` — one pass, d² floats per partition, no exploded
   shuffle — equivalence-tested against the exact path.
 
-* **Power iteration** (``_PCA_ITERS`` = 3 fixed steps from the
-  all-ones start): u ← G·v, v ← u / max|u|. The 64-row matvec runs
-  distributed with the same fixed-point sums (grid 1e9 — G entries
-  grow with n, so the product ``G_ij·v_j·1e9`` stays under 2⁵³ up to
-  ~10⁸-row corpora); the 64 values
-  materialize to the driver between steps (the Lloyd's-centroid /
-  BPE-argmax driver-bounded shape) and re-enter the next plan as
-  double literals. Normalizing by max|u| instead of ‖u‖₂ avoids the
-  one libm call (sqrt) that has no cross-engine ulp guarantee —
-  max and IEEE division are exact/correctly-rounded in both engines,
-  so the DuckDB oracle replays every iteration bit-for-bit as chained
-  CTEs.
+* **Power iteration and deflation** (:func:`_power_deflate`, the
+  ONE loop both Gram paths share): per component ``_PCA_ITERS`` = 3
+  fixed steps from the all-ones start, u ← G·v, v ← u / max|u|, then
+  Hotelling deflation. The d×d Gram is collected once (d² doubles)
+  and the loop runs on the driver, because its state is already
+  there: a d-vector per step moves nowhere. Each matvec entry is an
+  exact integer sum of ``FLOOR((G_ij·v_j)·1e9)`` (grid 1e9 — G
+  entries grow with n, so the product stays under 2⁵³ up to
+  ~10⁸-row corpora) rounded ONCE to double (``math.fsum``), the
+  same value a DECIMAL(38,0) SUM cast to DOUBLE yields in either
+  engine. Normalizing by max|u| instead of ‖u‖₂ avoids the one libm
+  call (sqrt) that has no cross-engine ulp guarantee — max and IEEE
+  division are exact/correctly-rounded everywhere, so the DuckDB
+  oracle replays every iteration bit-for-bit as chained CTEs.
 
 Scale shape (100 TB): the corpus is touched ONCE (Gram); every
-iteration is a d×d job, corpus-independent — the same collapse as BPE
-(corpus → vocabulary) with d² in place of |V|.
+iteration is O(d²) driver flops, corpus-independent — the same
+collapse as BPE (corpus → vocabulary) with d² in place of |V|.
 """
 
 from __future__ import annotations
@@ -65,20 +67,7 @@ from data_lake_construction_and_querying_with_pyspark_spark.sources.readers impo
 
 _PCA_ITERS = 3
 _PCA_TOP_K = 4
-_DIM = 64  # testdata embeddings are FLOAT[64]; library paths infer
-
-
-def _infer_dim(emb: DataFrame) -> int:
-    """Embedding dimensionality from the first row — one cheap job, so
-    the library paths work on any-width vectors instead of failing with
-    an opaque numpy broadcast error on non-64-d input."""
-    row = emb.select(F.size(as_double_vec(F.col("embedding"))).alias("d")).first()
-    if row is None or row["d"] is None or row["d"] <= 0:
-        raise ValueError(
-            "cannot infer embedding dimensionality: table is empty or "
-            "the embedding column's first row is NULL/empty"
-        )
-    return int(row["d"])
+_DIM = 64  # testdata embeddings are FLOAT[64]; library paths read d from the Gram
 
 
 def gram_matrix_exact(emb: DataFrame) -> DataFrame:
@@ -178,135 +167,105 @@ def gram_matrix_fast(emb: DataFrame) -> "list[list[float]]":
     return total.tolist()
 
 
-def _power_steps(g: DataFrame, dim: int, iters: int) -> "tuple[list[float], float]":
-    """``iters`` fixed-point power steps over Gram frame ``g`` from the
-    all-ones start; returns (max-abs-normalized v, final max|u|)."""
-    v = [1.0] * dim
-    lam = 1.0
-    for _ in range(iters):
-        vlit = F.array(*[F.lit(float(x)) for x in v])
-        t = F.floor((F.col("gv") * F.element_at(vlit, F.col("j"))) * F.lit(1e9))
-        u_rows = (
-            g.select("i", t.cast("decimal(38,0)").alias("t"))
-            .groupBy("i")
-            .agg((F.sum("t").cast("double") / F.lit(1e9)).alias("uv"))
-            .collect()
-        )
-        u = [0.0] * dim
-        for r in u_rows:
-            u[r["i"] - 1] = r["uv"]
-        lam = max(abs(x) for x in u)
-        if lam == 0.0:
-            raise ValueError(
-                "power iteration degenerated to the zero vector (all-zero "
-                "Gram after deflation?) — fewer components than requested"
-            )
-        v = [x / lam for x in u]
-    return v, lam
+def _power_deflate(spark: SparkSession, g, k: int) -> DataFrame:
+    """The one power-iteration + Hotelling-deflation loop over a d×d
+    Gram ``g`` (any nested sequence of floats): ``k·d`` rows
+    ``(component, dim_idx, loading, eigenvalue_maxabs)``, components
+    1-based in extraction order.
 
+    Every scalar follows the cross-engine contract (module docstring)
+    op for op, so on the exact Gram the result is bit-identical to the
+    DuckDB CTE replay:
 
-def pca_top_components(
-    spark: SparkSession,
-    emb: DataFrame,
-    k: int = _PCA_TOP_K,
-    iters: int = _PCA_ITERS,
-    dim: int | None = None,
-) -> DataFrame:
-    """Top-``k`` principal directions by power iteration with Hotelling
-    deflation — ``k·dim`` rows ``(component, dim_idx, loading,
-    eigenvalue_maxabs)``, components 1-based in decreasing-eigenvalue
-    order (the real embedding-analysis ask: "how many rogue directions
-    carry the variance?", not just the first).
-
-    Deflation stays inside the cross-engine determinism contract
-    (module docstring): after component ``c`` converges to ``(v, λ)``,
-    the next Gram is ``G' = G − λ·v_i·v_j / (vᵀv)`` cell-wise, where
-    ``vᵀv`` runs on the FLOOR(x²·1e15) integer grid (exact in both
-    engines) and the remaining expression is a fixed-order chain of
-    IEEE multiplies/divides — each correctly rounded identically in
-    Spark, Python, and DuckDB, so every deflated cell is bit-identical
-    and the whole k-component chain replays as CTEs in the oracle.
-
-    Scale shape: unchanged from the single-component path — the corpus
-    is touched once (Gram); each of the ``k·iters`` matvecs and each
-    deflation is a d×d job (d² rows), corpus-independent."""
+    * u_i = fsum_j FLOOR((g_ij·v_j)·1e9) / 1e9 — numpy forms the
+      products, ``math.fsum`` adds the integers exactly and rounds
+      once (``np.sum`` would round per addition);
+    * λ = max|u|, v = u / λ;
+    * deflation g_ij − ((λ·v_i)·v_j) / c with c = fsum_i
+      FLOOR((v_i·v_i)·1e15) / 1e15 — ``np.outer(λ·v, v)`` keeps the
+      (λ·v_i)·v_j order (``λ·np.outer(v, v)`` would round
+      differently)."""
     import math
 
-    dim = dim if dim is not None else _infer_dim(emb)
-    g = gram_matrix_exact(emb).persist()
-    rows: list[tuple] = []
-    for comp in range(1, k + 1):
-        v, lam = _power_steps(g, dim, iters)
-        rows.extend((comp, i + 1, v[i], lam) for i in range(dim))
-        if comp < k:
-            # vᵀv on the 1e15 integer grid: exact int sum, then the
-            # same two-step int→double / divide both engines perform
-            c = sum(math.floor((x * x) * 1e15) for x in v) / 1e15
-            vlit = F.array(*[F.lit(float(x)) for x in v])
-            g2 = g.select(
-                "i",
-                "j",
-                (
-                    F.col("gv")
-                    - F.lit(lam)
-                    * F.element_at(vlit, F.col("i"))
-                    * F.element_at(vlit, F.col("j"))
-                    / F.lit(c)
-                ).alias("gv"),
-            ).persist()
-            g2.count()  # materialize before dropping the parent
-            g.unpersist()
-            g = g2
-    g.unpersist()
-    return spark.createDataFrame(
-        rows, "component int, dim_idx int, loading double, eigenvalue_maxabs double"
-    )
-
-
-def pca_top_components_fast(
-    spark: SparkSession,
-    emb: DataFrame,
-    k: int = _PCA_TOP_K,
-    iters: int = _PCA_ITERS,
-) -> DataFrame:
-    """Production twin of :func:`pca_top_components`: one corpus pass
-    (:func:`gram_matrix_fast` — per-partition numpy ``Xᵀ·X`` over Arrow
-    batches, d² doubles to the driver) followed by the SAME power-
-    iteration + Hotelling-deflation recipe run driver-side in numpy
-    (all-ones start, max-|u| normalization, ``G' = G − λ·v·vᵀ/(vᵀv)``)
-    — O(k·iters·d²) driver flops on a d×d matrix, corpus-independent.
-
-    The registered entry keeps the fixed-point explode-join chain for
-    bit-exact DuckDB replay; THIS is the shape a 100 TB corpus runs.
-    Float-sum order differs from the fixed-point grid by design;
-    ``tests/test_pca.py`` pins agreement to the exact path on the
-    fixture to ~1e-6 relative after sign alignment. Same output
-    contract: k·d rows (component, dim_idx, loading,
-    eigenvalue_maxabs), components in extraction order."""
     import numpy as np
 
-    g = np.array(gram_matrix_fast(emb), dtype="float64")
+    g = np.array(g, dtype="float64")
     dim = g.shape[0]
     rows: list[tuple] = []
     for comp in range(1, k + 1):
         v = np.ones(dim)
-        lam = 1.0
-        for _ in range(iters):
-            u = g @ v
+        for _ in range(_PCA_ITERS):
+            u = np.array(
+                [math.fsum(t) for t in np.floor((g * v) * 1e9)]
+            ) / 1e9
             lam = float(np.abs(u).max())
             if lam == 0.0:
                 raise ValueError(
-                    "power iteration degenerated to the zero vector "
-                    "(all-zero Gram after deflation?) — fewer components "
-                    "than requested"
+                    "power iteration degenerated to the zero vector (all-zero "
+                    "Gram after deflation?) — fewer components than requested"
                 )
             v = u / lam
         rows.extend((comp, i + 1, float(v[i]), lam) for i in range(dim))
         if comp < k:
-            g = g - lam * np.outer(v, v) / float(v @ v)
+            c = math.fsum(np.floor((v * v) * 1e15)) / 1e15
+            g = g - np.outer(lam * v, v) / c
     return spark.createDataFrame(
         rows, "component int, dim_idx int, loading double, eigenvalue_maxabs double"
     )
+
+
+def _collect_gram_exact(emb: DataFrame) -> "list[list[float]]":
+    """:func:`gram_matrix_exact` collected into a d×d matrix (d² rows
+    to the driver); d is read from the Gram itself."""
+    cells = gram_matrix_exact(emb).collect()
+    if not cells:
+        raise ValueError("gram_matrix_exact: embedding table is empty")
+    d = max(r["i"] for r in cells)
+    g = [[0.0] * d for _ in range(d)]
+    for r in cells:
+        g[r["i"] - 1][r["j"] - 1] = r["gv"]
+    return g
+
+
+def pca_top_components(
+    spark: SparkSession, emb: DataFrame, k: int = _PCA_TOP_K
+) -> DataFrame:
+    """Top-``k`` principal directions by power iteration with Hotelling
+    deflation — ``k·d`` rows ``(component, dim_idx, loading,
+    eigenvalue_maxabs)``, components 1-based in decreasing-eigenvalue
+    order (the real embedding-analysis ask: "how many rogue directions
+    carry the variance?", not just the first).
+
+    The oracle-checkable path: the fixed-point :func:`gram_matrix_exact`
+    collected once, then :func:`_power_deflate` on the driver. After
+    component ``c`` converges to ``(v, λ)`` the next Gram is
+    ``G' = G − λ·v_i·v_j / (vᵀv)`` cell-wise, ``vᵀv`` on the
+    FLOOR(x²·1e15) integer grid and the rest a fixed-order chain of
+    IEEE multiplies/divides, so every deflated cell is bit-identical
+    to the DuckDB CTE replay of the whole k-component chain.
+
+    Scale shape: the corpus is touched once (Gram); the k·3 matvecs
+    and k−1 deflations are d×d driver work, corpus-independent, and
+    start no Spark job."""
+    return _power_deflate(spark, _collect_gram_exact(emb), k)
+
+
+def pca_top_components_fast(
+    spark: SparkSession, emb: DataFrame, k: int = _PCA_TOP_K
+) -> DataFrame:
+    """Production twin of :func:`pca_top_components`: the same
+    :func:`_power_deflate` loop over :func:`gram_matrix_fast` (one
+    corpus pass, per-partition numpy ``Xᵀ·X`` over Arrow batches, d²
+    doubles to the driver) instead of the exploded fixed-point Gram.
+
+    The registered entry keeps the explode-join Gram for bit-exact
+    DuckDB replay; THIS is the shape a 100 TB corpus runs. The fast
+    Gram's float-sum order differs from the fixed-point grid by design;
+    ``tests/test_pca.py`` pins agreement to the exact path on the
+    fixture to ~1e-6 relative after sign alignment. Same output
+    contract: k·d rows (component, dim_idx, loading,
+    eigenvalue_maxabs), components in extraction order."""
+    return _power_deflate(spark, gram_matrix_fast(emb), k)
 
 
 def components_as_vectors(rows) -> "list[list[float]]":
@@ -380,15 +339,14 @@ def pca_remove_components(
     return out
 
 
-def _oracle_pca_topk(
-    k: int = _PCA_TOP_K, iters: int = _PCA_ITERS, dim: int = _DIM
-) -> str:
+def _oracle_pca_topk() -> str:
     """Chained-CTE replay of the FULL top-k chain: exact-decimal Gram,
-    then per component (iters × (grid matvec → max|u| → IEEE-divide
+    then per component (_PCA_ITERS × (grid matvec → max|u| → IEEE-divide
     normalization)) followed by the fixed-point Hotelling deflation
     ``G' = G − mx·v_i·v_j / (vᵀv on the 1e15 grid)`` — every scalar
     bit-identical to the Spark/driver chain by the module-docstring
     argument, so the k·dim result rows hash-match exactly."""
+    k, iters, dim = _PCA_TOP_K, _PCA_ITERS, _DIM
     blocks: list[str] = []
     selects: list[str] = []
     prev_g = "g1"
@@ -467,11 +425,11 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     Redefined r6 (was: component 1 only) per VERDICT r5 directive #4 —
     same slot, same family, the result contract grew a ``component``
     column; the slot re-entered the driver window at redefinition."""
-    emb = load_table(spark, sf_dir, "embeddings")
     # The oracle CTE chain is generated at dim=_DIM, so the fixture
-    # width is a hard contract here (library paths infer instead —
-    # use pca_top_components/_fast directly on other-width vectors).
-    d = _infer_dim(emb)
+    # width is a hard contract here (library paths read d from the
+    # Gram — use pca_top_components/_fast on other-width vectors).
+    g = _collect_gram_exact(load_table(spark, sf_dir, "embeddings"))
+    d = len(g)
     if d != _DIM:
         raise ValueError(
             f"pca_top_component registered entry expects the fixture's "
@@ -479,4 +437,4 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"dim={_DIM}); got dim={d} — call pca_top_components(...) "
             f"directly for arbitrary-width vectors"
         )
-    return pca_top_components(spark, emb, dim=d)
+    return _power_deflate(spark, g, _PCA_TOP_K)

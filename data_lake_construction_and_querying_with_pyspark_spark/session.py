@@ -53,10 +53,6 @@ _DEFAULTS = {
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64KB",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Python Data Source filter pushdown (off by default in Spark 4.1):
-    # lets the acid_table format's pushFilters() turn df.filter(...)
-    # into log-level file skipping (sources/acid_source.py).
-    "spark.sql.python.filterPushdown.enabled": "true",
     # Generated-class cache sized to the registry's working set. Spark's
     # default of 100 entries is smaller than the ~165 classes the 13
     # interactive lake_sql queries need, so each query evicted the next

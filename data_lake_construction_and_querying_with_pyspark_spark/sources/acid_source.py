@@ -2,7 +2,7 @@
 (:mod:`..acid`) — Spark 4's ``pyspark.sql.datasource`` API, so the
 table is readable as a first-class format::
 
-    spark.dataSource.register(AcidTableDataSource)
+    register_acid_source(spark)
     spark.read.format("acid_table").option("path", root).load()
     spark.readStream.format("acid_table").option("path", root).load()
 

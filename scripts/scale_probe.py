@@ -327,26 +327,18 @@ def main() -> None:
         return rerank_with_scorer(docs, ("w1", "w2", "w3"), scorer)
 
     # PCA production path (late r5): one corpus pass of per-partition
-    # numpy Xᵀ·X (mapInPandas) + driver-side power iteration on the
-    # 64×64 result — the registered query's fixed-point explode-join
-    # twin exists for the oracle; THIS is the shape a 100 TB corpus
-    # runs, and the rung shows the corpus pass is the whole cost.
+    # numpy Xᵀ·X (mapInPandas) + the package's driver-side power
+    # iteration on the 64×64 result (top component only) — the
+    # registered query's fixed-point explode-join twin exists for the
+    # oracle; THIS is the shape a 100 TB corpus runs, and the rung
+    # shows the corpus pass is the whole cost.
     def pca_fast(spark, sf_dir):
-        import numpy as np
-
         from data_lake_construction_and_querying_with_pyspark_spark.operators.pca import (
-            gram_matrix_fast,
+            pca_top_components_fast,
         )
 
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        g = np.array(gram_matrix_fast(emb))
-        v = np.ones(64)
-        for _ in range(3):
-            u = g @ v
-            v = u / np.abs(u).max()
-        return spark.createDataFrame(
-            [(i + 1, float(v[i])) for i in range(64)], "dim_idx int, loading double"
-        )
+        return pca_top_components_fast(spark, emb, k=1)
 
     # r6: the no-knob LIBRARY path (neg_pool_geometry policy picks the
     # pool from the corpus count — must land on the fine-pool wall time

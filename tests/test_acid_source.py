@@ -141,7 +141,12 @@ def test_batch_pushdown_prunes_files(spark, table):
     """df.filter on the acid_table format skips files via the log's
     stats+blooms with no explicit prune API: the reader's partitions()
     shrink, and results stay exact because every filter is also
-    applied row-level as a residual."""
+    applied row-level as a residual. ``register_acid_source`` is the
+    one place the pushdown conf is set: with it switched off first,
+    registration alone turns it back on."""
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "false")
+    register_acid_source(spark)
+    assert spark.conf.get("spark.sql.python.filterPushdown.enabled") == "true"
     for i in range(4):
         table.append(
             spark,
@@ -158,6 +163,10 @@ def test_batch_pushdown_prunes_files(spark, table):
     assert got == [(202, "f2")]
     got_range = sorted(r["k"] for r in df.filter("k >= 1590").collect())
     assert got_range == list(range(1590, 1600))
+    # the planned scan itself is pruned: the bloom keeps f2 (+ ≤1 false
+    # positive) of the 4 files
+    assert df.rdd.getNumPartitions() == 4
+    assert df.filter("k = 202").rdd.getNumPartitions() <= 2
 
     # and the pruning really happened: drive the reader directly
     from pyspark.sql.datasource import EqualTo, GreaterThanOrEqual

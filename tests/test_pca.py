@@ -141,6 +141,31 @@ def test_topk_matches_numpy_replay(spark, emb, queries):
         assert abs(got[0].eigenvalue_maxabs - lam) <= 1e-6 * abs(lam), comp
 
 
+def test_topk_starts_no_job_beyond_the_gram_collect(spark, emb):
+    """Power iteration and deflation run on the driver over the
+    collected Gram: pca_top_components starts no Spark job beyond the
+    ones collecting gram_matrix_exact alone starts (no per-step matvec
+    job, no per-deflation persist/count)."""
+    from data_lake_construction_and_querying_with_pyspark_spark.operators.pca import (
+        gram_matrix_exact,
+        pca_top_components,
+    )
+
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    gram_jobs = jobs("pca_gram_only", lambda: gram_matrix_exact(emb).collect())
+    topk_jobs = jobs("pca_topk", lambda: pca_top_components(spark, emb))
+    assert 0 < topk_jobs <= gram_jobs, (topk_jobs, gram_jobs)
+
+
 def test_power_iteration_infers_non64_dim(spark):
     """The library paths are dimension-agnostic (ADVICE r5): a 8-d
     embedding column runs end-to-end instead of dying on a numpy
@@ -192,7 +217,7 @@ def test_topk_recovers_planted_directions(spark):
     df = spark.range(300).select(
         F.col("id").alias("vec_id"), F.array(*cols).alias("embedding")
     )
-    rows = pca_top_components(spark, df, k=2, iters=3).collect()
+    rows = pca_top_components(spark, df, k=2).collect()
     comp = {c: sorted((r for r in rows if r.component == c), key=lambda r: r.dim_idx)
             for c in (1, 2)}
     lam1 = comp[1][0].eigenvalue_maxabs

@@ -180,7 +180,6 @@ _NESTED_LOOP_OK = {
     "bm25_topk_documents",  # postings × broadcast 1-row corpus stats
     "rerank_bm25_candidates",  # same BM25 1-row stats broadcasts in the candidate stage
     "tfidf_top_terms_per_doc",  # postings × broadcast 1-row doc count
-    "pagerank_trade_network",  # rank table × broadcast 1-row node-count/dangling-mass
     "lm_stupid_backoff_scores",  # scoring stream × broadcast 1-row train-token total
     "lm_perplexity_buckets",  # scored stream × broadcast 1-row boundary table
     "dsir_importance_weights",  # feature stream × broadcast 1-row (nt, nr) totals
@@ -195,7 +194,6 @@ _SLOW = {
     "bpe_learn_merges",  # eager merge-iteration loop (k 1-row collects)
     "bpe_token_counts",  # embeds the same eager loop
     "bpe_encode_documents",  # embeds the same eager loop
-    "pca_top_component",  # eager power-iteration loop (3 × 64-row collects)
 }  # iterative / streaming
 
 

@@ -39,34 +39,6 @@ def test_pagerank_rewards_inflow(spark, queries):
     assert df.filter(F.col("pagerank") <= floor).count() == 0
 
 
-def test_pagerank_driver_gate_matches_distributed(spark):
-    """The driver-gated iteration must be BITWISE identical to the
-    distributed loop (r12, ADVICE r11 #4): the gate's decimal replay
-    rests on Python ``repr(x)`` matching the JVM's shortest-repr double
-    formatting before HALF_UP quantization — verified on 2M samples on
-    JDK17, but Double.toString's algorithm changed in JDK19 (Ryū), so
-    this pins the equality on the fixture rather than trusting the
-    sample forever."""
-    from data_lake_construction_and_querying_with_pyspark_spark.operators.graph import (
-        pagerank_trade_network,
-    )
-
-    gated = {r["nation"]: r["pagerank"] for r in pagerank_trade_network(spark, SF_SMOKE).collect()}
-    dist = {
-        r["nation"]: r["pagerank"]
-        for r in pagerank_trade_network(spark, SF_SMOKE, driver_gate=0).collect()
-    }
-    assert set(gated) == set(dist)
-    import struct
-
-    diffs = {
-        n: (gated[n], dist[n])
-        for n in gated
-        if struct.pack("<d", gated[n]) != struct.pack("<d", dist[n])
-    }
-    assert not diffs, diffs
-
-
 def test_bm25_results_contain_query_terms(spark, queries):
     """Every returned document matches at least one query term (BM25
     never scores a term-free document), scores are positive, and the
