@@ -30,6 +30,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_lake_construction_and_querying_with_pyspark_spark.operators.tokens import (
+    FINGERPRINT_SQL,
+    TOKENS_SQL,
+    fingerprint,
+    gram,
+    gram_sql,
+    ngram_positions,
+    ngram_positions_sql,
+    ngrams,
+    ngrams_sql,
+    tokens,
+)
 from data_lake_construction_and_querying_with_pyspark_spark.registry import register
 from data_lake_construction_and_querying_with_pyspark_spark.sources.readers import (
     fan_out_small_scan,
@@ -37,69 +49,58 @@ from data_lake_construction_and_querying_with_pyspark_spark.sources.readers impo
     load_table,
 )
 
-# --- shared shingling expressions --------------------------------------------
+# --- shared shingle index -----------------------------------------------------
 
-def _toks() -> "F.Column":
-    """Word tokens (documents are single-space separated; filter empties
-    so a trailing separator can't mint a '' token)."""
-    return F.filter(F.split(F.col("text"), " "), lambda t: t != "")
-
-
-def _shingles(toks) -> F.Column:
-    """Distinct word 3-gram shingles; empty array for <3-token docs
-    (guard matters: Spark's sequence(0, n-3) would go *descending* for
-    n<3 instead of empty).
-
-    Formulated over arrays_zip of three slices rather than
-    element_at(toks, i) inside the lambda: lambda-indexed access defeats
-    subexpression elimination, so when an optimizer rule re-inlines the
-    tokenizer into this expression (CollapseProject,
-    InferFiltersFromGenerate) the indexed form re-tokenizes per element
-    — O(tokens²) per doc, measured 20× slower. The zip form evaluates
-    each slice argument once per row regardless of inlining."""
-    n = F.size(toks)
-    z = F.arrays_zip(
-        F.slice(toks, 1, n - 2), F.slice(toks, 2, n - 2), F.slice(toks, 3, n - 2)
-    )
-    grams = F.transform(z, lambda s: F.concat_ws(" ", s["0"], s["1"], s["2"]))
-    return F.when(n >= 3, F.array_distinct(grams)).otherwise(F.array().cast("array<string>"))
+_ORACLE_SHINGLES = f"""
+    SELECT doc_id, list_distinct({ngrams_sql(3)}) AS shingles
+    FROM (SELECT doc_id, {TOKENS_SQL} AS toks FROM documents)
+"""
 
 
-def _explode_shingles(sh: DataFrame) -> DataFrame:
-    """(doc_id, s) inverted index. explode_outer, not explode: plain
+# Inverted-index pair oracle (expects a CTE `sh(doc_id, shingles)` in
+# scope, ideally MATERIALIZED since it is referenced four times):
+# (doc_a, doc_b, jaccard) for every pair at Jaccard ≥ 0.8.
+# Faithful rewrite of the original all-pairs form — `shingles` is
+# list_distinct, so COUNT(*) over the shingle equi-join IS
+# len(list_intersect) — but Σ df(shingle)² work instead of O(n²·|sh|):
+# the all-pairs form measured ~50 min PER QUERY at sf0.1 (5 000 docs →
+# 12.5M list_intersect evaluations), which made the full-surface
+# sf0.1 oracle sweep all but unrunnable; this form runs in seconds and
+# matches hash-for-hash at sf0.001/0.01/0.1.
+_ORACLE_PAIRS = """
+        SELECT i.doc_a, i.doc_b, i.inter::DOUBLE / (za.n + zb.n - i.inter) AS jaccard
+        FROM (
+            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
+            FROM (SELECT doc_id, unnest(shingles) AS s FROM sh) a
+            JOIN (SELECT doc_id, unnest(shingles) AS s FROM sh) b
+              ON a.s = b.s AND a.doc_id < b.doc_id
+            GROUP BY 1, 2
+        ) i
+        JOIN (SELECT doc_id, len(shingles) AS n FROM sh) za ON za.doc_id = i.doc_a
+        JOIN (SELECT doc_id, len(shingles) AS n FROM sh) zb ON zb.doc_id = i.doc_b
+        WHERE 5 * i.inter >= 4 * (za.n + zb.n - i.inter)
+"""
+
+def shingle_index(docs: DataFrame) -> DataFrame:
+    """(doc_id, s) inverted index of each document's distinct word
+    3-gram shingles: the index every shingle-set operator (n-gram
+    Jaccard, MinHash, decontamination, the incremental near-dup index)
+    probes, aggregates or self-joins. Oracle twin: ``_ORACLE_SHINGLES``.
+
+    The token array is its own projection before the shingle one.
+    Callers fan ``docs``' own scan out first (``fan_out_small_scan``),
+    before any join that would add other tables' files to the rule's
+    count. The explode is ``explode_outer`` plus a null filter, not
+    ``explode``: plain
     explode triggers InferFiltersFromGenerate, which clones the whole
     shingle expression into a Filter below the repartition Exchange —
     single-threaded re-evaluation of the heaviest expression in the
     plan. Outer generate infers nothing; the null guard is free."""
     return (
-        sh.select("doc_id", F.explode_outer("shingles").alias("s"))
+        docs.select("doc_id", tokens().alias("toks"))
+        .select("doc_id", F.array_distinct(ngrams(F.col("toks"), 3)).alias("shingles"))
+        .select("doc_id", F.explode_outer("shingles").alias("s"))
         .filter(F.col("s").isNotNull())
-    )
-
-
-_ORACLE_SHINGLES = """
-    SELECT doc_id,
-           list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                          for i in range(1, len(toks)-1)]) AS shingles
-    FROM (SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS toks
-          FROM documents)
-"""
-
-
-def shingle_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, shingles) with the token array materialized as its own
-    projection first: inlining the tokenizer expression into the
-    shingle lambda makes Catalyst re-evaluate split+filter inside every
-    element_at — O(tokens²) per document (measured 20× slower at
-    sf0.1). The repartition spreads the CPU-heavy shingle explode
-    across cores when the source is a single small file; at lake scale
-    many input splits make it a no-op cost-wise."""
-    docs = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    return (
-        docs.repartition(par, "doc_id")
-        .select("doc_id", _toks().alias("toks"))
-        .select("doc_id", _shingles(F.col("toks")).alias("shingles"))
     )
 
 
@@ -128,8 +129,8 @@ def dedup_exact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_fingerprint_documents",
-    oracle="""
-    SELECT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fingerprint,
+    oracle=f"""
+    SELECT {FINGERPRINT_SQL} AS fingerprint,
            MIN(doc_id) AS keep_doc_id, COUNT(*) AS n_copies
     FROM documents
     GROUP BY 1
@@ -141,8 +142,7 @@ def dedup_fingerprint_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 16-byte digest is the shuffle key (constant-size at any doc
     length)."""
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")))
-    return docs.groupBy(fp.alias("fingerprint")).agg(
+    return docs.groupBy(fingerprint().alias("fingerprint")).agg(
         F.min("doc_id").alias("keep_doc_id"),
         F.count(F.lit(1)).alias("n_copies"),
     )
@@ -155,17 +155,7 @@ def dedup_fingerprint_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_ngram_jaccard_pairs",
     oracle=f"""
     WITH sh AS MATERIALIZED ({_ORACLE_SHINGLES})
-    SELECT i.doc_a, i.doc_b, i.inter::DOUBLE / (za.n + zb.n - i.inter) AS jaccard
-    FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-        FROM (SELECT doc_id, unnest(shingles) AS s FROM sh) a
-        JOIN (SELECT doc_id, unnest(shingles) AS s FROM sh) b
-          ON a.s = b.s AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ) i
-    JOIN (SELECT doc_id, len(shingles) AS n FROM sh) za ON za.doc_id = i.doc_a
-    JOIN (SELECT doc_id, len(shingles) AS n FROM sh) zb ON zb.doc_id = i.doc_b
-    WHERE 5 * i.inter >= 4 * (za.n + zb.n - i.inter)
+    {_ORACLE_PAIRS}
     """,
 )
 def dedup_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -186,11 +176,11 @@ _POSTING_PREPRUNE_BYTES = 8 * 1024**3  # pre-prune hot shingles above 8 GiB of d
 def ngram_jaccard_pairs(
     spark: SparkSession,
     sf_dir: str,
-    max_df: int | None = None,
+    max_df: int,
     prune_first: bool | None = None,
 ) -> DataFrame:
     """Near-dup pairs with word-3-gram Jaccard ≥ 0.8 over an inverted
-    index, with optional document-frequency pruning.
+    index, with document-frequency pruning at ``max_df``.
 
     Scalable exact algorithm: invert (doc, shingle), self-join on
     shingle to find pairs sharing ≥1 shingle (complete, since any pair
@@ -211,8 +201,6 @@ def ngram_jaccard_pairs(
     why the registered query (cap 1000, fixture max df ≈ 9) matches
     the unpruned brute-force oracle.
 
-    ``max_df=None`` skips the df-count aggregate entirely.
-
     ``prune_first`` (r12, ADVICE r11 #1): the posting-list aggregate's
     per-shingle buffer is ``8·df`` bytes BEFORE the ``size ≤ max_df``
     filter can drop it — a corpus-wide boilerplate shingle in a ~1e9-doc
@@ -226,89 +214,84 @@ def ngram_jaccard_pairs(
     Values are identical either way: both paths keep exactly the
     shingles with df ≤ max_df (pinned by tests/test_dedup_pruning.py).
     """
-    sh = shingle_docs(spark, sf_dir)
-    inv = _explode_shingles(sh).withColumnRenamed("s", "shingle")
-    if max_df is not None and prune_first is None:
-        docs_bytes = input_bytes(load_table(spark, sf_dir, "documents"))
-        prune_first = docs_bytes > _POSTING_PREPRUNE_BYTES
-    if max_df is None:
-        sizes = sh.select("doc_id", F.size("shingles").alias("n_sh"))
-        pairs = (
-            inv.alias("a")
-            .join(inv.alias("b"), "shingle")
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-    else:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        # r11 (guide §2.4 "remove shuffles outright"): POSTING-LIST pair
-        # generation. One groupBy(shingle) builds the sorted doc-id
-        # posting list per shingle; the df cap is a length filter on it;
-        # candidate pairs are a pure projection exploding each list's
-        # ordered combinations. This replaces the old df-count aggregate
-        # + string-keyed prune join + string-keyed self-join — three
-        # exchanges of ~45-byte shingle keys collapse into one, and the
-        # per-doc sizes fall out of the same persisted posting table.
-        # Values are identical: each surviving shingle contributes each
-        # ordered (doc_a < doc_b) pair exactly once (posting lists are
-        # sorted, per-doc shingles distinct), which is precisely the
-        # self-join's multiset; the threshold arithmetic is untouched.
-        # Memory: a posting list is capped at max_df ids (8·max_df
-        # bytes), so rows stay bounded at any corpus size.
-        if prune_first:
-            # Scale path (ADVICE r11 #1): constant-space df counts drop
-            # hot shingles BEFORE any posting list is built; the inner
-            # join is co-partitioned with the aggregate that follows,
-            # so the posting build still sees one shingle exchange of
-            # the (now pruned) index.
-            df_ok = (
-                inv.groupBy("shingle")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") <= max_df)
-                .select("shingle")
-            )
-            src = inv.join(df_ok, "shingle")
-        else:
-            src = inv
-        posting = src.groupBy("shingle").agg(
-            F.sort_array(F.collect_list("doc_id")).alias("ds")
+    docs = load_table(spark, sf_dir, "documents")
+    inv = shingle_index(fan_out_small_scan(docs, "doc_id")).withColumnRenamed("s", "shingle")
+    if prune_first is None:
+        prune_first = input_bytes(docs) > _POSTING_PREPRUNE_BYTES
+    # r11 (guide §2.4 "remove shuffles outright"): POSTING-LIST pair
+    # generation. One groupBy(shingle) builds the sorted doc-id
+    # posting list per shingle; the df cap is a length filter on it;
+    # candidate pairs are a pure projection exploding each list's
+    # ordered combinations. This replaces the old df-count aggregate
+    # + string-keyed prune join + string-keyed self-join — three
+    # exchanges of ~45-byte shingle keys collapse into one, and the
+    # per-doc sizes fall out of the same persisted posting table.
+    # Values are identical: each surviving shingle contributes each
+    # ordered (doc_a < doc_b) pair exactly once (posting lists are
+    # sorted, per-doc shingles distinct), which is precisely the
+    # self-join's multiset; the threshold arithmetic is untouched.
+    # Memory: a posting list is capped at max_df ids (8·max_df
+    # bytes), so rows stay bounded at any corpus size.
+    if prune_first:
+        # Scale path (ADVICE r11 #1): constant-space df counts drop
+        # hot shingles BEFORE any posting list is built; the inner
+        # join is co-partitioned with the aggregate that follows,
+        # so the posting build still sees one shingle exchange of
+        # the (now pruned) index.
+        df_ok = (
+            inv.groupBy("shingle")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .filter(F.col("df") <= max_df)
+            .select("shingle")
         )
-        # Persisted: feeds both the pair explode and the per-doc sizes.
-        # (The size filter is a no-op after a pre-prune — kept so both
-        # paths share one plan tail.)
-        keep = posting.filter(F.size("ds") <= max_df).persist(
-            StorageLevel.MEMORY_AND_DISK
+        src = inv.join(df_ok, "shingle")
+    else:
+        src = inv
+    posting = src.groupBy("shingle").agg(
+        F.sort_array(F.collect_list("doc_id")).alias("ds")
+    )
+    # Persisted: feeds both the pair explode and the per-doc sizes.
+    # (The size filter is a no-op after a pre-prune — kept so both
+    # paths share one plan tail.)
+    keep = posting.filter(F.size("ds") <= max_df).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    # Persisted too (r12): `sizes` feeds BOTH side tables of the
+    # threshold join (sa and sb below); as a live subtree the
+    # explode+aggregate ran once per side — the before-plan shows
+    # two identical HashAggregate(doc_id) subtrees under the two
+    # BroadcastExchanges. n_docs rows — driver-trivial to cache.
+    sizes = (
+        keep.select(F.explode("ds").alias("doc_id"))
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n_sh"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    ds = F.col("ds")
+    pair_structs = F.flatten(
+        F.transform(
+            ds,
+            lambda x, i: F.transform(
+                F.slice(ds, i + F.lit(2), F.size(ds)),
+                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
+            ),
         )
-        # Persisted too (r12): `sizes` feeds BOTH side tables of the
-        # threshold join (sa and sb below); as a live subtree the
-        # explode+aggregate ran once per side — the before-plan shows
-        # two identical HashAggregate(doc_id) subtrees under the two
-        # BroadcastExchanges. n_docs rows — driver-trivial to cache.
-        sizes = (
-            keep.select(F.explode("ds").alias("doc_id"))
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_sh"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        ds = F.col("ds")
-        pair_structs = F.flatten(
-            F.transform(
-                ds,
-                lambda x, i: F.transform(
-                    F.slice(ds, i + F.lit(2), F.size(ds)),
-                    lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-                ),
-            )
-        )
-        pairs = (
-            keep.select(F.explode(pair_structs).alias("p"))
-            .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-    sa = sizes.toDF("doc_a", "n_a")
-    sb = sizes.toDF("doc_b", "n_b")
+    )
+    pairs = (
+        keep.select(F.explode(pair_structs).alias("p"))
+        .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    return _jaccard_at_threshold(pairs, sizes.toDF("doc_a", "n_a"), sizes.toDF("doc_b", "n_b"))
+
+
+def _jaccard_at_threshold(pairs: DataFrame, sa: DataFrame, sb: DataFrame) -> DataFrame:
+    """The Jaccard ≥ 0.8 tail of both pair paths: (doc_a, doc_b, inter)
+    joined to each side's shingle count, (doc_a, n_a) and (doc_b, n_b),
+    kept by the integer test 5·inter ≥ 4·union per the determinism
+    contract, and projected to (doc_a, doc_b, jaccard)."""
     union = F.col("n_a") + F.col("n_b") - F.col("inter")
     return (
         pairs.join(sa, "doc_a")
@@ -377,9 +360,8 @@ def dedup_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the final threshold check."""
     from pyspark import StorageLevel
 
-    inv = _explode_shingles(shingle_docs(spark, sf_dir)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    docs = fan_out_small_scan(load_table(spark, sf_dir, "documents"), "doc_id")
+    inv = shingle_index(docs).persist(StorageLevel.MEMORY_AND_DISK)
     # Persisted: the band self-join below references sig on both sides,
     # and an unpersisted plan would recompute the 16-way md5 aggregate
     # once per side (measured 4s → 0.3s for the candidate step).
@@ -438,12 +420,8 @@ def verify_jaccard_pairs(cand: DataFrame, inv: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("inter"))
     )
     sizes = inv.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    union = F.col("n_a") + F.col("n_b") - F.col("inter")
-    return (
-        inter.join(F.broadcast(sizes.toDF("doc_a", "n_a")), "doc_a")
-        .join(F.broadcast(sizes.toDF("doc_b", "n_b")), "doc_b")
-        .filter(5 * F.col("inter") >= 4 * union)
-        .select("doc_a", "doc_b", (F.col("inter").cast("double") / union).alias("jaccard"))
+    return _jaccard_at_threshold(
+        inter, F.broadcast(sizes.toDF("doc_a", "n_a")), F.broadcast(sizes.toDF("doc_b", "n_b"))
     )
 
 
@@ -461,8 +439,7 @@ def _oracle_simhash() -> str:
     )
     return f"""
     SELECT doc_id, CAST({bit_terms} AS BIGINT) AS simhash
-    FROM (SELECT doc_id, unnest(list_filter(string_split(text, ' '), t -> t <> '')) AS tok
-          FROM documents)
+    FROM (SELECT doc_id, unnest({TOKENS_SQL}) AS tok FROM documents)
     GROUP BY doc_id
     """
 
@@ -475,7 +452,7 @@ def dedup_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle); the md5-hex-digit construction is engine-portable, unlike
     builtin hash functions."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.explode(_toks()).alias("tok"))
+    toks = docs.select("doc_id", F.explode(tokens()).alias("tok"))
     md5 = F.md5(F.col("tok"))
     high = set("89abcdef")
     bit_votes = [
@@ -612,7 +589,7 @@ def _scaled_pairs_ctes(dim: int = 64) -> str:
     )"""
 
 
-def _oracle_cosine_pairs_scaled(dim: int = 64) -> str:
+def _oracle_cosine_pairs_scaled() -> str:
     """DuckDB replay of the scaled-geometry ``dedup_embedding_cosine_pairs``:
     the candidate CTEs (``_scaled_pairs_ctes``, bands from
     ``similarity._lsh_bands_sql``) replay Spark's candidate set exactly,
@@ -620,7 +597,7 @@ def _oracle_cosine_pairs_scaled(dim: int = 64) -> str:
     fold. Candidate CTEs shared with the canonical-corpus, kNN-graph and
     hard-negative oracles."""
     return f"""
-    WITH {_scaled_pairs_ctes(dim)}
+    WITH {_scaled_pairs_ctes()}
     SELECT vec_a, vec_b,
            list_dot_product(ea.v, eb.v) / (ea.nrm * eb.nrm) AS cosine
     FROM cand
@@ -664,7 +641,7 @@ def dedup_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def connected_components(
-    edges: DataFrame, src: str = "src", dst: str = "dst", driver_gate: int = 1_000_000
+    edges: DataFrame, src: str, dst: str, driver_gate: int = 1_000_000
 ) -> DataFrame:
     """Connected components by iterative min-label propagation: every
     vertex starts labeled with its own id; each round every vertex
@@ -773,47 +750,30 @@ def connected_components(
         prev_sum = cur_sum
 
 
-# Inverted-index pair oracle (expects a CTE `sh(doc_id, shingles)` in
-# scope, ideally MATERIALIZED since it is referenced four times).
-# Faithful rewrite of the original all-pairs form — `shingles` is
-# list_distinct, so COUNT(*) over the shingle equi-join IS
-# len(list_intersect) — but Σ df(shingle)² work instead of O(n²·|sh|):
-# the all-pairs form measured ~50 min PER QUERY at sf0.1 (5 000 docs →
-# 12.5M list_intersect evaluations), which made the full-surface
-# sf0.1 oracle sweep all but unrunnable; this form runs in seconds and
-# matches hash-for-hash at sf0.001/0.01/0.1 (r5 A/B below).
-_ORACLE_PAIRS = """
-        SELECT i.doc_a, i.doc_b
-        FROM (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-            FROM (SELECT doc_id, unnest(shingles) AS s FROM sh) a
-            JOIN (SELECT doc_id, unnest(shingles) AS s FROM sh) b
-              ON a.s = b.s AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        ) i
-        JOIN (SELECT doc_id, len(shingles) AS n FROM sh) za ON za.doc_id = i.doc_a
-        JOIN (SELECT doc_id, len(shingles) AS n FROM sh) zb ON zb.doc_id = i.doc_b
-        WHERE 5 * i.inter >= 4 * (za.n + zb.n - i.inter)
-"""
+# Connected components of a `pairs(a, b, ...)` edge relation in scope,
+# by recursive reachability: cc(u, cluster_id) maps every vertex on an
+# edge to the least vertex it reaches. The oracle twin of
+# `connected_components`; its CTE list must open WITH RECURSIVE.
+_ORACLE_CC = """
+    edges AS MATERIALIZED (
+        SELECT a AS u, b AS v FROM pairs
+        UNION ALL
+        SELECT b AS u, a AS v FROM pairs
+    ),
+    reach(u, r) AS (
+        SELECT u, u FROM (SELECT DISTINCT u FROM edges)
+        UNION
+        SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.u
+    ),
+    cc AS (SELECT u, MIN(r) AS cluster_id FROM reach GROUP BY u)"""
 
 
 @register(
     "dedup_cluster_assignment",
     oracle=f"""
     WITH RECURSIVE sh AS MATERIALIZED ({_ORACLE_SHINGLES}),
-    pairs AS ({_ORACLE_PAIRS}),
-    edges AS (
-        SELECT doc_a AS u, doc_b AS v FROM pairs
-        UNION ALL
-        SELECT doc_b AS u, doc_a AS v FROM pairs
-    ),
-    reach(u, r) AS (
-        SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-        UNION
-        SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.u
-    )
-    SELECT u AS doc_id, CAST(MIN(r) AS BIGINT) AS cluster_id
-    FROM reach GROUP BY u
+    pairs(a, b, jaccard) AS ({_ORACLE_PAIRS}),{_ORACLE_CC}
+    SELECT u AS doc_id, CAST(cluster_id AS BIGINT) AS cluster_id FROM cc
     """,
 )
 def dedup_cluster_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -831,21 +791,10 @@ def dedup_cluster_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_canonical_corpus",
     oracle=f"""
     WITH RECURSIVE sh AS MATERIALIZED ({_ORACLE_SHINGLES}),
-    pairs AS ({_ORACLE_PAIRS}),
-    edges AS (
-        SELECT doc_a AS u, doc_b AS v FROM pairs
-        UNION ALL
-        SELECT doc_b AS u, doc_a AS v FROM pairs
-    ),
-    reach(u, r) AS (
-        SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-        UNION
-        SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.u
-    ),
-    cc AS (SELECT u AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY u)
+    pairs(a, b, jaccard) AS ({_ORACLE_PAIRS}),{_ORACLE_CC}
     SELECT d.doc_id, d.source, d.n_chars
-    FROM documents d LEFT JOIN cc ON d.doc_id = cc.doc_id
-    WHERE cc.doc_id IS NULL OR cc.doc_id = cc.cluster_id
+    FROM documents d LEFT JOIN cc ON d.doc_id = cc.u
+    WHERE cc.u IS NULL OR cc.u = cc.cluster_id
     """,
 )
 def dedup_canonical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -869,28 +818,17 @@ def dedup_canonical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_canonical_corpus_embeddings",
     oracle=f"""
-    WITH RECURSIVE {{ctes}},
-    pairs AS (
+    WITH RECURSIVE {_scaled_pairs_ctes()},
+    pairs(a, b) AS (
         SELECT vec_a, vec_b FROM cand
         JOIN e ea ON ea.vec_id = cand.vec_a
         JOIN e eb ON eb.vec_id = cand.vec_b
         WHERE list_dot_product(ea.v, eb.v) / (ea.nrm * eb.nrm) > {_SCALED_TAU}
-    ),
-    edges AS MATERIALIZED (
-        SELECT vec_a AS u, vec_b AS v FROM pairs
-        UNION ALL
-        SELECT vec_b AS u, vec_a AS v FROM pairs
-    ),
-    reach(u, r) AS (
-        SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-        UNION
-        SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.u
-    ),
-    cc AS (SELECT u AS vec_id, MIN(r) AS cluster_id FROM reach GROUP BY u)
+    ),{_ORACLE_CC}
     SELECT a.vec_id
-    FROM aug a LEFT JOIN cc ON a.vec_id = cc.vec_id
-    WHERE cc.vec_id IS NULL OR cc.vec_id = cc.cluster_id
-    """.format(ctes=_scaled_pairs_ctes()),
+    FROM aug a LEFT JOIN cc ON a.vec_id = cc.u
+    WHERE cc.u IS NULL OR cc.u = cc.cluster_id
+    """,
 )
 def dedup_canonical_corpus_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The EMBEDDING ladder's deliverable — the ngram
@@ -995,19 +933,30 @@ def span_shuffle_partitions(spark: SparkSession, docs: DataFrame) -> int:
     return max(par, min(4096, input_bytes(docs) // _SPAN_BYTES_PER_REDUCER))
 
 
+# (doc_id, p, s): every _SPAN_K-gram s of each document at its start p,
+# over the documents' token lists `toks(doc_id, toks)` — the oracle twin
+# of `_span_grams`, shared by both span queries.
+_ORACLE_SPAN_POS = f"""toks AS (
+        SELECT doc_id, {TOKENS_SQL} AS toks FROM documents
+    ),
+    pos AS (
+        SELECT doc_id, CAST(p AS INT) AS p, {gram_sql("p", _SPAN_K)} AS s
+        FROM toks, {ngram_positions_sql(_SPAN_K)}
+    )"""
+
+
+def _span_grams(toked: DataFrame) -> DataFrame:
+    """(doc_id, p, s): every _SPAN_K-gram of a (doc_id, toks) frame at
+    its 1-based start position p."""
+    return ngram_positions(toked, _SPAN_K).select(
+        "doc_id", F.col("p").cast("int").alias("p"), gram(F.col("p"), _SPAN_K).alias("s")
+    )
+
+
 @register(
     "dedup_repeated_spans",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS toks
-        FROM documents
-    ),
-    pos AS (
-        SELECT doc_id, CAST(i AS INT) AS p,
-               array_to_string(toks[i:i+{_SPAN_K - 1}], ' ') AS s
-        FROM toks, LATERAL unnest(generate_series(1, len(toks) - {_SPAN_K - 1}))
-                   AS t(i)
-    ),
+    WITH {_ORACLE_SPAN_POS},
     dfreq AS (SELECT s, COUNT(DISTINCT doc_id) AS df FROM pos GROUP BY s),
     hits AS (
         SELECT doc_id, p FROM pos JOIN dfreq USING (s)
@@ -1068,20 +1017,7 @@ def dedup_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every core instead of inside the single scan task feeding the
     # span-keyed exchange (guarded no-op at lake scale).
     docs = fan_out_small_scan(load_table(spark, sf_dir, "documents"), "doc_id")
-    toked = docs.select("doc_id", _toks().alias("toks"))
-    n = F.size("toks")
-    starts = F.when(n >= _SPAN_K, F.sequence(F.lit(1), n - (_SPAN_K - 1))).otherwise(
-        F.array().cast("array<int>")
-    )
-    pos = toked.select(
-        "doc_id",
-        F.explode(starts).alias("p"),
-        F.col("toks"),
-    ).select(
-        "doc_id",
-        F.col("p").cast("int").alias("p"),
-        F.concat_ws(" ", F.slice("toks", F.col("p"), _SPAN_K)).alias("s"),
-    )
+    pos = _span_grams(docs.select("doc_id", tokens().alias("toks")))
     # Explicit span-keyed repartition with a SOURCE-SIZE-derived count
     # (see span_shuffle_partitions): the df aggregate AND the hit join
     # reuse this partitioning (no further exchange on s), and an
@@ -1127,16 +1063,7 @@ def dedup_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_span_scrub_documents",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS toks
-        FROM documents
-    ),
-    pos AS (
-        SELECT doc_id, CAST(i AS INT) AS p,
-               array_to_string(toks[i:i+{_SPAN_K - 1}], ' ') AS s
-        FROM toks, LATERAL unnest(generate_series(1, len(toks) - {_SPAN_K - 1}))
-                   AS t(i)
-    ),
+    WITH {_ORACLE_SPAN_POS},
     occ AS (
         SELECT doc_id, p,
                ROW_NUMBER() OVER (PARTITION BY s ORDER BY doc_id, p) AS rn
@@ -1249,22 +1176,7 @@ def span_scrub_documents(
     never reaches the output), so the DuckDB oracle is untouched.
     Waves stage through ``dedup_vectorized.stage_waves`` (its
     ``scratch_dir`` caveats apply)."""
-    toked = docs.select("doc_id", _toks().alias("toks"))
-    n = F.size("toks")
-    starts = F.when(n >= _SPAN_K, F.sequence(F.lit(1), n - (_SPAN_K - 1))).otherwise(
-        F.array().cast("array<int>")
-    )
-
-    def pos_frame() -> DataFrame:
-        return toked.select(
-            "doc_id",
-            F.explode(starts).alias("p"),
-            F.col("toks"),
-        ).select(
-            "doc_id",
-            F.col("p").cast("int").alias("p"),
-            F.concat_ws(" ", F.slice("toks", F.col("p"), _SPAN_K)).alias("s"),
-        )
+    toked = docs.select("doc_id", tokens().alias("toks"))
 
     def drops_frame(pos: DataFrame) -> DataFrame:
         # rank ≥2 already implies the span has ≥2 occurrences — no
@@ -1290,7 +1202,7 @@ def span_scrub_documents(
 
     reducers = span_shuffle_partitions(spark, docs)
     if span_batches <= 1:
-        drops = drops_frame(pos_frame().repartition(reducers, "s"))
+        drops = drops_frame(_span_grams(toked).repartition(reducers, "s"))
     else:
         from data_lake_construction_and_querying_with_pyspark_spark.operators.dedup_vectorized import (
             stage_waves,
@@ -1300,7 +1212,7 @@ def span_scrub_documents(
         wave_red = max(par, reducers // span_batches)
         wave = F.pmod(F.xxhash64("s"), F.lit(span_batches))
         waves = (
-            drops_frame(pos_frame().filter(wave == wi).repartition(wave_red, "s"))
+            drops_frame(_span_grams(toked).filter(wave == wi).repartition(wave_red, "s"))
             for wi in range(span_batches)
         )
         drops = stage_waves(spark, waves, scratch_dir, "spanscrub")

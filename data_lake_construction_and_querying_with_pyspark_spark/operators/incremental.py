@@ -15,19 +15,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-
-def content_fingerprint(text_col: str = "text") -> F.Column:
-    """Canonical md5 fingerprint (lowercase, whitespace-collapsed) —
-    identical to the batch dedup_fingerprint_documents digest, so the
-    incremental index and a full-corpus dedup agree exactly."""
-    return F.md5(F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")))
+from data_lake_construction_and_querying_with_pyspark_spark.operators.tokens import fingerprint
+from data_lake_construction_and_querying_with_pyspark_spark.sources.readers import fan_out_small_scan
 
 
 def init_fingerprint_index(spark: SparkSession, index_path: str, corpus: DataFrame | None = None) -> None:
     """Create (or seed) the index. Empty index = empty parquet with the
     right schema."""
     if corpus is not None:
-        seed = corpus.groupBy(content_fingerprint().alias("fingerprint")).agg(
+        seed = corpus.groupBy(fingerprint().alias("fingerprint")).agg(
             F.min("doc_id").alias("keep_doc_id")
         )
     else:
@@ -48,9 +44,8 @@ def dedup_incremental(
        shuffle-free),
     3. append the new fingerprints.
     """
-    fp = content_fingerprint()
     in_batch = (
-        batch.withColumn("fingerprint", fp)
+        batch.withColumn("fingerprint", fingerprint())
         .withColumn(
             "_rn",
             F.row_number().over(Window.partitionBy("fingerprint").orderBy("doc_id")),
@@ -115,10 +110,9 @@ def neardup_incremental(
     equality is single-sourced, not copy-paste parity.
     """
     from data_lake_construction_and_querying_with_pyspark_spark.operators.dedup import (
-        _shingles,
-        _toks,
         band_rows,
         minhash_signatures,
+        shingle_index,
         verify_jaccard_pairs,
     )
 
@@ -126,16 +120,9 @@ def neardup_incremental(
     inv_old = spark.read.parquet(f"{index_dir}/shingles.parquet")
     known_docs = bands_old.select("doc_id").distinct()
 
-    par = spark.sparkContext.defaultParallelism
-    inv_new = (
-        batch.join(known_docs, "doc_id", "left_anti")
-        .repartition(par, "doc_id")
-        .select("doc_id", _toks().alias("toks"))
-        .select("doc_id", _shingles(F.col("toks")).alias("shingles"))
-        .select("doc_id", F.explode_outer("shingles").alias("s"))
-        .filter(F.col("s").isNotNull())
-        .localCheckpoint()
-    )
+    # the fan-out rule reads the batch's own files, not the index's
+    new_docs = fan_out_small_scan(batch, "doc_id").join(known_docs, "doc_id", "left_anti")
+    inv_new = shingle_index(new_docs).localCheckpoint()
     bands_new = band_rows(minhash_signatures(inv_new)).localCheckpoint()
 
     bands_all = bands_old.unionByName(bands_new)

@@ -10,6 +10,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_lake_construction_and_querying_with_pyspark_spark.operators.relational import _dec6
+from data_lake_construction_and_querying_with_pyspark_spark.operators.tokens import (
+    TOKENS_SQL,
+    tokens,
+)
 from data_lake_construction_and_querying_with_pyspark_spark.registry import register
 from data_lake_construction_and_querying_with_pyspark_spark.sources.readers import load_table
 
@@ -86,10 +90,9 @@ def in_subquery_urgent_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "lateral_explode_top_tokens",
-    oracle="""
+    oracle=f"""
     SELECT tok, COUNT(*) AS n
-    FROM (SELECT unnest(list_filter(string_split(text, ' '), t -> t <> '')) AS tok
-          FROM documents)
+    FROM (SELECT unnest({TOKENS_SQL}) AS tok FROM documents)
     GROUP BY tok
     ORDER BY n DESC, tok
     LIMIT 20
@@ -100,9 +103,8 @@ def lateral_explode_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     Partial counts map-side; only per-partition top candidates would
     need to survive at scale (TakeOrdered after agg)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
     return (
-        docs.select(F.explode(toks).alias("tok"))
+        docs.select(F.explode(tokens()).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), F.asc("tok"))

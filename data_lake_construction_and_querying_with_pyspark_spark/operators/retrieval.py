@@ -49,7 +49,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from data_lake_construction_and_querying_with_pyspark_spark.operators.text import _toks
+from data_lake_construction_and_querying_with_pyspark_spark.operators.tokens import (
+    TOKENS_SQL,
+    tokens,
+)
 from data_lake_construction_and_querying_with_pyspark_spark.registry import register
 from data_lake_construction_and_querying_with_pyspark_spark.sources.readers import (
     fan_out_small_scan,
@@ -62,12 +65,8 @@ _QUERY_TERMS = ("spark", "merge", "window")
 _K1 = 1.2  # BM25 term-frequency saturation
 _TOPK = 20
 
-_ORACLE_TOKS = """
-    toks AS (
-        SELECT doc_id,
-               unnest(list_filter(string_split(text, ' '), t -> t <> '')) AS tok
-        FROM documents
-    )"""
+_ORACLE_TOKS = f"""
+    toks AS (SELECT doc_id, unnest({TOKENS_SQL}) AS tok FROM documents)"""
 
 # The full BM25 scoring chain (shared by the top-k query's oracle and the
 # rerank query's candidate-generation stage) — everything up to an
@@ -143,7 +142,7 @@ def bm25_scores(docs: DataFrame, query_terms: Sequence[str]) -> DataFrame:
     # out so the explode runs on every core (no-op at lake scale):
     # fan_out_small_scan.
     docs = fan_out_small_scan(docs, "doc_id")
-    toks = docs.select("doc_id", F.explode(_toks()).alias("tok"))
+    toks = docs.select("doc_id", F.explode(tokens()).alias("tok"))
 
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     nd = docs.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -207,7 +206,7 @@ def tfidf_top_terms_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id partitions (no global sort; the window key is the natural
     partitioning so no second shuffle after the tf aggregate)."""
     docs = fan_out_small_scan(load_table(spark, sf_dir, "documents"), "doc_id")
-    toks = docs.select("doc_id", F.explode(_toks()).alias("tok"))
+    toks = docs.select("doc_id", F.explode(tokens()).alias("tok"))
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     dft = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     nd = docs.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -288,7 +287,7 @@ def _rerank_oracle() -> str:
     ),
     feat AS (
         SELECT c.doc_id, c.bm25_score,
-               list_filter(string_split(d.text, ' '), t -> t <> '') AS tk,
+               {TOKENS_SQL} AS tk,
                ' ' || d.text || ' ' AS padded
         FROM cand c JOIN documents d USING (doc_id)
     ),
@@ -330,7 +329,7 @@ def cross_feature_columns() -> dict[str, "F.Column"]:
     only, so Spark and DuckDB agree bit-for-bit (no floats, no NULLs:
     absent terms use the ``_ABSENT`` sentinel (2**40) instead of NULL so
     LEAST/GREATEST semantics never enter the contract)."""
-    tk = _toks()
+    tk = tokens()
     pos = [F.array_position(tk, t) for t in _QUERY_TERMS]
     padded = F.concat(F.lit(" "), F.col("text"), F.lit(" "))
     coverage = None

@@ -16,11 +16,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_lake_construction_and_querying_with_pyspark_spark.operators.tokens import (
+    FINGERPRINT_SQL,
+    TOKENS_SQL,
+    fingerprint,
+    tokens,
+)
 from data_lake_construction_and_querying_with_pyspark_spark.registry import register
 from data_lake_construction_and_querying_with_pyspark_spark.sources.readers import load_table
-
-def _toks() -> "F.Column":
-    return F.filter(F.split(F.col("text"), " "), lambda t: t != "")
 
 # Marker stopwords per language for the n-gram-free heuristic language
 # detector. (The synthetic corpus draws every language's text from the
@@ -42,24 +45,22 @@ def _count_in(toks, words) -> F.Column:
 
 @register(
     "text_token_stats",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            CAST(len(toks) AS INT) AS n_tokens,
            CAST(len(list_distinct(toks)) AS INT) AS n_distinct_tokens,
            CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks) AS type_token_ratio,
            CAST(length(replace(text, ' ', '')) AS INT) AS n_letter_chars,
            CAST(length(replace(text, ' ', '')) AS DOUBLE) / len(toks) AS avg_token_len
-    FROM (SELECT doc_id, text,
-                 list_filter(string_split(text, ' '), t -> t <> '') AS toks
-          FROM documents)
+    FROM (SELECT doc_id, text, {TOKENS_SQL} AS toks FROM documents)
     """,
 )
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token counts, vocabulary richness (type/token ratio),
     and mean token length per document."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(_toks())
-    n_distinct = F.size(F.array_distinct(_toks()))
+    n_tok = F.size(tokens())
+    n_distinct = F.size(F.array_distinct(tokens()))
     n_letters = F.length(F.replace(F.col("text"), F.lit(" "), F.lit("")))
     return docs.select(
         "doc_id",
@@ -106,9 +107,7 @@ def text_regex_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
            CASE WHEN len(toks) >= 20
                  AND len(list_filter(toks, t -> t IN {_STOPWORDS!r})) > 0
                 THEN 'keep' ELSE 'filter' END AS quality_verdict
-    FROM (SELECT doc_id, text, n_chars,
-                 list_filter(string_split(text, ' '), t -> t <> '') AS toks
-          FROM documents)
+    FROM (SELECT doc_id, text, n_chars, {TOKENS_SQL} AS toks FROM documents)
     """,
 )
 def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -116,8 +115,8 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     punctuation counts feed a keep/filter verdict (the C4/Gopher-rule
     shape). All counts integer, ratios single divisions."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(_toks())
-    n_stop = _count_in(_toks(), _STOPWORDS)
+    n_tok = F.size(tokens())
+    n_stop = _count_in(tokens(), _STOPWORDS)
     n_punct = F.length(F.col("text")) - F.length(
         F.regexp_replace(F.col("text"), r"[.,!?;:]", "")
     )
@@ -152,9 +151,7 @@ def _langid_sql() -> str:
     return f"""
     WITH scored AS (
         SELECT doc_id, lang, {scores}
-        FROM (SELECT doc_id, lang,
-                     list_filter(string_split(text, ' '), t -> t <> '') AS toks
-              FROM documents)
+        FROM (SELECT doc_id, lang, {TOKENS_SQL} AS toks FROM documents)
     )
     SELECT doc_id, lang AS labeled_lang, {case_sql} AS predicted_lang
     FROM scored
@@ -170,7 +167,7 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = docs.select(
         "doc_id",
         F.col("lang").alias("labeled_lang"),
-        *[_count_in(_toks(), words).alias(f"s_{lang}") for lang, words in _MARKERS.items()],
+        *[_count_in(tokens(), words).alias(f"s_{lang}") for lang, words in _MARKERS.items()],
     )
     order = list(_MARKERS)
     pred = None
@@ -186,14 +183,11 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_fingerprints",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS content_md5,
-           substring(md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))), 1, 8)
-               AS short_fp,
-           md5(array_to_string(list_sort(list_distinct(
-               list_filter(string_split(text, ' '), t -> t <> ''))), ' '))
-               AS bag_fp
+           {FINGERPRINT_SQL} AS content_md5,
+           substring({FINGERPRINT_SQL}, 1, 8) AS short_fp,
+           md5(array_to_string(list_sort(list_distinct({TOKENS_SQL})), ' ')) AS bag_fp
     FROM documents
     """,
 )
@@ -202,8 +196,8 @@ def text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     form (bucketable), and an order-insensitive bag-of-words hash
     (sorted distinct tokens) that survives shuffled word order."""
     docs = load_table(spark, sf_dir, "documents")
-    canon = F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")))
-    bag = F.md5(F.array_join(F.array_sort(F.array_distinct(_toks())), " "))
+    canon = fingerprint()
+    bag = F.md5(F.array_join(F.array_sort(F.array_distinct(tokens())), " "))
     return docs.select(
         "doc_id",
         canon.alias("content_md5"),
@@ -216,9 +210,7 @@ def text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_prep_pipeline",
     oracle=f"""
     WITH scored AS (
-        SELECT doc_id, text, lang, n_chars,
-               list_filter(string_split(text, ' '), t -> t <> '') AS toks
-        FROM documents
+        SELECT doc_id, text, lang, n_chars, {TOKENS_SQL} AS toks FROM documents
     ),
     kept AS (
         SELECT doc_id, text, lang, n_chars
@@ -227,8 +219,7 @@ def text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
           AND len(list_filter(toks, t -> t IN {_STOPWORDS!r})) > 0
     ),
     deduped AS (
-        SELECT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fingerprint,
-               MIN(doc_id) AS doc_id
+        SELECT {FINGERPRINT_SQL} AS fingerprint, MIN(doc_id) AS doc_id
         FROM kept GROUP BY 1
     )
     SELECT d.doc_id, d.fingerprint, k.lang, k.n_chars
@@ -242,21 +233,18 @@ def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-byte digest, one keep-first join: the shape of a real
     pretraining data pass, end-to-end."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(_toks())
-    n_stop = _count_in(_toks(), _STOPWORDS)
+    n_tok = F.size(tokens())
+    n_stop = _count_in(tokens(), _STOPWORDS)
     kept = docs.filter((n_tok >= 20) & (n_stop > 0)).select("doc_id", "text", "lang", "n_chars")
-    fp = F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")))
-    deduped = kept.groupBy(fp.alias("fingerprint")).agg(F.min("doc_id").alias("doc_id"))
+    deduped = kept.groupBy(fingerprint().alias("fingerprint")).agg(F.min("doc_id").alias("doc_id"))
     return deduped.join(kept, "doc_id").select("doc_id", "fingerprint", "lang", "n_chars")
 
 
 @register(
     "text_chunk_windows",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS t
-        FROM documents
-    ), sized AS (
+    oracle=f"""
+    WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS t FROM documents),
+    sized AS (
         SELECT doc_id, t, len(t) AS n FROM toks WHERE len(t) > 0
     )
     SELECT doc_id, CAST(s AS INT) AS start_idx,
@@ -273,9 +261,8 @@ def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows — so chunking 100 TB of text is one narrow generate stage,
     no Python in the loop and no shuffle at all."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
     sized = (
-        docs.select("doc_id", toks.alias("t"))
+        docs.select("doc_id", tokens().alias("t"))
         .withColumn("n", F.size("t"))
         .filter(F.col("n") > 0)
     )

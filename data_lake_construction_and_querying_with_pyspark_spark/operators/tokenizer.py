@@ -56,6 +56,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from data_lake_construction_and_querying_with_pyspark_spark.operators.tokens import (
+    TOKENS_SQL,
+    tokens,
+)
 from data_lake_construction_and_querying_with_pyspark_spark.registry import register
 from data_lake_construction_and_querying_with_pyspark_spark.sources.readers import (
     fan_out_small_scan,
@@ -82,9 +86,7 @@ def _word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every core (guarded no-op at lake scale): fan_out_small_scan.
     docs = fan_out_small_scan(load_table(spark, sf_dir, "documents"), "doc_id")
     words = (
-        docs.select(
-            F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias("word")
-        )
+        docs.select(F.explode(tokens()).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
     )
@@ -169,11 +171,10 @@ def _oracle_ctes(k: int) -> str:
     evaluates the chain once (the CTE re-expansion pathology documented
     for the semantic oracle)."""
     parts = [
-        """w0 AS MATERIALIZED (
+        f"""w0 AS MATERIALIZED (
   SELECT freq, regexp_replace(word, '(.)', '<\\1>', 'g') AS seq
   FROM (SELECT w AS word, COUNT(*) AS freq
-        FROM (SELECT unnest(list_filter(string_split(text, ' '), t -> t <> '')) AS w
-              FROM documents)
+        FROM (SELECT unnest({TOKENS_SQL}) AS w FROM documents)
         GROUP BY w))"""
     ]
     for i in range(1, k + 1):
@@ -219,17 +220,19 @@ def _encode_oracle(k: int) -> str:
     document; d{i} applies merge b{i} with the identical literal
     replace (spaces break the ``><`` adjacency, so merges can never
     cross a word boundary). Token count = count of ``>`` chars — every
-    symbol contributes exactly one."""
+    symbol contributes exactly one. Words are counted on ``text``, carried
+    through d0..dk: the wrapping and the merges leave every space where it
+    is, so ``seq`` splits into the same number of words."""
     parts = [_oracle_ctes(k)]
     parts.append(
-        ",\nd0 AS MATERIALIZED (SELECT doc_id, n_chars, "
+        ",\nd0 AS MATERIALIZED (SELECT doc_id, n_chars, text, "
         "regexp_replace(text, '([^ ])', '<\\1>', 'g') AS seq FROM documents)"
     )
     for i in range(1, k + 1):
         parts.append(
             f""",
 d{i} AS MATERIALIZED (
-  SELECT doc_id, n_chars,
+  SELECT doc_id, n_chars, text,
          replace(seq, '<' || lft || '><' || rgt || '>', '<' || lft || rgt || '>') AS seq
   FROM d{i - 1}, b{i})"""
         )
@@ -237,8 +240,8 @@ d{i} AS MATERIALIZED (
         f"""
 SELECT doc_id,
        CAST(length(seq) - length(replace(seq, '>', '')) AS INT) AS n_bpe_tokens,
-       CAST(len(list_filter(string_split(seq, ' '), t -> t <> '')) AS INT) AS n_words,
-       CAST(n_chars - CAST(len(list_filter(string_split(seq, ' '), t -> t <> '')) AS INT) + 1 AS DOUBLE)
+       CAST(len({TOKENS_SQL}) AS INT) AS n_words,
+       CAST(n_chars - CAST(len({TOKENS_SQL}) AS INT) + 1 AS DOUBLE)
            / (length(seq) - length(replace(seq, '>', ''))) AS chars_per_token
 FROM d{k}"""
     )
@@ -267,7 +270,7 @@ def bpe_encode_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             seq, F.lit(f"<{m['lft']}><{m['rgt']}>"), F.lit(f"<{m['merged']}>")
         )
     n_tok = F.length(seq) - F.length(F.replace(seq, F.lit(">"), F.lit("")))
-    n_words = F.size(F.filter(F.split(seq, " "), lambda t: t != ""))
+    n_words = F.size(tokens())
     return docs.select(
         "doc_id",
         n_tok.alias("n_bpe_tokens"),

@@ -365,9 +365,11 @@ def main() -> None:
 
         from data_lake_construction_and_querying_with_pyspark_spark.operators.corpus_quality import (
             _DRAW_STEP,
-            _toks,
             sequence_packing,
             weighted_systematic_draw,
+        )
+        from data_lake_construction_and_querying_with_pyspark_spark.operators.tokens import (
+            tokens,
         )
 
         # The segmented-window selection/packing pair (r10 directive
@@ -409,7 +411,7 @@ def main() -> None:
 
         # reuse the operator family's own tokenizer so the expected
         # mass is definitionally identical (split-on-space + drop-empty)
-        expected_tokens = docs_df.select(F.sum(F.size(_toks())).alias("t")).first()[0]
+        expected_tokens = docs_df.select(F.sum(F.size(tokens())).alias("t")).first()[0]
         obs2 = Observation("pack_rows")
         t0 = time.time()
         packed = sequence_packing(spark, out).observe(

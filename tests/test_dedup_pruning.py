@@ -1,18 +1,19 @@
 """Document-frequency pruning for the n-gram inverted index: the cap
-must (a) not change results when it is above every shingle's df, and
-(b) demonstrably bind when it is below — VERDICT r01 items 5's "plan /
-cardinality test proving the cap binds".
+must demonstrably bind when it is below a shared shingle's df —
+VERDICT r01 items 5's "plan / cardinality test proving the cap binds".
+(That it changes nothing when above every df is pinned by the oracle
+test of ``dedup_ngram_jaccard_pairs``, whose DuckDB oracle is unpruned.)
 """
 
 from __future__ import annotations
 
 from data_lake_construction_and_querying_with_pyspark_spark.operators.dedup import (
     _NGRAM_MAX_DF,
-    _explode_shingles,
     dedup_ngram_jaccard_pairs,
     ngram_jaccard_pairs,
-    shingle_docs,
+    shingle_index,
 )
+from data_lake_construction_and_querying_with_pyspark_spark.sources.readers import load_table
 from tests.conftest import SF_SMOKE
 
 from pyspark.sql import functions as F
@@ -20,16 +21,6 @@ from pyspark.sql import functions as F
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-def test_pruned_equals_unpruned_when_cap_above_max_df(spark):
-    """At max_df=1000 (fixture max shingle df ≈ 9) no shingle is
-    pruned, so Jaccard over the pruned universe must equal plain
-    Jaccard exactly — values included."""
-    unpruned = _rows(ngram_jaccard_pairs(spark, SF_SMOKE, max_df=None))
-    pruned = _rows(ngram_jaccard_pairs(spark, SF_SMOKE, max_df=_NGRAM_MAX_DF))
-    assert unpruned == pruned
-    assert len(unpruned) > 0  # fixture has near-dup pairs; vacuous pass guard
 
 
 def test_registered_query_uses_default_cap(spark):
@@ -49,7 +40,7 @@ def test_cap_prunes_hot_shingles_from_index(spark):
     """Cardinality check at an intermediate cap: rebuilding the pruned
     index for max_df=3 must drop exactly the rows of shingles with
     df > 3 (the fixture has shingles up to df ≈ 9)."""
-    inv = _explode_shingles(shingle_docs(spark, SF_SMOKE))
+    inv = shingle_index(load_table(spark, SF_SMOKE, "documents"))
     df_counts = inv.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     hot_rows = (
         df_counts.filter(F.col("df") > 3).agg(F.sum("df").alias("n")).first()["n"] or 0

@@ -10,8 +10,10 @@ while similarity's kNN-graph and hard-negative oracles are built from
 dedup's candidate CTEs. Moving a helper across either cycle can break
 one entry order while the other still works, and the suite — which
 imports everything through ``all_queries()`` — would see it only as a
-Python-worker ``NameError`` inside one vectorized test. No JVM needed:
-module bodies build SQL strings, never Columns."""
+Python-worker ``NameError`` inside one vectorized test. ``tokens`` is
+the leaf every text operator imports its word definitions from; loaded
+first, it must register nothing and still leave the registry whole.
+No JVM needed: module bodies build SQL strings, never Columns."""
 
 from __future__ import annotations
 
@@ -37,6 +39,7 @@ N_REGISTERED = 151
         "pca",
         "dedup",
         "incremental",
+        "tokens",
     ],
 )
 def test_operator_module_imports_first(module):

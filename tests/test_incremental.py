@@ -43,9 +43,11 @@ def test_incremental_dedup_across_batches(spark, tmp_path):
 
 def test_incremental_agrees_with_batch_dedup(spark, tmp_path):
     from data_lake_construction_and_querying_with_pyspark_spark.operators.incremental import (
-        content_fingerprint,
         dedup_incremental,
         init_fingerprint_index,
+    )
+    from data_lake_construction_and_querying_with_pyspark_spark.operators.tokens import (
+        fingerprint,
     )
     from data_lake_construction_and_querying_with_pyspark_spark.sources.readers import load_table
 
@@ -59,7 +61,7 @@ def test_incremental_agrees_with_batch_dedup(spark, tmp_path):
         spark, half2, idx
     ).count()
 
-    batch_distinct = docs.select(content_fingerprint()).distinct().count()
+    batch_distinct = docs.select(fingerprint()).distinct().count()
     assert n_new == batch_distinct
 
 
@@ -105,6 +107,48 @@ def test_neardup_incremental_equals_batch_minhash(spark, tmp_path):
         for r in dedup_minhash_near_dup(spark, SF_SMOKE).collect()
     }
     assert incremental == batch and len(batch) > 0
+
+
+def test_neardup_incremental_shingles_every_batch_on_every_core(spark, tmp_path, monkeypatch):
+    """Each batch's shingle index is built over ``defaultParallelism``
+    partitions, not inside the single-file batch scan's one task, also
+    once the band index spans at least ``defaultParallelism`` files (a
+    long-running stream appends a few per batch). The fan-out rule must
+    read the batch's own files: counted under the anti-join, the index's
+    files would switch the fan-out off."""
+    import shutil
+
+    from data_lake_construction_and_querying_with_pyspark_spark.operators import dedup
+    from data_lake_construction_and_querying_with_pyspark_spark.operators.incremental import (
+        init_neardup_index,
+        neardup_incremental,
+    )
+    from data_lake_construction_and_querying_with_pyspark_spark.sources.readers import load_table
+
+    partitions = []
+    build = dedup.shingle_index
+
+    def counting_shingle_index(docs):
+        inv = build(docs)
+        partitions.append(inv.rdd.getNumPartitions())
+        return inv
+
+    monkeypatch.setattr(dedup, "shingle_index", counting_shingle_index)
+    par = spark.sparkContext.defaultParallelism
+    docs = load_table(spark, SF_SMOKE, "documents")
+    assert len(docs.inputFiles()) == 1  # the batch scan alone is one task
+    idx = str(tmp_path / "fanout_idx")
+    init_neardup_index(spark, idx)
+    neardup_incremental(spark, docs.filter(F.col("doc_id") % 3 == 0), idx).count()
+    # the same band rows, spread over one file per core
+    bands, spread = f"{idx}/bands.parquet", str(tmp_path / "spread")
+    spark.read.parquet(bands).repartition(par, "doc_id").write.parquet(spread)
+    shutil.rmtree(bands)
+    shutil.move(spread, bands)
+    assert len(spark.read.parquet(bands).inputFiles()) >= par
+    for part in (1, 2):
+        neardup_incremental(spark, docs.filter(F.col("doc_id") % 3 == part), idx).count()
+    assert partitions == [par] * 3
 
 
 def test_neardup_incremental_replay_is_noop(spark, tmp_path):

@@ -96,8 +96,10 @@ def test_connected_components_driver_and_distributed_paths_agree(spark):
         (10, 10), (11, 10), (12, 10), (13, 10),
         (20, 20), (21, 20),
     }
-    via_driver = {tuple(r) for r in connected_components(edges).collect()}
-    via_cluster = {tuple(r) for r in connected_components(edges, driver_gate=0).collect()}
+    via_driver = {tuple(r) for r in connected_components(edges, "src", "dst").collect()}
+    via_cluster = {
+        tuple(r) for r in connected_components(edges, "src", "dst", driver_gate=0).collect()
+    }
     assert via_driver == expected
     assert via_cluster == expected
 
@@ -419,3 +421,84 @@ def test_segmented_prefix_equals_single_window(spark, rows):
         ).collect()
     }
     assert got == want
+
+
+_piece = st.sampled_from(["a", "a", "Bb", "λÉ", " ", " ", "  ", "\t", "x\ny"])
+_ws_text = st.lists(_piece, min_size=0, max_size=16).map("".join)
+_NGRAM_KS = (1, 2, 3, 5)
+
+
+@given(texts=st.lists(_ws_text, min_size=1, max_size=6))
+@settings(**_SETTINGS)
+def test_token_definitions_match_python_and_sql_twins(spark, texts):
+    """``tokens``, ``ngrams``, ``ngram_positions``/``gram`` and
+    ``fingerprint`` equal a pure-Python reference AND their DuckDB SQL
+    twins on the same rows, for any text: empty, all-space, leading,
+    trailing or doubled spaces, tabs and newlines inside words, and
+    docs shorter than k."""
+    import hashlib
+    import re
+
+    import duckdb
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from data_lake_construction_and_querying_with_pyspark_spark.operators.tokens import (
+        FINGERPRINT_SQL,
+        TOKENS_SQL,
+        fingerprint,
+        gram,
+        gram_sql,
+        ngram_positions,
+        ngram_positions_sql,
+        ngrams,
+        ngrams_sql,
+        tokens,
+    )
+
+    rows = list(enumerate(texts))
+    toks = {i: [t for t in text.split(" ") if t] for i, text in rows}
+    want = {
+        i: (
+            toks[i],
+            hashlib.md5(re.sub(r"[ \t\n]+", " ", text.lower()).strip(" ").encode()).hexdigest(),
+            [[" ".join(toks[i][p : p + k]) for p in range(len(toks[i]) - k + 1)] for k in _NGRAM_KS],
+        )
+        for i, text in rows
+    }
+    want_pos = sorted(
+        (k, i, p + 1, " ".join(t[p : p + k]))
+        for k in _NGRAM_KS
+        for i, t in toks.items()
+        for p in range(len(t) - k + 1)
+    )
+
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    toked = df.select("doc_id", tokens().alias("toks"), fingerprint().alias("fp"))
+    spark_rows = toked.select(
+        "doc_id", "toks", "fp", *[ngrams(F.col("toks"), k).alias(f"g{k}") for k in _NGRAM_KS]
+    ).collect()
+    got = {r["doc_id"]: (r["toks"], r["fp"], [r[f"g{k}"] for k in _NGRAM_KS]) for r in spark_rows}
+    assert got == want
+    pos = None
+    for k in _NGRAM_KS:
+        pk = ngram_positions(toked.select("doc_id", "toks"), k).select(
+            F.lit(k).alias("k"), "doc_id", "p", gram(F.col("p"), k).alias("s")
+        )
+        pos = pk if pos is None else pos.unionByName(pk)
+    assert sorted(tuple(r) for r in pos.collect()) == want_pos
+
+    con = duckdb.connect()
+    con.register("docs", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    grams_sql = ", ".join(f"{ngrams_sql(k)} AS g{k}" for k in _NGRAM_KS)
+    sql_rows = con.execute(
+        f"""SELECT doc_id, toks, fp, {grams_sql}
+            FROM (SELECT doc_id, {TOKENS_SQL} AS toks, {FINGERPRINT_SQL} AS fp FROM docs)"""
+    ).fetchall()
+    assert {r[0]: (r[1], r[2], list(r[3:])) for r in sql_rows} == want
+    pos_sql = " UNION ALL ".join(
+        f"""SELECT {k}, doc_id, p, {gram_sql("p", k)}
+            FROM (SELECT doc_id, {TOKENS_SQL} AS toks FROM docs), {ngram_positions_sql(k)}"""
+        for k in _NGRAM_KS
+    )
+    assert sorted(con.execute(pos_sql).fetchall()) == want_pos
